@@ -550,19 +550,38 @@ object WheelRegistry {
 
   def normalizePath(p: String): String = rootSetKey(p.split('\n').toIndexedSeq)
 
-  /** Canonical registry key for a root SET (round-14 verdict task 4: a
-    * multi-directory relation used to be looked up under
+  /** Canonical registry key for a root SET of USER-SUPPLIED paths (round-14
+    * verdict task 4: a multi-directory relation used to be looked up under
     * `rootPaths.headOption` only, so an index built over both roots never
-    * served). Each member is scheme/slash-normalized, then the set is
-    * deduped and SORTED before newline-joining — so
+    * served). Each member is first qualified the way Spark's DataSource
+    * qualifies a read path — relative paths against the file system's
+    * working directory, `file:///x` as `file:/x` — so the key equals the
+    * one [[keyOfQualified]] derives from the relation's `rootPaths`; a
+    * relative or `file:///` build used to register under a key no query
+    * could find. */
+  def rootSetKey(paths: Seq[String]): String = keyOfQualified(paths.map(qualify))
+
+  /** Registry key for roots Spark has ALREADY qualified (a relation's
+    * `FileIndex.rootPaths`): each member is scheme/slash-normalized, then
+    * the set is deduped and SORTED before newline-joining — so
     * `spark.read.parquet(a, b)` and `parquet(b, a)` resolve to the same
-    * key. A single root's key is exactly the old single-path
-    * normalization, so every existing registration and lookup is
-    * unchanged. Newline is the join character because it cannot appear in
-    * a normalized Hadoop path URI. */
-  def rootSetKey(paths: Seq[String]): String =
-    paths.map(_.stripPrefix("file:").replaceAll("/+$", ""))
+    * key. String work only: the optimizer rule keys every query through
+    * this. Newline is the join character because it cannot appear in a
+    * normalized Hadoop path URI. */
+  def keyOfQualified(roots: Seq[String]): String =
+    roots.map(_.stripPrefix("file:").replaceAll("/+$", ""))
       .distinct.sorted.mkString("\n")
+
+  /** `p` as a qualified Hadoop path string; view keys and strings Hadoop
+    * cannot resolve to a file system pass through unchanged. */
+  private def qualify(p: String): String =
+    if (p.startsWith("view::")) p
+    else scala.util.Try {
+      val path = new org.apache.hadoop.fs.Path(p)
+      val conf = SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+        .fold(new org.apache.hadoop.conf.Configuration())(_.sparkContext.hadoopConfiguration)
+      path.getFileSystem(conf).makeQualified(path).toString
+    }.getOrElse(p)
 
   /** Inverse of [[rootSetKey]]: the member root paths of a registry key
     * (size 1 for ordinary single-root tables). */
@@ -623,21 +642,23 @@ object WheelRegistry {
   def update(key: String, f: Option[TableIndex] => Option[TableIndex]): Unit =
     tables.compute(key, (_, cur) => f(Option(cur)).orNull)
   def registeredPaths: Seq[String] = tables.keySet().asScala.toSeq.sorted
-  /** O(1) membership probes for the optimizer's top-level pre-check
-    * ([[graft.rules.UWheelRule]]): can a leaf POSSIBLY resolve to a
-    * registered index? Over-approximate by design — the rewrite itself
-    * still runs the full fingerprint/sameResult lookup. */
-  def mayMatchPath(rootPath: String): Boolean =
-    tables.containsKey(normalizePath(rootPath))
-  /** Root-set probe: true when any single root OR the canonical root-set
-    * key is registered — the multi-root complement of [[mayMatchPath]],
-    * same over-approximation contract. */
+  /** O(1) membership probe for the optimizer's top-level pre-check
+    * ([[graft.rules.UWheelRule]]) over a relation's qualified `rootPaths`:
+    * true when any single root OR the canonical root-set key is
+    * registered. Over-approximate by design — the rewrite itself still
+    * runs the full fingerprint/sameResult lookup. */
   def mayMatchRoots(roots: Seq[String]): Boolean =
-    roots.exists(mayMatchPath) ||
-      (roots.lengthCompare(1) > 0 && tables.containsKey(rootSetKey(roots)))
+    roots.exists(r => tables.containsKey(keyOfQualified(Seq(r)))) ||
+      (roots.lengthCompare(1) > 0 && tables.containsKey(keyOfQualified(roots)))
   def mayMatchExprId(id: Long): Boolean = byExprId.containsKey(id)
+  /** Index registered for a user-supplied path or registry key. A key as
+    * registered hits without qualification. */
   def lookup(rootPath: String): Option[TableIndex] =
-    Option(tables.get(normalizePath(rootPath)))
+    Option(tables.get(rootPath)).orElse(Option(tables.get(normalizePath(rootPath))))
+  /** Index registered for a relation's qualified `rootPaths` — the rule's
+    * per-query lookup, string work only ([[keyOfQualified]]). */
+  def lookupQualified(roots: Seq[String]): Option[TableIndex] =
+    Option(tables.get(keyOfQualified(roots)))
   def isEmpty: Boolean = tables.isEmpty
   def clear(): Unit = tables.clear()
 }
@@ -1489,6 +1510,19 @@ object UWheelIndex {
 
   private[graft] def fingerprintOfDf(df: DataFrame): Long = fingerprintOf(df)
 
+  /** Current listing of parquet `roots` from the file index a read of them
+    * builds (the same kind the rule lists through `fs.location.listFiles`:
+    * an InMemoryFileIndex, or the sink log under a streaming sink's
+    * `_spark_metadata`), but under a placeholder schema: a plain read
+    * infers the parquet schema with a Spark job, and the listing needs no
+    * data. */
+  private[graft] def listingOfRoots(spark: SparkSession, roots: Seq[String]): Seq[(String, Long, Long)] =
+    listingOfDf(spark.read.schema(ListingProbeSchema).parquet(roots: _*))
+
+  private val ListingProbeSchema = org.apache.spark.sql.types.StructType(Seq(
+    org.apache.spark.sql.types.StructField("__graft_listing_probe",
+      org.apache.spark.sql.types.LongType)))
+
   /** Current (path, length, modificationTime) listing of a file-backed
     * DataFrame, empty for non-file plans — [[graft.queries.AnnIndexIO]]
     * diffs it against a saved listing to find append-only refresh work. */
@@ -2066,7 +2100,7 @@ object UWheelIndex {
         // basePath, which could silently misparse Hive partition columns
         // (round-15 advice)
         def owner(p: String): String = {
-          val n = WheelRegistry.normalizePath(p)
+          val n = WheelRegistry.keyOfQualified(Seq(p))
           roots.find(r => n == r || n.startsWith(r + "/")).getOrElse(
             throw new IllegalStateException(
               s"refresh: delta file $p matches no member root of $key — " +

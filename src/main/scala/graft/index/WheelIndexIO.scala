@@ -27,6 +27,14 @@ import scala.util.Using
   * is acceptable or a stream re-attach / rebuild is required. Writes are
   * atomic (temp file + move), so a crash mid-save cannot leave a truncated
   * file behind.
+  *
+  * Format: Java serialization of the [[TableIndex]], in which every typed
+  * (sketch, moment, top-k) wheel writes itself as ONE compact run — its
+  * per-second keys as one primitive array, its partials as length-prefixed
+  * bytes through the aggregator's `partialSerde` ([[graft.wheel.TypedHawWheel]]).
+  * Files saved by builds before that format hold one Java object per active
+  * second; they fail [[load]] with the "stale index format … rebuild" error,
+  * and the index must be rebuilt and saved again.
   */
 object WheelIndexIO {
 
@@ -62,7 +70,9 @@ object WheelIndexIO {
       catch {
         // Class-shape mismatch = a file saved by an INCOMPATIBLE graft
         // version (e.g. pre-round-11 files with top-k wheels predate the
-        // pinned @SerialVersionUID and the filter fields). There is no
+        // pinned @SerialVersionUID and the filter fields; files with typed
+        // wheels saved before their compact form carry TypedHawWheel's old
+        // shape-computed UID). There is no
         // byte-level compat path back to those files; fail with the
         // operational answer instead of a bare serialization stack trace.
         case e: java.io.InvalidClassException =>
@@ -107,8 +117,8 @@ object WheelIndexIO {
     // forever; same symptom class as the pre-round-15 multi-root decline)
     val fresh = t.fingerprint == 0L || scala.util.Try {
       graft.Tables.ensureNanosConf(spark)
-      UWheelIndex.fingerprintOfDf(
-        spark.read.parquet(WheelRegistry.rootsOfKey(t.pathKey): _*)) == t.fingerprint
+      UWheelIndex.fingerprintOfListing(
+        UWheelIndex.listingOfRoots(spark, WheelRegistry.rootsOfKey(t.pathKey))) == t.fingerprint
     }.getOrElse(false)
     (t, fresh)
   }

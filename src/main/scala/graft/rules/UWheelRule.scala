@@ -181,9 +181,9 @@ object UWheelRule extends Rule[LogicalPlan] {
             // at the gate over the combined listing, the pre-round-15
             // behavior.
             val roots = fs.location.rootPaths.map(_.toString)
-            WheelRegistry.lookup(WheelRegistry.rootSetKey(roots))
+            WheelRegistry.lookupQualified(roots)
               .orElse(if (roots.lengthCompare(1) > 0)
-                roots.view.flatMap(WheelRegistry.lookup)
+                roots.view.flatMap(r => WheelRegistry.lookupQualified(Seq(r)))
                   .filter(_.fingerprint != 0L).headOption
               else None)
               // Staleness gate: only rewrite when the table's current file

@@ -1021,6 +1021,22 @@ object WheelAggregators {
         }))
   }
 
+  /** `v`'s minimal two's-complement bytes (BigInteger.toByteArray), built
+    * WITHOUT `v.bigInteger` when `v` fits a Long: in Scala 2.13 that call
+    * caches a BigInteger inside a long-backed BigInt, so encoding a live
+    * partial would grow it (the cached object then rides along in every
+    * Java-serialized copy of the wheel). */
+  private def bigIntBytes(v: BigInt): Array[Byte] =
+    (if (v.isValidLong) java.math.BigInteger.valueOf(v.toLong) else v.bigInteger).toByteArray
+
+  /** Reads one length-prefixed [[bigIntBytes]] value, long-backed when it
+    * fits a Long, as arithmetic on fresh partials produces it. */
+  private def readBigInt(in: java.nio.ByteBuffer): BigInt = {
+    val b = new Array[Byte](in.getInt()); in.get(b)
+    val v = new java.math.BigInteger(b)
+    if (v.bitLength <= 63) BigInt(v.longValue) else BigInt(v)
+  }
+
   final case class Moments(n: Long, sx: BigInt, sxx: BigInt)
 
   final class MomentStats(val scale: Int) extends WheelAggregator[Long, Moments, Moments] {
@@ -1063,8 +1079,8 @@ object WheelAggregators {
     // [len sxx: 4B BE] [sxx bytes], each BigInt as java.math.BigInteger's
     // minimal two's-complement form (canonical: equal values → equal bytes)
     def encode(p: Moments): Array[Byte] = {
-      val a = p.sx.bigInteger.toByteArray
-      val b = p.sxx.bigInteger.toByteArray
+      val a = bigIntBytes(p.sx)
+      val b = bigIntBytes(p.sxx)
       val out = java.nio.ByteBuffer.allocate(8 + 4 + a.length + 4 + b.length)
       out.putLong(p.n).putInt(a.length).put(a).putInt(b.length).put(b)
       out.array()
@@ -1072,10 +1088,7 @@ object WheelAggregators {
 
     def decode(bytes: Array[Byte]): Moments = {
       val in = java.nio.ByteBuffer.wrap(bytes)
-      val n = in.getLong()
-      val a = new Array[Byte](in.getInt()); in.get(a)
-      val b = new Array[Byte](in.getInt()); in.get(b)
-      Moments(n, BigInt(new java.math.BigInteger(a)), BigInt(new java.math.BigInteger(b)))
+      Moments(in.getLong(), readBigInt(in), readBigInt(in))
     }
   }
 
@@ -1146,7 +1159,7 @@ object WheelAggregators {
     // canonical encoding: [n: 8B BE] then 5 length-prefixed BigInts in
     // field order (minimal two's-complement — equal values, equal bytes)
     def encode(p: CoMoments): Array[Byte] = {
-      val parts = Seq(p.sx, p.sy, p.sxx, p.syy, p.sxy).map(_.bigInteger.toByteArray)
+      val parts = Seq(p.sx, p.sy, p.sxx, p.syy, p.sxy).map(bigIntBytes)
       val out = java.nio.ByteBuffer.allocate(8 + parts.map(4 + _.length).sum)
       out.putLong(p.n)
       parts.foreach(b => { out.putInt(b.length); out.put(b) })
@@ -1155,12 +1168,8 @@ object WheelAggregators {
 
     def decode(bytes: Array[Byte]): CoMoments = {
       val in = java.nio.ByteBuffer.wrap(bytes)
-      val n = in.getLong()
-      def big(): BigInt = {
-        val b = new Array[Byte](in.getInt()); in.get(b)
-        BigInt(new java.math.BigInteger(b))
-      }
-      CoMoments(n, big(), big(), big(), big(), big())
+      CoMoments(in.getLong(), readBigInt(in), readBigInt(in), readBigInt(in),
+        readBigInt(in), readBigInt(in))
     }
   }
 }
@@ -1392,6 +1401,44 @@ final class TypedRwWheel[In, P, Out] private ()
 }
 
 object TypedHawWheel {
+  /** Java-serialization stand-in for a [[TypedHawWheel]], swapped in by its
+    * `writeReplace` and back out by `readResolve`. The wheel's fields stay
+    * final and Kryo-visible; only Java streams (index files, stream
+    * snapshots, task closures) take this route. Per-slot objects made
+    * saving an index cost ~100k handle-table entries per sketch, moment
+    * or top-k wheel; this form writes each wheel as one run. A wheel
+    * referenced twice in a stream still loads as one object: the stream
+    * maps both references to the one replacement. */
+  @SerialVersionUID(1L)
+  private final class Compact[P, Out](@transient private var w: TypedHawWheel[P, Out])
+      extends Serializable {
+    private def writeObject(out: java.io.ObjectOutputStream): Unit = w.writeCompact(out)
+    private def readObject(in: java.io.ObjectInputStream): Unit = w = readCompact(in)
+    private def readResolve(): AnyRef = w
+  }
+
+  private def readCompact[P, Out](in: java.io.ObjectInputStream): TypedHawWheel[P, Out] = {
+    val agg = in.readObject().asInstanceOf[WheelAggregator[_, P, Out]]
+    implicit val ct: ClassTag[P] = in.readObject().asInstanceOf[ClassTag[P]]
+    val startSec = in.readLong()
+    val endSec = in.readLong()
+    val secs = in.readObject().asInstanceOf[Array[Long]]
+    val parts =
+      if (in.readBoolean()) {
+        val dec = agg.partialSerde.get._2
+        val a = new Array[P](secs.length)
+        var i = 0
+        while (i < a.length) {
+          val b = new Array[Byte](in.readInt())
+          in.readFully(b)
+          a(i) = dec(b)
+          i += 1
+        }
+        a
+      } else in.readObject().asInstanceOf[Array[P]]
+    new TypedHawWheel[P, Out](agg, startSec, endSec, secs, parts)
+  }
+
   /** Freeze fast path: `secs` sorted ascending with unique keys, `parts`
     * aligned — adopted by reference (callers pass freshly built arrays). */
   private[wheel] def fromSortedUnique[In, P: ClassTag, Out](
@@ -1433,7 +1480,15 @@ object TypedHawWheel {
   * over a multi-year span are gigabytes regardless of row count): sorted
   * distinct-second partials with a prefix array when the aggregator is
   * invertible (O(log n) any-range), sparse granularity levels with greedy
-  * decomposition otherwise. */
+  * decomposition otherwise.
+  *
+  * Java serialization writes the COMPACT form (`TypedHawWheel.Compact`):
+  * one object per wheel, not one per active second. UID 2 marks that
+  * format; a stream from an earlier build carries this class under its
+  * old shape-computed UID and fails with `InvalidClassException`, which
+  * [[graft.index.WheelIndexIO.load]] reports as a stale index format.
+  * Kryo ignores the Java hooks and ships the fields as they are. */
+@SerialVersionUID(2L)
 final class TypedHawWheel[P: ClassTag, Out] private[wheel] (
     agg: WheelAggregator[_, P, Out],
     val startSec: Long,
@@ -1444,6 +1499,34 @@ final class TypedHawWheel[P: ClassTag, Out] private[wheel] (
 
   /** Number of DISTINCT seconds with data. */
   val numSecs: Int = secs.length
+
+  private def writeReplace(): AnyRef = new TypedHawWheel.Compact(this)
+
+  /** The `TypedHawWheel.Compact` payload: `secs` as one primitive run,
+    * then `parts` as length-prefixed bytes through the aggregator's
+    * [[WheelAggregator.partialSerde]], or as the object array without one.
+    * Encoding reads the partials only; it must not change them. */
+  private[wheel] def writeCompact(out: java.io.ObjectOutputStream): Unit = {
+    out.writeObject(agg)
+    out.writeObject(implicitly[ClassTag[P]])
+    out.writeLong(startSec)
+    out.writeLong(endSec)
+    out.writeObject(secs)
+    agg.partialSerde match {
+      case Some((enc, _)) =>
+        out.writeBoolean(true)
+        var i = 0
+        while (i < parts.length) {
+          val b = enc(parts(i))
+          out.writeInt(b.length)
+          out.write(b)
+          i += 1
+        }
+      case None =>
+        out.writeBoolean(false)
+        out.writeObject(parts)
+    }
+  }
 
   private def lowerBound(arr: Array[Long], x: Long): Int = {
     val r = java.util.Arrays.binarySearch(arr, x)

@@ -255,4 +255,102 @@ class WheelIndexIOSpec extends AnyFunSuite {
     WheelRegistry.clear()
   }
 
+  test("a saved benchmark-shaped index answers every family exactly as before the save") {
+    spark.sparkContext.setLogLevel("WARN")
+    graft.Graft.enable(spark)
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-io-families").toString
+    val p = s"$dir/events.parquet"
+    val base = 1704067200L
+    val types = Seq("click", "error", "purchase", "signup", "view")
+    (0 until 4000).map { i =>
+      (new java.sql.Timestamp((base + (i.toLong * 7919L) % 200000L) * 1000L),
+        (i * 37 % 300).toLong, types(i % 5), (i * 13 % 1000) / 4.0)
+    }.toDF("ts", "user_id", "event_type", "value").write.mode("overwrite").parquet(p)
+    val built = types.foldLeft(UWheelBuilder("ts", Seq("value"))) { (b, et) =>
+      b.withKeyedWheel(IndexBuilder("value", Some(s"event_type = '$et'")))
+    }.withDistinctWheel("user_id").withQuantileWheel("value")
+      .withMomentWheel("value").withTopKWheel("user_id").build(spark, p)
+    spark.read.parquet(p).createOrReplaceTempView("io_events")
+
+    val w = "ts >= TIMESTAMP '2024-01-01 05:00:00' AND ts < TIMESTAMP '2024-01-03 07:00:00'"
+    val sumDec = "CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE)"
+    val queries = Seq(
+      s"SELECT count(*) AS cnt FROM io_events WHERE $w",
+      s"SELECT $sumDec AS s FROM io_events WHERE $w AND event_type = 'purchase'",
+      s"SELECT min(value) AS mn, max(value) AS mx, count(*) AS cnt FROM io_events WHERE $w",
+      s"SELECT date_trunc('hour', ts) AS b, count(*) AS cnt, min(value) AS mn, max(value) AS mx " +
+        s"FROM io_events WHERE $w GROUP BY 1 ORDER BY 1",
+      s"SELECT event_type, count(*) AS cnt, $sumDec AS s FROM io_events WHERE $w " +
+        "GROUP BY event_type ORDER BY 1",
+      s"SELECT user_id, count(*) AS cnt FROM io_events WHERE $w " +
+        "GROUP BY 1 ORDER BY cnt DESC, user_id LIMIT 5",
+      s"SELECT hll_distinct(user_id) AS du FROM io_events WHERE $w",
+      s"SELECT wheel_stddev_samp(CAST(value AS DECIMAL(18,2))) AS sd FROM io_events WHERE $w",
+      s"SELECT hdr_quantile(value, 0.9) AS p90 FROM io_events WHERE $w")
+    def answers: Seq[Seq[org.apache.spark.sql.Row]] = queries.map { sql =>
+      val df = spark.sql(sql)
+      assert(rewritten(df), s"not served from the index: $sql")
+      df.collect().toSeq
+    }
+    val before = answers
+    val file = s"$dir/index.bin"
+    WheelIndexIO.save(built, file)
+    WheelRegistry.clear()
+    val (loaded, fresh) = WheelIndexIO.load(spark, file)
+    assert(fresh)
+    assert(loaded.indexUsageBytesByFamily == built.indexUsageBytesByFamily)
+    assert(answers == before)
+    WheelRegistry.clear()
+  }
+
+  test("a file saved in the previous per-slot typed-wheel format fails load as stale") {
+    // saved by the build before typed wheels had their compact form: an
+    // index with count, value min/max, HLL, moment and top-k wheels
+    val res = getClass.getResource("/graft/index/typed-wheels-v1.wheelidx")
+    assert(res != null, "fixture missing")
+    WheelRegistry.clear()
+    val e = intercept[java.io.InvalidObjectException] {
+      WheelIndexIO.load(spark, java.nio.file.Paths.get(res.toURI).toString)
+    }
+    assert(e.getMessage.contains("stale index format"), e.getMessage)
+    assert(e.getMessage.contains("rebuild"), e.getMessage)
+    assert(e.getMessage.contains("graft.wheel.TypedHawWheel"), e.getMessage)
+    assert(WheelRegistry.isEmpty)
+  }
+
+  test("indexes built from relative and file:/// roots serve queries and refresh by appending") {
+    spark.sparkContext.setLogLevel("WARN")
+    graft.Graft.enable(spark)
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-io-relroot")
+    val abs = dir.resolve("events.parquet").toString
+    val rel = java.nio.file.Paths.get("").toAbsolutePath.relativize(dir.resolve("events.parquet"))
+      .toString
+    assert(!rel.startsWith("/"))
+    val base = java.sql.Timestamp.valueOf("2024-09-01 00:00:00").getTime
+    def rows(from: Int, n: Int) =
+      (from until from + n).map(i => (new java.sql.Timestamp(base + i * 7000L), i / 4.0))
+    rows(0, 500).toDF("ts", "value").write.mode("overwrite").parquet(abs)
+    def q = spark.read.parquet(abs)
+      .filter(col("ts") >= lit("2024-09-01 00:10:00").cast("timestamp") &&
+              col("ts") < lit("2024-09-01 03:00:00").cast("timestamp"))
+      .agg(count(lit(1)).as("c"))
+    def scanCount: Long = {
+      graft.Graft.rewritesEnabled = false
+      try q.collect()(0).getLong(0) finally graft.Graft.rewritesEnabled = true
+    }
+    Seq(rel, s"file://$abs").zipWithIndex.foreach { case (root, k) =>
+      WheelRegistry.clear()
+      UWheelBuilder("ts", Seq("value")).build(spark, root)
+      assert(rewritten(q), s"$root: count not served")
+      assert(q.collect()(0).getLong(0) === scanCount)
+      rows(500 + 100 * k, 100).toDF("ts", "value").write.mode("append").parquet(abs)
+      assert(UWheelIndex.refresh(spark, root).isInstanceOf[UWheelIndex.RefreshOutcome.Appended],
+        s"$root: refresh after an append")
+      assert(rewritten(q), s"$root: count not served after refresh")
+      assert(q.collect()(0).getLong(0) === scanCount)
+    }
+    WheelRegistry.clear()
+  }
 }

@@ -138,6 +138,124 @@ class WheelSerdeSpec extends AnyFunSuite {
     val direct = a.merge(b).freeze().range(t0, t0 + 60)
     assert(viaSer.toSeq == direct.toSeq)
   }
+
+  // ---- frozen typed wheels: the compact Java form and the Kryo fields
+
+  private def javaBytes(o: AnyRef): Int = {
+    val bos = new java.io.ByteArrayOutputStream()
+    val oos = new java.io.ObjectOutputStream(bos)
+    oos.writeObject(o); oos.close()
+    bos.size()
+  }
+
+  /** Partial equality by content (byte arrays and top-k summaries hold
+    * arrays, whose `==` is identity). */
+  private def samePartial(a: Any, b: Any): Boolean = (a, b) match {
+    case (x: Array[Byte], y: Array[Byte]) => java.util.Arrays.equals(x, y)
+    case (x: WheelAggregators.TopKSummary, y: WheelAggregators.TopKSummary) =>
+      x.keys.sameElements(y.keys) && x.lowers.sameElements(y.lowers) && x.slack == y.slack
+    case _ => a == b
+  }
+
+  /** `b` holds `a`'s per-second partials and answers every range `a` does,
+    * over windows aligned to every granularity level plus unaligned ones. */
+  private def assertSameWheel[P, O](a: TypedHawWheel[P, O], b: TypedHawWheel[P, O]): Unit = {
+    assert(b.startSec == a.startSec && b.endSec == a.endSec && b.numSecs == a.numSecs)
+    val pa = a.slotPartials.toSeq
+    val pb = b.slotPartials.toSeq
+    assert(pa.map(_._1) == pb.map(_._1))
+    pa.zip(pb).foreach { case ((s, x), (_, y)) => assert(samePartial(x, y), s"slot $s") }
+    val rnd = new scala.util.Random(7)
+    val ranges = HawWheel.Spans.toSeq.flatMap { span =>
+      val first = HawWheel.alignDown(a.startSec, span)
+      (0 until 6).map(k => (first + k * span, first + (k + 1) * span)) :+
+        ((first, first + 6 * span))
+    } ++ (0 until 40).map { _ =>
+      val lo = a.startSec - 5 + rnd.nextInt((a.endSec - a.startSec + 10).toInt)
+      (lo.toLong, lo + 1 + rnd.nextInt(3 * 86400))
+    }
+    ranges.foreach { case (lo, hi) =>
+      assert(samePartial(a.combineRange(lo, hi), b.combineRange(lo, hi)), s"[$lo, $hi)")
+    }
+  }
+
+  /** One frozen wheel per typed family, over seconds spread across three
+    * days so every granularity level holds several slots. */
+  private def typedWheels: Seq[(String, TypedHawWheel[_, _])] = {
+    def secOf(i: Int): Long = t0 + (i.toLong * 7919L) % (3L * 86400L)
+    val hll = new TypedRwWheel(new WheelAggregators.HllDistinct(p = 9))
+    (0 until 6000).foreach(i => hll.mergeLift(secOf(i % 2000), (i * 31 % 5000).toLong))
+    val hdr = new TypedRwWheel(new WheelAggregators.HdrQuantile(s = 5))
+    (0 until 6000).foreach(i => hdr.mergeLift(secOf(i % 2000), (i % 977) * 0.37 - 40.0))
+    val mom = new TypedRwWheel(new WheelAggregators.MomentStats(scale = 2))
+    (0 until 6000).foreach { i =>
+      // Σx² leaves the Long range in every slot; slot 0 pushes Σx out too
+      val v = if (i % 2000 == 0) Long.MaxValue / 2 + 1 else 3000000000L + i
+      mom.mergeLift(secOf(i % 2000), v)
+    }
+    val top = new TypedRwWheel(new WheelAggregators.TopTalkers(cap = 8))
+    (0 until 6000).foreach(i => top.mergeLift(secOf(i % 2000), (i % 37).toLong))
+    val bag = new TypedRwWheel(WheelSerdeSpec.BagAgg)
+    (0 until 300).foreach(i => bag.mergeLift(secOf(i % 100), i.toLong))
+    Seq("hll" -> hll.freeze(), "hdr" -> hdr.freeze(), "moments" -> mom.freeze(),
+      "topk" -> top.freeze(), "no serde" -> bag.freeze())
+  }
+
+  test("TypedHawWheel round-trips through Java serialization, every typed family") {
+    typedWheels.foreach { case (name, w0) =>
+      val w = w0.asInstanceOf[TypedHawWheel[Any, Any]]
+      withClue(s"$name: ")(assertSameWheel(w, roundTrip(w)))
+    }
+  }
+
+  test("TypedHawWheel round-trips through Spark's KryoSerializer, every typed family") {
+    typedWheels.foreach { case (name, w0) =>
+      val w = w0.asInstanceOf[TypedHawWheel[Any, Any]]
+      withClue(s"$name: ")(assertSameWheel(w, kryoTrip(w)))
+    }
+  }
+
+  test("TypedHawWheel's Java form is one run per wheel: smaller than per-slot objects") {
+    val (_, mom) = typedWheels.find(_._1 == "moments").get
+    val w = mom.asInstanceOf[TypedHawWheel[WheelAggregators.Moments, WheelAggregators.Moments]]
+    val perSlot = javaBytes(w.slotPartials.map(_._2).toArray)
+    assert(javaBytes(w) < perSlot, s"compact ${javaBytes(w)} B vs per-slot objects $perSlot B")
+  }
+
+  test("a wheel referenced twice in one stream loads as one object") {
+    val (_, w) = typedWheels.head
+    val (a, b) = roundTrip((w, w))
+    assert(a eq b)
+    assertSameWheel(w.asInstanceOf[TypedHawWheel[Any, Any]], a.asInstanceOf[TypedHawWheel[Any, Any]])
+  }
+
+  test("TypedHawWheel pins serialVersionUID 2: the compact format's marker") {
+    val uid = java.io.ObjectStreamClass.lookup(classOf[TypedHawWheel[_, _]]).getSerialVersionUID
+    assert(uid == 2L)
+  }
+
+  test("encoding a moment partial leaves it unchanged, and decodes to an equal value") {
+    val agg = new WheelAggregators.MomentStats(scale = 2)
+    val small = Seq(12L, -7L, 40000L).map(agg.lift).reduce(agg.combine)
+    val big = Seq(3000000000L, Long.MaxValue / 2 + 1, Long.MaxValue / 2 + 1)
+      .map(agg.lift).reduce(agg.combine)
+    assert(!big.sxx.isValidLong && !big.sx.isValidLong)
+    Seq(small, big, agg.identity).foreach { p =>
+      val before = javaBytes(p)
+      val bytes = agg.encode(p)
+      assert(javaBytes(p) == before, s"encode changed $p's serialized size")
+      val back = agg.decode(bytes)
+      assert(back == p)
+      assert(javaBytes(back) == before, "decoded partial carries extra state")
+      assert(agg.encode(back).sameElements(bytes))
+    }
+    val co = new WheelAggregators.CoMomentStats(scaleX = 1, scaleY = 0)
+    val cp = Seq((5L, -3L), (4000000000L, 9L)).map(co.lift).reduce(co.combine)
+    val coBefore = javaBytes(cp)
+    val coBack = co.decode(co.encode(cp))
+    assert(javaBytes(cp) == coBefore)
+    assert(coBack == cp && javaBytes(coBack) == coBefore)
+  }
 }
 
 object WheelSerdeSpec {
