@@ -670,15 +670,8 @@ object Bench {
     if (only.isEmpty) graft.index.WheelRegistry.lookup(s"$sfDir/events.parquet")
       .foreach { ti =>
         try {
-          val fams: Seq[(String, Seq[AnyRef])] = Seq(
-            "numeric" -> ti.allWheels,
-            "hll" -> ti.allDistinctWheels,
-            "hdr" -> ti.allQuantileWheels,
-            "cms" -> ti.allFreqWheels,
-            "topk" -> ti.allTopKWheels,
-            "moment" -> ti.allMomentWheels,
-            "comoment" -> ti.allCoMomentWheels)
-          fams.foreach { case (fam, ws) =>
+          graft.index.WheelFamily.all.filterNot(_ == graft.index.WheelFamily.Millis)
+            .map(f => (f.name, ti.all(f))).foreach { case (fam, ws) =>
             val bos = new java.io.ByteArrayOutputStream()
             val oos = new java.io.ObjectOutputStream(bos)
             oos.writeObject(ws.toList); oos.close()

@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 import graft.rules.UWheelRule
 
@@ -18,85 +20,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectOptimizerRule(_ => UWheelRule)
     ext.injectOptimizerRule(_ => graft.rules.NanosTimePushdown)
-    ext.injectFunction((
-      org.apache.spark.sql.catalyst.FunctionIdentifier("vec_dot"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[graft.functions.VecDot].getName, "vec_dot"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        graft.functions.VecDot(exprs(0), exprs(1))))
-    ext.injectFunction((
-      org.apache.spark.sql.catalyst.FunctionIdentifier("srp_band_keys"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[graft.functions.SrpBandKeys].getName, "srp_band_keys"),
-      Graft.srpBuilder))
-    ext.injectFunction((
-      org.apache.spark.sql.catalyst.FunctionIdentifier("hll_distinct"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[graft.functions.HllDistinctAgg].getName, "hll_distinct"),
-      Graft.hllBuilder))
-    ext.injectFunction((
-      org.apache.spark.sql.catalyst.FunctionIdentifier("hdr_quantile"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[graft.functions.HdrQuantileAgg].getName, "hdr_quantile"),
-      Graft.hdrBuilder))
-    ext.injectFunction((
-      org.apache.spark.sql.catalyst.FunctionIdentifier("cms_freq"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[graft.functions.CmsFreqAgg].getName, "cms_freq"),
-      Graft.cmsBuilder))
-    ext.injectFunction((
-      org.apache.spark.sql.catalyst.FunctionIdentifier("word_ngrams"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[graft.functions.WordNGrams].getName, "word_ngrams"),
-      Graft.wordNGramsBuilder))
-    ext.injectFunction((
-      org.apache.spark.sql.catalyst.FunctionIdentifier("poly_fp"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[graft.functions.PolyFingerprint].getName, "poly_fp"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        graft.functions.PolyFingerprint(exprs.head)))
-    ext.injectFunction((
-      org.apache.spark.sql.catalyst.FunctionIdentifier("array_pairs"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[graft.functions.ArrayPairs].getName, "array_pairs"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        graft.functions.ArrayPairs(exprs.head)))
-    ext.injectFunction((
-      org.apache.spark.sql.catalyst.FunctionIdentifier("collect_capped_long"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[graft.functions.CollectCappedLong].getName, "collect_capped_long"),
-      Graft.collectCappedBuilder))
-    ext.injectFunction((
-      org.apache.spark.sql.catalyst.FunctionIdentifier("topk_pairs"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[graft.functions.TopKPairsAgg].getName, "topk_pairs"),
-      Graft.topkPairsBuilder))
-    ext.injectFunction((
-      org.apache.spark.sql.catalyst.FunctionIdentifier("bloom_agg"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[graft.functions.BloomAgg].getName, "bloom_agg"),
-      Graft.bloomAggBuilder))
-    ext.injectFunction((
-      org.apache.spark.sql.catalyst.FunctionIdentifier("bloom_contains"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[graft.functions.BloomContains].getName, "bloom_contains"),
-      Graft.bloomContainsBuilder))
-    graft.functions.MomentStatsAgg.Stats.foreach { stat =>
-      ext.injectFunction((
-        org.apache.spark.sql.catalyst.FunctionIdentifier(s"wheel_$stat"),
-        new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-          classOf[graft.functions.MomentStatsAgg].getName, s"wheel_$stat"),
-        (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-          Graft.momentBuilder(stat, exprs)))
-    }
-    graft.functions.CoMomentStatsAgg.Stats.foreach { stat =>
-      ext.injectFunction((
-        org.apache.spark.sql.catalyst.FunctionIdentifier(s"wheel_$stat"),
-        new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-          classOf[graft.functions.CoMomentStatsAgg].getName, s"wheel_$stat"),
-        (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-          Graft.coMomentBuilder(stat, exprs)))
-    }
+    Graft.functions.foreach(ext.injectFunction)
   }
 }
 
@@ -159,61 +83,47 @@ object Graft {
   }
 
   def registerFunctions(spark: SparkSession): Unit = {
-    val cs = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    cs.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vec_dot",
-      exprs => graft.functions.VecDot(exprs(0), exprs(1)),
-      "scala_udf")
-    cs.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "srp_band_keys", srpBuilder, "scala_udf")
-    cs.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "hll_distinct", hllBuilder, "scala_udf")
-    cs.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "hdr_quantile", hdrBuilder, "scala_udf")
-    cs.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cms_freq", cmsBuilder, "scala_udf")
-    cs.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "word_ngrams", wordNGramsBuilder, "scala_udf")
-    cs.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "array_pairs",
-      exprs => graft.functions.ArrayPairs(exprs.head),
-      "scala_udf")
-    cs.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "poly_fp",
-      exprs => graft.functions.PolyFingerprint(exprs.head),
-      "scala_udf")
-    cs.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "collect_capped_long", collectCappedBuilder, "scala_udf")
-    cs.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "topk_pairs", topkPairsBuilder, "scala_udf")
-    cs.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bloom_agg", bloomAggBuilder, "scala_udf")
-    cs.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bloom_contains", bloomContainsBuilder, "scala_udf")
-    graft.functions.MomentStatsAgg.Stats.foreach { stat =>
-      cs.sessionState.functionRegistry.createOrReplaceTempFunction(
-        s"wheel_$stat", exprs => momentBuilder(stat, exprs), "scala_udf")
-    }
-    graft.functions.CoMomentStatsAgg.Stats.foreach { stat =>
-      cs.sessionState.functionRegistry.createOrReplaceTempFunction(
-        s"wheel_$stat", exprs => coMomentBuilder(stat, exprs), "scala_udf")
-    }
+    val registry = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.functionRegistry
+    functions.foreach { case (id, info, builder) => registry.registerFunction(id, info, builder) }
+  }
+
+  /** Every SQL function graft adds, as (identifier, info, builder): the one
+    * table both [[GraftExtensions]] and [[registerFunctions]] register. */
+  private[graft] lazy val functions
+      : Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = {
+    import graft.functions._
+    def fn(name: String, cls: Class[_], builder: Seq[Expression] => Expression) =
+      (FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), builder)
+    Seq(
+      fn("vec_dot", classOf[VecDot], e => VecDot(e(0), e(1))),
+      fn("srp_band_keys", classOf[SrpBandKeys], srpBuilder),
+      fn("hll_distinct", classOf[HllDistinctAgg], hllBuilder),
+      fn("hdr_quantile", classOf[HdrQuantileAgg], hdrBuilder),
+      fn("cms_freq", classOf[CmsFreqAgg], cmsBuilder),
+      fn("word_ngrams", classOf[WordNGrams], wordNGramsBuilder),
+      fn("poly_fp", classOf[PolyFingerprint], e => PolyFingerprint(e.head)),
+      fn("array_pairs", classOf[ArrayPairs], e => ArrayPairs(e.head)),
+      fn("collect_capped_long", classOf[CollectCappedLong], collectCappedBuilder),
+      fn("topk_pairs", classOf[TopKPairsAgg], topkPairsBuilder),
+      fn("bloom_agg", classOf[BloomAgg], bloomAggBuilder),
+      fn("bloom_contains", classOf[BloomContains], bloomContainsBuilder)) ++
+      MomentStatsAgg.Stats.map(stat =>
+        fn(s"wheel_$stat", classOf[MomentStatsAgg], momentBuilder(stat, _))) ++
+      CoMomentStatsAgg.Stats.map(stat =>
+        fn(s"wheel_$stat", classOf[CoMomentStatsAgg], coMomentBuilder(stat, _)))
   }
 
   /** `wheel_covar_samp(x, y)` etc. — exact co-moment covariance/correlation
     * aggregates ([[graft.functions.CoMomentStatsAgg]]). */
-  private[graft] def coMomentBuilder(stat: String,
-      exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression])
-      : org.apache.spark.sql.catalyst.expressions.Expression = {
+  private[graft] def coMomentBuilder(stat: String, exprs: Seq[Expression]): Expression = {
     require(exprs.length == 2, s"wheel_$stat takes (x, y), got ${exprs.length} arguments")
     graft.functions.CoMomentStatsAgg(exprs(0), exprs(1), stat)
   }
 
   /** `word_ngrams(tokens, n)` — distinct word n-grams, one native pass
     * ([[graft.functions.WordNGrams]]). */
-  private[graft] def wordNGramsBuilder(
-      exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression])
-      : org.apache.spark.sql.catalyst.expressions.Expression = {
+  private[graft] def wordNGramsBuilder(exprs: Seq[Expression]): Expression = {
     require(exprs.length == 2, s"word_ngrams takes (tokens, n), got ${exprs.length} arguments")
     graft.functions.WordNGrams(exprs(0), intOf(exprs(1), "word_ngrams n"))
   }
@@ -221,9 +131,7 @@ object Graft {
   /** `collect_capped_long(col, cap)` — buffer-bounded sorted collect
     * ([[graft.functions.CollectCappedLong]]); `cap` must be an integer
     * literal (it bounds the aggregation buffer). */
-  private[graft] def collectCappedBuilder(
-      exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression])
-      : org.apache.spark.sql.catalyst.expressions.Expression = {
+  private[graft] def collectCappedBuilder(exprs: Seq[Expression]): Expression = {
     require(exprs.length == 2,
       s"collect_capped_long takes (col, cap), got ${exprs.length} arguments")
     graft.functions.CollectCappedLong(exprs.head, intOf(exprs(1), "collect_capped_long cap"))
@@ -233,9 +141,7 @@ object Graft {
     * ([[graft.functions.TopKPairsAgg]]), the sort-free replacement for the
     * rank-limit window; `k` must be an integer literal (it bounds the
     * aggregation buffer). */
-  private[graft] def topkPairsBuilder(
-      exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression])
-      : org.apache.spark.sql.catalyst.expressions.Expression = {
+  private[graft] def topkPairsBuilder(exprs: Seq[Expression]): Expression = {
     require(exprs.length == 3,
       s"topk_pairs takes (score, id, k), got ${exprs.length} arguments")
     graft.functions.TopKPairsAgg(exprs(0), exprs(1), intOf(exprs(2), "topk_pairs k"))
@@ -244,9 +150,7 @@ object Graft {
   /** `bloom_agg(hash[, numBits[, k]])` — Bloom-filter build aggregate
     * ([[graft.functions.BloomAgg]]); `numBits`/`k` must be integer literals
     * (they size the aggregation buffer). */
-  private[graft] def bloomAggBuilder(
-      exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression])
-      : org.apache.spark.sql.catalyst.expressions.Expression = {
+  private[graft] def bloomAggBuilder(exprs: Seq[Expression]): Expression = {
     require(exprs.nonEmpty && exprs.length <= 3,
       s"bloom_agg takes (hash[, numBits[, k]]), got ${exprs.length} arguments")
     // omitted parameters use BloomAgg's own case-class defaults — one
@@ -260,9 +164,7 @@ object Graft {
 
   /** `bloom_contains(blob, hash)` — Bloom membership probe
     * ([[graft.functions.BloomContains]]). */
-  private[graft] def bloomContainsBuilder(
-      exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression])
-      : org.apache.spark.sql.catalyst.expressions.Expression = {
+  private[graft] def bloomContainsBuilder(exprs: Seq[Expression]): Expression = {
     require(exprs.length == 2,
       s"bloom_contains takes (blob, hash), got ${exprs.length} arguments")
     graft.functions.BloomContains(exprs(0), exprs(1))
@@ -270,14 +172,12 @@ object Graft {
 
   /** `wheel_var_samp(col)` etc. — exact-moment variance/stddev aggregates
     * ([[graft.functions.MomentStatsAgg]]). */
-  private[graft] def momentBuilder(stat: String,
-      exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression])
-      : org.apache.spark.sql.catalyst.expressions.Expression = {
+  private[graft] def momentBuilder(stat: String, exprs: Seq[Expression]): Expression = {
     require(exprs.length == 1, s"wheel_$stat takes (col), got ${exprs.length} arguments")
     graft.functions.MomentStatsAgg(exprs.head, stat)
   }
 
-  private def intOf(e: org.apache.spark.sql.catalyst.expressions.Expression,
+  private def intOf(e: Expression,
                     what: String): Int = {
     require(e.foldable, s"$what parameters must be literals, got $e")
     e.eval(null) match {
@@ -291,18 +191,14 @@ object Graft {
 
   /** `srp_band_keys(vec, bits, rowsPerBand)` — the parameter arguments must
     * be integer literals (they size the generated signature loop). */
-  private[graft] def srpBuilder(
-      exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression])
-      : org.apache.spark.sql.catalyst.expressions.Expression =
+  private[graft] def srpBuilder(exprs: Seq[Expression]): Expression =
     graft.functions.SrpBandKeys(exprs(0), intOf(exprs(1), "srp_band_keys"),
       intOf(exprs(2), "srp_band_keys"))
 
   /** `hll_distinct(col[, p])` — `p` must be an integer literal (it sizes
     * the register buffer); the analyzer wraps the returned
     * AggregateFunction into a Complete AggregateExpression. */
-  private[graft] def hllBuilder(
-      exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression])
-      : org.apache.spark.sql.catalyst.expressions.Expression = {
+  private[graft] def hllBuilder(exprs: Seq[Expression]): Expression = {
     require(exprs.length == 1 || exprs.length == 2,
       s"hll_distinct takes (col) or (col, p), got ${exprs.length} arguments")
     val p = if (exprs.length == 2) intOf(exprs(1), "hll_distinct") else 11
@@ -312,9 +208,7 @@ object Graft {
   /** `hdr_quantile(col, q[, s])` — `q` a numeric literal in [0, 1], `s`
     * an integer literal (it fixes the bucketing resolution, which must
     * match a registered sketch wheel's for the rewrite to fire). */
-  private[graft] def hdrBuilder(
-      exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression])
-      : org.apache.spark.sql.catalyst.expressions.Expression = {
+  private[graft] def hdrBuilder(exprs: Seq[Expression]): Expression = {
     require(exprs.length == 2 || exprs.length == 3,
       s"hdr_quantile takes (col, q) or (col, q, s), got ${exprs.length} arguments")
     val qe = exprs(1)
@@ -335,9 +229,7 @@ object Graft {
     * value whose frequency is estimated), `logW`/`d` integer literals (they
     * size the counter matrix, which must match a registered frequency-sketch
     * wheel's for the rewrite to fire). */
-  private[graft] def cmsBuilder(
-      exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression])
-      : org.apache.spark.sql.catalyst.expressions.Expression = {
+  private[graft] def cmsBuilder(exprs: Seq[Expression]): Expression = {
     require(exprs.length >= 2 && exprs.length <= 4,
       s"cms_freq takes (key, target[, logW[, d]]), got ${exprs.length} arguments")
     val te = exprs(1)

@@ -32,9 +32,10 @@ import scala.util.Using
   * (sketch, moment, top-k) wheel writes itself as ONE compact run — its
   * per-second keys as one primitive array, its partials as length-prefixed
   * bytes through the aggregator's `partialSerde` ([[graft.wheel.TypedHawWheel]]).
-  * Files saved by builds before that format hold one Java object per active
-  * second; they fail [[load]] with the "stale index format … rebuild" error,
-  * and the index must be rebuilt and saved again.
+  * There is one format rule: a change to any persisted class bumps
+  * [[TableIndex]]'s `SerialVersionUID`. A file saved under any earlier
+  * version, numeric-only or typed, fails [[load]] with the "stale index
+  * format … rebuild" error; rebuild the index and save it again.
   */
 object WheelIndexIO {
 
@@ -68,41 +69,14 @@ object WheelIndexIO {
         Files.newInputStream(Paths.get(file)), 1 << 20)))(
         _.readObject().asInstanceOf[TableIndex])
       catch {
-        // Class-shape mismatch = a file saved by an INCOMPATIBLE graft
-        // version (e.g. pre-round-11 files with top-k wheels predate the
-        // pinned @SerialVersionUID and the filter fields; files with typed
-        // wheels saved before their compact form carry TypedHawWheel's old
-        // shape-computed UID). There is no
-        // byte-level compat path back to those files; fail with the
-        // operational answer instead of a bare serialization stack trace.
+        // a file saved under another version of a persisted class: there
+        // is no path back to it, so fail with the operational answer
+        // instead of a bare serialization stack trace
         case e: java.io.InvalidClassException =>
           throw new java.io.InvalidObjectException(
             s"$file was saved by an incompatible graft version (stale index " +
               s"format): rebuild the index and re-save — ${e.getMessage}")
       }
-    // Canonical-form restore (round-7 advice): a file written by a
-    // pre-sparse-HLL build holds dense register slots whose content may now
-    // be canonically sparse, and combine() preserves density — mixing such
-    // a wheel with fresh ones would break the bit-for-bit register
-    // equality the rewrite specs assert. Any distinct wheel carrying a
-    // non-canonical per-second partial is rebuilt from canonicalized
-    // partials (every level re-derives from them, so all stored partials
-    // come out canonical). Current-format files pass the probe untouched.
-    t.allDistinctWheels.foreach { d =>
-      if (d.wheel.slotPartials.exists { case (_, p) => d.agg.canonicalize(p) ne p }) {
-        val rebuilt = graft.wheel.TypedHawWheel.fromSecondPartials(
-          d.wheel.slotPartials.map { case (s, p) => (s, d.agg.canonicalize(p)) }, d.agg)
-        t.putDistinct(d.copy(wheel = rebuilt))
-      }
-    }
-    // Same-UID evolution guard: under the pinned SerialVersionUID, fields
-    // added AFTER a file was saved deserialize as null/0, and a future
-    // re-keying of the top-k map would deserialize raw via type erasure —
-    // re-put entries through putTopK so lookups work and null filter
-    // fields normalize. NOTE this cannot resurrect pre-round-11 top-k
-    // files: those predate the pinned UID entirely and fail readObject
-    // above with the stale-format error (rebuild is the only path).
-    t.renormalizeTopKs()
     WheelRegistry.register(t)
     // Stream-published snapshots (StreamingWheelIndex/StreamingTypedWheel
     // .saveSnapshot) carry fingerprint 0: their consistency domain is the
@@ -134,18 +108,9 @@ object WheelIndexIO {
     * indexed slot. */
   def savedWatermarkMs(t: TableIndex): Option[Long] = {
     // empty wheels carry the (0, 0) sentinel extent — only data-bearing
-    // wheels (endSec > startSec) vote
-    val secEdges =
-      t.allWheels.map(w => (w.wheel.startSec, w.wheel.endSec)) ++
-        t.allDistinctWheels.map(w => (w.wheel.startSec, w.wheel.endSec)) ++
-        t.allQuantileWheels.map(w => (w.wheel.startSec, w.wheel.endSec)) ++
-        t.allFreqWheels.map(w => (w.wheel.startSec, w.wheel.endSec)) ++
-        t.allMomentWheels.map(w => (w.wheel.startSec, w.wheel.endSec)) ++
-        t.allCoMomentWheels.map(w => (w.wheel.startSec, w.wheel.endSec)) ++
-        t.allTopKWheels.map(w => (w.wheel.startSec, w.wheel.endSec))
-    val msEdges = t.allMsWheels.map(w => (w.wheel.startSec, w.wheel.endSec))
-    val all = secEdges.collect { case (s, e) if e > s => e * 1000L } ++
-      msEdges.collect { case (s, e) if e > s => e }
-    if (all.isEmpty) None else Some(all.max)
+    // wheels (end > start) vote
+    WheelFamily.all.flatMap(f => t.all(f).map(_.extent).collect {
+      case (s, e) if e > s => e * f.tickMs
+    }).maxOption
   }
 }

@@ -637,8 +637,8 @@ object UWheelRule extends Rule[LogicalPlan] {
     * exactly this set. */
   private def keyedWheelSet(table: TableIndex, col: String)
       : (Seq[IndexedWheel], Seq[Literal]) = {
-    val keyed = table.allWheels.filter(_.keyEqOpt.exists(_._1 == col))
-    (keyed, keyed.flatMap(_.keyEqOpt).map(_._2).distinct)
+    val keyed = table.allWheels.filter(_.keyEq.exists(_._1 == col))
+    (keyed, keyed.flatMap(_.keyEq).map(_._2).distinct)
   }
 
   /** Plan-time dim-join folding (round-7 verdict task 5): a group-less
@@ -857,7 +857,7 @@ object UWheelRule extends Rule[LogicalPlan] {
           // span-coarsened builds produce span-aligned register slots: an
           // unaligned bound would silently include/exclude whole slots of
           // users, so gate exactly like the numeric wheels
-          .filter(d => sketchSpanOk(d.span))
+          .filter(d => sketchSpanOk(d.slotSpan))
           .map(HllSrc)
       // exact COUNT(DISTINCT k): the complete per-value `k = v` wheel set.
       // A residual filter declines — per-value wheels are keyed on the
@@ -874,7 +874,7 @@ object UWheelRule extends Rule[LogicalPlan] {
         if (msMode) return None
         table.quantileWheel(n.column.getOrElse(return None), keyFor(n))
           .filter(_.s == n.hllP)
-          .filter(d => sketchSpanOk(d.span))
+          .filter(d => sketchSpanOk(d.slotSpan))
           .map(QuantileSrc)
       // cms_freq: the frequency-sketch wheel twin of the hll/hdrq paths —
       // same residual routing (keyed variants by canonical filter key),
@@ -885,7 +885,7 @@ object UWheelRule extends Rule[LogicalPlan] {
         if (msMode) return None
         table.freqWheel(n.column.getOrElse(return None), keyFor(n))
           .filter(d => d.logW == n.hllP && d.d == n.cmsD)
-          .filter(d => sketchSpanOk(d.span))
+          .filter(d => sketchSpanOk(d.slotSpan))
           .map(FreqSrc)
       // wheel_var/stddev: the exact-moment wheel at the query's fixed-point
       // scale — same residual routing and span gate as the other typed
@@ -894,14 +894,14 @@ object UWheelRule extends Rule[LogicalPlan] {
         if (msMode) return None
         table.momentWheel(n.column.getOrElse(return None), keyFor(n))
           .filter(momentOk(n, _))
-          .filter(d => sketchSpanOk(d.span))
+          .filter(d => sketchSpanOk(d.slotSpan))
           .map(MomentSrc)
       case "comoment" =>
         if (msMode) return None
         table.coMomentWheel(n.column.getOrElse(return None),
             n.column2.getOrElse(return None), keyFor(n))
           .filter(coMomentOk(n, _))
-          .filter(d => sketchSpanOk(d.span))
+          .filter(d => sketchSpanOk(d.slotSpan))
           .map(CoMomentSrc)
       case "cntdist" =>
         if (filterKey.nonEmpty || msMode) None // per-value wheels are second-domain
@@ -910,7 +910,7 @@ object UWheelRule extends Rule[LogicalPlan] {
           (keyed, values) = keyedWheelSet(table, c)
           if values.nonEmpty
           pv = values.flatMap(v =>
-            keyed.filter(_.keyEqOpt.exists(_._2 == v))
+            keyed.filter(_.keyEq.exists(_._2 == v))
               .filter(coverageOk).filter(spanOk).headOption)
           if pv.length == values.length
           base <- table.anyForFilter("").filter(coverageOk).filter(spanOk)
@@ -960,7 +960,7 @@ object UWheelRule extends Rule[LogicalPlan] {
         else {
           val (keyed, _) = keyedWheelSet(table, col)
           val ws = dedup.flatMap { case (dt, v) =>
-            keyed.find(_.keyEqOpt.exists { case (c, kl) =>
+            keyed.find(_.keyEq.exists { case (c, kl) =>
               c == col && kl.dataType == dt && kl.value == v
             })
           }
@@ -1209,7 +1209,7 @@ object UWheelRule extends Rule[LogicalPlan] {
             n.kind == "max" || n.kind == "countcol" || w.valuesExactAtScale) &&
           ((n.kind != "min" && n.kind != "max") || w.valuesNaNFree)
       def wheelForValue(n: Need, v: Literal): Option[IndexedWheel] = {
-        val cands = keyed.filter(_.keyEqOpt.exists(_._2 == v))
+        val cands = keyed.filter(_.keyEq.exists(_._2 == v))
           .filter(coverageOk).filter(spanOk)
         n.column match {
           case None    => cands.headOption
@@ -1219,29 +1219,29 @@ object UWheelRule extends Rule[LogicalPlan] {
       def distinctForValue(n: Need): Literal => Option[DistinctIndexedWheel] = v =>
         n.column.flatMap(c => table.allDistinctWheels.find(d =>
           d.column == c && d.p == n.hllP &&
-            d.keyEqOpt.exists(ke => ke._1 == keyAttr.name && ke._2 == v)))
-          .filter(d => sketchSpanOk(d.span))
+            d.keyEq.exists(ke => ke._1 == keyAttr.name && ke._2 == v)))
+          .filter(d => sketchSpanOk(d.slotSpan))
       def quantileForValue(n: Need): Literal => Option[QuantileIndexedWheel] = v =>
         n.column.flatMap(c => table.allQuantileWheels.find(d =>
           d.column == c && d.s == n.hllP &&
-            d.keyEqOpt.exists(ke => ke._1 == keyAttr.name && ke._2 == v)))
-          .filter(d => sketchSpanOk(d.span))
+            d.keyEq.exists(ke => ke._1 == keyAttr.name && ke._2 == v)))
+          .filter(d => sketchSpanOk(d.slotSpan))
       def momentForValue(n: Need): Literal => Option[MomentIndexedWheel] = v =>
         n.column.flatMap(c => table.allMomentWheels.find(d =>
           d.column == c && momentOk(n, d) &&
-            d.keyEqOpt.exists(ke => ke._1 == keyAttr.name && ke._2 == v)))
-          .filter(d => sketchSpanOk(d.span))
+            d.keyEq.exists(ke => ke._1 == keyAttr.name && ke._2 == v)))
+          .filter(d => sketchSpanOk(d.slotSpan))
       def freqForValue(n: Need): Literal => Option[FreqIndexedWheel] = v =>
         n.column.flatMap(c => table.allFreqWheels.find(d =>
           d.column == c && d.logW == n.hllP && d.d == n.cmsD &&
-            d.keyEqOpt.exists(ke => ke._1 == keyAttr.name && ke._2 == v)))
-          .filter(d => sketchSpanOk(d.span))
+            d.keyEq.exists(ke => ke._1 == keyAttr.name && ke._2 == v)))
+          .filter(d => sketchSpanOk(d.slotSpan))
       def coMomentForValue(n: Need): Literal => Option[CoMomentIndexedWheel] = v =>
         (for { cx <- n.column; cy <- n.column2 } yield
           table.allCoMomentWheels.find(d =>
             d.columnX == cx && d.columnY == cy && coMomentOk(n, d) &&
-              d.keyEqOpt.exists(ke => ke._1 == keyAttr.name && ke._2 == v))).flatten
-          .filter(d => sketchSpanOk(d.span))
+              d.keyEq.exists(ke => ke._1 == keyAttr.name && ke._2 == v))).flatten
+          .filter(d => sketchSpanOk(d.slotSpan))
       val perValue: Map[(Expression, Literal), Src] =
         (for { (k, n) <- needList.toSeq; v <- values } yield (k, v) -> (n.kind match {
           case "hll"  => distinctForValue(n)(v).map(HllSrc).getOrElse(return None)
@@ -1503,11 +1503,11 @@ object UWheelRule extends Rule[LogicalPlan] {
         // span-aligned for their register slots too)
         val slotSpans = nds.values.flatMap {
           case (_, NumSrc(w)) => Seq(w.wheel.slotSpan)
-          case (_, HllSrc(d)) => Seq(d.span)
-          case (_, QuantileSrc(d)) => Seq(d.span)
-          case (_, FreqSrc(d)) => Seq(d.span)
-          case (_, MomentSrc(d)) => Seq(d.span)
-          case (_, CoMomentSrc(d)) => Seq(d.span)
+          case (_, HllSrc(d)) => Seq(d.slotSpan)
+          case (_, QuantileSrc(d)) => Seq(d.slotSpan)
+          case (_, FreqSrc(d)) => Seq(d.slotSpan)
+          case (_, MomentSrc(d)) => Seq(d.slotSpan)
+          case (_, CoMomentSrc(d)) => Seq(d.slotSpan)
           case (_, DistinctSetSrc(b, pv)) =>
             b.wheel.slotSpan +: pv.map(_.wheel.slotSpan)
         }.toSet + enumWheel.wheel.slotSpan
@@ -1689,7 +1689,7 @@ object UWheelRule extends Rule[LogicalPlan] {
               n.kind == "max" || n.kind == "countcol" || w.valuesExactAtScale) &&
             ((n.kind != "min" && n.kind != "max") || w.valuesNaNFree)
         def wheelForValue(n: Need, v: Literal): Option[IndexedWheel] = {
-          val cands = keyed.filter(_.keyEqOpt.exists(_._2 == v))
+          val cands = keyed.filter(_.keyEq.exists(_._2 == v))
             .filter(coverageOk).filter(spanOk)
           n.column match {
             case None    => cands.headOption // COUNT(*): any wheel of this value
@@ -1704,34 +1704,34 @@ object UWheelRule extends Rule[LogicalPlan] {
         def distinctForValue(n: Need, v: Literal): Option[DistinctIndexedWheel] =
           n.column.flatMap(c => table.allDistinctWheels.find(d =>
             d.column == c && d.p == n.hllP &&
-              d.keyEqOpt.exists(ke => ke._1 == keyAttr.name && ke._2 == v)))
-            .filter(d => sketchSpanOk(d.span))
+              d.keyEq.exists(ke => ke._1 == keyAttr.name && ke._2 == v)))
+            .filter(d => sketchSpanOk(d.slotSpan))
         // per-value KEYED quantile wheel, routed by keyEq like the distinct
         // wheels ("p99 per event type")
         def quantileForValue(n: Need, v: Literal): Option[QuantileIndexedWheel] =
           n.column.flatMap(c => table.allQuantileWheels.find(d =>
             d.column == c && d.s == n.hllP &&
-              d.keyEqOpt.exists(ke => ke._1 == keyAttr.name && ke._2 == v)))
-            .filter(d => sketchSpanOk(d.span))
+              d.keyEq.exists(ke => ke._1 == keyAttr.name && ke._2 == v)))
+            .filter(d => sketchSpanOk(d.slotSpan))
         // per-value KEYED moment wheel, routed by keyEq like the other
         // typed families ("value variance per event type")
         def momentForValue(n: Need, v: Literal): Option[MomentIndexedWheel] =
           n.column.flatMap(c => table.allMomentWheels.find(d =>
             d.column == c && momentOk(n, d) &&
-              d.keyEqOpt.exists(ke => ke._1 == keyAttr.name && ke._2 == v)))
-            .filter(d => sketchSpanOk(d.span))
+              d.keyEq.exists(ke => ke._1 == keyAttr.name && ke._2 == v)))
+            .filter(d => sketchSpanOk(d.slotSpan))
         def coMomentForValue(n: Need, v: Literal): Option[CoMomentIndexedWheel] =
           (for { cx <- n.column; cy <- n.column2 } yield
             table.allCoMomentWheels.find(d =>
               d.columnX == cx && d.columnY == cy && coMomentOk(n, d) &&
-                d.keyEqOpt.exists(ke => ke._1 == keyAttr.name && ke._2 == v))).flatten
-            .filter(d => sketchSpanOk(d.span))
+                d.keyEq.exists(ke => ke._1 == keyAttr.name && ke._2 == v))).flatten
+            .filter(d => sketchSpanOk(d.slotSpan))
         // per-value KEYED frequency wheel ("user 42's clicks per day")
         def freqForValue(n: Need, v: Literal): Option[FreqIndexedWheel] =
           n.column.flatMap(c => table.allFreqWheels.find(d =>
             d.column == c && d.logW == n.hllP && d.d == n.cmsD &&
-              d.keyEqOpt.exists(ke => ke._1 == keyAttr.name && ke._2 == v)))
-            .filter(d => sketchSpanOk(d.span))
+              d.keyEq.exists(ke => ke._1 == keyAttr.name && ke._2 == v)))
+            .filter(d => sketchSpanOk(d.slotSpan))
         val perValue: Map[(Expression, Literal), Src] =
           (for { (k, n) <- needList.toSeq; v <- values } yield (k, v) -> (n.kind match {
             case "hll"  => distinctForValue(n, v).map(HllSrc).getOrElse(return None)
@@ -1747,11 +1747,11 @@ object UWheelRule extends Rule[LogicalPlan] {
           .getOrElse(return None)
         val spans2 = perValue.values.map {
           case NumSrc(w) => w.wheel.slotSpan
-          case HllSrc(d) => d.span
-          case QuantileSrc(d) => d.span
-          case FreqSrc(d) => d.span
-          case MomentSrc(d) => d.span
-          case CoMomentSrc(d) => d.span
+          case HllSrc(d) => d.slotSpan
+          case QuantileSrc(d) => d.slotSpan
+          case FreqSrc(d) => d.slotSpan
+          case MomentSrc(d) => d.slotSpan
+          case CoMomentSrc(d) => d.slotSpan
           case _: DistinctSetSrc | _: UnionSrc => return None // declined above
         }.toSet + baseW.wheel.slotSpan
         if (spans2.exists(sp => bucketSpan % sp != 0)) return None

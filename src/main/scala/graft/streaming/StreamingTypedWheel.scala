@@ -7,7 +7,7 @@ import scala.reflect.ClassTag
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.index.{DistinctIndexedWheel, FreqIndexedWheel, MomentIndexedWheel, QuantileIndexedWheel, TableIndex, TopKIndexedWheel, TypedWheelBuild, WheelRegistry}
+import graft.index.{DistinctIndexedWheel, FamilyWheel, FreqIndexedWheel, MomentIndexedWheel, QuantileIndexedWheel, TableIndex, TopKIndexedWheel, TypedWheelBuild, WheelFamily, WheelKey, WheelRegistry}
 import graft.wheel.{TypedHawWheel, TypedRwWheel, WheelAggregator, WheelAggregators}
 
 /** Continuously-maintained TYPED wheel over a Structured Streaming source —
@@ -65,11 +65,10 @@ final class StreamingTypedWheel[In, P: ClassTag, Out](
     }
   }
 
-  @volatile private var publishTo: Option[(String, String, WheelAggregators.HllDistinct)] = None
-  @volatile private var publishMoment: Option[(String, String, WheelAggregators.MomentStats)] = None
-  @volatile private var publishFreq: Option[(String, String, WheelAggregators.CmsFreq)] = None
-  @volatile private var publishQuantile: Option[(String, String, WheelAggregators.HdrQuantile)] = None
-  @volatile private var publishTopK: Option[(String, String, WheelAggregators.TopTalkers)] = None
+  /** This publisher's registration target, if registered: (path key,
+    * column) — the single resolution [[publishLocked]], [[deregister]] and
+    * [[saveSnapshot]] share. */
+  @volatile private var publishTo: Option[(String, String)] = None
   // moment publish gates, accumulated per batch under the ingest lock
   private var momCastFail: Long = 0L
   private var momAbsMax: Double = 0.0
@@ -88,22 +87,19 @@ final class StreamingTypedWheel[In, P: ClassTag, Out](
     * range" service. Only HLL-aggregated wheels can publish (the rule's
     * distinct arm is sketch-specific); the caller asserts this stream is
     * the table's feed, as with [[StreamingWheelIndex.register]]. */
-  def register(path: String, column: String): Unit = agg match {
-    case h: WheelAggregators.HllDistinct =>
-      publishTo = Some((WheelRegistry.normalizePath(path), column, h))
-      live.synchronized(publishLocked())
-    case m: WheelAggregators.MomentStats =>
-      publishMoment = Some((WheelRegistry.normalizePath(path), column, m))
-      live.synchronized(publishLocked())
-    case c: WheelAggregators.CmsFreq =>
-      publishFreq = Some((WheelRegistry.normalizePath(path), column, c))
-      live.synchronized(publishLocked())
-    case q: WheelAggregators.HdrQuantile =>
-      publishQuantile = Some((WheelRegistry.normalizePath(path), column, q))
-      live.synchronized(publishLocked())
-    case k: WheelAggregators.TopTalkers =>
-      publishTopK = Some((WheelRegistry.normalizePath(path), column, k))
-      live.synchronized(publishLocked())
+  def register(path: String, column: String): Unit = {
+    family // refuses an aggregator no rule arm reads
+    publishTo = Some((WheelRegistry.normalizePath(path), column))
+    live.synchronized(publishLocked())
+  }
+
+  /** The registry family this wheel publishes into. */
+  private def family: WheelFamily[_ <: FamilyWheel] = agg match {
+    case _: WheelAggregators.HllDistinct => WheelFamily.Hll
+    case _: WheelAggregators.MomentStats => WheelFamily.Moment
+    case _: WheelAggregators.CmsFreq     => WheelFamily.Cms
+    case _: WheelAggregators.HdrQuantile => WheelFamily.Hdr
+    case _: WheelAggregators.TopTalkers  => WheelFamily.TopK
     case other => throw new IllegalArgumentException(
       s"only HllDistinct, MomentStats, CmsFreq, HdrQuantile or TopTalkers wheels can register, got ${other.getClass.getSimpleName}")
   }
@@ -113,18 +109,6 @@ final class StreamingTypedWheel[In, P: ClassTag, Out](
     * contract. */
   @volatile private var displaced: Option[TableIndex] = None
 
-  /** This publisher's registration target, if registered: (path key,
-    * column, family tag 0=hll 1=moments 2=cms 3=hdr 4=topk) — the single
-    * resolution [[publishLocked]], [[deregister]], and [[saveSnapshot]]
-    * share (a future family added to one copy but not another would
-    * silently publish/withdraw the wrong map entry). */
-  private def publishTarget: Option[(String, String, Int)] =
-    publishTo.map(t => (t._1, t._2, 0))
-      .orElse(publishMoment.map(t => (t._1, t._2, 1)))
-      .orElse(publishFreq.map(t => (t._1, t._2, 2)))
-      .orElse(publishQuantile.map(t => (t._1, t._2, 3)))
-      .orElse(publishTopK.map(t => (t._1, t._2, 4)))
-
   /** Withdraws THIS publisher's sketch (its (column, "") entry): other
     * publishers' families stay registered, and a displaced batch-built
     * index is restored only when no live stream family would be lost by
@@ -132,33 +116,14 @@ final class StreamingTypedWheel[In, P: ClassTag, Out](
     * layered after the displacement). A batch index that re-registered
     * over us is left untouched. */
   def deregister(): Unit = {
-    // which (column, "") entry of which map is EXCLUSIVELY ours to withdraw
-    publishTarget.foreach { case (key, column, fam) =>
+    publishTo.foreach { case (key, column) =>
+      // the (column, "") entry of our family is EXCLUSIVELY ours to withdraw
+      val own = WheelKey(family, List(column), "")
       WheelRegistry.update(key, {
         case Some(cur) if cur.fingerprint == 0L =>
           val rest = new TableIndex(key, cur.timeColumn, tsAllNonNull = false, 0L)
-          cur.allWheels.foreach(rest.put)
-          cur.allDistinctWheels
-            .filterNot(d => fam == 0 && d.column == column && d.filterKey == "")
-            .foreach(rest.putDistinct)
-          cur.allQuantileWheels
-            .filterNot(q => fam == 3 && q.column == column && q.filterKey == "")
-            .foreach(rest.putQuantile)
-          cur.allMomentWheels
-            .filterNot(m => fam == 1 && m.column == column && m.filterKey == "")
-            .foreach(rest.putMoment)
-          cur.allCoMomentWheels.foreach(rest.putCoMoment)
-          cur.allFreqWheels
-            .filterNot(f => fam == 2 && f.column == column && f.filterKey == "")
-            .foreach(rest.putFreq)
-          cur.allTopKWheels
-            .filterNot(tk => fam == 4 && tk.column == column &&
-              Option(tk.filterKey).getOrElse("") == "")
-            .foreach(rest.putTopK)
-          if (rest.allWheels.isEmpty && rest.allDistinctWheels.isEmpty &&
-              rest.allQuantileWheels.isEmpty && rest.allMomentWheels.isEmpty &&
-              rest.allCoMomentWheels.isEmpty && rest.allFreqWheels.isEmpty &&
-              rest.allTopKWheels.isEmpty) displaced
+          rest.addMissing(cur, _ != own)
+          if (rest.isEmpty) displaced
           else {
             displaced.foreach(_ => System.err.println(
               s"[graft] deregister keeps live stream families for $key; the " +
@@ -170,15 +135,11 @@ final class StreamingTypedWheel[In, P: ClassTag, Out](
       })
     }
     publishTo = None
-    publishMoment = None
-    publishFreq = None
-    publishQuantile = None
-    publishTopK = None
     displaced = None
   }
 
   private def publishLocked(): Unit = {
-    publishTarget.foreach { case (key, column, fam) =>
+    publishTo.foreach { case (key, column) =>
       val snap = snapshot()
       WheelRegistry.update(key, { existing =>
         val t = new TableIndex(key, timeColumn, tsAllNonNull = false, 0L)
@@ -193,18 +154,12 @@ final class StreamingTypedWheel[In, P: ClassTag, Out](
             }
           case Some(cur) =>
             // every other publisher's family rides along — numeric wheels
-            // and other sketches alike; each put* is keyed by (column,
-            // filterKey), so only OUR entry is replaced below
-            cur.allWheels.foreach(t.put)
-            cur.allDistinctWheels.foreach(t.putDistinct)
-            cur.allQuantileWheels.foreach(t.putQuantile)
-            cur.allMomentWheels.foreach(t.putMoment)
-            cur.allCoMomentWheels.foreach(t.putCoMoment)
-            cur.allFreqWheels.foreach(t.putFreq)
-            cur.allTopKWheels.foreach(t.putTopK)
+            // and other sketches alike; entries are keyed by (family,
+            // columns, filterKey), so only OUR entry is replaced below
+            t.addMissing(cur)
           case None => ()
         }
-        ownFamilyInto(t, snap, column, fam)
+        ownFamilyInto(t, snap, column)
         Some(t)
       })
     }
@@ -213,31 +168,26 @@ final class StreamingTypedWheel[In, P: ClassTag, Out](
   /** Adds THIS publisher's sketch family to `t`. P/Out are fixed by the agg
     * the wheel was constructed with, so these casts are sound by
     * construction. Shared by [[publishLocked]] and [[saveSnapshot]]. */
-  private def ownFamilyInto(t: TableIndex, snap: TypedHawWheel[P, Out],
-      column: String, fam: Int): Unit = fam match {
-    case 0 =>
-      t.putDistinct(DistinctIndexedWheel(
-        snap.asInstanceOf[TypedHawWheel[Array[Byte], Long]], column,
-        agg.asInstanceOf[WheelAggregators.HllDistinct]))
-    case 1 =>
-      t.putMoment(MomentIndexedWheel(
-        snap.asInstanceOf[TypedHawWheel[WheelAggregators.Moments, WheelAggregators.Moments]],
-        column, agg.asInstanceOf[WheelAggregators.MomentStats],
-        momCastFail, momAbsMax))
-    case 2 =>
-      t.putFreq(FreqIndexedWheel(
-        snap.asInstanceOf[TypedHawWheel[Array[Byte], Array[Byte]]], column,
-        agg.asInstanceOf[WheelAggregators.CmsFreq]))
-    case 4 =>
-      t.putTopK(TopKIndexedWheel(
-        snap.asInstanceOf[TypedHawWheel[WheelAggregators.TopKSummary, WheelAggregators.TopKSummary]],
-        column, agg.asInstanceOf[WheelAggregators.TopTalkers],
-        keyNullCount = topkNullKeys))
-    case _ =>
-      t.putQuantile(QuantileIndexedWheel(
-        snap.asInstanceOf[TypedHawWheel[Array[Byte], Array[Byte]]], column,
-        agg.asInstanceOf[WheelAggregators.HdrQuantile]))
-  }
+  private def ownFamilyInto(t: TableIndex, snap: TypedHawWheel[P, Out], column: String): Unit =
+    agg match {
+      case h: WheelAggregators.HllDistinct =>
+        t.put(WheelFamily.Hll, DistinctIndexedWheel(
+          snap.asInstanceOf[TypedHawWheel[Array[Byte], Long]], column, h))
+      case m: WheelAggregators.MomentStats =>
+        t.put(WheelFamily.Moment, MomentIndexedWheel(
+          snap.asInstanceOf[TypedHawWheel[WheelAggregators.Moments, WheelAggregators.Moments]],
+          column, m, momCastFail, momAbsMax))
+      case c: WheelAggregators.CmsFreq =>
+        t.put(WheelFamily.Cms, FreqIndexedWheel(
+          snap.asInstanceOf[TypedHawWheel[Array[Byte], Array[Byte]]], column, c))
+      case k: WheelAggregators.TopTalkers =>
+        t.put(WheelFamily.TopK, TopKIndexedWheel(
+          snap.asInstanceOf[TypedHawWheel[WheelAggregators.TopKSummary, WheelAggregators.TopKSummary]],
+          column, k, keyNullCount = topkNullKeys))
+      case q: WheelAggregators.HdrQuantile =>
+        t.put(WheelFamily.Hdr, QuantileIndexedWheel(
+          snap.asInstanceOf[TypedHawWheel[Array[Byte], Array[Byte]]], column, q))
+    }
 
   /** Persists the PUBLISHED sketch index (this publisher's family only,
     * fingerprint 0) in [[graft.index.WheelIndexIO]]'s atomic format — the
@@ -247,10 +197,10 @@ final class StreamingTypedWheel[In, P: ClassTag, Out](
     * reconstructed. Requires [[register]] (the snapshot carries the table
     * key and column). */
   def saveSnapshot(file: String): Unit = live.synchronized {
-    val (key, column, fam) = publishTarget.getOrElse(throw new IllegalStateException(
+    val (key, column) = publishTo.getOrElse(throw new IllegalStateException(
       "saveSnapshot requires register(path, column) first: the snapshot carries the table key"))
     val t = new TableIndex(key, timeColumn, tsAllNonNull = false, 0L)
-    ownFamilyInto(t, snapshot(), column, fam)
+    ownFamilyInto(t, snapshot(), column)
     graft.index.WheelIndexIO.save(t, file)
   }
 

@@ -7,7 +7,8 @@ import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.DecimalType
 import org.apache.spark.sql.{functions => F}
 
-import graft.index.{IndexedWheel, TableIndex, UWheelIndex, WheelRegistry}
+import graft.index.{IndexedWheel, TableIndex, UWheelIndex, WheelKey, WheelRegistry}
+import graft.index.WheelFamily.Numeric
 import graft.wheel.{HawWheel, RwWheel}
 
 /** Per-batch accumulator: one partial wheel PER SPEC (the unfiltered wheel
@@ -223,49 +224,37 @@ final class StreamingWheelIndex(
     * re-registered over us is left untouched. */
   def deregister(): Unit = {
     publishKey.foreach { key =>
-      val ownKeyed: Set[(Option[String], String)] =
+      val ownKeyed: Set[WheelKey] =
         keyedMeta.map(_.map { case (fk, _, mk, _) =>
-          (Option(mk), fk)
+          WheelKey(Numeric, List(mk), fk)
         }.toSet).getOrElse(Set.empty)
       // families EXCLUSIVELY ours: the keyed specs and our value measure
       // (by its published registry key — the canonical form for derived
-      // expressions). The (None, "") count family is shared — every
+      // expressions). The count family (no column, "") is shared — every
       // numeric stream publisher on this path maintains it each batch —
       // so it is handled by liveness below, not claimed blindly (round-7
       // advice: blind withdrawal blinded another publisher's COUNT
       // rewrites until its next batch republished).
       // both the resolved key AND the raw name: a pre-attach publish may
       // have registered the raw-name entry, and withdrawal must cover it
-      val ownExcl: Set[(Option[String], String)] =
+      val ownExcl: Set[WheelKey] =
         ownKeyed ++
           (valueMeta.map(_._1).toSeq ++ valueColumn.toSeq)
-            .map(k => (Option(k), "")).toSet
-      val countFam: (Option[String], String) = (None, "")
+            .map(k => WheelKey(Numeric, List(k), "")).toSet
+      val countFam = WheelKey(Numeric, Nil, "")
       WheelRegistry.update(key, {
         case Some(cur) if cur.fingerprint == 0L =>
-          val kept = cur.allWheels.filterNot(w => ownExcl((w.valueColumn, w.filterKey)))
           // keep the shared count family only while a FOREIGN numeric
           // family survives (its owner refreshes the count wheel every
           // batch); when only sketch families remain, nobody would ever
           // refresh it and a frozen count would serve growing data wrong —
-          // withdraw it with us.
-          val othersNumeric = kept.exists(w => (w.valueColumn, w.filterKey) != countFam)
+          // withdraw it with us. EVERY foreign family of any other kind
+          // survives our withdrawal.
+          val othersNumeric = cur.allWheels.map(Numeric.keyOf)
+            .exists(k => !ownExcl(k) && k != countFam)
           val rest = new TableIndex(key, cur.timeColumn, tsAllNonNull = false, 0L)
-          kept.filter(w => othersNumeric || (w.valueColumn, w.filterKey) != countFam)
-            .foreach(rest.put)
-          // EVERY foreign family survives our withdrawal — sketches and
-          // exact-moment wheels alike (a missing family here would vanish
-          // from the registry the moment we deregister)
-          cur.allDistinctWheels.foreach(rest.putDistinct)
-          cur.allQuantileWheels.foreach(rest.putQuantile)
-          cur.allMomentWheels.foreach(rest.putMoment)
-          cur.allCoMomentWheels.foreach(rest.putCoMoment)
-          cur.allFreqWheels.foreach(rest.putFreq)
-          cur.allTopKWheels.foreach(rest.putTopK)
-          if (rest.allWheels.isEmpty && rest.allDistinctWheels.isEmpty &&
-              rest.allQuantileWheels.isEmpty && rest.allMomentWheels.isEmpty &&
-              rest.allCoMomentWheels.isEmpty && rest.allFreqWheels.isEmpty &&
-              rest.allTopKWheels.isEmpty) displaced
+          rest.addMissing(cur, k => !ownExcl(k) && (othersNumeric || k != countFam))
+          if (rest.isEmpty) displaced
           else {
             displaced.foreach(_ => System.err.println(
               s"[graft] deregister keeps live stream families for $key; the " +
@@ -285,9 +274,9 @@ final class StreamingWheelIndex(
     // an EXPRESSION measure published before attach used its raw-SQL key
     // (inert — no query computes it); once attach resolves the canonical
     // key, that stale carried entry must be dropped, not ridden forever
-    val staleValueKey: Option[(Option[String], String)] =
+    val staleValueKey: Option[WheelKey] =
       for { (k, _) <- valueMeta; vc <- valueColumn if vc != k }
-        yield (Option(vc), "")
+        yield WheelKey(Numeric, List(vc), "")
     WheelRegistry.update(key, { existing =>
       val t = new TableIndex(key, timeColumn, tsAllNonNull = false, 0L)
       existing match {
@@ -301,20 +290,12 @@ final class StreamingWheelIndex(
           }
         case Some(cur) =>
           // every other stream publisher's family rides along (the typed
-          // HLL publisher carries ours the same way): put/putDistinct are
-          // keyed by (column, filterKey), so OUR stale families are
+          // HLL publisher carries ours the same way): entries are keyed by
+          // (family, columns, filterKey), so OUR stale families are
           // replaced by the fresh ones below while foreign families —
           // ALL sketch/moment kinds AND another numeric publisher's
           // wheels — survive
-          cur.allWheels
-            .filterNot(w => staleValueKey.contains((w.valueColumn, w.filterKey)))
-            .foreach(t.put)
-          cur.allDistinctWheels.foreach(t.putDistinct)
-          cur.allQuantileWheels.foreach(t.putQuantile)
-          cur.allMomentWheels.foreach(t.putMoment)
-          cur.allCoMomentWheels.foreach(t.putCoMoment)
-          cur.allFreqWheels.foreach(t.putFreq)
-          cur.allTopKWheels.foreach(t.putTopK)
+          t.addMissing(cur, k => !staleValueKey.contains(k))
         case None => ()
       }
       ownFamiliesInto(t)
@@ -343,17 +324,17 @@ final class StreamingWheelIndex(
     // the count wheel until the first batch).
     valueMeta.orElse(valueColumn.map((_, None: Option[String]))).foreach {
       case (mk, ex) =>
-        t.put(IndexedWheel(hw, Some(mk), "",
+        t.put(Numeric, IndexedWheel(hw, Some(mk), "",
           valueAllNonNull = !sawNullValue(0),
           valuesExactAtScale = !sawBadRep(0),
           valuesNaNFree = !sawNaN(0),
           exprSql = ex))
     }
-    t.put(IndexedWheel(hw, None, "", valueAllNonNull = true)) // count wheel shares hw
+    t.put(Numeric, IndexedWheel(hw, None, "", valueAllNonNull = true)) // count wheel shares hw
     keyedMeta.foreach { metas =>
       keyedWheels.zipWithIndex.foreach { case ((_, sql), i) =>
         val (fk, keyEq, mk, ex) = metas(i)
-        t.put(IndexedWheel(keyedHw(i), Some(mk), fk,
+        t.put(Numeric, IndexedWheel(keyedHw(i), Some(mk), fk,
           valueAllNonNull = !sawNullValue(i + 1),
           valuesExactAtScale = !sawBadRep(i + 1),
           valuesNaNFree = !sawNaN(i + 1),

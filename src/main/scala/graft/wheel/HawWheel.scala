@@ -373,9 +373,7 @@ final class HawWheel private (
     secMaxs: Array[Double],
     /** Non-null = the min/max hierarchy lives in codec-compressed blocks
       * and `secMins`/`secMaxs` are empty ([[HawWheel.fromSecondPartials]]'s
-      * `packLevels`). Null for raw wheels AND for wheels persisted before
-      * the field existed — Java serialization defaults the missing field,
-      * which lands exactly on the raw path those files were built for. */
+      * `packLevels`). Null for raw wheels. */
     private val packed: Array[HawWheel.PackedMinMaxLevel] = null) extends Serializable {
   import HawWheel._
 

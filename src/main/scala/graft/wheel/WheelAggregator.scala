@@ -328,38 +328,6 @@ object WheelAggregators {
     def nonEmpty(a: Array[Byte]): Boolean =
       if (isSparse(a)) sparseN(a) > 0 else nonZeroCount(a) > 0
 
-    /** Re-canonicalizes a partial persisted by a PRE-sparse-format build:
-      * those serialized the dense m-byte array regardless of content, and
-      * register-max merging keeps dense dense — so equal register CONTENT
-      * could carry different BYTES when old and new wheels mix, breaking
-      * the bit-for-bit equality the SQL-vs-wheel specs assert (round-7
-      * advice). Content-based: a dense array with n ≤ SparseMax nonzero
-      * registers re-sparsifies; canonical inputs return themselves (`eq`),
-      * so callers can use reference inequality as a "was non-canonical"
-      * probe. [[graft.index.WheelIndexIO.load]] maps every persisted slot
-      * through this, restoring the invariant for old files. */
-    def canonicalize(a: Array[Byte]): Array[Byte] =
-      if (isSparse(a)) a
-      else {
-        val n = nonZeroCount(a)
-        if (n > SparseMax) a
-        else {
-          val out = new Array[Byte](2 + 3 * n)
-          out(0) = (n & 0xff).toByte; out(1) = ((n >> 8) & 0xff).toByte
-          var k = 0; var i = 0
-          while (i < m) {
-            if (a(i) != 0) {
-              out(2 + 3 * k) = (i & 0xff).toByte
-              out(3 + 3 * k) = ((i >> 8) & 0xff).toByte
-              out(4 + 3 * k) = a(i)
-              k += 1
-            }
-            i += 1
-          }
-          out
-        }
-      }
-
     def identity: Array[Byte] = sparseEmpty
     private def mix64(z0: Long): Long = {
       var z = z0 + 0x9e3779b97f4a7c15L

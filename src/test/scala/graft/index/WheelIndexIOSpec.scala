@@ -125,101 +125,19 @@ class WheelIndexIOSpec extends AnyFunSuite {
     assert(q.collect()(0) === scan)
   }
 
-  test("load re-canonicalizes pre-sparse-format HLL slots: bytes match a fresh build") {
-    graft.Graft.enable(spark)
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-io-canon").toString
-    val p = s"$dir/t.parquet"
-    val base = java.sql.Timestamp.valueOf("2024-09-01 00:00:00").getTime
-    (0 until 800).map(i => (new java.sql.Timestamp(base + (i % 200) * 7000L), i % 57L))
-      .toDF("ts", "uid").write.mode("overwrite").parquet(p)
-    val built = UWheelBuilder("ts", Nil).withDistinctWheel("uid").build(spark, p)
-    val fresh = built.allDistinctWheels.head
-    val m = 1 << fresh.p
-
-    // Rebuild the wheel the way a PRE-sparse-format build persisted it:
-    // every register slot as the dense m-byte array (documented layout;
-    // sparse = [n_lo, n_hi] ++ n x [idx_lo, idx_hi, rank]).
-    def densify(a: Array[Byte]): Array[Byte] =
-      if (a.length == m) a
-      else {
-        val out = new Array[Byte](m)
-        val n = (a(0) & 0xff) | ((a(1) & 0xff) << 8)
-        (0 until n).foreach { k =>
-          out((a(2 + 3 * k) & 0xff) | ((a(3 + 3 * k) & 0xff) << 8)) = a(4 + 3 * k)
-        }
-        out
-      }
-    val oldWheel = graft.wheel.TypedHawWheel.fromSecondPartials(
-      fresh.wheel.slotPartials.map { case (s, part) => (s, densify(part)) }, fresh.agg)
-    // densified content survived: same estimates, different (dense) bytes
-    val lo = base / 1000L
-    val hi = lo + 200L * 7L + 1L
-    assert(oldWheel.range(lo, hi) === fresh.wheel.range(lo, hi))
-    assert(oldWheel.slotPartials.exists { case (_, part) => part.length == m })
-
-    val oldT = new TableIndex(p, "ts", tsAllNonNull = true, built.fingerprint)
-    built.allWheels.foreach(oldT.put)
-    oldT.putDistinct(fresh.copy(wheel = oldWheel))
-    val file = s"$dir/index-old.bin"
-    WheelIndexIO.save(oldT, file)
-
+  test("a numeric-only file saved before the container's version bump fails load as stale") {
+    // saved by the build before TableIndex's SerialVersionUID moved to 2:
+    // count and value min/max wheels over a 40-row table, no typed wheel
+    val res = getClass.getResource("/graft/index/numeric-v1.wheelidx")
+    assert(res != null, "fixture missing")
     WheelRegistry.clear()
-    val (loaded, _) = WheelIndexIO.load(spark, file)
-    val d = loaded.allDistinctWheels.head
-    // every persisted slot is canonical again (canonicalize is identity)...
-    assert(d.wheel.slotPartials.forall { case (_, part) => d.agg.canonicalize(part) eq part })
-    // ...and the whole wheel is byte-identical to the fresh build at every
-    // level read, so mixed old/new register equality assertions hold
-    val probes = Seq((lo, hi), (lo, lo + 60L), (lo + 60L, lo + 3600L), (lo, lo + 86400L))
-    probes.foreach { case (s, e) =>
-      assert(java.util.Arrays.equals(d.wheel.combineRange(s, e), fresh.wheel.combineRange(s, e)),
-        s"register bytes must match the fresh build over [$s, $e)")
+    val e = intercept[java.io.InvalidObjectException] {
+      WheelIndexIO.load(spark, java.nio.file.Paths.get(res.toURI).toString)
     }
-    WheelRegistry.clear()
-  }
-  test("same-UID top-k map evolution (raw keys, null filter fields) re-keys on load") {
-    spark.sparkContext.setLogLevel("WARN")
-    graft.Graft.enable(spark)
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-io-oldtopk").toString
-    val p = s"$dir/t.parquet"
-    val base = 1704067200L
-    (0 until 2000).map(i => (new java.sql.Timestamp((base + i % 1500) * 1000L), (i % 11).toLong))
-      .toDF("ts", "uid").write.mode("overwrite").parquet(p)
-    val t = UWheelBuilder("ts").withTopKWheel("uid").build(spark, p)
-    val want = t.topKWheel("uid").get.topK(base, base + 1500L, 3)
-    assert(want.isDefined)
-    // simulate SAME-UID map evolution (renormalizeTopKs doc): a raw
-    // String-keyed map whose values carry null filter fields — the shape a
-    // FUTURE re-keying under the pinned UID would deserialize into. (This
-    // is NOT the genuine pre-round-11 file path: those predate the pinned
-    // UID and fail readObject — covered by the stale-format test below.)
-    val f = classOf[TableIndex].getDeclaredField("topKs")
-    f.setAccessible(true)
-    val m = f.get(t).asInstanceOf[java.util.concurrent.ConcurrentHashMap[Any, TopKIndexedWheel]]
-    val old = scala.jdk.CollectionConverters.CollectionHasAsScala(m.values).asScala.toList
-    m.clear()
-    old.foreach(w => m.put(w.column,
-      w.copy(filterKey = null, filterSql = null.asInstanceOf[Option[String]])))
-    val file = s"$dir/index.bin"
-    WheelIndexIO.save(t, file)
-    WheelRegistry.clear()
-    val (loaded, freshF) = WheelIndexIO.load(spark, file)
-    assert(freshF)
-    val tw = loaded.topKWheel("uid")
-    assert(tw.isDefined, "old String-keyed entry must re-key to the tuple map")
-    assert(tw.get.filterKey == "" && tw.get.filterSql.isEmpty)
-    assert(tw.get.topK(base, base + 1500L, 3) == want)
-    // and refresh survives the normalized (previously null) filter fields
-    (0 until 300).map(i => (new java.sql.Timestamp((base + 2000 + i % 200) * 1000L), (i % 5).toLong))
-      .toDF("ts", "uid").write.mode("append").parquet(p)
-    UWheelIndex.refresh(spark, p) match {
-      case UWheelIndex.RefreshOutcome.Failed(e) => fail(s"refresh failed: $e")
-      case _ => ()
-    }
-    assert(WheelRegistry.lookup(p).get.topKWheel("uid").isDefined)
-    WheelRegistry.clear()
+    assert(e.getMessage.contains("stale index format"), e.getMessage)
+    assert(e.getMessage.contains("rebuild"), e.getMessage)
+    assert(e.getMessage.contains("graft.index.TableIndex"), e.getMessage)
+    assert(WheelRegistry.isEmpty)
   }
 
   test("incompatible-version file (UID mismatch) fails load with the stale-format error") {
@@ -270,7 +188,11 @@ class WheelIndexIOSpec extends AnyFunSuite {
     val built = types.foldLeft(UWheelBuilder("ts", Seq("value"))) { (b, et) =>
       b.withKeyedWheel(IndexBuilder("value", Some(s"event_type = '$et'")))
     }.withDistinctWheel("user_id").withQuantileWheel("value")
-      .withMomentWheel("value").withTopKWheel("user_id").build(spark, p)
+      .withMomentWheel("value").withTopKWheel("user_id").withFreqWheel("user_id")
+      .withCoMomentWheel("user_id", "value").withMillisWheels("value").build(spark, p)
+    assert(built.indexUsageBytesByFamily.keySet ==
+      Set("numeric", "ms", "hll", "hdr", "cms", "topk", "moment", "comoment"))
+    assert(built.indexUsageBytesByFamily.forall(_._2 > 0L), built.indexUsageBytesByFamily)
     spark.read.parquet(p).createOrReplaceTempView("io_events")
 
     val w = "ts >= TIMESTAMP '2024-01-01 05:00:00' AND ts < TIMESTAMP '2024-01-03 07:00:00'"
@@ -287,7 +209,9 @@ class WheelIndexIOSpec extends AnyFunSuite {
         "GROUP BY 1 ORDER BY cnt DESC, user_id LIMIT 5",
       s"SELECT hll_distinct(user_id) AS du FROM io_events WHERE $w",
       s"SELECT wheel_stddev_samp(CAST(value AS DECIMAL(18,2))) AS sd FROM io_events WHERE $w",
-      s"SELECT hdr_quantile(value, 0.9) AS p90 FROM io_events WHERE $w")
+      s"SELECT hdr_quantile(value, 0.9) AS p90 FROM io_events WHERE $w",
+      s"SELECT cms_freq(user_id, 37) AS f FROM io_events WHERE $w",
+      s"SELECT wheel_corr(user_id, CAST(value AS DECIMAL(18,2))) AS r FROM io_events WHERE $w")
     def answers: Seq[Seq[org.apache.spark.sql.Row]] = queries.map { sql =>
       val df = spark.sql(sql)
       assert(rewritten(df), s"not served from the index: $sql")
@@ -300,13 +224,16 @@ class WheelIndexIOSpec extends AnyFunSuite {
     val (loaded, fresh) = WheelIndexIO.load(spark, file)
     assert(fresh)
     assert(loaded.indexUsageBytesByFamily == built.indexUsageBytesByFamily)
+    assert(WheelIndexIO.savedWatermarkMs(loaded) == WheelIndexIO.savedWatermarkMs(built))
+    assert(WheelIndexIO.savedWatermarkMs(loaded).isDefined)
     assert(answers == before)
     WheelRegistry.clear()
   }
 
   test("a file saved in the previous per-slot typed-wheel format fails load as stale") {
     // saved by the build before typed wheels had their compact form: an
-    // index with count, value min/max, HLL, moment and top-k wheels
+    // index with count, value min/max, HLL, moment and top-k wheels. The
+    // container's version bump refuses it before any wheel is read.
     val res = getClass.getResource("/graft/index/typed-wheels-v1.wheelidx")
     assert(res != null, "fixture missing")
     WheelRegistry.clear()
@@ -315,7 +242,7 @@ class WheelIndexIOSpec extends AnyFunSuite {
     }
     assert(e.getMessage.contains("stale index format"), e.getMessage)
     assert(e.getMessage.contains("rebuild"), e.getMessage)
-    assert(e.getMessage.contains("graft.wheel.TypedHawWheel"), e.getMessage)
+    assert(e.getMessage.contains("graft.index.TableIndex"), e.getMessage)
     assert(WheelRegistry.isEmpty)
   }
 
