@@ -87,11 +87,7 @@ object TypedWheelBuild {
       specs: Seq[(Column, Option[Column], WheelAggregator[In, P, Out])],
       readKey: (Row, Int) => In): Seq[(TypedHawWheel[P, Out], Long)] = {
     if (specs.isEmpty) return Nil
-    val sec = UWheelIndex.secExprOf(df, timeColumn)
-    val cols = sec.as("__sec") +: specs.zipWithIndex.flatMap { case ((k, f, _), i) =>
-      Seq(k.as(s"__k$i"), f.getOrElse(org.apache.spark.sql.functions.lit(true)).as(s"__f$i"))
-    }
-    val rows = df.select(cols: _*).where(col("__sec").isNotNull)
+    val rows = df.select(topKColumns(df, timeColumn, specs): _*).where(col("__sec").isNotNull)
     val sc = df.sparkSession.sparkContext
     val nulls = specs.indices.map(i => sc.longAccumulator(s"graft.nullKeys$i"))
     val aggs = specs.map(_._3)
@@ -101,21 +97,9 @@ object TypedWheelBuild {
       return aggs.map(a => (new TypedRwWheel(a).freeze(), 0L))
     val merged = rdd
       .mapPartitions { it =>
-        val ws = aggs.map(a => new TypedRwWheel(a)).toArray
-        it.foreach { r =>
-          val s = r.getLong(0)
-          var i = 0
-          while (i < n) {
-            val kOrd = 1 + 2 * i
-            val fOrd = 2 + 2 * i
-            // NULL filter ≡ false (WHERE semantics)
-            if (!r.isNullAt(fOrd) && r.getBoolean(fOrd)) {
-              if (r.isNullAt(kOrd)) nulls(i).add(1L)
-              else ws(i).mergeLift(s, readKey(r, kOrd))
-            }
-            i += 1
-          }
-        }
+        val (ws, nullKeys) = foldTopK(it, 0, aggs, readKey)
+        var i = 0
+        while (i < n) { nulls(i).add(nullKeys(i)); i += 1 }
         Iterator.single(ws)
       }
       .treeReduce((a, b) => {
@@ -124,6 +108,47 @@ object TypedWheelBuild {
         a
       }, depth = 2)
     specs.indices.map(i => (merged(i).freeze(), nulls(i).value))
+  }
+
+  /** [[buildTopKSet]]'s projection: the second, then one (key, filter)
+    * pair per spec — a spec without a filter keeps every row. */
+  private[index] def topKColumns(df: DataFrame, timeColumn: String,
+      specs: Seq[(Column, Option[Column], _)]): Seq[Column] =
+    UWheelIndex.secExprOf(df, timeColumn).as("__sec") +: specs.zipWithIndex.flatMap {
+      case ((k, f, _), i) =>
+        Seq(k.as(s"__k$i"), f.getOrElse(org.apache.spark.sql.functions.lit(true)).as(s"__f$i"))
+    }
+
+  /** [[buildTopKSet]]'s per-partition fold, over rows holding
+    * [[topKColumns]] from ordinal `secOrd` on: one ingest wheel per
+    * aggregator and one skipped-NULL-key count per spec. Rows with a NULL
+    * second are skipped. A refresh that collects a small delta folds it
+    * on the driver through the same body. */
+  private[index] def foldTopK[In, P, Out](
+      rows: Iterator[Row],
+      secOrd: Int,
+      aggs: Seq[WheelAggregator[In, P, Out]],
+      readKey: (Row, Int) => In): (Array[TypedRwWheel[In, P, Out]], Array[Long]) = {
+    val n = aggs.length
+    val ws = aggs.map(a => new TypedRwWheel(a)).toArray
+    val nullKeys = new Array[Long](n)
+    rows.foreach { r =>
+      if (!r.isNullAt(secOrd)) {
+        val s = r.getLong(secOrd)
+        var i = 0
+        while (i < n) {
+          val kOrd = secOrd + 1 + 2 * i
+          val fOrd = secOrd + 2 + 2 * i
+          // NULL filter ≡ false (WHERE semantics)
+          if (!r.isNullAt(fOrd) && r.getBoolean(fOrd)) {
+            if (r.isNullAt(kOrd)) nullKeys(i) += 1L
+            else ws(i).mergeLift(s, readKey(r, kOrd))
+          }
+          i += 1
+        }
+      }
+    }
+    (ws, nullKeys)
   }
 
   /** The pre-freeze ingest wheel — for callers that keep merging (the

@@ -16,8 +16,10 @@ import graft.wheel.{RwWheel, TypedRwWheel, WheelAggregators}
   * per-second Rows, whose driver heap cost grows with active seconds × Row
   * overhead.
   *
-  * Row layout (produced by `UWheelIndex.buildWheels`): column 0 is the epoch
-  * second (null when the source timestamp was NULL); then per spec `i`, at
+  * Row layout (the fused build's [[SlotAgg]] columns, computed by Spark's
+  * aggregate or, for a small refresh delta, by the driver fold): column 0
+  * is the epoch second (null when the source timestamp was NULL); then per
+  * spec `i`, at
   * offset `1 + 7*i`: rowCount, valueCount, sum(DECIMAL(38,scale)), min, max,
   * nonRepresentableCount, nanCount; then per distinct spec `j`, at offset
   * `1 + 7*n + j`: the second's combined HLL register array (BinaryType,

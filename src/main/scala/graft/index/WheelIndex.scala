@@ -596,8 +596,14 @@ object WheelRegistry {
   def register(t: TableIndex): Unit = tables.put(t.pathKey, t)
   /** Removes a table's index — the operational complement of register for
     * dropped tables, so a scheduled [[UWheelIndex.refreshAll]] stops
-    * reporting them as failed forever. */
-  def deregister(rootPath: String): Unit = tables.remove(normalizePath(rootPath))
+    * reporting them as failed forever. A DataFrame-built index also leaves
+    * the ExprId map, which would otherwise keep serving it and keep its
+    * source plan alive. */
+  def deregister(rootPath: String): Unit = {
+    val key = normalizePath(rootPath)
+    tables.remove(key)
+    byExprId.values().removeIf(_._2.pathKey == key)
+  }
   /** Atomic read-modify-write of one key (ConcurrentHashMap.compute): the
     * streaming publishers use it to LAYER their wheel families over
     * whatever another publisher already registered for the same path,
@@ -624,7 +630,10 @@ object WheelRegistry {
   def lookupQualified(roots: Seq[String]): Option[TableIndex] =
     Option(tables.get(keyOfQualified(roots)))
   def isEmpty: Boolean = tables.isEmpty
-  def clear(): Unit = tables.clear()
+  def clear(): Unit = {
+    tables.clear()
+    byExprId.clear()
+  }
 }
 
 /** Ad-hoc index request — API parity with the reference's `IndexBuilder`
@@ -1144,9 +1153,101 @@ object UWheelIndex {
         * fold itself (including first-run codegen compilation on a cold
         * JVM) — so the cold `index_build` headline names its cost instead
         * of reporting one opaque number (round-12 task 2). */
-      phaseTag: Option[String] = None)
-      : (Seq[BuiltWheel], Seq[DistinctIndexedWheel], Seq[QuantileIndexedWheel],
-         Seq[MomentIndexedWheel], Seq[CoMomentIndexedWheel], Seq[FreqIndexedWheel]) = {
+      phaseTag: Option[String] = None): FusedBuilt = {
+    val plan = planFused(df, timeColumn, specs, slotSpan, packLevels, distinctSpecs,
+      slotExprOverride, quantileSpecs, momentSpecs, coMomentSpecs, freqSpecs)
+    plan.freeze(scanFused(df, plan, phaseTag))
+  }
+
+  /** What one fused build produces, family by family. */
+  private type FusedBuilt = (Seq[BuiltWheel], Seq[DistinctIndexedWheel], Seq[QuantileIndexedWheel],
+    Seq[MomentIndexedWheel], Seq[CoMomentIndexedWheel], Seq[FreqIndexedWheel])
+
+  /** The per-row half of a fused build: the columns that widen the source
+    * (`projCols`), the slot (group key) expression, and every aggregate
+    * column as a per-row child plus its aggregate ([[SlotAgg]]). The
+    * distributed scan ([[scanFused]]) and the driver fold of a small
+    * refresh delta ([[SlotAgg.fold]]) both run these same expressions, and
+    * [[freeze]] turns either one's accumulator into wheels. */
+  private final class FusedPlan(
+      specs: Seq[WheelSpec],
+      distinctSpecs: Seq[DistinctSpec],
+      quantileSpecs: Seq[QuantileSpec],
+      momentSpecs: Seq[MomentSpec],
+      coMomentSpecs: Seq[CoMomentSpec],
+      freqSpecs: Seq[CmsSpec],
+      slotSpan: Long,
+      packLevels: Boolean,
+      val projCols: Seq[Column],
+      val slot: Column,
+      val aggs: IndexedSeq[SlotAgg]) {
+
+    def newAcc(): WheelBuildAcc = new WheelBuildAcc(specs.map(_.scale).toArray,
+      specs.map(_.valueColumn.isDefined).toArray, distinctSpecs.map(_.p).toArray,
+      quantileSpecs.map(_.s).toArray, momentSpecs.map(_.scale).toArray,
+      coMomentSpecs.map(cs => (cs.scaleX, cs.scaleY)).toArray,
+      freqSpecs.map(fs => (fs.d, fs.logW)).toArray)
+
+    def freeze(acc: WheelBuildAcc): FusedBuilt = {
+      val built = specs.zipWithIndex.map { case (sp, i) =>
+        val hasValues = sp.valueColumn.isDefined
+        BuiltWheel(
+          IndexedWheel(acc.wheels(i).freeze(slotSpan, packLevels), sp.valueColumn, sp.filterKey,
+            valueAllNonNull = !hasValues || acc.allNonNull(i),
+            valuesExactAtScale = !hasValues || acc.badRep(i) == 0L,
+            valuesNaNFree = !hasValues || acc.nanCount(i) == 0L,
+            sp.timeRangeSec, sp.filterSql, sp.keyEq, sp.exprSql),
+          acc.sawNullTs(i))
+      }
+      val builtDistinct = distinctSpecs.zip(acc.distinct).map { case (ds, rw) =>
+        DistinctIndexedWheel(rw.freeze(), ds.column,
+          rw.agg.asInstanceOf[WheelAggregators.HllDistinct], ds.filterKey, ds.filterSql,
+          slotSpan, ds.keyEq, ds.exprSql)
+      }
+      val builtQuantile = quantileSpecs.zip(acc.sketch).map { case (qs, rw) =>
+        QuantileIndexedWheel(rw.freeze(), qs.column,
+          rw.agg.asInstanceOf[WheelAggregators.HdrQuantile], qs.filterKey, qs.filterSql,
+          slotSpan, qs.keyEq, qs.exprSql)
+      }
+      val builtMoment = momentSpecs.zipWithIndex.map { case (ms, j) =>
+        MomentIndexedWheel(acc.moment(j).freeze(), ms.column,
+          acc.moment(j).agg.asInstanceOf[WheelAggregators.MomentStats],
+          acc.momCastFail(j), acc.momAbsMax(j), ms.filterKey, ms.filterSql,
+          slotSpan, ms.keyEq, ms.exprSql)
+      }
+      val builtCoMoment = coMomentSpecs.zipWithIndex.map { case (cs, j) =>
+        CoMomentIndexedWheel(acc.coMoment(j).freeze(), cs.columnX, cs.columnY,
+          acc.coMoment(j).agg.asInstanceOf[WheelAggregators.CoMomentStats],
+          acc.coCastFail(j), acc.coAbsMaxX(j), acc.coAbsMaxY(j), cs.filterKey, cs.filterSql,
+          slotSpan, cs.keyEq, cs.exprSqlX, cs.exprSqlY)
+      }
+      val builtFreq = freqSpecs.zip(acc.freq).map { case (fs, rw) =>
+        FreqIndexedWheel(rw.freeze(), fs.column,
+          rw.agg.asInstanceOf[WheelAggregators.CmsFreq], fs.filterKey, fs.filterSql,
+          slotSpan, fs.keyEq, fs.exprSql)
+      }
+      (built, builtDistinct, builtQuantile, builtMoment, builtCoMoment, builtFreq)
+    }
+  }
+
+  /** Plans a fused build ([[buildWheels]]'s parameters). `prefix` names
+    * the widening columns; two plans projected side by side over one
+    * source (a refresh that folds its delta on the driver) need distinct
+    * prefixes. */
+  private def planFused(
+      df: DataFrame,
+      timeColumn: String,
+      specs: Seq[WheelSpec],
+      slotSpan: Long = 1L,
+      packLevels: Boolean = false,
+      distinctSpecs: Seq[DistinctSpec] = Nil,
+      slotExprOverride: Option[Column] = None,
+      quantileSpecs: Seq[QuantileSpec] = Nil,
+      momentSpecs: Seq[MomentSpec] = Nil,
+      coMomentSpecs: Seq[CoMomentSpec] = Nil,
+      freqSpecs: Seq[CmsSpec] = Nil,
+      prefix: String = "_"): FusedPlan = {
+    import SlotAgg._
     require(specs.nonEmpty)
     require(slotExprOverride.isEmpty || specs.forall(_.timeRangeSec.isEmpty),
       "coverage-restricted specs are second-domain and cannot ride an overridden slot expression")
@@ -1171,6 +1272,7 @@ object UWheelIndex {
       case sp if sp.valueColumn.isDefined && sp.exprSql.isDefined =>
         (sp.valueColumn.get, sp.scale) -> sp.exprSql.get
     }.toMap
+    def pc(kind: String, k: Int): Column = F.col(s"$prefix$kind$k")
     val projCols = valKeys.zipWithIndex.flatMap { case ((c, scale), k) =>
       val srcCol = exprSrc.get((c, scale)).map(F.expr).getOrElse(F.col(c))
       val isDec = exprSrc.get((c, scale)) match {
@@ -1189,10 +1291,10 @@ object UWheelIndex {
         val v = srcCol.cast("double")
         val rt = v.try_cast(s"decimal(38,$scale)")
         Seq(
-          v.as(s"_v$k"),
-          d.as(s"_d$k"),
-          (srcCol.isNotNull && (rt.isNull || rt =!= d)).as(s"_b$k"),
-          F.lit(false).as(s"_n$k"))
+          v.as(s"${prefix}v$k"),
+          d.as(s"${prefix}d$k"),
+          (srcCol.isNotNull && (rt.isNull || rt =!= d)).as(s"${prefix}b$k"),
+          F.lit(false).as(s"${prefix}n$k"))
       } else {
         val v = srcCol.cast("double")
         // Exactness probe: does v survive a round-trip through
@@ -1205,13 +1307,13 @@ object UWheelIndex {
         val asDec = fastDecCol(v, 38, scale)
         val roundTrip = asDec.cast("double") // decimal→double never errors
         Seq(
-          v.as(s"_v$k"),
-          asDec.as(s"_d$k"),
-          (v.isNotNull && (roundTrip.isNull || roundTrip =!= v)).as(s"_b$k"),
-          F.isnan(v).as(s"_n$k"))
+          v.as(s"${prefix}v$k"),
+          asDec.as(s"${prefix}d$k"),
+          (v.isNotNull && (roundTrip.isNull || roundTrip =!= v)).as(s"${prefix}b$k"),
+          F.isnan(v).as(s"${prefix}n$k"))
       }
     }
-    val aggCols = specs.zipWithIndex.flatMap { case (sp, i) =>
+    val aggs: IndexedSeq[SlotAgg] = (specs.zipWithIndex.flatMap { case (sp, i) =>
       val inRange = sp.timeRangeSec
         .map { case (s, e) => secExpr >= s && secExpr < e }
         .getOrElse(F.lit(true))
@@ -1219,20 +1321,13 @@ object UWheelIndex {
       val (v, asDec, bad, nan) = sp.valueColumn match {
         case Some(c) =>
           val k = valIdx((c, sp.scale))
-          (F.when(keep, F.col(s"_v$k")), F.when(keep, F.col(s"_d$k")),
-            F.col(s"_b$k"), F.col(s"_n$k"))
+          (F.when(keep, pc("v", k)), F.when(keep, pc("d", k)), pc("b", k), pc("n", k))
         case None =>
           val nul = F.lit(null).cast("double")
           (nul, nul, F.lit(false), F.lit(false))
       }
-      Seq(
-        F.sum(F.when(keep, F.lit(1L)).otherwise(F.lit(0L))).as(s"c$i"),
-        F.count(v).as(s"cv$i"),
-        F.sum(asDec).as(s"s$i"),
-        F.min(v).as(s"mn$i"),
-        F.max(v).as(s"mx$i"),
-        F.sum(F.when(keep && bad, F.lit(1L)).otherwise(F.lit(0L))).as(s"b$i"),
-        F.sum(F.when(keep && nan, F.lit(1L)).otherwise(F.lit(0L))).as(s"nan$i"))
+      Seq(CountIf(s"c$i", keep), Count(s"cv$i", v), Sum(s"s$i", asDec), Min(s"mn$i", v),
+        Max(s"mx$i", v), CountIf(s"b$i", keep && bad), CountIf(s"nan$i", keep && nan))
     } ++ distinctSpecs.zipWithIndex.map { case (ds, j) =>
       // per-second register partials from the registers form of the native
       // aggregate — bit-identical fold semantics to the SQL hll_distinct
@@ -1246,10 +1341,8 @@ object UWheelIndex {
         case Some(f) => F.when(f, srcD)
         case None    => srcD
       }
-      org.apache.spark.sql.graft.ColumnBridge.column(
-        graft.functions.HllDistinctAgg(
-          org.apache.spark.sql.graft.ColumnBridge.expression(in.cast("long")),
-          ds.p, returnRegisters = true).toAggregateExpression()).as(s"h$j")
+      Sketch(s"h$j", in.cast("long"), org.apache.spark.sql.types.LongType,
+        graft.functions.HllDistinctAgg(_, ds.p, returnRegisters = true))
     } ++ quantileSpecs.zipWithIndex.map { case (qs, j) =>
       // per-second bin partials from the bins form of the native quantile
       // aggregate — identical content semantics to the wheel aggregator
@@ -1261,10 +1354,8 @@ object UWheelIndex {
         case Some(f) => F.when(f, srcQ)
         case None    => srcQ
       }
-      org.apache.spark.sql.graft.ColumnBridge.column(
-        graft.functions.HdrQuantileAgg(
-          org.apache.spark.sql.graft.ColumnBridge.expression(in.cast("double")),
-          q = 0.0, s = qs.s, returnBins = true).toAggregateExpression()).as(s"qt$j")
+      Sketch(s"qt$j", in.cast("double"), org.apache.spark.sql.types.DoubleType,
+        graft.functions.HdrQuantileAgg(_, q = 0.0, s = qs.s, returnBins = true))
     } ++ momentSpecs.zipWithIndex.flatMap { case (ms, j) =>
       // Exact moments, all in native codegen'd arithmetic: the value is
       // probed through an exact DECIMAL(18, scale) fixed-point image `f`
@@ -1282,11 +1373,11 @@ object UWheelIndex {
       val u19 = u.cast("decimal(19,0)")
       val keepM = ms.filter.getOrElse(F.lit(true))
       Seq(
-        F.count(F.when(keepM, u)).as(s"mn$j"),
-        F.sum(F.when(keepM, u.cast("decimal(38,0)"))).as(s"ms$j"),
-        F.sum(F.when(keepM, u19 * u19)).as(s"mq$j"),
-        F.sum(F.when(keepM && fail, F.lit(1L)).otherwise(F.lit(0L))).as(s"mf$j"),
-        F.max(F.when(keepM, F.abs(vd))).as(s"ma$j"))
+        Count(s"mn$j", F.when(keepM, u)),
+        Sum(s"ms$j", F.when(keepM, u.cast("decimal(38,0)"))),
+        Sum(s"mq$j", F.when(keepM, u19 * u19)),
+        CountIf(s"mf$j", keepM && fail),
+        Max(s"ma$j", F.when(keepM, F.abs(vd))))
     } ++ coMomentSpecs.zipWithIndex.flatMap { case (cs, j) =>
       // Exact co-moments: both columns go through the same fixed-point
       // probe as the unary moments; a row contributes only when BOTH
@@ -1308,15 +1399,15 @@ object UWheelIndex {
       val ux19 = ux.cast("decimal(19,0)")
       val uy19 = uy.cast("decimal(19,0)")
       Seq(
-        F.sum(F.when(both, F.lit(1L)).otherwise(F.lit(0L))).as(s"cn$j"),
-        F.sum(F.when(both, ux.cast("decimal(38,0)"))).as(s"cx$j"),
-        F.sum(F.when(both, uy.cast("decimal(38,0)"))).as(s"cy$j"),
-        F.sum(F.when(both, ux19 * ux19)).as(s"cxx$j"),
-        F.sum(F.when(both, uy19 * uy19)).as(s"cyy$j"),
-        F.sum(F.when(both, ux19 * uy19)).as(s"cxy$j"),
-        F.sum(F.when(keepC && fail, F.lit(1L)).otherwise(F.lit(0L))).as(s"cf$j"),
-        F.max(F.when(keepC, F.abs(xd))).as(s"cax$j"),
-        F.max(F.when(keepC, F.abs(yd))).as(s"cay$j"))
+        CountIf(s"cn$j", both),
+        Sum(s"cx$j", F.when(both, ux.cast("decimal(38,0)"))),
+        Sum(s"cy$j", F.when(both, uy.cast("decimal(38,0)"))),
+        Sum(s"cxx$j", F.when(both, ux19 * ux19)),
+        Sum(s"cyy$j", F.when(both, uy19 * uy19)),
+        Sum(s"cxy$j", F.when(both, ux19 * uy19)),
+        CountIf(s"cf$j", keepC && fail),
+        Max(s"cax$j", F.when(keepC, F.abs(xd))),
+        Max(s"cay$j", F.when(keepC, F.abs(yd))))
     } ++ freqSpecs.zipWithIndex.map { case (fs, j) =>
       // per-second counter partials from the sketch form of the native
       // cms_freq aggregate — identical hash/content semantics to the wheel
@@ -1327,12 +1418,22 @@ object UWheelIndex {
         case Some(f) => F.when(f, srcF)
         case None    => srcF
       }
-      org.apache.spark.sql.graft.ColumnBridge.column(
-        graft.functions.CmsFreqAgg(
-          org.apache.spark.sql.graft.ColumnBridge.expression(in.cast("long")),
-          target = 0L, logW = fs.logW, d = fs.d, returnSketch = true)
-          .toAggregateExpression()).as(s"fq$j")
-    }
+      Sketch(s"fq$j", in.cast("long"), org.apache.spark.sql.types.LongType,
+        graft.functions.CmsFreqAgg(_, target = 0L, logW = fs.logW, d = fs.d, returnSketch = true))
+    }).toIndexedSeq
+    // Coarse builds align the shuffle key itself, so the per-second → per-slot
+    // reduction happens map-side too (pmod keeps pre-1970 seconds aligned
+    // down, where `div` would truncate toward zero).
+    val slotExpr = slotExprOverride.getOrElse(
+      if (slotSpan == 1L) secExpr
+      else secExpr - F.pmod(secExpr, F.lit(slotSpan)))
+    new FusedPlan(specs, distinctSpecs, quantileSpecs, momentSpecs, coMomentSpecs, freqSpecs,
+      slotSpan, packLevels, projCols, slotExpr, aggs)
+  }
+
+  /** The distributed scan of a fused build: one map-side-combining
+    * `groupBy(slot)` over the widened source, folded on the executors. */
+  private def scanFused(df: DataFrame, plan: FusedPlan, phaseTag: Option[String]): WheelBuildAcc = {
     // Executor-side merge: each shuffle partition folds its per-second rows
     // into compact RwWheels, and partials meet in a depth-2 aggregation tree
     // — the driver receives ONE serialized accumulator (primitive slot
@@ -1340,23 +1441,10 @@ object UWheelIndex {
     // flat collect of per-second Rows is the driver bottleneck; the tree
     // merge is bounded per node by active-seconds/branching. RwWheel.merge
     // is associative (RwWheelSpec), so tree shape cannot change the result.
-    val scales  = specs.map(_.scale).toArray
-    val hasVals = specs.map(_.valueColumn.isDefined).toArray
-    // Coarse builds align the shuffle key itself, so the per-second → per-slot
-    // reduction happens map-side too (pmod keeps pre-1970 seconds aligned
-    // down, where `div` would truncate toward zero).
-    val slotExpr = slotExprOverride.getOrElse(
-      if (slotSpan == 1L) secExpr
-      else secExpr - F.pmod(secExpr, F.lit(slotSpan)))
-    val hllPs = distinctSpecs.map(_.p).toArray
-    val hdrSs = quantileSpecs.map(_.s).toArray
-    val momScales = momentSpecs.map(_.scale).toArray
-    val coScales = coMomentSpecs.map(cs => (cs.scaleX, cs.scaleY)).toArray
-    val cmsParams = freqSpecs.map(fs => (fs.d, fs.logW)).toArray
     // widen, don't replace: filters/secExpr/distinct columns still resolve
     // by name against the original schema
     val projected0 =
-      if (valKeys.isEmpty) df else df.select(F.col("*") +: projCols: _*)
+      if (plan.projCols.isEmpty) df else df.select(F.col("*") +: plan.projCols: _*)
     // Tiny-input parallelism: one small parquet file plans ONE scan split,
     // which serializes the whole map-side partial aggregation (measured:
     // the 11 MB bench lineitem build ran its 600k-row × 40-column fold on
@@ -1374,9 +1462,10 @@ object UWheelIndex {
     val parallelism = math.min(8, df.sparkSession.sparkContext.defaultParallelism)
     val projected =
       if (projected0.rdd.getNumPartitions < parallelism)
-        projected0.repartition(parallelism, slotExpr)
+        projected0.repartition(parallelism, plan.slot)
       else projected0
-    val aggDf = projected.groupBy(slotExpr.as("sec")).agg(aggCols.head, aggCols.tail: _*)
+    val aggCols = plan.aggs.map(_.column)
+    val aggDf = projected.groupBy(plan.slot.as("sec")).agg(aggCols.head, aggCols.tail: _*)
     def phased[T](kind: String)(body: => T): T = phaseTag match {
       case Some(tag) => BuildPhases.timed(s"$kind$tag")(body)
       case None      => body
@@ -1390,8 +1479,7 @@ object UWheelIndex {
     // (one extra stage), essential at cluster counts (10k reduce partitions
     // → ~100 accs at the driver instead of 10k open connections' worth).
     val acc = phased("fusedexec_")(aggRdd
-      .treeAggregate(new WheelBuildAcc(scales, hasVals, hllPs, hdrSs, momScales, coScales,
-        cmsParams))(
+      .treeAggregate(plan.newAcc())(
         (a, row) => { a.add(row); a },
         (a, b) => a.merge(b),
         depth = if (aggRdd.getNumPartitions <= 64) 1 else 2))
@@ -1406,44 +1494,7 @@ object UWheelIndex {
         try org.apache.spark.SparkEnv.get.serializer.newInstance()
           .serialize(acc)(scala.reflect.ClassTag(acc.getClass)).limit().toLong
         catch { case scala.util.control.NonFatal(_) => -1L }
-    val built = specs.zipWithIndex.map { case (sp, i) =>
-      val hasValues = sp.valueColumn.isDefined
-      BuiltWheel(
-        IndexedWheel(acc.wheels(i).freeze(slotSpan, packLevels), sp.valueColumn, sp.filterKey,
-          valueAllNonNull = !hasValues || acc.allNonNull(i),
-          valuesExactAtScale = !hasValues || acc.badRep(i) == 0L,
-          valuesNaNFree = !hasValues || acc.nanCount(i) == 0L,
-          sp.timeRangeSec, sp.filterSql, sp.keyEq, sp.exprSql),
-        acc.sawNullTs(i))
-    }
-    val builtDistinct = distinctSpecs.zip(acc.distinct).map { case (ds, rw) =>
-      DistinctIndexedWheel(rw.freeze(), ds.column,
-        rw.agg.asInstanceOf[WheelAggregators.HllDistinct], ds.filterKey, ds.filterSql,
-        slotSpan, ds.keyEq, ds.exprSql)
-    }
-    val builtQuantile = quantileSpecs.zip(acc.sketch).map { case (qs, rw) =>
-      QuantileIndexedWheel(rw.freeze(), qs.column,
-        rw.agg.asInstanceOf[WheelAggregators.HdrQuantile], qs.filterKey, qs.filterSql,
-        slotSpan, qs.keyEq, qs.exprSql)
-    }
-    val builtMoment = momentSpecs.zipWithIndex.map { case (ms, j) =>
-      MomentIndexedWheel(acc.moment(j).freeze(), ms.column,
-        acc.moment(j).agg.asInstanceOf[WheelAggregators.MomentStats],
-        acc.momCastFail(j), acc.momAbsMax(j), ms.filterKey, ms.filterSql,
-        slotSpan, ms.keyEq, ms.exprSql)
-    }
-    val builtCoMoment = coMomentSpecs.zipWithIndex.map { case (cs, j) =>
-      CoMomentIndexedWheel(acc.coMoment(j).freeze(), cs.columnX, cs.columnY,
-        acc.coMoment(j).agg.asInstanceOf[WheelAggregators.CoMomentStats],
-        acc.coCastFail(j), acc.coAbsMaxX(j), acc.coAbsMaxY(j), cs.filterKey, cs.filterSql,
-        slotSpan, cs.keyEq, cs.exprSqlX, cs.exprSqlY)
-    }
-    val builtFreq = freqSpecs.zip(acc.freq).map { case (fs, rw) =>
-      FreqIndexedWheel(rw.freeze(), fs.column,
-        rw.agg.asInstanceOf[WheelAggregators.CmsFreq], fs.filterKey, fs.filterSql,
-        slotSpan, fs.keyEq, fs.exprSql)
-    }
-    (built, builtDistinct, builtQuantile, builtMoment, builtCoMoment, builtFreq)
+    acc
   }
 
   /** Optimizer-construction build (reference `try_new` + `build`,
@@ -1918,8 +1969,9 @@ object UWheelIndex {
   object RefreshOutcome {
     /** File listing unchanged — the index is already fresh. */
     case object NoChange extends RefreshOutcome
-    /** Only new files appeared: one delta scan over them, merged into the
-      * existing wheels. */
+    /** Only new files appeared: their rows were folded into wheels (on the
+      * driver for a small delta, by the distributed scan otherwise) and
+      * appended to the existing ones. */
     final case class Appended(newFiles: Int) extends RefreshOutcome
     /** Existing files were modified or removed (or the index predates
       * refresh metadata) — rebuilt from the full table. */
@@ -1933,16 +1985,21 @@ object UWheelIndex {
 
   /** Incremental index maintenance. The staleness fingerprint makes a grown
     * table's index inert (safe, but every query scans again); `refresh`
-    * makes it CURRENT again at the cost of scanning only the data that
-    * changed. The current file listing is diffed against the build-time
-    * snapshot ([[TableIndex.filesAtBuild]]):
+    * makes it CURRENT again at the cost of reading only the data that
+    * changed. The current file listing (taken without a schema-inference
+    * job) is diffed against the build-time snapshot
+    * ([[TableIndex.filesAtBuild]]):
     *
     *  - unchanged → [[RefreshOutcome.NoChange]];
     *  - strictly grown (append-only writers — new parquet part-files, old
-    *    ones byte-identical) → wheels for the NEW files only are built with
-    *    the same one-scan pipeline and merged slot-wise into the existing
-    *    ones ([[graft.wheel.HawWheel.slotPartials]]; counts/scaled-sums add,
-    *    min/max combine — associative, so merged ≡ rebuilt bit-for-bit);
+    *    ones byte-identical) → only the NEW files are read, under their
+    *    footer schema. A small delta ([[SmallDeltaBytes]]) is collected in
+    *    one projection of the fused build's per-row expressions and folded
+    *    per slot on the driver; a larger one runs the distributed fused
+    *    scan. Each wheel then extends by the delta's slots — by array
+    *    concatenation when the delta starts at or after its last slot, by
+    *    the slot-wise merge otherwise (counts/scaled-sums add, min/max
+    *    combine — associative, so appended ≡ rebuilt bit-for-bit);
     *  - anything rewritten in place → full rebuild (incremental merge could
     *    double-count; correctness first).
     *
@@ -1970,6 +2027,48 @@ object UWheelIndex {
     * (eventual freshness, never wrong). */
   private[this] val maintenanceLock = new Object
 
+  /** Append-only deltas up to this many listed bytes are folded on the
+    * driver: their rows are collected once, with every per-row expression
+    * of the fused build projected in one Spark job, and folded per slot
+    * into the same accumulators the distributed build fills. Measured
+    * traffic on the wheel-index benchmark: a landed batch is ~35 KB
+    * (~1,650 rows) and the whole 100,000-row base table is 2.0 MB, so the
+    * bound admits about 25,000 rows, whose collected values take tens of
+    * MB of driver heap at most. Larger deltas take the distributed scan. */
+  private[index] val SmallDeltaBytes: Long = 512L * 1024
+
+  /** The Spark schema of one parquet file, read from its footer on the
+    * driver the way a read's schema inference reads it (without a
+    * schema-inference job): Spark's own schema string when the file
+    * carries one, else the converted parquet schema under the session's
+    * parquet settings. Like a read without `mergeSchema`, a delta of
+    * several files takes its first file's schema. */
+  private def footerSchema(spark: SparkSession, file: (String, Long, Long))
+      : org.apache.spark.sql.types.StructType = {
+    import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
+      ParquetFooterReader, ParquetToSparkSchemaConverter}
+    val state = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState
+    val conf = state.newHadoopConf()
+    val (p, len, mtime) = file
+    val status = new org.apache.hadoop.fs.FileStatus(len, false, 0, 0L, mtime,
+      new org.apache.hadoop.fs.Path(p))
+    val meta = ParquetFooterReader.readFooter(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(status, conf),
+      org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS)
+    ParquetFileFormat.readSchemaFromFooter(
+      new org.apache.parquet.hadoop.Footer(status.getPath, meta),
+      new ParquetToSparkSchemaConverter(state.conf))
+  }
+
+  private def appendHaw(old: HawWheel, delta: HawWheel, span: Long, packLevels: Boolean): HawWheel =
+    old.appended(delta, span, packLevels).getOrElse(HawWheel.fromSecondPartials(
+      old.slotPartials ++ delta.slotPartials, old.scale, old.hasValues, span, packLevels))
+
+  private def appendTyped[In, P: scala.reflect.ClassTag, Out](old: TypedHawWheel[P, Out],
+      delta: TypedHawWheel[P, Out], agg: graft.wheel.WheelAggregator[In, P, Out]): TypedHawWheel[P, Out] =
+    old.appended(delta, agg).getOrElse(
+      TypedHawWheel.fromSecondPartials(old.slotPartials ++ delta.slotPartials, agg))
+
   private def refreshLocked(spark: SparkSession, path: String): RefreshOutcome = {
     val key = WheelRegistry.normalizePath(path)
     require(!key.startsWith("view::"),
@@ -1977,9 +2076,9 @@ object UWheelIndex {
     val t = WheelRegistry.lookup(key).getOrElse(
       throw new IllegalStateException(s"no TableIndex registered for $key — call build() first"))
     graft.Tables.ensureNanosConf(spark)
-    val df = spark.read.parquet(WheelRegistry.rootsOfKey(key): _*)
-    val listing = listingOf(df).getOrElse(
-      throw new IllegalStateException(s"$key is not a file-backed table"))
+    val roots = WheelRegistry.rootsOfKey(key)
+    // the diff needs file names, sizes and times only: no schema, no job
+    val listing = listingOfRoots(spark, roots)
     val now = listing.map(f => f._1 -> (f._2, f._3)).toMap
     val fab = t.filesAtBuild
     if (fab.nonEmpty && now == fab) return RefreshOutcome.NoChange
@@ -2013,39 +2112,48 @@ object UWheelIndex {
     val keyedSpecs = keyedKept.map(w => WheelSpec(w.valueColumn,
       w.filterSql.map(F.expr), w.filterKey, w.coverage, w.wheel.scale, w.filterSql,
       w.keyEq, w.exprSql))
-    val shareIdx = countWheel.map(cw => colWheels.indexWhere(_.coverage == cw.coverage))
-      .getOrElse(-1)
+    val shareIdx = countWheel.map { cw =>
+      // keep the wheel the count already shares (the build's first column)
+      val same = colWheels.indexWhere(_.wheel eq cw.wheel)
+      if (same >= 0) same else colWheels.indexWhere(_.coverage == cw.coverage)
+    }.getOrElse(-1)
     val needOwnCount = countWheel.isDefined && shareIdx < 0
     val countSpec =
       if (needOwnCount)
         Seq(WheelSpec(None, None, "", countWheel.get.coverage, countWheel.get.wheel.scale))
       else Nil
-    val newPaths = listing.collect { case (p, _, _) if !fab.contains(p) => p }
+    val newFiles = listing.filterNot(f => fab.contains(f._1))
+    // A small append-only delta is folded on the driver from one
+    // projected collect; a configured slot budget may coarsen the span
+    // over the grown range, which only the distributed path handles.
+    val onDriver = appendOnly && t.slotBudget.isEmpty &&
+      newFiles.iterator.map(_._2).sum <= SmallDeltaBytes
     // basePath keeps Hive-partition columns (dt=.../ directories — the
     // canonical append layout) in the delta schema when reading leaf
     // files. ONE basePath cannot describe a multi-root table (and the
     // joined registry key is not a path at all — it broke the delta read
     // outright), so the delta files group by their owning member root,
-    // each read against its own base; single-root reduces to one group.
-    // Union order is irrelevant: the wheel fold is order-free.
+    // each read against its own base under its first file's footer
+    // schema; single-root reduces to one group. Union order is
+    // irrelevant: the wheel fold is order-free.
     val scanDf =
-      if (!appendOnly) df
+      if (!appendOnly) spark.read.parquet(roots: _*)
       else {
-        val roots = WheelRegistry.rootsOfKey(key)
         // a delta file that prefix-matches NO member root signals key/
         // listing normalization drift (e.g. a scheme/qualification
         // mismatch) — fail loud rather than read it under an arbitrary
         // basePath, which could silently misparse Hive partition columns
         // (round-15 advice)
-        def owner(p: String): String = {
-          val n = WheelRegistry.keyOfQualified(Seq(p))
+        def owner(f: (String, Long, Long)): String = {
+          val n = WheelRegistry.keyOfQualified(Seq(f._1))
           roots.find(r => n == r || n.startsWith(r + "/")).getOrElse(
             throw new IllegalStateException(
-              s"refresh: delta file $p matches no member root of $key — " +
+              s"refresh: delta file ${f._1} matches no member root of $key — " +
                 "path normalization drifted between listing and registration; rebuild the index"))
         }
-        newPaths.groupBy(owner).map { case (r, ps) =>
-          spark.read.option("basePath", r).parquet(ps: _*)
+        newFiles.groupBy(owner).map { case (r, fs) =>
+          spark.read.schema(footerSchema(spark, fs.head)).option("basePath", r)
+            .parquet(fs.map(_._1): _*)
         }.reduce(_ unionByName _)
       }
 
@@ -2073,7 +2181,7 @@ object UWheelIndex {
     val oldMoment = t.allMomentWheels.filter(mw => mw.filterKey.isEmpty || mw.filterSql.isDefined)
     val oldCoMoment = t.allCoMomentWheels.filter(cw => cw.filterKey.isEmpty || cw.filterSql.isDefined)
     val oldFreq = t.allFreqWheels.filter(fw => fw.filterKey.isEmpty || fw.filterSql.isDefined)
-    val (built, freshDistinct, freshQuantile, freshMoment, freshCoMoment, freshFreq) = buildWheels(scanDf, t.timeColumn,
+    val fusedPlan = planFused(scanDf, t.timeColumn,
       colSpecs ++ keyedSpecs ++ countSpec, span, t.packLevels,
       oldDistinct.map(d => DistinctSpec(d.column, d.p,
         d.filterSql.map(F.expr), d.filterKey, d.filterSql, exprSql = d.exprSql)),
@@ -2086,26 +2194,77 @@ object UWheelIndex {
         exprSqlX = cw.exprSqlX, exprSqlY = cw.exprSqlY)),
       freqSpecs = oldFreq.map(fw => CmsSpec(fw.column, fw.logW, fw.d,
         fw.filterSql.map(F.expr), fw.filterKey, fw.filterSql, exprSql = fw.exprSql)))
+    // Millisecond bottom-level wheels ride the same delta-vs-rebuild
+    // decision through their own slot expression (their tick domain — the
+    // per-second slots cannot produce ms partials). Always
+    // reconstructible: ms wheels are unfiltered by construction. Slot
+    // budgets never apply to them (slots stay 1 ms). As in the cold build,
+    // the count wheel shares the first measure wheel when there is one.
+    val (msCount, msVals) = t.allMsWheels.partition(_.valueColumn.isEmpty)
+    val oldMs = if (msVals.isEmpty) msCount else msVals.sortBy(_.valueColumn)
+    val msPlan = if (oldMs.isEmpty) None else Some(planFused(scanDf, t.timeColumn,
+      oldMs.map(w => WheelSpec(w.valueColumn, None, "", None, w.wheel.scale)),
+      slotExprOverride = Some(msExprOf(scanDf, t.timeColumn)),
+      prefix = if (onDriver) "_m" else "_"))
+    // Heavy-hitter wheels: the whole family set refreshes together, keyed
+    // wheels behind their filter booleans.
+    val oldTopK = t.allTopKWheels
+    val topKSpecs = oldTopK.map(tw => (F.col(tw.column).cast("long"), tw.filterSql.map(F.expr), tw.agg))
+    val readKey = (r: org.apache.spark.sql.Row, ord: Int) => r.getLong(ord)
+
+    val (fused, msBuilt, topKBuilt) =
+      if (onDriver) {
+        // ONE job: the delta's rows, projected to each plan's slot and
+        // aggregate children (and the top-k keys), collected and folded
+        val plans = fusedPlan +: msPlan.toSeq
+        val widened = scanDf.select(F.col("*") +: plans.flatMap(_.projCols): _*)
+        val cols = plans.flatMap(p => p.slot +: p.aggs.map(_.child)) ++
+          (if (oldTopK.isEmpty) Nil else TypedWheelBuild.topKColumns(scanDf, t.timeColumn, topKSpecs))
+        val rows = widened.select(cols.zipWithIndex.map { case (c, i) => c.as(s"_c$i") }: _*).collect()
+        val offsets = plans.scanLeft(0)((o, p) => o + 1 + p.aggs.length)
+        val built = plans.zip(offsets).map { case (p, o) => p.freeze(SlotAgg.fold(rows, o, p.aggs, p.newAcc())) }
+        val topK =
+          if (oldTopK.isEmpty) Nil
+          else {
+            val (ws, nullKeys) =
+              TypedWheelBuild.foldTopK(rows.iterator, offsets.last, topKSpecs.map(_._3), readKey)
+            ws.indices.map(i => (ws(i).freeze(), nullKeys(i)))
+          }
+        (built.head, built.drop(1).headOption.map(_._1), topK)
+      } else {
+        // The ms-wheel scan and the top-k pass depend on nothing the fused
+        // scan produces: run them beside it, as the cold build does.
+        import scala.concurrent.{Await, Future}
+        import scala.concurrent.duration.Duration
+        import scala.concurrent.ExecutionContext.Implicits.global
+        val msFut = msPlan.map(p => Future(p.freeze(scanFused(scanDf, p, None))._1))
+        val topKFut =
+          if (oldTopK.isEmpty) None
+          else Some(Future(TypedWheelBuild.buildTopKSet(scanDf, t.timeColumn, topKSpecs, readKey)))
+        val f = fusedPlan.freeze(scanFused(scanDf, fusedPlan, None))
+        (f, msFut.map(Await.result(_, Duration.Inf)),
+          topKFut.map(Await.result(_, Duration.Inf)).getOrElse(Nil))
+      }
+    val (built, freshDistinct, freshQuantile, freshMoment, freshCoMoment, freshFreq) = fused
     val (colBuilt, rest) = built.splitAt(colSpecs.length)
     val keyedBuilt = rest.take(keyedSpecs.length)
 
-    // append: slot-wise merge (counts/scaled sums add, min/max combine —
-    // associative, so merged ≡ rebuilt bit-for-bit); rebuild: the fresh
-    // wheel replaces the old outright. Packedness survives both paths.
-    def finish(old: IndexedWheel, fresh: BuiltWheel): IndexedWheel =
+    // append: every wheel extends by the delta's slots (counts/scaled sums
+    // add, min/max combine — associative, so appended ≡ rebuilt
+    // bit-for-bit); rebuild: the fresh wheel replaces the old outright.
+    // Packedness survives both paths.
+    def finish(old: IndexedWheel, fresh: BuiltWheel, span: Long, packLevels: Boolean): IndexedWheel =
       if (!appendOnly) fresh.wheel
       else old.copy(
-        wheel = HawWheel.fromSecondPartials(
-          old.wheel.slotPartials ++ fresh.wheel.wheel.slotPartials,
-          old.wheel.scale, old.wheel.hasValues, span, t.packLevels),
+        wheel = appendHaw(old.wheel, fresh.wheel.wheel, span, packLevels),
         valueAllNonNull = old.valueAllNonNull && fresh.wheel.valueAllNonNull,
         valuesExactAtScale = old.valuesExactAtScale && fresh.wheel.valuesExactAtScale,
         valuesNaNFree = old.valuesNaNFree && fresh.wheel.valuesNaNFree)
 
-    val newCols = colWheels.zip(colBuilt).map { case (o, d) => finish(o, d) }
-    val newKeyed = keyedKept.zip(keyedBuilt).map { case (o, d) => finish(o, d) }
+    val newCols = colWheels.zip(colBuilt).map { case (o, d) => finish(o, d, span, t.packLevels) }
+    val newKeyed = keyedKept.zip(keyedBuilt).map { case (o, d) => finish(o, d, span, t.packLevels) }
     val newCount = countWheel.map { cw =>
-      if (needOwnCount) finish(cw, rest.last)
+      if (needOwnCount) finish(cw, rest.last, span, t.packLevels)
       else cw.copy(wheel = newCols(shareIdx).wheel)
     }
     val unfilteredDelta = colBuilt ++ (if (needOwnCount) Seq(rest.last) else Nil)
@@ -2114,122 +2273,62 @@ object UWheelIndex {
       if (appendOnly) t.tsAllNonNull && !sawNull else !sawNull,
       fingerprintOfListing(listing), now, t.slotBudget, t.packLevels)
     (newCols ++ newKeyed ++ newCount).foreach(nt.put(WheelFamily.Numeric, _))
-    // Distinct (HLL) wheels ride the same delta-vs-rebuild decision — and
-    // the same SINGLE delta scan: a register array is the max over its
-    // rows' contributions, so merging old + delta partials slot-wise
-    // (register max, idempotent) is bit-identical to a full rebuild when
-    // the delta rows are exactly the appended ones.
+    // The typed families append the same way: HLL registers max (idempotent),
+    // HDR bins, Count-Min counters and moments add — so old + delta
+    // partials appended slot-wise are bit-identical to a full rebuild when
+    // the delta rows are exactly the appended ones. A budget-driven
+    // coarsening leaves old finer-grained partials in the merge; recording
+    // the coarsest span keeps reads exact (coarse-aligned bounds are also
+    // fine-aligned along the AllowedSlotSpans chain).
+    def spanOf(old: Long, fresh: Long): Long = if (appendOnly) math.max(old, span) else fresh
     oldDistinct.zip(freshDistinct).foreach { case (d, f) =>
-      val merged =
-        if (appendOnly)
-          TypedHawWheel.fromSecondPartials(d.wheel.slotPartials ++ f.wheel.slotPartials, d.agg)
-        else f.wheel
-      // a budget-driven coarsening leaves old finer-grained partials in the
-      // merge; recording the coarsest span keeps reads exact (coarse-aligned
-      // bounds are also fine-aligned along the AllowedSlotSpans chain)
-      nt.put(WheelFamily.Hll, d.copy(wheel = merged,
-        slotSpan = if (appendOnly) math.max(d.slotSpan, span) else f.slotSpan))
+      nt.put(WheelFamily.Hll, d.copy(
+        wheel = if (appendOnly) appendTyped(d.wheel, f.wheel, d.agg) else f.wheel,
+        slotSpan = spanOf(d.slotSpan, f.slotSpan)))
     }
-    // Quantile-sketch wheels ride the same single delta scan: bin counts
-    // are ADDITIVE, so merging old + delta partials slot-wise is
-    // bit-identical to a full rebuild when the delta rows are exactly the
-    // appended ones (same argument as the numeric count/sum wheels).
     oldQuantile.zip(freshQuantile).foreach { case (qw, f) =>
-      val merged =
-        if (appendOnly)
-          TypedHawWheel.fromSecondPartials(qw.wheel.slotPartials ++ f.wheel.slotPartials, qw.agg)
-        else f.wheel
-      nt.put(WheelFamily.Hdr, qw.copy(wheel = merged,
-        slotSpan = if (appendOnly) math.max(qw.slotSpan, span) else f.slotSpan))
+      nt.put(WheelFamily.Hdr, qw.copy(
+        wheel = if (appendOnly) appendTyped(qw.wheel, f.wheel, qw.agg) else f.wheel,
+        slotSpan = spanOf(qw.slotSpan, f.slotSpan)))
     }
-    // Count-Min frequency wheels: counters are ADDITIVE, so old + delta
-    // partials merge slot-wise bit-identical to a rebuild on append-only
-    // growth (same argument as the quantile bins).
     oldFreq.zip(freshFreq).foreach { case (fw, f) =>
-      val merged =
-        if (appendOnly)
-          TypedHawWheel.fromSecondPartials(fw.wheel.slotPartials ++ f.wheel.slotPartials, fw.agg)
-        else f.wheel
-      nt.put(WheelFamily.Cms, fw.copy(wheel = merged,
-        slotSpan = if (appendOnly) math.max(fw.slotSpan, span) else f.slotSpan))
+      nt.put(WheelFamily.Cms, fw.copy(
+        wheel = if (appendOnly) appendTyped(fw.wheel, f.wheel, fw.agg) else f.wheel,
+        slotSpan = spanOf(fw.slotSpan, f.slotSpan)))
     }
-    // Exact-moment wheels: moments are additive, so old + delta partials
-    // merge slot-wise bit-identical to a rebuild; the decline gates
-    // (castFail, absMax) accumulate across the refresh like the numeric
-    // exactness flags.
+    // the moment decline gates (castFail, absMax) accumulate across the
+    // refresh like the numeric exactness flags
     oldMoment.zip(freshMoment).foreach { case (mw, f) =>
-      val merged =
-        if (appendOnly)
-          TypedHawWheel.fromSecondPartials(mw.wheel.slotPartials ++ f.wheel.slotPartials, mw.agg)
-        else f.wheel
-      nt.put(WheelFamily.Moment, mw.copy(wheel = merged,
+      nt.put(WheelFamily.Moment, mw.copy(
+        wheel = if (appendOnly) appendTyped(mw.wheel, f.wheel, mw.agg) else f.wheel,
         castFail = (if (appendOnly) mw.castFail else 0L) + f.castFail,
         absMax = if (appendOnly) math.max(mw.absMax, f.absMax) else f.absMax,
-        slotSpan = if (appendOnly) math.max(mw.slotSpan, span) else f.slotSpan))
+        slotSpan = spanOf(mw.slotSpan, f.slotSpan)))
     }
     oldCoMoment.zip(freshCoMoment).foreach { case (cw, f) =>
-      val merged =
-        if (appendOnly)
-          TypedHawWheel.fromSecondPartials(cw.wheel.slotPartials ++ f.wheel.slotPartials, cw.agg)
-        else f.wheel
-      nt.put(WheelFamily.CoMoment, cw.copy(wheel = merged,
+      nt.put(WheelFamily.CoMoment, cw.copy(
+        wheel = if (appendOnly) appendTyped(cw.wheel, f.wheel, cw.agg) else f.wheel,
         castFail = (if (appendOnly) cw.castFail else 0L) + f.castFail,
         absMaxX = if (appendOnly) math.max(cw.absMaxX, f.absMaxX) else f.absMaxX,
         absMaxY = if (appendOnly) math.max(cw.absMaxY, f.absMaxY) else f.absMaxY,
-        slotSpan = if (appendOnly) math.max(cw.slotSpan, span) else f.slotSpan))
+        slotSpan = spanOf(cw.slotSpan, f.slotSpan)))
     }
-    // Millisecond bottom-level wheels ride the same delta-vs-rebuild
-    // decision through one extra scan grouped by millisecond (their tick
-    // domain — the per-second delta scan cannot produce ms partials).
-    // Always reconstructible: ms wheels are unfiltered by construction.
-    // Slot budgets never apply to them (slots stay 1 ms), so the merge is
-    // a plain slot-wise fold, bit-identical to a rebuild on append-only
-    // growth like every other wheel family here.
-    val oldMs = t.allMsWheels
-    if (oldMs.nonEmpty) {
-      val ordered = oldMs.sortBy(_.valueColumn)
-      val msSpecs = ordered.map(w => WheelSpec(w.valueColumn, None, "", None, w.wheel.scale))
-      val (msBuilt, _, _, _, _, _) = buildWheels(scanDf, t.timeColumn, msSpecs,
-        slotExprOverride = Some(msExprOf(scanDf, t.timeColumn)))
-      ordered.zip(msBuilt).foreach { case (o, f) =>
-        val merged =
-          if (!appendOnly) f.wheel
-          else o.copy(
-            wheel = HawWheel.fromSecondPartials(
-              o.wheel.slotPartials ++ f.wheel.wheel.slotPartials,
-              o.wheel.scale, o.wheel.hasValues, 1L, packLevels = false),
-            valueAllNonNull = o.valueAllNonNull && f.wheel.valueAllNonNull,
-            valuesExactAtScale = o.valuesExactAtScale && f.wheel.valuesExactAtScale,
-            valuesNaNFree = o.valuesNaNFree && f.wheel.valuesNaNFree)
-        nt.put(WheelFamily.Millis, merged)
-      }
-    }
-    // Heavy-hitter wheels: one extra typed pass over the delta (or the
-    // full table on rebuild). Append merges old + delta slot summaries
-    // and re-compacts — BOUND-SOUND (the slack semantics compose) but
-    // not necessarily bit-identical to a from-scratch rebuild on slots
-    // dense enough to have compacted (a rebuild compacts the union once;
-    // the merge compacts twice). Certified topK answers are unaffected:
-    // certification requires slack 0, where compaction never engaged.
-    val oldTopK = t.allTopKWheels
-    if (oldTopK.nonEmpty) {
-      // the whole family set refreshes in ONE pass over the delta (or the
-      // full table on rebuild), keyed wheels behind their filter booleans
-      val fresh = TypedWheelBuild.buildTopKSet(scanDf, t.timeColumn,
-        oldTopK.map(tw => (F.col(tw.column).cast("long"), tw.filterSql.map(F.expr), tw.agg)),
-        (r: org.apache.spark.sql.Row, ord: Int) => r.getLong(ord))
-      oldTopK.zip(fresh).foreach { case (tw, (fw, freshNulls)) =>
-        val merged =
-          if (!appendOnly) fw
-          else TypedHawWheel.fromSecondPartials(
-            tw.wheel.slotPartials ++ fw.slotPartials, tw.agg)
-        // the NULL-key decline gate accumulates across appends, like castFail
-        nt.put(WheelFamily.TopK, tw.copy(wheel = merged,
-          keyNullCount = (if (appendOnly) tw.keyNullCount else 0L) + freshNulls))
-      }
+    msBuilt.foreach(ms => putMsWheels(nt, msVals.nonEmpty && msCount.nonEmpty,
+      oldMs.zip(ms).map { case (o, f) => BuiltWheel(finish(o, f, 1L, packLevels = false), false) }))
+    // Heavy hitters: append keeps old + delta slot summaries — BOUND-SOUND
+    // (the slack semantics compose) but not necessarily bit-identical to a
+    // from-scratch rebuild on slots dense enough to have compacted (a
+    // rebuild compacts the union once; the merge compacts twice).
+    // Certified topK answers are unaffected: certification requires slack
+    // 0, where compaction never engaged.
+    oldTopK.zip(topKBuilt).foreach { case (tw, (fw, freshNulls)) =>
+      // the NULL-key decline gate accumulates across appends, like castFail
+      nt.put(WheelFamily.TopK, tw.copy(
+        wheel = if (appendOnly) appendTyped(tw.wheel, fw, tw.agg) else fw,
+        keyNullCount = (if (appendOnly) tw.keyNullCount else 0L) + freshNulls))
     }
     WheelRegistry.register(nt)
-    if (appendOnly) RefreshOutcome.Appended(newPaths.length) else RefreshOutcome.Rebuilt
+    if (appendOnly) RefreshOutcome.Appended(newFiles.length) else RefreshOutcome.Rebuilt
   }
 
   /** [[refresh]] for every file-backed registered index — the one-call

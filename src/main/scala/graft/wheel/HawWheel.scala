@@ -825,6 +825,48 @@ final class HawWheel private (
       else (secs(i), counts(i), sums(i), secMins(i), secMaxs(i))
     }
 
+  /** `fromSecondPartials(slotPartials ++ delta.slotPartials, scale,
+    * hasValues, span, packLevels)` built by concatenation when `delta`
+    * starts at or after this wheel's last slot: the slot arrays are copied
+    * once, a shared boundary slot is combined the way that merge combines
+    * it, and nothing is sorted. None when the merge is needed instead —
+    * late or overlapping data, packed levels, a span change, or an empty
+    * wheel. */
+  private[graft] def appended(delta: HawWheel, span: Long, packLevels: Boolean): Option[HawWheel] = {
+    if (numSecs == 0 || packed != null || delta.isPacked || (packLevels && hasValues) ||
+        slotSpan != span || scale != delta.scale || hasValues != delta.hasValues) return None
+    if (delta.numSecs == 0) return Some(this)
+    val dp = delta.slotPartials.toArray
+    if (delta.slotSpan != span || dp(0)._1 < secs(numSecs - 1)) return None
+    val shared = if (dp(0)._1 == secs(numSecs - 1)) 1 else 0
+    val n = numSecs + dp.length - shared
+    val s2 = java.util.Arrays.copyOf(secs, n)
+    val c2 = java.util.Arrays.copyOf(counts, n)
+    val sm2 = if (hasValues) java.util.Arrays.copyOf(sums, n) else Array.emptyLongArray
+    val mn2 = if (hasValues) java.util.Arrays.copyOf(secMins, n) else Array.emptyDoubleArray
+    val mx2 = if (hasValues) java.util.Arrays.copyOf(secMaxs, n) else Array.emptyDoubleArray
+    var k = 0
+    var i = numSecs - shared
+    while (k < dp.length) {
+      val (sec, c, sum, mn, mx) = dp(k)
+      if (k == 0 && shared == 1) {
+        c2(i) += c
+        if (hasValues) {
+          sm2(i) += sum
+          mn2(i) = math.min(mn2(i), mn)
+          mx2(i) = math.max(mx2(i), mx)
+        }
+      } else {
+        s2(i) = sec; c2(i) = c
+        if (hasValues) { sm2(i) = sum; mn2(i) = mn; mx2(i) = mx }
+      }
+      k += 1
+      i += 1
+    }
+    Some(HawWheel.fromSortedUnique(s2, c2, sm2, mn2, mx2, scale, hasValues, span,
+      packLevels = false))
+  }
+
   /** Approximate retained-index footprint in bytes (reference:
     * `index_usage_bytes`, `lib.rs:143-151`) — proportional to distinct
     * active seconds, not to the time span. */

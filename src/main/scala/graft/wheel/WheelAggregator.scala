@@ -1590,6 +1590,38 @@ final class TypedHawWheel[P: ClassTag, Out] private[wheel] (
   private[graft] def slotPartials: Iterator[(Long, P)] =
     secs.iterator.zip(parts.iterator)
 
+  /** `TypedHawWheel.fromSecondPartials(slotPartials ++
+    * delta.slotPartials, into)` built by concatenation when `delta` starts
+    * at or after this wheel's last second: this wheel's partials are kept
+    * by reference (frozen partials are already compact, and `compact` is
+    * idempotent), a shared boundary second is combined and compacted, and
+    * nothing is sorted. The result holds `into`, as the merge's result
+    * does. None for late or overlapping data or an empty wheel, where the
+    * merge is needed instead. */
+  private[graft] def appended[In](delta: TypedHawWheel[P, Out],
+      into: WheelAggregator[In, P, Out]): Option[TypedHawWheel[P, Out]] = {
+    if (numSecs == 0) return None
+    if (delta.numSecs == 0) return Some(this)
+    val dp = delta.slotPartials.toArray
+    if (dp(0)._1 < secs(numSecs - 1)) return None
+    val shared = if (dp(0)._1 == secs(numSecs - 1)) 1 else 0
+    val n = numSecs + dp.length - shared
+    val s2 = java.util.Arrays.copyOf(secs, n)
+    val p2 = new Array[P](n)
+    System.arraycopy(parts, 0, p2, 0, numSecs)
+    var k = 0
+    var i = numSecs - shared
+    while (k < dp.length) {
+      val (sec, p) = dp(k)
+      s2(i) = sec
+      p2(i) = into.compact(if (k == 0 && shared == 1) into.combine(parts(i), p) else p)
+      k += 1
+      i += 1
+    }
+    Some(new TypedHawWheel[P, Out](into.asInstanceOf[WheelAggregator[_, P, Out]],
+      s2(0), s2(n - 1) + 1, s2, p2))
+  }
+
   /** Combined partial over [s, e) seconds. */
   def combineRange(s: Long, e: Long): P = {
     val lo = math.max(s, startSec)

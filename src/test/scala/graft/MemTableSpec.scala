@@ -87,4 +87,33 @@ class MemTableSpec extends AnyFunSuite {
     assert(r(0).getTimestamp(0).getTime === 1715299200000L)
     assert(r(0).getLong(1) === 10L)
   }
+
+  test("a deregistered DataFrame-built index stops serving; clear() drops its ExprIds") {
+    setup
+    val session = spark
+    import session.implicits._
+    val base = Timestamp.valueOf("2024-06-01 00:00:00").getTime
+    val df = (0 until 20)
+      .map(i => (new Timestamp(base + i * 1000L), i.toDouble))
+      .toDF("timestamp", "v")
+    df.createOrReplaceTempView("memtable_dereg")
+    UWheelIndex.buildFromDataFrame(df, "memtable_dereg", UWheelBuilder("timestamp", Seq("v")))
+    // a file-backed index keeps the registry non-empty throughout
+    val path = java.nio.file.Files.createTempDirectory("graft-dereg").toString + "/t.parquet"
+    df.write.parquet(path)
+    UWheelBuilder("timestamp", Seq("v")).build(spark, path)
+    def q = spark.sql("SELECT count(*) AS c, max(v) AS m FROM memtable_dereg")
+    assert(rewritten(q))
+    graft.index.WheelRegistry.deregister("view::memtable_dereg")
+    assert(!rewritten(q), q.queryExecution.optimizedPlan.toString)
+    assert(q.collect()(0).getLong(0) === 20L)
+    val ids = df.queryExecution.analyzed.output.map(_.exprId.id)
+    assert(ids.forall(id => !graft.index.WheelRegistry.mayMatchExprId(id)))
+
+    // clear() leaves no ExprId entry behind, the memtable's included
+    val memIds = spark.table("memtable_t").queryExecution.analyzed.output.map(_.exprId.id)
+    assert(memIds.exists(graft.index.WheelRegistry.mayMatchExprId))
+    graft.index.WheelRegistry.clear()
+    assert(memIds.forall(id => !graft.index.WheelRegistry.mayMatchExprId(id)))
+  }
 }

@@ -335,4 +335,91 @@ class WheelRefreshSpec extends AnyFunSuite {
     assert(after.countWheel.get.wheel.slotSpan >= spanBefore)
     assert(partialsOf(after) === partialsOf(fresh))
   }
+
+  /** (job group, stage count) of every job `body` starts, read between two
+    * marker jobs so that all of `body`'s job events have been delivered. */
+  private def jobsOf(body: => Unit): Seq[(String, Int)] = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, Int)]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        seen.add((Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .getOrElse(""), e.stageInfos.size))
+    }
+    def marker(id: String): Unit = {
+      sc.setJobGroup(id, id)
+      try sc.parallelize(1 to 1, 1).count() finally sc.clearJobGroup()
+    }
+    sc.addSparkListener(listener)
+    try {
+      marker("jobs-start")
+      body
+      marker("jobs-end")
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!seen.toArray.exists(_ == (("jobs-end", 1))) && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      import scala.jdk.CollectionConverters._
+      seen.asScala.toSeq.dropWhile(_._1 != "jobs-start").drop(1).takeWhile(_._1 != "jobs-end")
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** A shuffle (a job of more than one stage) marks the distributed scan. */
+  private def distributed(jobs: Seq[(String, Int)]): Boolean = jobs.exists(_._2 > 1)
+
+  private val allFamilies = builder.withDistinctWheel("uid").withQuantileWheel("value")
+    .withMomentWheel("value").withFreqWheel("uid").withTopKWheel("uid")
+
+  private def withUid(df: DataFrame): DataFrame =
+    df.withColumn("uid", org.apache.spark.sql.functions.expr("CAST(value * 4 AS BIGINT) % 13"))
+
+  test("a small append folds on the driver in at most 2 jobs; larger or rewritten data scans") {
+    val path = tmpTable()
+    withUid(mkDf(0, 2000)).write.mode("overwrite").parquet(path)
+    allFamilies.build(spark, path)
+    def rebuiltMatches(): Unit = {
+      val path2 = tmpTable()
+      spark.read.parquet(path).write.parquet(path2)
+      val fresh = allFamilies.build(spark, path2)
+      val got = WheelRegistry.lookup(path).get
+      assert(partialsOf(got) === partialsOf(fresh))
+      assert(got.allDistinctWheels.map(_.wheel.slotPartials.map(p => (p._1, p._2.toSeq)).toList) ===
+        fresh.allDistinctWheels.map(_.wheel.slotPartials.map(p => (p._1, p._2.toSeq)).toList))
+      assert(got.allTopKWheels.map(_.wheel.slotPartials.toList) ===
+        fresh.allTopKWheels.map(_.wheel.slotPartials.toList))
+    }
+
+    // small append: one listing, one footer read, one projected collect
+    withUid(mkDf(2000, 800)).write.mode("append").parquet(path)
+    var outcome: RefreshOutcome = null
+    val small = jobsOf { outcome = UWheelIndex.refresh(spark, path) }
+    assert(outcome.isInstanceOf[RefreshOutcome.Appended])
+    assert(small.size <= 2, small)
+    assert(!distributed(small), small)
+    rebuiltMatches()
+
+    // late data: small, so still folded; the wheels fall back to the merge
+    withUid(mkDf(100, 300)).write.mode("append").parquet(path)
+    assert(UWheelIndex.refresh(spark, path).isInstanceOf[RefreshOutcome.Appended])
+    rebuiltMatches()
+
+    // a delta over the fold's byte bound takes the distributed scan
+    withUid(mkDf(2800, 20000, secStride = 1))
+      .withColumn("pad", org.apache.spark.sql.functions.expr("repeat(md5(CAST(value AS STRING) || ts), 3)"))
+      .write.mode("append").parquet(path)
+    val listed = UWheelIndex.listingOfRoots(spark, Seq(path))
+    val t = WheelRegistry.lookup(path).get
+    assert(listed.filterNot(f => t.filesAtBuild.contains(f._1)).map(_._2).sum > UWheelIndex.SmallDeltaBytes)
+    val large = jobsOf { outcome = UWheelIndex.refresh(spark, path) }
+    assert(outcome.isInstanceOf[RefreshOutcome.Appended])
+    assert(distributed(large), large)
+    rebuiltMatches()
+
+    // an in-place rewrite rebuilds through the distributed scan
+    withUid(mkDf(0, 1200)).write.mode("overwrite").parquet(path)
+    val rewrite = jobsOf { outcome = UWheelIndex.refresh(spark, path) }
+    assert(outcome === RefreshOutcome.Rebuilt)
+    assert(distributed(rewrite), rewrite)
+    rebuiltMatches()
+  }
 }
