@@ -16,7 +16,7 @@ import org.apache.spark.sql.types.DataType
   * children instead and folds them per slot on the driver through
   * [[init]]/[[update]]/[[result]], which reproduce the Spark aggregate's
   * value for the slot. Either way the slot's row reaches the same
-  * [[WheelBuildAcc.add]], so both paths build the same wheels. */
+  * [[FusedAcc.add]], so both paths build the same wheels. */
 private[index] sealed abstract class SlotAgg {
   def name: String
   def child: Column
@@ -107,7 +107,7 @@ private[index] object SlotAgg {
     * after it are the aggregates' children, in order. Each slot's
     * aggregate row goes through `acc.add`, as a row of the distributed
     * aggregate does. */
-  def fold(rows: Array[Row], slotOrd: Int, aggs: IndexedSeq[SlotAgg], acc: WheelBuildAcc): WheelBuildAcc = {
+  def fold(rows: Array[Row], slotOrd: Int, aggs: IndexedSeq[SlotAgg], acc: FusedAcc): FusedAcc = {
     val n = aggs.length
     val bySlot = mutable.LongMap.empty[Array[Any]]
     var nullSlot: Array[Any] = null

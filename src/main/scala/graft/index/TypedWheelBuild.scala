@@ -9,7 +9,7 @@ import graft.wheel.{TypedHawWheel, TypedRwWheel, WheelAggregator}
 
 /** Distributed build of a TYPED wheel over a DataFrame — the same
   * no-driver-collect shape as the fused index build
-  * ([[graft.index.WheelBuildAcc]]): executors fold their partitions into
+  * ([[graft.index.FusedAcc]]): executors fold their partitions into
   * per-partition [[TypedRwWheel]]s, which merge in a depth-2 tree so the
   * driver receives ONE wheel whose payload is bounded by
   * (active slots) × (partial size), never by row count.

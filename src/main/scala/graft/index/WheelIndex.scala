@@ -901,19 +901,6 @@ object UWheelIndex {
     * slots, not row count. */
   @volatile var lastBuildPayloadBytes: Long = -1L
 
-  /** Distributed wheel build. One shuffle: rows are pre-aggregated to
-    * per-second partials by a map-side-combining `groupBy`, then folded into
-    * per-partition [[graft.wheel.RwWheel]]s and tree-merged on the executors
-    * — the driver receives one compact accumulator, never a Row per active
-    * second. Data volume at every stage is bounded by the table's *distinct
-    * active seconds*, independent of row count, which is what makes this
-    * viable at 100 TB (the reference instead collects every row to one
-    * process, `lib.rs:1130-1158`). */
-  /** @param sawNullTs whether any row had a NULL time value (null seconds
-    *                   group present in the partials) — derived from the same
-    *                   single scan instead of a separate pass. */
-  final case class BuiltWheel(wheel: IndexedWheel, sawNullTs: Boolean)
-
   /** Epoch-second slot of the time column. TimestampType → cast; a raw
     * nanosecond Long (events.ts via Tables) → floor-div by 1e9; DATE →
     * days × 86400 s, timezone-free (the reference's Date32 arm copies day
@@ -955,80 +942,6 @@ object UWheelIndex {
       case _ =>
         F.expr(s"(unix_micros(`$timeColumn`) - pmod(unix_micros(`$timeColumn`), 1000)) div 1000")
     }
-
-  /** One wheel to build: which column (None = row count), under which
-    * residual filter, over which time coverage. */
-  final case class WheelSpec(
-      valueColumn: Option[String],
-      filter: Option[Column],
-      filterKey: String,
-      timeRangeSec: Option[(Long, Long)],
-      scale: Int,
-      filterSql: Option[String] = None,
-      keyEq: Option[(String, org.apache.spark.sql.catalyst.expressions.Literal)] = None,
-      /** For derived-EXPRESSION measures: the raw SQL to project (the
-        * `valueColumn` is then the expression's canonical key, not a schema
-        * column — see [[IndexedWheel.exprSql]]). */
-      exprSql: Option[String] = None)
-
-  /** One distinct-sketch wheel to build: which column, at which precision,
-    * under which residual filter (None/"" = unfiltered). */
-  final case class DistinctSpec(
-      column: String,
-      p: Int,
-      filter: Option[Column] = None,
-      filterKey: String = "",
-      filterSql: Option[String] = None,
-      keyEq: Option[(String, org.apache.spark.sql.catalyst.expressions.Literal)] = None,
-      exprSql: Option[String] = None)
-
-  /** One quantile-sketch wheel to build: which column, at which bucketing
-    * resolution, under which residual filter (""/None = unfiltered). */
-  final case class QuantileSpec(
-      column: String,
-      s: Int,
-      filter: Option[Column] = None,
-      filterKey: String = "",
-      filterSql: Option[String] = None,
-      keyEq: Option[(String, org.apache.spark.sql.catalyst.expressions.Literal)] = None,
-      exprSql: Option[String] = None)
-
-  /** One Count-Min frequency-sketch wheel to build: which key column, at
-    * which counter-matrix size, under which residual filter. */
-  final case class CmsSpec(
-      column: String,
-      logW: Int,
-      d: Int,
-      filter: Option[Column] = None,
-      filterKey: String = "",
-      filterSql: Option[String] = None,
-      keyEq: Option[(String, org.apache.spark.sql.catalyst.expressions.Literal)] = None,
-      exprSql: Option[String] = None)
-
-  /** One exact CO-moment wheel to build: which column pair, at which
-    * fixed-point scales, under which residual filter. */
-  final case class CoMomentSpec(
-      columnX: String,
-      columnY: String,
-      scaleX: Int,
-      scaleY: Int,
-      filter: Option[Column] = None,
-      filterKey: String = "",
-      filterSql: Option[String] = None,
-      keyEq: Option[(String, org.apache.spark.sql.catalyst.expressions.Literal)] = None,
-      exprSqlX: Option[String] = None,
-      exprSqlY: Option[String] = None)
-
-  /** One exact-moment wheel to build: which column, at which fixed-point
-    * scale, under which residual filter (""/None = unfiltered). */
-  final case class MomentSpec(
-      column: String,
-      scale: Int,
-      filter: Option[Column] = None,
-      filterKey: String = "",
-      filterSql: Option[String] = None,
-      keyEq: Option[(String, org.apache.spark.sql.catalyst.expressions.Literal)] = None,
-      exprSql: Option[String] = None)
 
   /** Structured `column = literal` form of a wheel filter, when it has one
     * (the multi-column GROUP BY arm routes on it). Matched on the ANALYZED
@@ -1096,344 +1009,106 @@ object UWheelIndex {
   private[graft] def colOrExprKeyOf(df: DataFrame, s: String): (String, Option[String]) =
     if (df.schema.exists(_.name == s)) (s, None) else (exprKeyOf(df, s), Some(s))
 
-  /** `try_cast(v AS decimal(p, s))` of a DOUBLE column via the scaled-long
-    * fast path ([[graft.functions.FastDecimalImage]] — identical result,
-    * minus the `Double.toString` parse that priced the lineitem build). */
-  private def fastDecCol(v: Column, precision: Int, scale: Int): Column =
-    org.apache.spark.sql.graft.ColumnBridge.column(
-      graft.functions.FastDecimalImage(
-        org.apache.spark.sql.graft.ColumnBridge.expression(v), precision, scale))
-
-  /** The fixed-point probe image for a moment/co-moment source: the fast
-    * double path when the source IS a double, Spark's own `try_cast` for
-    * every other input type (DECIMAL sources stay in exact decimal
-    * arithmetic end-to-end; int/long casts are already cheap). */
-  private def fastDecIfDouble(df: DataFrame, src: Column, precision: Int,
-      scale: Int): Column =
-    if (df.select(src).schema.head.dataType == org.apache.spark.sql.types.DoubleType)
-      fastDecCol(src, precision, scale)
-    else src.try_cast(s"decimal($precision,$scale)")
-
-  /** Builds ANY number of wheels in ONE distributed scan: each spec becomes
-    * six conditional aggregate columns of a single map-side-combining
-    * `groupBy(second)`, so index construction over 100 TB is one pass
-    * regardless of how many count/min-max/keyed wheels are requested (the
-    * reference runs one full query per wheel, `lib.rs:154-239,912-965`).
-    * Rows a spec filters out contribute nothing to that spec's aggregates
-    * (`WHEN keep` → NULL / 0). */
+  /** Builds ANY number of wheels in ONE distributed scan: each part becomes
+    * a few aggregate columns of a single map-side-combining
+    * `groupBy(slot)`, so index construction over 100 TB is one pass
+    * regardless of how many wheels are requested (the reference runs one
+    * full query per wheel, `lib.rs:154-239,912-965`). Rows a part filters
+    * out contribute nothing to that part's aggregates (`WHEN keep` → NULL /
+    * 0). Returns the wheels, in part order, and whether an unfiltered
+    * numeric part saw a row with a NULL time.
+    *
+    * @param slotExprOverride overrides the group key (the wheel's tick
+    *                   domain): the millisecond wheel build passes
+    *                   [[msExprOf]] here so the same fused-aggregate
+    *                   machinery produces per-MILLISECOND partials. Parts
+    *                   must then carry no coverage (coverage filters are
+    *                   second-domain).
+    * @param phaseTag   when set, [[BuildPhases]] sub-attributes this
+    *                   build's fused scan: `fusedplan_<tag>` = Catalyst
+    *                   analysis + optimization + physical planning of the
+    *                   ~40-aggregate scan, `fusedexec_<tag>` = the scan +
+    *                   fold itself (including first-run codegen compilation
+    *                   on a cold JVM) — so the cold `index_build` headline
+    *                   names its cost instead of reporting one opaque
+    *                   number (round-12 task 2). */
   private def buildWheels(
       df: DataFrame,
       timeColumn: String,
-      specs: Seq[WheelSpec],
+      parts: Seq[BuildPart],
       slotSpan: Long = 1L,
       packLevels: Boolean = false,
-      /** HLL distinct-sketch wheels — fused into the SAME scan as
-        * register-array aggregate columns, so requesting distinct wheels
-        * costs zero extra passes over the table. */
-      distinctSpecs: Seq[DistinctSpec] = Nil,
-      /** Overrides the group key (the wheel's tick domain): the millisecond
-        * wheel build passes [[msExprOf]] here so the same fused-aggregate
-        * machinery produces per-MILLISECOND partials. Specs must then carry
-        * no timeRangeSec (coverage filters are second-domain). */
       slotExprOverride: Option[Column] = None,
-      /** HDR quantile-sketch wheels — fused into the same scan as bin-array
-        * aggregate columns, zero extra passes, like the HLL registers. */
-      quantileSpecs: Seq[QuantileSpec] = Nil,
-      /** Exact-moment wheels — fused into the same scan as five plain
-        * (codegen'd) aggregate columns per spec, zero extra passes. */
-      momentSpecs: Seq[MomentSpec] = Nil,
-      /** Exact co-moment wheels — nine plain aggregate columns per spec. */
-      coMomentSpecs: Seq[CoMomentSpec] = Nil,
-      /** Count-Min frequency-sketch wheels — fused like the HLL/HDR
-        * families, one sketch-array aggregate column per spec. */
-      freqSpecs: Seq[CmsSpec] = Nil,
-      /** When set, [[BuildPhases]] sub-attributes this build's fused scan:
-        * `fusedplan_<tag>` = Catalyst analysis + optimization + physical
-        * planning of the ~40-aggregate scan, `fusedexec_<tag>` = the scan +
-        * fold itself (including first-run codegen compilation on a cold
-        * JVM) — so the cold `index_build` headline names its cost instead
-        * of reporting one opaque number (round-12 task 2). */
-      phaseTag: Option[String] = None): FusedBuilt = {
-    val plan = planFused(df, timeColumn, specs, slotSpan, packLevels, distinctSpecs,
-      slotExprOverride, quantileSpecs, momentSpecs, coMomentSpecs, freqSpecs)
-    plan.freeze(scanFused(df, plan, phaseTag))
+      phaseTag: Option[String] = None): (Seq[FamilyWheel], Boolean) = {
+    val plan = planFused(df, timeColumn, parts, slotSpan, packLevels, slotExprOverride)
+    val acc = scanFused(df, plan, phaseTag)
+    (plan.freeze(acc), acc.sawNullTime)
   }
 
-  /** What one fused build produces, family by family. */
-  private type FusedBuilt = (Seq[BuiltWheel], Seq[DistinctIndexedWheel], Seq[QuantileIndexedWheel],
-    Seq[MomentIndexedWheel], Seq[CoMomentIndexedWheel], Seq[FreqIndexedWheel])
-
   /** The per-row half of a fused build: the columns that widen the source
-    * (`projCols`), the slot (group key) expression, and every aggregate
-    * column as a per-row child plus its aggregate ([[SlotAgg]]). The
-    * distributed scan ([[scanFused]]) and the driver fold of a small
-    * refresh delta ([[SlotAgg.fold]]) both run these same expressions, and
-    * [[freeze]] turns either one's accumulator into wheels. */
+    * (`projCols`), the slot (group key) expression, and every part's
+    * aggregate columns, end to end, as a per-row child plus its aggregate
+    * ([[SlotAgg]]). The distributed scan ([[scanFused]]) and the driver
+    * fold of a small refresh delta ([[SlotAgg.fold]]) both run these same
+    * expressions, and [[freeze]] turns either one's accumulator into
+    * wheels. */
   private final class FusedPlan(
-      specs: Seq[WheelSpec],
-      distinctSpecs: Seq[DistinctSpec],
-      quantileSpecs: Seq[QuantileSpec],
-      momentSpecs: Seq[MomentSpec],
-      coMomentSpecs: Seq[CoMomentSpec],
-      freqSpecs: Seq[CmsSpec],
+      parts: Seq[BuildPart],
+      offsets: Array[Int],
       slotSpan: Long,
       packLevels: Boolean,
       val projCols: Seq[Column],
       val slot: Column,
       val aggs: IndexedSeq[SlotAgg]) {
-
-    def newAcc(): WheelBuildAcc = new WheelBuildAcc(specs.map(_.scale).toArray,
-      specs.map(_.valueColumn.isDefined).toArray, distinctSpecs.map(_.p).toArray,
-      quantileSpecs.map(_.s).toArray, momentSpecs.map(_.scale).toArray,
-      coMomentSpecs.map(cs => (cs.scaleX, cs.scaleY)).toArray,
-      freqSpecs.map(fs => (fs.d, fs.logW)).toArray)
-
-    def freeze(acc: WheelBuildAcc): FusedBuilt = {
-      val built = specs.zipWithIndex.map { case (sp, i) =>
-        val hasValues = sp.valueColumn.isDefined
-        BuiltWheel(
-          IndexedWheel(acc.wheels(i).freeze(slotSpan, packLevels), sp.valueColumn, sp.filterKey,
-            valueAllNonNull = !hasValues || acc.allNonNull(i),
-            valuesExactAtScale = !hasValues || acc.badRep(i) == 0L,
-            valuesNaNFree = !hasValues || acc.nanCount(i) == 0L,
-            sp.timeRangeSec, sp.filterSql, sp.keyEq, sp.exprSql),
-          acc.sawNullTs(i))
-      }
-      val builtDistinct = distinctSpecs.zip(acc.distinct).map { case (ds, rw) =>
-        DistinctIndexedWheel(rw.freeze(), ds.column,
-          rw.agg.asInstanceOf[WheelAggregators.HllDistinct], ds.filterKey, ds.filterSql,
-          slotSpan, ds.keyEq, ds.exprSql)
-      }
-      val builtQuantile = quantileSpecs.zip(acc.sketch).map { case (qs, rw) =>
-        QuantileIndexedWheel(rw.freeze(), qs.column,
-          rw.agg.asInstanceOf[WheelAggregators.HdrQuantile], qs.filterKey, qs.filterSql,
-          slotSpan, qs.keyEq, qs.exprSql)
-      }
-      val builtMoment = momentSpecs.zipWithIndex.map { case (ms, j) =>
-        MomentIndexedWheel(acc.moment(j).freeze(), ms.column,
-          acc.moment(j).agg.asInstanceOf[WheelAggregators.MomentStats],
-          acc.momCastFail(j), acc.momAbsMax(j), ms.filterKey, ms.filterSql,
-          slotSpan, ms.keyEq, ms.exprSql)
-      }
-      val builtCoMoment = coMomentSpecs.zipWithIndex.map { case (cs, j) =>
-        CoMomentIndexedWheel(acc.coMoment(j).freeze(), cs.columnX, cs.columnY,
-          acc.coMoment(j).agg.asInstanceOf[WheelAggregators.CoMomentStats],
-          acc.coCastFail(j), acc.coAbsMaxX(j), acc.coAbsMaxY(j), cs.filterKey, cs.filterSql,
-          slotSpan, cs.keyEq, cs.exprSqlX, cs.exprSqlY)
-      }
-      val builtFreq = freqSpecs.zip(acc.freq).map { case (fs, rw) =>
-        FreqIndexedWheel(rw.freeze(), fs.column,
-          rw.agg.asInstanceOf[WheelAggregators.CmsFreq], fs.filterKey, fs.filterSql,
-          slotSpan, fs.keyEq, fs.exprSql)
-      }
-      (built, builtDistinct, builtQuantile, builtMoment, builtCoMoment, builtFreq)
-    }
+    def newAcc(): FusedAcc = new FusedAcc(parts.map(_.newAcc()).toArray, offsets)
+    def freeze(acc: FusedAcc): Seq[FamilyWheel] =
+      acc.parts.toSeq.map(_.freeze(slotSpan, packLevels))
   }
 
-  /** Plans a fused build ([[buildWheels]]'s parameters). `prefix` names
-    * the widening columns; two plans projected side by side over one
-    * source (a refresh that folds its delta on the driver) need distinct
-    * prefixes. */
+  /** Plans a fused build ([[buildWheels]]'s parameters) over `parts`, laid
+    * out in their order. `prefix` names the widening columns; two plans
+    * projected side by side over one source (a refresh that folds its
+    * delta on the driver) need distinct prefixes. */
   private def planFused(
       df: DataFrame,
       timeColumn: String,
-      specs: Seq[WheelSpec],
+      parts: Seq[BuildPart],
       slotSpan: Long = 1L,
       packLevels: Boolean = false,
-      distinctSpecs: Seq[DistinctSpec] = Nil,
       slotExprOverride: Option[Column] = None,
-      quantileSpecs: Seq[QuantileSpec] = Nil,
-      momentSpecs: Seq[MomentSpec] = Nil,
-      coMomentSpecs: Seq[CoMomentSpec] = Nil,
-      freqSpecs: Seq[CmsSpec] = Nil,
       prefix: String = "_"): FusedPlan = {
-    import SlotAgg._
-    require(specs.nonEmpty)
-    require(slotExprOverride.isEmpty || specs.forall(_.timeRangeSec.isEmpty),
-      "coverage-restricted specs are second-domain and cannot ride an overridden slot expression")
+    val numeric = parts.collect { case p: NumericPart => p }
+    require(numeric.nonEmpty, "a fused build needs a numeric part")
+    require(slotExprOverride.isEmpty || numeric.forall(_.coverage.isEmpty),
+      "coverage-restricted parts are second-domain and cannot ride an overridden slot expression")
     val secExpr = secExprOf(df, timeColumn)
-    // Per-ROW work is projected ONCE per distinct (valueColumn, scale) pair
-    // and shared across specs: six keyed wheels over the same measure
-    // column would otherwise each evaluate the double cast, the
-    // DECIMAL(38) exactness round-trip, and the NaN probe per row — the
-    // round-trip decimal cast in particular priced the round-6 events
-    // build. Catalyst cannot unify them itself (each sat under a
-    // spec-specific `when(keep, …)` guard, so the subtrees differ); with
-    // the shared projection the per-row cost is one cast set total, and
-    // each spec's aggregate columns reduce to cheap conditional folds the
-    // hash aggregate codegens. The `keep` gates are evaluated inside the
-    // aggregate exprs (they are per-spec by nature and cheap: a residual
-    // equality + optional range test).
-    val valKeys = specs.flatMap(sp => sp.valueColumn.map(c => (c, sp.scale))).distinct
-    val valIdx = valKeys.zipWithIndex.toMap
-    // Derived-expression measures: the spec's valueColumn is a canonical
-    // key, not a schema column — the per-row source is the re-projected SQL.
-    val exprSrc: Map[(String, Int), String] = specs.collect {
-      case sp if sp.valueColumn.isDefined && sp.exprSql.isDefined =>
-        (sp.valueColumn.get, sp.scale) -> sp.exprSql.get
-    }.toMap
-    def pc(kind: String, k: Int): Column = F.col(s"$prefix$kind$k")
-    val projCols = valKeys.zipWithIndex.flatMap { case ((c, scale), k) =>
-      val srcCol = exprSrc.get((c, scale)).map(F.expr).getOrElse(F.col(c))
-      val isDec = exprSrc.get((c, scale)) match {
-        case Some(sql) => df.select(F.expr(sql)).schema.head.dataType
-          .isInstanceOf[org.apache.spark.sql.types.DecimalType]
-        case None => df.schema.find(_.name == c)
-          .exists(_.dataType.isInstanceOf[org.apache.spark.sql.types.DecimalType])
-      }
-      if (isDec) {
-        // Decimal source column at its own scale: the sum path widens the
-        // decimal directly (exact — no double anywhere), and the exactness
-        // probe flips direction: it asks whether the DOUBLE image converts
-        // back to the original decimal exactly, which is what gates the
-        // double-stored MIN/MAX rewrite. Decimals cannot be NaN.
-        val d = srcCol.cast(s"decimal(38,$scale)")
-        val v = srcCol.cast("double")
-        val rt = v.try_cast(s"decimal(38,$scale)")
-        Seq(
-          v.as(s"${prefix}v$k"),
-          d.as(s"${prefix}d$k"),
-          (srcCol.isNotNull && (rt.isNull || rt =!= d)).as(s"${prefix}b$k"),
-          F.lit(false).as(s"${prefix}n$k"))
-      } else {
-        val v = srcCol.cast("double")
-        // Exactness probe: does v survive a round-trip through
-        // DECIMAL(38,scale)? NaN/Infinity/overflow become NULL and count as
-        // non-representable — `try_cast` semantics, via the scaled-long
-        // fast path ([[graft.functions.FastDecimalImage]]): the
-        // Decimal.set(double) → Double.toString parse behind the plain
-        // cast was ~40% of the lineitem build's executor samples
-        // (round-10 verdict task 6).
-        val asDec = fastDecCol(v, 38, scale)
-        val roundTrip = asDec.cast("double") // decimal→double never errors
-        Seq(
-          v.as(s"${prefix}v$k"),
-          asDec.as(s"${prefix}d$k"),
-          (v.isNotNull && (roundTrip.isNull || roundTrip =!= v)).as(s"${prefix}b$k"),
-          F.isnan(v).as(s"${prefix}n$k"))
-      }
+    val (projCols, measure) = NumericPart.projection(df, numeric, prefix)
+    val in = new PartInputs(df, secExpr, measure)
+    val perPart = parts.zipWithIndex.map { case (p, i) =>
+      p.aggs(parts.take(i).count(_.getClass == p.getClass), in)
     }
-    val aggs: IndexedSeq[SlotAgg] = (specs.zipWithIndex.flatMap { case (sp, i) =>
-      val inRange = sp.timeRangeSec
-        .map { case (s, e) => secExpr >= s && secExpr < e }
-        .getOrElse(F.lit(true))
-      val keep = sp.filter.map(_ && inRange).getOrElse(inRange)
-      val (v, asDec, bad, nan) = sp.valueColumn match {
-        case Some(c) =>
-          val k = valIdx((c, sp.scale))
-          (F.when(keep, pc("v", k)), F.when(keep, pc("d", k)), pc("b", k), pc("n", k))
-        case None =>
-          val nul = F.lit(null).cast("double")
-          (nul, nul, F.lit(false), F.lit(false))
-      }
-      Seq(CountIf(s"c$i", keep), Count(s"cv$i", v), Sum(s"s$i", asDec), Min(s"mn$i", v),
-        Max(s"mx$i", v), CountIf(s"b$i", keep && bad), CountIf(s"nan$i", keep && nan))
-    } ++ distinctSpecs.zipWithIndex.map { case (ds, j) =>
-      // per-second register partials from the registers form of the native
-      // aggregate — bit-identical fold semantics to the SQL hll_distinct
-      // and the wheel's own aggregator (they are the same code). A keyed
-      // spec folds its residual filter into the aggregate's child: rows
-      // not matching become NULL and are skipped, exactly like the SQL
-      // aggregate over the filtered query would skip them. A derived-
-      // expression measure re-projects its SQL (column = canonical key).
-      val srcD = ds.exprSql.map(F.expr).getOrElse(F.col(ds.column))
-      val in = ds.filter match {
-        case Some(f) => F.when(f, srcD)
-        case None    => srcD
-      }
-      Sketch(s"h$j", in.cast("long"), org.apache.spark.sql.types.LongType,
-        graft.functions.HllDistinctAgg(_, ds.p, returnRegisters = true))
-    } ++ quantileSpecs.zipWithIndex.map { case (qs, j) =>
-      // per-second bin partials from the bins form of the native quantile
-      // aggregate — identical content semantics to the wheel aggregator
-      // (they share bucketing and canonical encoding). The double cast is
-      // the same image the numeric wheels project, so buckets agree with
-      // what the SQL aggregate over the raw column computes.
-      val srcQ = qs.exprSql.map(F.expr).getOrElse(F.col(qs.column))
-      val in = qs.filter match {
-        case Some(f) => F.when(f, srcQ)
-        case None    => srcQ
-      }
-      Sketch(s"qt$j", in.cast("double"), org.apache.spark.sql.types.DoubleType,
-        graft.functions.HdrQuantileAgg(_, q = 0.0, s = qs.s, returnBins = true))
-    } ++ momentSpecs.zipWithIndex.flatMap { case (ms, j) =>
-      // Exact moments, all in native codegen'd arithmetic: the value is
-      // probed through an exact DECIMAL(18, scale) fixed-point image `f`
-      // (rows that don't survive — NaN/Infinity/overflow — are COUNTED,
-      // and any nonzero count makes the wheel decline every rewrite), the
-      // unscaled integer u = f·10^s is exact in a BIGINT (|u| < 10^18),
-      // and Σu / Σu² accumulate in DECIMAL(38,0) — u² < 10^36 always fits
-      // a tight (19,0)×(19,0) product, so no precision loss anywhere.
-      val s = ms.scale
-      val src = ms.exprSql.map(F.expr).getOrElse(F.col(ms.column))
-      val vd = src.cast("double")
-      val f = fastDecIfDouble(df, src, 18, s)
-      val fail = src.isNotNull && f.isNull
-      val u = (f * F.lit(math.pow(10, s).toLong).cast("decimal(10,0)")).cast("long")
-      val u19 = u.cast("decimal(19,0)")
-      val keepM = ms.filter.getOrElse(F.lit(true))
-      Seq(
-        Count(s"mn$j", F.when(keepM, u)),
-        Sum(s"ms$j", F.when(keepM, u.cast("decimal(38,0)"))),
-        Sum(s"mq$j", F.when(keepM, u19 * u19)),
-        CountIf(s"mf$j", keepM && fail),
-        Max(s"ma$j", F.when(keepM, F.abs(vd))))
-    } ++ coMomentSpecs.zipWithIndex.flatMap { case (cs, j) =>
-      // Exact co-moments: both columns go through the same fixed-point
-      // probe as the unary moments; a row contributes only when BOTH
-      // values are non-NULL (SQL binary-aggregate discipline), and a probe
-      // failure in EITHER column (NaN/Infinity/overflow — which would make
-      // the scan's explicit cast throw under ANSI) is counted to decline.
-      def probe(src: Column, s: Int) = {
-        val f = fastDecIfDouble(df, src, 18, s)
-        val u = (f * F.lit(math.pow(10, s).toLong).cast("decimal(10,0)")).cast("long")
-        (src, f, u, src.cast("double"))
-      }
-      val (sx0, fx, ux, xd) = probe(
-        cs.exprSqlX.map(F.expr).getOrElse(F.col(cs.columnX)), cs.scaleX)
-      val (sy0, fy, uy, yd) = probe(
-        cs.exprSqlY.map(F.expr).getOrElse(F.col(cs.columnY)), cs.scaleY)
-      val fail = (sx0.isNotNull && fx.isNull) || (sy0.isNotNull && fy.isNull)
-      val keepC = cs.filter.getOrElse(F.lit(true))
-      val both = keepC && ux.isNotNull && uy.isNotNull
-      val ux19 = ux.cast("decimal(19,0)")
-      val uy19 = uy.cast("decimal(19,0)")
-      Seq(
-        CountIf(s"cn$j", both),
-        Sum(s"cx$j", F.when(both, ux.cast("decimal(38,0)"))),
-        Sum(s"cy$j", F.when(both, uy.cast("decimal(38,0)"))),
-        Sum(s"cxx$j", F.when(both, ux19 * ux19)),
-        Sum(s"cyy$j", F.when(both, uy19 * uy19)),
-        Sum(s"cxy$j", F.when(both, ux19 * uy19)),
-        CountIf(s"cf$j", keepC && fail),
-        Max(s"cax$j", F.when(keepC, F.abs(xd))),
-        Max(s"cay$j", F.when(keepC, F.abs(yd))))
-    } ++ freqSpecs.zipWithIndex.map { case (fs, j) =>
-      // per-second counter partials from the sketch form of the native
-      // cms_freq aggregate — identical hash/content semantics to the wheel
-      // aggregator (they are the same code). A keyed spec folds its
-      // residual filter into the aggregate's child like the HLL column.
-      val srcF = fs.exprSql.map(F.expr).getOrElse(F.col(fs.column))
-      val in = fs.filter match {
-        case Some(f) => F.when(f, srcF)
-        case None    => srcF
-      }
-      Sketch(s"fq$j", in.cast("long"), org.apache.spark.sql.types.LongType,
-        graft.functions.CmsFreqAgg(_, target = 0L, logW = fs.logW, d = fs.d, returnSketch = true))
-    }).toIndexedSeq
+    // column 0 of the slot row is the slot itself
+    val offsets = perPart.scanLeft(1)(_ + _.length).toArray
     // Coarse builds align the shuffle key itself, so the per-second → per-slot
     // reduction happens map-side too (pmod keeps pre-1970 seconds aligned
     // down, where `div` would truncate toward zero).
     val slotExpr = slotExprOverride.getOrElse(
       if (slotSpan == 1L) secExpr
       else secExpr - F.pmod(secExpr, F.lit(slotSpan)))
-    new FusedPlan(specs, distinctSpecs, quantileSpecs, momentSpecs, coMomentSpecs, freqSpecs,
-      slotSpan, packLevels, projCols, slotExpr, aggs)
+    new FusedPlan(parts, offsets, slotSpan, packLevels, projCols, slotExpr,
+      perPart.flatten.toIndexedSeq)
   }
 
-  /** The distributed scan of a fused build: one map-side-combining
-    * `groupBy(slot)` over the widened source, folded on the executors. */
-  private def scanFused(df: DataFrame, plan: FusedPlan, phaseTag: Option[String]): WheelBuildAcc = {
+  /** The distributed scan of a fused build. One shuffle: rows are
+    * pre-aggregated to per-slot partials by a map-side-combining
+    * `groupBy(slot)` over the widened source, then folded into
+    * per-partition accumulators and tree-merged on the executors — the
+    * driver receives one compact accumulator, never a Row per active
+    * second. Data volume at every stage is bounded by the table's *distinct
+    * active seconds*, independent of row count, which is what makes this
+    * viable at 100 TB (the reference instead collects every row to one
+    * process, `lib.rs:1130-1158`). */
+  private def scanFused(df: DataFrame, plan: FusedPlan, phaseTag: Option[String]): FusedAcc = {
     // Executor-side merge: each shuffle partition folds its per-second rows
     // into compact RwWheels, and partials meet in a depth-2 aggregation tree
     // — the driver receives ONE serialized accumulator (primitive slot
@@ -1497,9 +1172,6 @@ object UWheelIndex {
     acc
   }
 
-  /** Optimizer-construction build (reference `try_new` + `build`,
-    * `lib.rs:92-122,912-965`): COUNT(*) wheel + one min/max wheel per
-    * requested column, registered under the table's path. */
   /** Stable hash of a file listing — the staleness fingerprint. */
   def fingerprintOf(location: org.apache.spark.sql.execution.datasources.FileIndex): Long =
     fingerprintOfListing(location.listFiles(Nil, Nil).flatMap(_.files)
@@ -1587,26 +1259,10 @@ object UWheelIndex {
     * per-row interpreted penalty would dwarf any compile — keep codegen
     * untouched. Runtime confs are copied so zone/nanos behavior matches
     * the caller's session exactly. */
-  /** Tunable via `-Dgraft.build.smallScanBytes=N` or env
-    * `GRAFT_BUILD_SMALL_SCAN_BYTES` (0 disables the interpreted-build path
-    * entirely — the measurement escape hatch). A `def`, not a `lazy val`:
-    * the prop lookup is cheap and per-build, so a caller that sets the
-    * system property between builds sees the change take effect (a lazy
-    * val would pin the first build's value for the JVM's lifetime). */
-  private def smallBuildScanBytes: Long =
-    sys.props.get("graft.build.smallScanBytes")
-      .orElse(sys.env.get("GRAFT_BUILD_SMALL_SCAN_BYTES")) match {
-      case Some(v) => v.trim.toLongOption.getOrElse {
-        // a malformed override must not fail every build (review finding):
-        // warn and keep the default rather than throw before any work
-        System.err.println(
-          s"[graft] ignoring malformed graft.build.smallScanBytes value '$v' (want a byte count)")
-        256L * 1024 * 1024
-      }
-      case None => 256L * 1024 * 1024
-    }
+  private val SmallBuildScanBytes: Long = 256L * 1024 * 1024
+
   private def buildSessionFor(spark: SparkSession, scanBytes: Option[Long]): SparkSession =
-    if (!scanBytes.exists(b => b <= smallBuildScanBytes && smallBuildScanBytes > 0)) spark
+    if (!scanBytes.exists(_ <= SmallBuildScanBytes)) spark
     else {
       val s = spark.newSession()
       // carry the caller's RUNTIME confs (session timezone, nanos flag,
@@ -1636,12 +1292,13 @@ object UWheelIndex {
 
   private def buildFrom(df: DataFrame, pathKey: String, fingerprint: Long,
       conf: UWheelBuilder): TableIndex = {
+    import WheelFamily._
     // phase-attribution key: the table's basename (BuildPhases doc)
     val tbl = pathKey.split('/').last.stripSuffix(".parquet")
     val tSpec0 = System.nanoTime()
     // ONE distributed scan builds everything: per-column min/max wheels,
-    // keyed wheels, and the count wheel (derived from the first min/max
-    // wheel's partials — same per-second counts — or built as its own spec
+    // keyed wheels, and the count wheel (sharing the first min/max
+    // wheel's partials — same per-second counts — or built as its own part
     // when no columns are requested). The reference runs one full table
     // query per wheel (`lib.rs:912-965,154-239`).
     // DecimalType measure columns index at the COLUMN'S OWN scale: the
@@ -1652,27 +1309,23 @@ object UWheelIndex {
       case Some(d: org.apache.spark.sql.types.DecimalType) => d.scale
       case _ => conf.scale
     }
-    val colSpecs = conf.minMaxColumns.map(c =>
-      WheelSpec(Some(c), None, "", conf.timeRangeSec, scaleFor(c))) ++
+    val unfiltered = PartFilter()
+    val colParts = conf.minMaxColumns.map(c =>
+      NumericPart(Numeric, Some(c), unfiltered, conf.timeRangeSec, scaleFor(c))) ++
       conf.exprWheels.map { case (sql, sc) =>
-        WheelSpec(Some(exprKeyOf(df, sql)), None, "", conf.timeRangeSec, sc,
-          exprSql = Some(sql))
+        NumericPart(Numeric, Some(exprKeyOf(df, sql)), unfiltered, conf.timeRangeSec, sc, Some(sql))
       }
-    val keyedSpecs = conf.keyedWheels.map { ib =>
-      val fc = F.expr(ib.filterSql.getOrElse(
-        throw new IllegalArgumentException("keyed wheel requires a filter")))
-      WheelSpec(Some(ib.column), Some(fc),
-        graft.expr.Canon.canonFilterKey(df.filter(fc)),
-        ib.timeRangeSec.orElse(conf.timeRangeSec), scaleFor(ib.column), ib.filterSql,
-        keyEqOf(df, fc))
+    val keyedParts = conf.keyedWheels.map { ib =>
+      val sql = ib.filterSql.getOrElse(
+        throw new IllegalArgumentException("keyed wheel requires a filter"))
+      NumericPart(Numeric, Some(ib.column), PartFilter.of(df, sql),
+        ib.timeRangeSec.orElse(conf.timeRangeSec), scaleFor(ib.column))
     } ++ conf.keyedExprWheels.map { case (sql, fsql, sc) =>
-      val fc = F.expr(fsql)
-      WheelSpec(Some(exprKeyOf(df, sql)), Some(fc),
-        graft.expr.Canon.canonFilterKey(df.filter(fc)),
-        conf.timeRangeSec, sc, Some(fsql), keyEqOf(df, fc), Some(sql))
+      NumericPart(Numeric, Some(exprKeyOf(df, sql)), PartFilter.of(df, fsql),
+        conf.timeRangeSec, sc, Some(sql))
     }
-    val countSpec =
-      if (colSpecs.isEmpty) Seq(WheelSpec(None, None, "", conf.timeRangeSec, conf.scale))
+    val countPart =
+      if (colParts.isEmpty) Seq(NumericPart(Numeric, None, unfiltered, conf.timeRangeSec, conf.scale))
       else Nil
     val slotSpan = effectiveSlotSpan(df, conf)
     // Column-or-EXPRESSION measure: every typed family accepts a derived
@@ -1681,30 +1334,19 @@ object UWheelIndex {
     // registration contract as withExprWheel), with the raw SQL retained
     // for refresh re-projection. `wheel_var_samp(cast(price*(1-disc) as
     // decimal(18,4)))`, `hdr_quantile(price*(1-disc), 0.99)`, and
-    // `cms_freq(user_id % 50, 7)` all answer from their wheels.
+    // `cms_freq(user_id % 50, 7)` all answer from their wheels. Each
+    // typed family lists its unfiltered wheels, then its keyed ones.
     def colOrExpr(s: String): (String, Option[String]) = colOrExprKeyOf(df, s)
-    val dSpecs = conf.distinctColumns.map { c0 =>
+    val hllParts = (conf.distinctColumns.map((_, None)) ++
+      conf.keyedDistinctWheels.map { case (c, sql) => (c, Some(sql)) }).map { case (c0, sql) =>
       val (c, ex) = colOrExpr(c0)
-      DistinctSpec(c, conf.hllPrecision, exprSql = ex)
-    } ++
-      conf.keyedDistinctWheels.map { case (c0, sql) =>
-        val (c, ex) = colOrExpr(c0)
-        val fc = F.expr(sql)
-        DistinctSpec(c, conf.hllPrecision, Some(fc),
-          graft.expr.Canon.canonFilterKey(df.filter(fc)), Some(sql),
-          keyEqOf(df, fc), ex)
-      }
-    val qSpecs = conf.quantileColumns.map { case (c0, s) =>
+      HllPart(c, conf.hllPrecision, PartFilter.of(df, sql), ex)
+    }
+    val hdrParts = (conf.quantileColumns.map { case (c, s) => (c, None, s) } ++
+      conf.keyedQuantileWheels.map { case (c, sql, s) => (c, Some(sql), s) }).map { case (c0, sql, s) =>
       val (c, ex) = colOrExpr(c0)
-      QuantileSpec(c, s, exprSql = ex)
-    } ++
-      conf.keyedQuantileWheels.map { case (c0, sql, s) =>
-        val (c, ex) = colOrExpr(c0)
-        val fc = F.expr(sql)
-        QuantileSpec(c, s, Some(fc),
-          graft.expr.Canon.canonFilterKey(df.filter(fc)), Some(sql),
-          keyEqOf(df, fc), ex)
-      }
+      HdrPart(c, s, PartFilter.of(df, sql), ex)
+    }
     // moment wheels fix their scale from the source: a DECIMAL column's own
     // scale, 0 for integral columns (so bare-column `wheel_var_samp(int_col)`
     // matches), the builder's scale otherwise — including derived
@@ -1715,41 +1357,24 @@ object UWheelIndex {
                 org.apache.spark.sql.types.IntegerType | org.apache.spark.sql.types.LongType) => 0
       case _ => conf.scale
     }
-    val mSpecs = conf.momentColumns.map { c0 =>
+    val momentParts = (conf.momentColumns.map((_, None)) ++
+      conf.keyedMomentWheels.map { case (c, sql) => (c, Some(sql)) }).map { case (c0, sql) =>
       val (c, ex) = colOrExpr(c0)
-      MomentSpec(c, momentScaleFor(c0), exprSql = ex)
-    } ++
-      conf.keyedMomentWheels.map { case (c0, sql) =>
-        val (c, ex) = colOrExpr(c0)
-        val fc = F.expr(sql)
-        MomentSpec(c, momentScaleFor(c0), Some(fc),
-          graft.expr.Canon.canonFilterKey(df.filter(fc)), Some(sql),
-          keyEqOf(df, fc), ex)
-      }
-    val cSpecs = conf.coMomentColumns.map { case (x0, y0) =>
-      val (x, ex) = colOrExpr(x0); val (y, ey) = colOrExpr(y0)
-      CoMomentSpec(x, y, momentScaleFor(x0), momentScaleFor(y0),
-        exprSqlX = ex, exprSqlY = ey)
-    } ++ conf.keyedCoMomentWheels.map { case (x0, y0, sql) =>
-      val (x, ex) = colOrExpr(x0); val (y, ey) = colOrExpr(y0)
-      val fc = F.expr(sql)
-      CoMomentSpec(x, y, momentScaleFor(x0), momentScaleFor(y0), Some(fc),
-        graft.expr.Canon.canonFilterKey(df.filter(fc)), Some(sql),
-        keyEqOf(df, fc), ex, ey)
+      MomentPart(c, momentScaleFor(c0), PartFilter.of(df, sql), ex)
     }
-    val fSpecs = conf.freqColumns.map { case (c0, lw, dd) =>
-      val (c, ex) = colOrExpr(c0)
-      CmsSpec(c, lw, dd, exprSql = ex)
-    } ++
-      conf.keyedFreqWheels.map { case (c0, sql, lw, dd) =>
+    val coMomentParts = (conf.coMomentColumns.map { case (x, y) => (x, y, None) } ++
+      conf.keyedCoMomentWheels.map { case (x, y, sql) => (x, y, Some(sql)) }).map { case (x0, y0, sql) =>
+      val (x, ex) = colOrExpr(x0); val (y, ey) = colOrExpr(y0)
+      CoMomentPart(x, y, momentScaleFor(x0), momentScaleFor(y0), PartFilter.of(df, sql), ex, ey)
+    }
+    val cmsParts = (conf.freqColumns.map { case (c, lw, d) => (c, None, lw, d) } ++
+      conf.keyedFreqWheels.map { case (c, sql, lw, d) => (c, Some(sql), lw, d) }).map {
+      case (c0, sql, lw, d) =>
         val (c, ex) = colOrExpr(c0)
-        val fc = F.expr(sql)
-        CmsSpec(c, lw, dd, Some(fc),
-          graft.expr.Canon.canonFilterKey(df.filter(fc)), Some(sql),
-          keyEqOf(df, fc), ex)
-      }
+        CmsPart(c, lw, d, PartFilter.of(df, sql), ex)
+    }
     // spec prep is ~25 Catalyst analyses for the events build (one
-    // df.filter canonicalization per keyed spec) — real cold-JVM cost,
+    // df.filter canonicalization per keyed part) — real cold-JVM cost,
     // attributed separately from the scan
     BuildPhases.add(s"spec_$tbl", (System.nanoTime() - tSpec0) / 1e9)
     // The ms-wheel scan and the typed top-k pass read the SAME immutable
@@ -1762,7 +1387,7 @@ object UWheelIndex {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
-    val msFut: Option[(Seq[(String, Int)], Future[Seq[BuiltWheel]])] =
+    val msFut: Option[(Seq[(String, Int)], Future[Seq[IndexedWheel]])] =
       conf.millisColumns.map { cols0 =>
         val cols = cols0.map(c => (c, scaleFor(c)))
         (cols, Future(BuildPhases.timed(s"ms_$tbl")(computeMsWheels(df, conf.timeColumn, cols))))
@@ -1790,35 +1415,20 @@ object UWheelIndex {
             (F.col(c).cast("long"), sql.map(F.expr), agg)
           },
           (r: org.apache.spark.sql.Row, ord: Int) => r.getLong(ord)))))
-    val (built, builtDistinct, builtQuantile, builtMoment, builtCoMoment, builtFreq) =
-      BuildPhases.timed(s"fused_$tbl")(buildWheels(df, conf.timeColumn,
-        colSpecs ++ keyedSpecs ++ countSpec, slotSpan, conf.packLevels, dSpecs,
-        quantileSpecs = qSpecs, momentSpecs = mSpecs, coMomentSpecs = cSpecs,
-        freqSpecs = fSpecs, phaseTag = Some(tbl)))
-    val (colBuilt, rest) = built.splitAt(colSpecs.length)
-    val countBuilt = colBuilt.headOption match {
-      case Some(bw) =>
-        BuiltWheel(IndexedWheel(bw.wheel.wheel, None, "",
-          valueAllNonNull = true, valuesExactAtScale = true,
-          coverage = conf.timeRangeSec),
-          bw.sawNullTs)
-      case None => rest.last
-    }
-    val unfiltered = colBuilt :+ countBuilt
-    val tsAllNonNull = !unfiltered.exists(_.sawNullTs)
-    val t = new TableIndex(pathKey, conf.timeColumn, tsAllNonNull, fingerprint,
+    val parts = colParts ++ keyedParts ++ countPart ++
+      hllParts ++ hdrParts ++ momentParts ++ coMomentParts ++ cmsParts
+    val (built, sawNullTs) = BuildPhases.timed(s"fused_$tbl")(buildWheels(df, conf.timeColumn,
+      parts, slotSpan, conf.packLevels, phaseTag = Some(tbl)))
+    val t = new TableIndex(pathKey, conf.timeColumn, !sawNullTs, fingerprint,
       filesAtBuild = listingOf(df).getOrElse(Nil).map(f => f._1 -> (f._2, f._3)).toMap,
       slotBudget = conf.slotBudget, packLevels = conf.packLevels)
-    import WheelFamily._
-    (countBuilt +: (colBuilt ++ rest.take(keyedSpecs.length)))
-      .foreach(bw => t.put(Numeric, bw.wheel))
-    builtDistinct.foreach(t.put(Hll, _))
-    builtQuantile.foreach(t.put(Hdr, _))
-    builtMoment.foreach(t.put(Moment, _))
-    builtCoMoment.foreach(t.put(CoMoment, _))
-    builtFreq.foreach(t.put(Cms, _))
+    parts.zip(built).foreach { case (p, w) => putWheel(t, p.family, w) }
+    if (colParts.nonEmpty)
+      t.put(Numeric, countSharing(built.head.asInstanceOf[IndexedWheel], conf.timeRangeSec))
     msFut.foreach { case (cols, fut) =>
-      putMsWheels(t, cols.nonEmpty, Await.result(fut, Duration.Inf))
+      val ms = Await.result(fut, Duration.Inf)
+      ms.foreach(t.put(Millis, _))
+      if (cols.nonEmpty) t.put(Millis, countSharing(ms.head, None))
     }
     topKFut.foreach { fut =>
       val builtTopK = Await.result(fut, Duration.Inf)
@@ -1871,30 +1481,30 @@ object UWheelIndex {
   }
 
   /** Millisecond bottom-level wheels: ONE extra scan grouped by
-    * [[msExprOf]], reusing the fused-aggregate machinery. The count wheel
-    * shares the first measure wheel's HawWheel (unfiltered — identical
-    * per-ms counts) or gets its own spec when no measures are listed.
-    * Shared by the fresh build and [[refresh]]. */
-  private def buildMsWheels(df: DataFrame, t: TableIndex,
-      cols: Seq[(String, Int)]): Unit =
-    putMsWheels(t, cols.nonEmpty, computeMsWheels(df, t.timeColumn, cols))
-
-  /** Compute half of [[buildMsWheels]] — pure scan, no TableIndex needed,
-    * so `buildFrom` can run it concurrently with the fused scan. */
+    * [[msExprOf]], reusing the fused-aggregate machinery: one wheel per
+    * measure column, or the count wheel when no measures are listed (with
+    * measures, the count wheel shares the first one's; unfiltered, so the
+    * per-ms counts are identical). A pure scan, no TableIndex needed, so
+    * `buildFrom` can run it concurrently with the fused scan. */
   private def computeMsWheels(df: DataFrame, timeColumn: String,
-      cols: Seq[(String, Int)]): Seq[BuiltWheel] = {
-    val msSpecs =
-      if (cols.isEmpty) Seq(WheelSpec(None, None, "", None, 2))
-      else cols.map { case (c, sc) => WheelSpec(Some(c), None, "", None, sc) }
-    buildWheels(df, timeColumn, msSpecs,
-      slotExprOverride = Some(msExprOf(df, timeColumn)))._1
+      cols: Seq[(String, Int)]): Seq[IndexedWheel] = {
+    val parts =
+      if (cols.isEmpty) Seq(NumericPart(WheelFamily.Millis, None, PartFilter(), None, 2))
+      else cols.map { case (c, sc) => NumericPart(WheelFamily.Millis, Some(c), PartFilter(), None, sc) }
+    buildWheels(df, timeColumn, parts, slotExprOverride = Some(msExprOf(df, timeColumn)))
+      ._1.collect { case w: IndexedWheel => w }
   }
 
-  private def putMsWheels(t: TableIndex, hasCols: Boolean, msBuilt: Seq[BuiltWheel]): Unit = {
-    msBuilt.foreach(bw => t.put(WheelFamily.Millis, bw.wheel))
-    if (hasCols)
-      t.put(WheelFamily.Millis, IndexedWheel(msBuilt.head.wheel.wheel, None, "", valueAllNonNull = true))
-  }
+  /** The row-count wheel over `coverage` that shares measure wheel `w`'s
+    * frozen wheel: an unfiltered measure wheel of the same coverage counts
+    * the same rows per slot. */
+  private def countSharing(w: IndexedWheel, coverage: Option[(Long, Long)]): IndexedWheel =
+    IndexedWheel(w.wheel, None, "", valueAllNonNull = true, coverage = coverage)
+
+  /** Registers `w` under `family`, the family of the part that built it or
+    * of the key it was registered under. */
+  private def putWheel(t: TableIndex, family: WheelFamily[_ <: FamilyWheel], w: FamilyWheel): Unit =
+    t.put(family.asInstanceOf[WheelFamily[FamilyWheel]], w)
 
   /** Finest allowed span ≥ `floor` (an explicit span is a floor — a budget
     * may only coarsen) whose ALIGNED slot count over [lo, hi] fits the
@@ -1951,17 +1561,10 @@ object UWheelIndex {
     if (t.fingerprint != 0L && fingerprintOf(df) != t.fingerprint)
       throw new IllegalStateException(
         s"$key changed since its index was built — call UWheelIndex.refresh first, then add wheels")
-    val (filterCol, filterKey) = ib.filterSql match {
-      case Some(sql) =>
-        val c = F.expr(sql)
-        (Some(c), graft.expr.Canon.canonFilterKey(df.filter(c)))
-      case None => (None, "")
-    }
+    val part = NumericPart(WheelFamily.Numeric, Some(ib.column), PartFilter.of(df, ib.filterSql),
+      ib.timeRangeSec, scale)
     val span = t.countWheel.map(_.wheel.slotSpan).getOrElse(1L)
-    t.put(WheelFamily.Numeric, buildWheels(df, t.timeColumn,
-      Seq(WheelSpec(Some(ib.column), filterCol, filterKey, ib.timeRangeSec, scale, ib.filterSql,
-        filterCol.flatMap(keyEqOf(df, _)))),
-      span, t.packLevels)._1.head.wheel)
+    putWheel(t, part.family, buildWheels(df, t.timeColumn, Seq(part), span, t.packLevels)._1.head)
   }
 
   /** Outcome of an incremental [[UWheelIndex.refresh]]. */
@@ -1973,8 +1576,8 @@ object UWheelIndex {
       * driver for a small delta, by the distributed scan otherwise) and
       * appended to the existing ones. */
     final case class Appended(newFiles: Int) extends RefreshOutcome
-    /** Existing files were modified or removed (or the index predates
-      * refresh metadata) — rebuilt from the full table. */
+    /** Existing files were modified or removed (or the index records no
+      * build-time listing) — rebuilt from the full table. */
     case object Rebuilt extends RefreshOutcome
     /** This table's refresh threw ([[UWheelIndex.refreshAll]] isolates
       * failures per table); the previous index stays registered — stale but
@@ -2060,16 +1663,22 @@ object UWheelIndex {
       new ParquetToSparkSchemaConverter(state.conf))
   }
 
-  private def appendHaw(old: HawWheel, delta: HawWheel, span: Long, packLevels: Boolean): HawWheel =
-    old.appended(delta, span, packLevels).getOrElse(HawWheel.fromSecondPartials(
-      old.slotPartials ++ delta.slotPartials, old.scale, old.hasValues, span, packLevels))
-
-  private def appendTyped[In, P: scala.reflect.ClassTag, Out](old: TypedHawWheel[P, Out],
-      delta: TypedHawWheel[P, Out], agg: graft.wheel.WheelAggregator[In, P, Out]): TypedHawWheel[P, Out] =
-    old.appended(delta, agg).getOrElse(
-      TypedHawWheel.fromSecondPartials(old.slotPartials ++ delta.slotPartials, agg))
+  /** A numeric family's wheels in build order — unfiltered measure wheels
+    * by column, keyed wheels, then the count wheel when it needs a part of
+    * its own — and, when it needs none, the count wheel with the measure
+    * wheel whose frozen wheel it shares: the one it already shares, else
+    * one of the same coverage (their per-slot counts are identical then). */
+  private def numericOrder(ws: Seq[IndexedWheel])
+      : (Seq[IndexedWheel], Option[(IndexedWheel, IndexedWheel)]) = {
+    val cols = ws.filter(w => w.filterKey.isEmpty && w.valueColumn.isDefined).sortBy(_.valueColumn.get)
+    val keyed = ws.filter(_.filterKey.nonEmpty)
+    val count = ws.find(w => w.filterKey.isEmpty && w.valueColumn.isEmpty)
+    val peer = count.flatMap(c => cols.find(_.wheel eq c.wheel).orElse(cols.find(_.coverage == c.coverage)))
+    (cols ++ keyed ++ (if (peer.isEmpty) count else None), count.zip(peer))
+  }
 
   private def refreshLocked(spark: SparkSession, path: String): RefreshOutcome = {
+    import WheelFamily._
     val key = WheelRegistry.normalizePath(path)
     require(!key.startsWith("view::"),
       "in-memory (DataFrame-built) indexes have no file listing to refresh — rebuild instead")
@@ -2082,46 +1691,20 @@ object UWheelIndex {
     val now = listing.map(f => f._1 -> (f._2, f._3)).toMap
     val fab = t.filesAtBuild
     if (fab.nonEmpty && now == fab) return RefreshOutcome.NoChange
+    val appendOnly = fab.nonEmpty && fab.forall { case (p, lm) => now.get(p).contains(lm) }
 
-    val wheels = t.allWheels
-    val colWheels = wheels.filter(w => w.filterKey.isEmpty && w.valueColumn.isDefined)
-      .sortBy(_.valueColumn.get)
-    val keyedWheels = wheels.filter(_.filterKey.nonEmpty)
-    val countWheel = wheels.find(w => w.filterKey.isEmpty && w.valueColumn.isEmpty)
-    val oldSpan = countWheel.orElse(wheels.headOption).map(_.wheel.slotSpan).getOrElse(1L)
-
-    val appendOnly = fab.nonEmpty && keyedWheels.forall(_.filterSql.isDefined) &&
-      t.allDistinctWheels.forall(d => d.filterKey.isEmpty || d.filterSql.isDefined) &&
-      t.allQuantileWheels.forall(qw => qw.filterKey.isEmpty || qw.filterSql.isDefined) &&
-      t.allFreqWheels.forall(fw => fw.filterKey.isEmpty || fw.filterSql.isDefined) &&
-      fab.forall { case (p, lm) => now.get(p).contains(lm) }
-
-    // One spec per REGISTERED wheel, carrying that wheel's own scale,
-    // coverage, and filter — wheels added later via buildIndex may differ
-    // from the original builder conf, and a refresh must not homogenize
-    // them. A keyed wheel whose filter SQL wasn't retained (pre-refresh
-    // metadata) cannot be reconstructed: a rebuild DROPS it (safe — those
-    // queries scan again) rather than silently rebuilding it unfiltered.
-    // The count wheel shares a column wheel's HawWheel only when their
-    // coverage matches (their per-slot counts are identical then);
-    // otherwise it gets its own spec.
-    val keyedKept = keyedWheels.filter(_.filterSql.isDefined)
-    val colSpecs = colWheels.map(w =>
-      WheelSpec(w.valueColumn, None, "", w.coverage, w.wheel.scale,
-        exprSql = w.exprSql))
-    val keyedSpecs = keyedKept.map(w => WheelSpec(w.valueColumn,
-      w.filterSql.map(F.expr), w.filterKey, w.coverage, w.wheel.scale, w.filterSql,
-      w.keyEq, w.exprSql))
-    val shareIdx = countWheel.map { cw =>
-      // keep the wheel the count already shares (the build's first column)
-      val same = colWheels.indexWhere(_.wheel eq cw.wheel)
-      if (same >= 0) same else colWheels.indexWhere(_.coverage == cw.coverage)
-    }.getOrElse(-1)
-    val needOwnCount = countWheel.isDefined && shareIdx < 0
-    val countSpec =
-      if (needOwnCount)
-        Seq(WheelSpec(None, None, "", countWheel.get.coverage, countWheel.get.wheel.scale))
-      else Nil
+    // One part per REGISTERED wheel (BuildPart.of), carrying that wheel's
+    // own scale, coverage, and filter — wheels added later via buildIndex
+    // may differ from the original builder conf, and a refresh must not
+    // homogenize them. A count wheel that shares a measure wheel's frozen
+    // wheel gets no part; it shares the refreshed one.
+    val (secNumeric, secCount) = numericOrder(t.allWheels)
+    val (msNumeric, msCount) = numericOrder(t.allMsWheels)
+    val secOld: Seq[(WheelFamily[_ <: FamilyWheel], FamilyWheel)] = secNumeric.map((Numeric, _)) ++
+      Seq[WheelFamily[_ <: FamilyWheel]](Hll, Hdr, Moment, CoMoment, Cms)
+        .flatMap(f => t.all(f).map((f, _)))
+    val countWheel = t.countWheel
+    val oldSpan = countWheel.orElse(t.allWheels.headOption).map(_.wheel.slotSpan).getOrElse(1L)
     val newFiles = listing.filterNot(f => fab.contains(f._1))
     // A small append-only delta is folded on the driver from one
     // projected collect; a configured slot budget may coarsen the span
@@ -2165,7 +1748,8 @@ object UWheelIndex {
       case Some(budget) =>
         val sec = secExprOf(scanDf, t.timeColumn)
         val mm = scanDf.agg(F.min(sec), F.max(sec)).head()
-        val oldW = countWheel.orElse(colWheels.headOption).map(_.wheel).filter(_.numSecs > 0)
+        val oldW = countWheel.orElse(secNumeric.find(_.filterKey.isEmpty)).map(_.wheel)
+          .filter(_.numSecs > 0)
         val bounds = Seq(
           if (appendOnly) oldW.map(w => (w.startSec, w.endSec - w.slotSpan)) else None,
           if (mm.isNullAt(0)) None else Some((mm.getLong(0), mm.getLong(1)))).flatten
@@ -2173,37 +1757,14 @@ object UWheelIndex {
         else fitSpan(bounds.map(_._1).min, bounds.map(_._2).max, oldSpan, budget)
     }
 
-    // Keyed distinct wheels whose filter SQL wasn't retained cannot be
-    // reconstructed — a rebuild DROPS them (safe: those queries scan again),
-    // mirroring the keyed numeric wheel policy above.
-    val oldDistinct = t.allDistinctWheels.filter(d => d.filterKey.isEmpty || d.filterSql.isDefined)
-    val oldQuantile = t.allQuantileWheels.filter(qw => qw.filterKey.isEmpty || qw.filterSql.isDefined)
-    val oldMoment = t.allMomentWheels.filter(mw => mw.filterKey.isEmpty || mw.filterSql.isDefined)
-    val oldCoMoment = t.allCoMomentWheels.filter(cw => cw.filterKey.isEmpty || cw.filterSql.isDefined)
-    val oldFreq = t.allFreqWheels.filter(fw => fw.filterKey.isEmpty || fw.filterSql.isDefined)
-    val fusedPlan = planFused(scanDf, t.timeColumn,
-      colSpecs ++ keyedSpecs ++ countSpec, span, t.packLevels,
-      oldDistinct.map(d => DistinctSpec(d.column, d.p,
-        d.filterSql.map(F.expr), d.filterKey, d.filterSql, exprSql = d.exprSql)),
-      quantileSpecs = oldQuantile.map(qw => QuantileSpec(qw.column, qw.s,
-        qw.filterSql.map(F.expr), qw.filterKey, qw.filterSql, exprSql = qw.exprSql)),
-      momentSpecs = oldMoment.map(mw => MomentSpec(mw.column, mw.scale,
-        mw.filterSql.map(F.expr), mw.filterKey, mw.filterSql, exprSql = mw.exprSql)),
-      coMomentSpecs = oldCoMoment.map(cw => CoMomentSpec(cw.columnX, cw.columnY,
-        cw.scaleX, cw.scaleY, cw.filterSql.map(F.expr), cw.filterKey, cw.filterSql,
-        exprSqlX = cw.exprSqlX, exprSqlY = cw.exprSqlY)),
-      freqSpecs = oldFreq.map(fw => CmsSpec(fw.column, fw.logW, fw.d,
-        fw.filterSql.map(F.expr), fw.filterKey, fw.filterSql, exprSql = fw.exprSql)))
+    val secPlan = planFused(scanDf, t.timeColumn, secOld.map { case (f, w) => BuildPart.of(f, w) },
+      span, t.packLevels)
     // Millisecond bottom-level wheels ride the same delta-vs-rebuild
     // decision through their own slot expression (their tick domain — the
-    // per-second slots cannot produce ms partials). Always
-    // reconstructible: ms wheels are unfiltered by construction. Slot
-    // budgets never apply to them (slots stay 1 ms). As in the cold build,
-    // the count wheel shares the first measure wheel when there is one.
-    val (msCount, msVals) = t.allMsWheels.partition(_.valueColumn.isEmpty)
-    val oldMs = if (msVals.isEmpty) msCount else msVals.sortBy(_.valueColumn)
-    val msPlan = if (oldMs.isEmpty) None else Some(planFused(scanDf, t.timeColumn,
-      oldMs.map(w => WheelSpec(w.valueColumn, None, "", None, w.wheel.scale)),
+    // per-second slots cannot produce ms partials). Slot budgets never
+    // apply to them (slots stay 1 ms).
+    val msPlan = if (msNumeric.isEmpty) None else Some(planFused(scanDf, t.timeColumn,
+      msNumeric.map(BuildPart.of(Millis, _)),
       slotExprOverride = Some(msExprOf(scanDf, t.timeColumn)),
       prefix = if (onDriver) "_m" else "_"))
     // Heavy-hitter wheels: the whole family set refreshes together, keyed
@@ -2212,17 +1773,17 @@ object UWheelIndex {
     val topKSpecs = oldTopK.map(tw => (F.col(tw.column).cast("long"), tw.filterSql.map(F.expr), tw.agg))
     val readKey = (r: org.apache.spark.sql.Row, ord: Int) => r.getLong(ord)
 
-    val (fused, msBuilt, topKBuilt) =
+    val (secAcc, msAcc, topKBuilt) =
       if (onDriver) {
         // ONE job: the delta's rows, projected to each plan's slot and
         // aggregate children (and the top-k keys), collected and folded
-        val plans = fusedPlan +: msPlan.toSeq
+        val plans = secPlan +: msPlan.toSeq
         val widened = scanDf.select(F.col("*") +: plans.flatMap(_.projCols): _*)
         val cols = plans.flatMap(p => p.slot +: p.aggs.map(_.child)) ++
           (if (oldTopK.isEmpty) Nil else TypedWheelBuild.topKColumns(scanDf, t.timeColumn, topKSpecs))
         val rows = widened.select(cols.zipWithIndex.map { case (c, i) => c.as(s"_c$i") }: _*).collect()
         val offsets = plans.scanLeft(0)((o, p) => o + 1 + p.aggs.length)
-        val built = plans.zip(offsets).map { case (p, o) => p.freeze(SlotAgg.fold(rows, o, p.aggs, p.newAcc())) }
+        val accs = plans.zip(offsets).map { case (p, o) => SlotAgg.fold(rows, o, p.aggs, p.newAcc()) }
         val topK =
           if (oldTopK.isEmpty) Nil
           else {
@@ -2230,103 +1791,40 @@ object UWheelIndex {
               TypedWheelBuild.foldTopK(rows.iterator, offsets.last, topKSpecs.map(_._3), readKey)
             ws.indices.map(i => (ws(i).freeze(), nullKeys(i)))
           }
-        (built.head, built.drop(1).headOption.map(_._1), topK)
+        (accs.head, accs.lift(1), topK)
       } else {
         // The ms-wheel scan and the top-k pass depend on nothing the fused
         // scan produces: run them beside it, as the cold build does.
         import scala.concurrent.{Await, Future}
         import scala.concurrent.duration.Duration
         import scala.concurrent.ExecutionContext.Implicits.global
-        val msFut = msPlan.map(p => Future(p.freeze(scanFused(scanDf, p, None))._1))
+        val msFut = msPlan.map(p => Future(scanFused(scanDf, p, None)))
         val topKFut =
           if (oldTopK.isEmpty) None
           else Some(Future(TypedWheelBuild.buildTopKSet(scanDf, t.timeColumn, topKSpecs, readKey)))
-        val f = fusedPlan.freeze(scanFused(scanDf, fusedPlan, None))
-        (f, msFut.map(Await.result(_, Duration.Inf)),
+        val acc = scanFused(scanDf, secPlan, None)
+        (acc, msFut.map(Await.result(_, Duration.Inf)),
           topKFut.map(Await.result(_, Duration.Inf)).getOrElse(Nil))
       }
-    val (built, freshDistinct, freshQuantile, freshMoment, freshCoMoment, freshFreq) = fused
-    val (colBuilt, rest) = built.splitAt(colSpecs.length)
-    val keyedBuilt = rest.take(keyedSpecs.length)
+    val olds = secOld ++ msNumeric.map((Millis, _)) ++ oldTopK.map((TopK, _))
+    val fresh = secPlan.freeze(secAcc) ++
+      msPlan.zip(msAcc).toSeq.flatMap { case (p, a) => p.freeze(a) } ++
+      oldTopK.zip(topKBuilt).map { case (tw, (w, nullKeys)) => tw.copy(wheel = w, keyNullCount = nullKeys) }
 
-    // append: every wheel extends by the delta's slots (counts/scaled sums
-    // add, min/max combine — associative, so appended ≡ rebuilt
-    // bit-for-bit); rebuild: the fresh wheel replaces the old outright.
-    // Packedness survives both paths.
-    def finish(old: IndexedWheel, fresh: BuiltWheel, span: Long, packLevels: Boolean): IndexedWheel =
-      if (!appendOnly) fresh.wheel
-      else old.copy(
-        wheel = appendHaw(old.wheel, fresh.wheel.wheel, span, packLevels),
-        valueAllNonNull = old.valueAllNonNull && fresh.wheel.valueAllNonNull,
-        valuesExactAtScale = old.valuesExactAtScale && fresh.wheel.valuesExactAtScale,
-        valuesNaNFree = old.valuesNaNFree && fresh.wheel.valuesNaNFree)
-
-    val newCols = colWheels.zip(colBuilt).map { case (o, d) => finish(o, d, span, t.packLevels) }
-    val newKeyed = keyedKept.zip(keyedBuilt).map { case (o, d) => finish(o, d, span, t.packLevels) }
-    val newCount = countWheel.map { cw =>
-      if (needOwnCount) finish(cw, rest.last, span, t.packLevels)
-      else cw.copy(wheel = newCols(shareIdx).wheel)
-    }
-    val unfilteredDelta = colBuilt ++ (if (needOwnCount) Seq(rest.last) else Nil)
-    val sawNull = unfilteredDelta.exists(_.sawNullTs)
+    val sawNull = secAcc.sawNullTime
     val nt = new TableIndex(key, t.timeColumn,
       if (appendOnly) t.tsAllNonNull && !sawNull else !sawNull,
       fingerprintOfListing(listing), now, t.slotBudget, t.packLevels)
-    (newCols ++ newKeyed ++ newCount).foreach(nt.put(WheelFamily.Numeric, _))
-    // The typed families append the same way: HLL registers max (idempotent),
-    // HDR bins, Count-Min counters and moments add — so old + delta
-    // partials appended slot-wise are bit-identical to a full rebuild when
-    // the delta rows are exactly the appended ones. A budget-driven
-    // coarsening leaves old finer-grained partials in the merge; recording
-    // the coarsest span keeps reads exact (coarse-aligned bounds are also
-    // fine-aligned along the AllowedSlotSpans chain).
-    def spanOf(old: Long, fresh: Long): Long = if (appendOnly) math.max(old, span) else fresh
-    oldDistinct.zip(freshDistinct).foreach { case (d, f) =>
-      nt.put(WheelFamily.Hll, d.copy(
-        wheel = if (appendOnly) appendTyped(d.wheel, f.wheel, d.agg) else f.wheel,
-        slotSpan = spanOf(d.slotSpan, f.slotSpan)))
+    // append: every wheel extends by the delta's (BuildPart.append);
+    // rebuild: the fresh wheel replaces the old outright
+    olds.zip(fresh).foreach { case ((f, old), delta) =>
+      putWheel(nt, f,
+        if (!appendOnly) delta
+        else if (f eq Millis) BuildPart.append(old, delta, 1L, packLevels = false)
+        else BuildPart.append(old, delta, span, t.packLevels))
     }
-    oldQuantile.zip(freshQuantile).foreach { case (qw, f) =>
-      nt.put(WheelFamily.Hdr, qw.copy(
-        wheel = if (appendOnly) appendTyped(qw.wheel, f.wheel, qw.agg) else f.wheel,
-        slotSpan = spanOf(qw.slotSpan, f.slotSpan)))
-    }
-    oldFreq.zip(freshFreq).foreach { case (fw, f) =>
-      nt.put(WheelFamily.Cms, fw.copy(
-        wheel = if (appendOnly) appendTyped(fw.wheel, f.wheel, fw.agg) else f.wheel,
-        slotSpan = spanOf(fw.slotSpan, f.slotSpan)))
-    }
-    // the moment decline gates (castFail, absMax) accumulate across the
-    // refresh like the numeric exactness flags
-    oldMoment.zip(freshMoment).foreach { case (mw, f) =>
-      nt.put(WheelFamily.Moment, mw.copy(
-        wheel = if (appendOnly) appendTyped(mw.wheel, f.wheel, mw.agg) else f.wheel,
-        castFail = (if (appendOnly) mw.castFail else 0L) + f.castFail,
-        absMax = if (appendOnly) math.max(mw.absMax, f.absMax) else f.absMax,
-        slotSpan = spanOf(mw.slotSpan, f.slotSpan)))
-    }
-    oldCoMoment.zip(freshCoMoment).foreach { case (cw, f) =>
-      nt.put(WheelFamily.CoMoment, cw.copy(
-        wheel = if (appendOnly) appendTyped(cw.wheel, f.wheel, cw.agg) else f.wheel,
-        castFail = (if (appendOnly) cw.castFail else 0L) + f.castFail,
-        absMaxX = if (appendOnly) math.max(cw.absMaxX, f.absMaxX) else f.absMaxX,
-        absMaxY = if (appendOnly) math.max(cw.absMaxY, f.absMaxY) else f.absMaxY,
-        slotSpan = spanOf(cw.slotSpan, f.slotSpan)))
-    }
-    msBuilt.foreach(ms => putMsWheels(nt, msVals.nonEmpty && msCount.nonEmpty,
-      oldMs.zip(ms).map { case (o, f) => BuiltWheel(finish(o, f, 1L, packLevels = false), false) }))
-    // Heavy hitters: append keeps old + delta slot summaries — BOUND-SOUND
-    // (the slack semantics compose) but not necessarily bit-identical to a
-    // from-scratch rebuild on slots dense enough to have compacted (a
-    // rebuild compacts the union once; the merge compacts twice).
-    // Certified topK answers are unaffected: certification requires slack
-    // 0, where compaction never engaged.
-    oldTopK.zip(topKBuilt).foreach { case (tw, (fw, freshNulls)) =>
-      // the NULL-key decline gate accumulates across appends, like castFail
-      nt.put(WheelFamily.TopK, tw.copy(
-        wheel = if (appendOnly) appendTyped(tw.wheel, fw, tw.agg) else fw,
-        keyNullCount = (if (appendOnly) tw.keyNullCount else 0L) + freshNulls))
-    }
+    for ((f, shared) <- Seq(Numeric -> secCount, Millis -> msCount); (cw, peer) <- shared)
+      nt.put(f, cw.copy(wheel = nt.wheel(f, peer.columns, peer.filterKey).get.wheel))
     WheelRegistry.register(nt)
     if (appendOnly) RefreshOutcome.Appended(newFiles.length) else RefreshOutcome.Rebuilt
   }

@@ -13,7 +13,7 @@ import graft.wheel.{HawWheel, RwWheel}
 
 /** Per-batch accumulator: one partial wheel PER SPEC (the unfiltered wheel
   * plus any residual-keyed wheels) with the value-quality counters the
-  * fused batch build tracks in [[graft.index.WheelBuildAcc]]. Top-level
+  * fused batch build tracks in [[graft.index.NumericPart]]. Top-level
   * (no outer pointer) so executors serialize only slot payloads as it
   * tree-merges. Row layout: col 0 = epoch second; per spec `i` at offset
   * `1 + 7·i`: keptCount, sum(DECIMAL), min, max, nullValueCount, nanCount,
