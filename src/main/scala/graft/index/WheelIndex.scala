@@ -1052,7 +1052,7 @@ object UWheelIndex {
     * fold of a small refresh delta ([[SlotAgg.fold]]) both run these same
     * expressions, and [[freeze]] turns either one's accumulator into
     * wheels. */
-  private final class FusedPlan(
+  private[graft] final class FusedPlan(
       parts: Seq[BuildPart],
       offsets: Array[Int],
       slotSpan: Long,
@@ -1069,7 +1069,7 @@ object UWheelIndex {
     * out in their order. `prefix` names the widening columns; two plans
     * projected side by side over one source (a refresh that folds its
     * delta on the driver) need distinct prefixes. */
-  private def planFused(
+  private[graft] def planFused(
       df: DataFrame,
       timeColumn: String,
       parts: Seq[BuildPart],
@@ -1108,7 +1108,7 @@ object UWheelIndex {
     * active seconds*, independent of row count, which is what makes this
     * viable at 100 TB (the reference instead collects every row to one
     * process, `lib.rs:1130-1158`). */
-  private def scanFused(df: DataFrame, plan: FusedPlan, phaseTag: Option[String]): FusedAcc = {
+  private[graft] def scanFused(df: DataFrame, plan: FusedPlan, phaseTag: Option[String]): FusedAcc = {
     // Executor-side merge: each shuffle partition folds its per-second rows
     // into compact RwWheels, and partials meet in a depth-2 aggregation tree
     // — the driver receives ONE serialized accumulator (primitive slot

@@ -16,9 +16,9 @@ import scala.util.Using
   * lookup — a loaded index over data that changed since the save is inert
   * (no rewrites, queries fall back to scans), never silently wrong.
   * [[load]] also reports that staleness eagerly so callers can schedule a
-  * rebuild. STREAM SNAPSHOTS (fingerprint 0, written by
-  * `StreamingWheelIndex.saveSnapshot` / `StreamingTypedWheel.saveSnapshot`)
-  * are OUTSIDE this guarantee: their consistency domain is the stream's
+  * rebuild. STREAM SNAPSHOTS (fingerprint 0, written by the streaming
+  * wheels' shared `saveSnapshot`, `graft.streaming.StreamPublisher`) are
+  * OUTSIDE this guarantee: their consistency domain is the stream's
   * watermark, not a file listing, so [[load]] reports them fresh
   * unconditionally and the rule serves them as-is. A snapshot loaded
   * WITHOUT re-attaching its stream therefore answers at the saved
@@ -78,8 +78,8 @@ object WheelIndexIO {
               s"format): rebuild the index and re-save — ${e.getMessage}")
       }
     WheelRegistry.register(t)
-    // Stream-published snapshots (StreamingWheelIndex/StreamingTypedWheel
-    // .saveSnapshot) carry fingerprint 0: their consistency domain is the
+    // Stream-published snapshots (StreamPublisher.saveSnapshot, shared by
+    // both streaming wheels) carry fingerprint 0: their consistency domain is the
     // stream's WATERMARK, not a file listing, and the rule serves
     // fingerprint-0 indexes unconditionally — so no listing staleness
     // probe applies and the load reports them fresh. The answer is the

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import java.util.concurrent.atomic.AtomicReference
+import java.io.{ObjectInputStream, ObjectOutputStream}
 
 import scala.reflect.ClassTag
 
@@ -26,7 +26,8 @@ import graft.wheel.{TypedHawWheel, TypedRwWheel, WheelAggregator, WheelAggregato
   * admits, the wheel merges — slot merging is order-free.
   *
   * Readers call [[snapshot]] for an immutable [[TypedHawWheel]]
-  * (freeze-on-read, cheap when no batch arrived since the last call).
+  * (freeze-on-read), or [[register]] it so batch SQL rewrites answer from
+  * it at plan time.
   */
 final class StreamingTypedWheel[In, P: ClassTag, Out](
     timeColumn: String,
@@ -39,37 +40,14 @@ final class StreamingTypedWheel[In, P: ClassTag, Out](
       * fixed-point probe was silently dropped from the wheel, so serving
       * would be wrong), and max(absExpr) feeds the ANSI-overflow proof.
       * The counters ride the checkpoint. */
-    momProbe: Option[(Column, Column)] = None) {
+    momProbe: Option[(Column, Column)] = None) extends StreamPublisher(timeColumn) {
 
+  // all guarded by the ingest lock
   private val live = new TypedRwWheel(agg)
-  private val cached = new AtomicReference[(Long, TypedHawWheel[P, Out])]((0L, null))
-  private var version = 0L
-
-  /** Immutable point-in-time view. */
-  def snapshot(): TypedHawWheel[P, Out] = {
-    val (v, w) = cached.get()
-    val cur = live.synchronized(version)
-    if (w != null && v == cur) w
-    else {
-      val fresh = live.synchronized((version, live.freeze()))
-      // Install only if strictly fresher: two concurrent freezers may race
-      // here, and letting the staler pair win would force the next caller
-      // to re-freeze needlessly. Each caller still returns its own freeze.
-      var installed = false
-      while (!installed) {
-        val seen = cached.get()
-        val stale = seen._2 != null && fresh._1 <= seen._1
-        installed = stale || cached.compareAndSet(seen, fresh)
-      }
-      fresh._2
-    }
-  }
-
-  /** This publisher's registration target, if registered: (path key,
-    * column) — the single resolution [[publishLocked]], [[deregister]] and
-    * [[saveSnapshot]] share. */
-  @volatile private var publishTo: Option[(String, String)] = None
-  // moment publish gates, accumulated per batch under the ingest lock
+  private val frozen = new FreezeCache[TypedHawWheel[P, Out]]
+  /** The column this wheel registers under. */
+  private var column: String = _
+  // moment publish gates
   private var momCastFail: Long = 0L
   private var momAbsMax: Double = 0.0
   // heavy-hitter publish gate: rows with a live time but a NULL key,
@@ -77,20 +55,23 @@ final class StreamingTypedWheel[In, P: ClassTag, Out](
   // (a GROUP BY key query has a NULL group the summary cannot see)
   private var topkNullKeys: Long = 0L
 
+  /** Immutable point-in-time view; cheap when no batch arrived since the
+    * last call. */
+  def snapshot(): TypedHawWheel[P, Out] = lock.synchronized(frozen(version)(live.freeze()))
+
   /** Publishes freeze-on-read snapshots of this wheel into the optimizer's
-    * [[WheelRegistry]] as the HLL distinct index for `column` of the table
-    * at `path`, re-published after every batch (swap-on-version,
-    * fingerprint 0 — freshness is the stream's version, not a file
-    * listing). From then on batch SQL `hll_distinct(column)` over a time
-    * range of that table answers at plan time with the stream's
-    * watermark-consistent registers — a LIVE "distinct users over any
-    * range" service. Only HLL-aggregated wheels can publish (the rule's
-    * distinct arm is sketch-specific); the caller asserts this stream is
-    * the table's feed, as with [[StreamingWheelIndex.register]]. */
+    * [[WheelRegistry]] as the `column` index of its family for the table at
+    * `path`, re-published after every batch and layered with other stream
+    * publishers' families (see [[StreamPublisher]]). From then on batch SQL
+    * such as `hll_distinct(column)` over a time range of that table answers
+    * at plan time with the stream's watermark-consistent state — a LIVE
+    * "distinct users over any range" service. Only aggregators a rule arm
+    * reads can publish; the caller asserts this stream is the table's feed,
+    * as with [[StreamingWheelIndex.register]]. */
   def register(path: String, column: String): Unit = {
     family // refuses an aggregator no rule arm reads
-    publishTo = Some((WheelRegistry.normalizePath(path), column))
-    live.synchronized(publishLocked())
+    lock.synchronized(this.column = column)
+    registerUnder(WheelRegistry.normalizePath(path))
   }
 
   /** The registry family this wheel publishes into. */
@@ -104,71 +85,16 @@ final class StreamingTypedWheel[In, P: ClassTag, Out](
       s"only HllDistinct, MomentStats, CmsFreq, HdrQuantile or TopTalkers wheels can register, got ${other.getClass.getSimpleName}")
   }
 
-  /** The batch-built index the first publish displaced (if any); restored
-    * by [[deregister]] — see [[StreamingWheelIndex.register]]'s layering
-    * contract. */
-  @volatile private var displaced: Option[TableIndex] = None
-
-  /** Withdraws THIS publisher's sketch (its (column, "") entry): other
-    * publishers' families stay registered, and a displaced batch-built
-    * index is restored only when no live stream family would be lost by
-    * the swap (review finding: an unconditional restore wiped families
-    * layered after the displacement). A batch index that re-registered
-    * over us is left untouched. */
-  def deregister(): Unit = {
-    publishTo.foreach { case (key, column) =>
-      // the (column, "") entry of our family is EXCLUSIVELY ours to withdraw
-      val own = WheelKey(family, List(column), "")
-      WheelRegistry.update(key, {
-        case Some(cur) if cur.fingerprint == 0L =>
-          val rest = new TableIndex(key, cur.timeColumn, tsAllNonNull = false, 0L)
-          rest.addMissing(cur, _ != own)
-          if (rest.isEmpty) displaced
-          else {
-            displaced.foreach(_ => System.err.println(
-              s"[graft] deregister keeps live stream families for $key; the " +
-                "displaced batch-built index is NOT restored (re-build to re-register)"))
-            Some(rest)
-          }
-        case Some(cur) => Some(cur) // a batch index re-registered over us
-        case None      => displaced
-      })
-    }
-    publishTo = None
-    displaced = None
+  /** Its (column, "") entry of its family is exclusively this wheel's. */
+  protected def withdraws(cur: TableIndex): WheelKey => Boolean = {
+    val own = WheelKey(family, List(column), "")
+    _ == own
   }
 
-  private def publishLocked(): Unit = {
-    publishTo.foreach { case (key, column) =>
-      val snap = snapshot()
-      WheelRegistry.update(key, { existing =>
-        val t = new TableIndex(key, timeColumn, tsAllNonNull = false, 0L)
-        existing match {
-          case Some(cur) if cur.fingerprint != 0L =>
-            // batch-built: different consistency domain — displace loudly,
-            // restore on deregister (round-6 advice)
-            if (displaced.isEmpty) {
-              displaced = Some(cur)
-              System.err.println(s"[graft] streaming register displaces the " +
-                s"batch-built index for $key; it will be restored on deregister()")
-            }
-          case Some(cur) =>
-            // every other publisher's family rides along — numeric wheels
-            // and other sketches alike; entries are keyed by (family,
-            // columns, filterKey), so only OUR entry is replaced below
-            t.addMissing(cur)
-          case None => ()
-        }
-        ownFamilyInto(t, snap, column)
-        Some(t)
-      })
-    }
-  }
-
-  /** Adds THIS publisher's sketch family to `t`. P/Out are fixed by the agg
-    * the wheel was constructed with, so these casts are sound by
-    * construction. Shared by [[publishLocked]] and [[saveSnapshot]]. */
-  private def ownFamilyInto(t: TableIndex, snap: TypedHawWheel[P, Out], column: String): Unit =
+  /** Adds THIS publisher's sketch family. P/Out are fixed by the agg the
+    * wheel was constructed with, so these casts are sound by construction. */
+  protected def ownFamiliesInto(t: TableIndex): Unit = {
+    val snap = snapshot()
     agg match {
       case h: WheelAggregators.HllDistinct =>
         t.put(WheelFamily.Hll, DistinctIndexedWheel(
@@ -188,98 +114,47 @@ final class StreamingTypedWheel[In, P: ClassTag, Out](
         t.put(WheelFamily.Hdr, QuantileIndexedWheel(
           snap.asInstanceOf[TypedHawWheel[Array[Byte], Array[Byte]]], column, q))
     }
-
-  /** Persists the PUBLISHED sketch index (this publisher's family only,
-    * fingerprint 0) in [[graft.index.WheelIndexIO]]'s atomic format — the
-    * [[StreamingWheelIndex.saveSnapshot]] counterpart for typed wheels
-    * (round-12 task 7). A restarted service loads it at start and serves
-    * sketch rewrites at the saved watermark before any stream publisher is
-    * reconstructed. Requires [[register]] (the snapshot carries the table
-    * key and column). */
-  def saveSnapshot(file: String): Unit = live.synchronized {
-    val (key, column) = publishTo.getOrElse(throw new IllegalStateException(
-      "saveSnapshot requires register(path, column) first: the snapshot carries the table key"))
-    val t = new TableIndex(key, timeColumn, tsAllNonNull = false, 0L)
-    ownFamilyInto(t, snapshot(), column)
-    graft.index.WheelIndexIO.save(t, file)
   }
 
-  /** Starts the maintenance query on a streaming DataFrame. */
-  // ------------------------------------------------------------ checkpoint
-
-  /** Checkpoint config signature: the aggregator kind (and precision for
-    * HLL — different p ⇒ incompatible registers) plus the wheel's columns.
-    * [[restoreState]] refuses a mismatched file instead of merging
-    * incompatible partials. */
-  private def configSig: String = {
+  /** The aggregator kind (and its parameters: a different HLL precision
+    * means incompatible registers) plus the wheel's columns. */
+  protected def configSig: String = {
     val aggSig = agg match {
       case h: WheelAggregators.HllDistinct => s"hll(p=${h.p})"
       case m: WheelAggregators.MomentStats => s"moments(scale=${m.scale})"
       case c: WheelAggregators.CmsFreq     => s"cms(d=${c.d},logW=${c.logW})"
       case q: WheelAggregators.HdrQuantile => s"hdr(s=${q.s})"
-      // `,nk`: the checkpoint carries the trailing NULL-key gate long.
-      // Pre-gate checkpoints (bare `topk(cap=…)`) then REFUSE with a clear
-      // signature mismatch instead of hitting EOF mid-read (review
-      // finding) — the documented recovery is the same as any sig change:
-      // rebuild the stream state.
+      // `,nk`: the checkpoint carries the trailing NULL-key gate long, so
+      // a checkpoint without it refuses on the signature instead of
+      // hitting EOF mid-read
       case k: WheelAggregators.TopTalkers  => s"topk(cap=${k.cap},nk)"
       case other                           => other.getClass.getName
     }
     s"stw-v1|$timeColumn|$valueCol|$aggSig"
   }
 
-  /** Checkpoints the live typed wheel to `file`, atomically, under the
-    * ingest lock — the [[StreamingWheelIndex.saveState]] counterpart for
-    * custom-aggregator (sketch) wheels. */
-  def saveState(file: String): Unit = live.synchronized {
-    val target = java.nio.file.Paths.get(file)
-    val tmp = java.nio.file.Files.createTempFile(
-      Option(target.getParent).getOrElse(java.nio.file.Paths.get(".")),
-      ".wheelstream", ".tmp")
-    try {
-      scala.util.Using.resource(
-        new java.io.ObjectOutputStream(new java.io.BufferedOutputStream(
-          java.nio.file.Files.newOutputStream(tmp), 1 << 20))) { o =>
-        o.writeObject(configSig)
-        o.writeObject(live)
-        if (momProbe.isDefined) { o.writeLong(momCastFail); o.writeDouble(momAbsMax) }
-        // topk checkpoints carry the NULL-key publish gate (sig says topk,
-        // so read/write stay paired)
-        if (agg.isInstanceOf[WheelAggregators.TopTalkers]) o.writeLong(topkNullKeys)
-      }
-      java.nio.file.Files.move(tmp, target,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    } finally java.nio.file.Files.deleteIfExists(tmp)
+  /** The live wheel, then the moment gates (moment wheels) or the NULL-key
+    * gate (top-k wheels). */
+  protected def writeState(o: ObjectOutputStream): Unit = {
+    o.writeObject(live)
+    if (momProbe.isDefined) { o.writeLong(momCastFail); o.writeDouble(momAbsMax) }
+    if (agg.isInstanceOf[WheelAggregators.TopTalkers]) o.writeLong(topkNullKeys)
   }
 
-  /** Restores a checkpoint into this (fresh, pre-attach) wheel; returns the
-    * saved watermark (ms) the source must resume after. Register-max
-    * merging is idempotent for sketches, so even an overlap between the
-    * restored state and replayed batches cannot double-count — the
-    * emptiness guard still holds the restore to the fresh-instance
-    * contract for non-idempotent aggregators. */
-  def restoreState(file: String): Long = live.synchronized {
-    require(version == 0L,
-      "restoreState must run on a fresh wheel, before any batch")
-    scala.util.Using.resource(
-      new java.io.ObjectInputStream(
-        new java.io.BufferedInputStream(
-          java.nio.file.Files.newInputStream(java.nio.file.Paths.get(file)), 1 << 20))) { in =>
-      val sig = in.readObject().asInstanceOf[String]
-      require(sig == configSig,
-        s"checkpoint was written by a differently-configured wheel ($sig != $configSig)")
-      live.merge(in.readObject().asInstanceOf[TypedRwWheel[In, P, Out]])
-      if (momProbe.isDefined) {
-        momCastFail += in.readLong()
-        momAbsMax = math.max(momAbsMax, in.readDouble())
-      }
-      if (agg.isInstanceOf[WheelAggregators.TopTalkers]) topkNullKeys += in.readLong()
+  /** Register-max merging is idempotent for sketches, so even an overlap
+    * between the restored state and replayed batches cannot double-count;
+    * the fresh-instance guard still holds for non-idempotent aggregators. */
+  protected def readState(in: ObjectInputStream): Long = {
+    live.merge(in.readObject().asInstanceOf[TypedRwWheel[In, P, Out]])
+    if (momProbe.isDefined) {
+      momCastFail += in.readLong()
+      momAbsMax = math.max(momAbsMax, in.readDouble())
     }
-    version += 1
+    if (agg.isInstanceOf[WheelAggregators.TopTalkers]) topkNullKeys += in.readLong()
     live.watermark
   }
 
+  /** Starts the maintenance query on a streaming DataFrame. */
   def attach(stream: DataFrame, queryName: String): StreamingQuery =
     stream.writeStream
       .queryName(queryName)
@@ -287,7 +162,7 @@ final class StreamingTypedWheel[In, P: ClassTag, Out](
       .foreachBatch { (batch: DataFrame, _: Long) =>
         // heavy-hitter wheels ride the counted build: the NULL-key publish
         // gate is accumulated INSIDE the same pass (a separate count()
-        // action would double per-batch ingest work — review finding)
+        // action would double per-batch ingest work)
         val (bw, nullKeys) = agg match {
           case _: WheelAggregators.TopTalkers =>
             TypedWheelBuild.buildRwCounted(batch, timeColumn, valueCol, agg, readIn)
@@ -303,17 +178,14 @@ final class StreamingTypedWheel[In, P: ClassTag, Out](
           (if (r.isNullAt(0)) 0L else r.getLong(0),
             if (r.isNullAt(1)) 0.0 else r.getDouble(1))
         }
-        live.synchronized {
+        ingest {
           probe.foreach { case (fails, am) =>
             momCastFail += fails
             momAbsMax = math.max(momAbsMax, am)
           }
           topkNullKeys += nullKeys
           live.merge(bw)
-          version += 1
-          publishLocked()
         }
-        ()
       }
       .start()
 }

@@ -235,4 +235,16 @@ class WheelAppendSpec extends AnyFunSuite {
       }
     }
   }
+
+  test("the fused plan names every aggregate column once") {
+    val root = tmpDir() + "/t"
+    rows(0, 300).write.parquet(root)
+    val t = allFamilies.build(spark, root)
+    val parts = t.allWheels.map(BuildPart.of(WheelFamily.Numeric, _)) ++
+      Seq[WheelFamily[_ <: FamilyWheel]](WheelFamily.Hll, WheelFamily.Hdr, WheelFamily.Cms,
+        WheelFamily.Moment, WheelFamily.CoMoment).flatMap(f => t.all(f).map(BuildPart.of(f, _)))
+    val names = UWheelIndex.planFused(spark.read.parquet(root), "ts", parts).aggs.map(_.name)
+    val dup = names.diff(names.distinct)
+    assert(dup.isEmpty, s"duplicate aggregate names ${dup.distinct.mkString(", ")} in ${names.mkString(", ")}")
+  }
 }

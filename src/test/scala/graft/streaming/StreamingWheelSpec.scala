@@ -84,7 +84,6 @@ class StreamingWheelSpec extends AnyFunSuite {
       assert(snap.range(m0, m0 + 60).sum === Some(3.0))
       assert(snap.range(m0 + 60, m0 + 120).sum === Some(4.0))
       assert(snap.range(m0, m0 + 240).count === 4)
-      assert(idx.droppedBeyondHorizon === 0L)
     } finally q.stop()
   }
 
@@ -107,7 +106,6 @@ class StreamingWheelSpec extends AnyFunSuite {
       val snap = idx.snapshot()
       assert(snap.landmark.count === 3)
       assert(snap.landmark.sum === Some(7.0))
-      assert(idx.droppedBeyondHorizon === 0L)
     } finally q.stop()
   }
 
@@ -215,7 +213,6 @@ class StreamingWheelSpec extends AnyFunSuite {
       input.addData(rows: _*)
       q.processAllAvailable()
       val snap = idx.snapshot()
-      assert(idx.droppedBeyondHorizon === 0L)
       assert(snap.landmark.count === 4)
       assert(snap.landmark.sum === Some(15.5))
 
@@ -1599,6 +1596,107 @@ class StreamingWheelSpec extends AnyFunSuite {
       assert(df3.collect()(0).getLong(0) === 3L)
     } finally {
       sq.stop()
+      idx.deregister()
+    }
+  }
+
+  test("checkpoints of the earlier accumulator payload are refused on their signature") {
+    // saved by the build whose checkpoints carried the three wheels'
+    // RwWheels and flag arrays (signature swi-v1), over two batches of the
+    // keyed checkpoint test's rows
+    for ((name, idx) <- Seq(
+        "swi-v1-plain.ckpt" -> new StreamingWheelIndex("ts", Some("value")),
+        "swi-v1-keyed.ckpt" -> new StreamingWheelIndex("ts", Some("value"),
+          keyedWheels = Seq(("value", "event_type = 'click'"))))) {
+      val res = getClass.getResource(s"/graft/streaming/$name")
+      assert(res != null, s"fixture $name missing")
+      val e = intercept[IllegalArgumentException] {
+        idx.restoreState(java.nio.file.Paths.get(res.toURI).toString)
+      }
+      assert(e.getMessage.contains("differently-configured"), e.getMessage)
+      assert(e.getMessage.contains("swi-v1|"), e.getMessage)
+      assert(idx.watermarkMs === Long.MinValue, "a refused checkpoint must merge nothing")
+      assert(idx.snapshot().landmark.count === 0L)
+    }
+  }
+
+  test("a DECIMAL measure streamed below its own scale answers as the scan does") {
+    // the wheel sums values rounded to scale 2, so a DECIMAL(18,4) value
+    // the rounding changes must mark the wheel inexact
+    import org.apache.spark.sql.types.DecimalType
+    val session = spark
+    import session.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    graft.Graft.enable(spark)
+    val dir = java.nio.file.Files.createTempDirectory("graft-stream-dec").toString
+    val path = s"$dir/t.parquet"
+    val rows = Seq(
+      (ts("2024-03-01 00:00:00"), BigDecimal("1.2345")),
+      (ts("2024-03-01 00:00:30"), BigDecimal("2.5000")),
+      (ts("2024-03-01 00:01:30"), BigDecimal("4.0051")),
+      (ts("2024-03-01 00:02:10"), BigDecimal("8.1200")))
+    def dec4(df: org.apache.spark.sql.DataFrame) =
+      df.toDF("ts", "value").withColumn("value", col("value").cast(DecimalType(18, 4)))
+    dec4(rows.toDF()).write.parquet(path)
+    val input = MemoryStream[(Timestamp, BigDecimal)]
+    val idx = new StreamingWheelIndex("ts", Some("value"), scale = 2)
+    val q = idx.attach(dec4(input.toDF()), "wheel-dec")
+    try {
+      idx.register(path)
+      input.addData(rows: _*)
+      q.processAllAvailable()
+      assert(!graft.index.WheelRegistry.lookup(path).get.minMaxWheel("value").get.valuesExactAtScale)
+      val range =
+        """WHERE ts >= TIMESTAMP '2024-03-01 00:00:00'
+          |  AND ts < TIMESTAMP '2024-03-01 00:02:00'""".stripMargin
+      for (agg <- Seq("sum(value)", "sum(CAST(value AS DOUBLE))")) {
+        val sql = s"SELECT $agg AS s FROM parquet.`$path` $range"
+        val on = spark.sql(sql).collect().toSeq
+        graft.Graft.rewritesEnabled = false
+        val off = try spark.sql(sql).collect().toSeq
+          finally graft.Graft.rewritesEnabled = true
+        assert(on === off, sql)
+      }
+    } finally {
+      q.stop()
+      idx.deregister()
+    }
+  }
+
+  test("a parquet file stream feeds its registered table: served ranges equal the scan") {
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    import org.apache.spark.sql.execution.datasources.LogicalRelation
+    val session = spark
+    import session.implicits._
+    graft.Graft.enable(spark)
+    val table = java.nio.file.Files.createTempDirectory("graft-file-stream").toString + "/t"
+    val base = ts("2024-08-01 00:00:00").getTime
+    def batch(from: Int) = (from until from + 120).map(i =>
+      (new Timestamp(base + i * 2000L), (i % 17) * 0.25)).toDF("ts", "value")
+    batch(0).write.parquet(table)
+    val idx = new StreamingWheelIndex("ts", Some("value"))
+    idx.register(table)
+    val q = idx.attach(spark.readStream.schema(batch(0).schema).parquet(table), "wheel-file-stream")
+    try {
+      q.processAllAvailable()
+      batch(120).write.mode("append").parquet(table)
+      q.processAllAvailable()
+      val sql =
+        s"""SELECT count(*) AS cnt, CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sv
+           |FROM parquet.`$table`
+           |WHERE ts >= TIMESTAMP '2024-08-01 00:03:00'
+           |  AND ts < TIMESTAMP '2024-08-01 00:06:00'""".stripMargin
+      val df = spark.sql(sql)
+      val opt = df.queryExecution.optimizedPlan
+      assert(opt.collect { case l: LocalRelation => l }.nonEmpty, s"no LocalRelation in:\n$opt")
+      assert(opt.collect { case r: LogicalRelation => r }.isEmpty, s"scan survived in:\n$opt")
+      graft.Graft.rewritesEnabled = false
+      val scan = try spark.sql(sql).collect().toSeq
+        finally graft.Graft.rewritesEnabled = true
+      assert(df.collect().toSeq === scan)
+      assert(scan.head.getLong(0) === 90L)
+    } finally {
+      q.stop()
       idx.deregister()
     }
   }
