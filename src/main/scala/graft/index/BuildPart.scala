@@ -63,13 +63,13 @@ private[graft] abstract class PartAcc extends Serializable {
 
 /** A fused build's accumulator: one [[PartAcc]] per part, the i-th reading
   * the slot row from `offsets(i)` (column 0 is the slot, NULL when the
-  * source time was NULL). Partitions of the per-slot aggregate fold their
-  * rows in with [[add]]; [[merge]] combines two accumulators, so
-  * `treeAggregate` reduces the whole build to one object shipped to the
-  * driver — in contrast to the reference, which materializes every ROW in
-  * one process (`datafusion-uwheel/src/lib.rs:1130-1158`), and to a flat
-  * `collect()` of per-second Rows, whose driver heap cost grows with active
-  * seconds × Row overhead. */
+  * source time was NULL). A pass folds each partition's rows per slot
+  * ([[SlotAgg.Folder]]) and adds every slot's row here with [[add]];
+  * [[merge]] combines two accumulators — a slot split across partitions
+  * merges like two partials of one slot — so `treeReduce` reduces the
+  * whole build to one object shipped to the driver, in contrast to the
+  * reference, which materializes every ROW in one process
+  * (`datafusion-uwheel/src/lib.rs:1130-1158`). */
 private[graft] final class FusedAcc(val parts: Array[PartAcc], offsets: Array[Int])
     extends Serializable {
   def add(r: Row): Unit = {
@@ -92,6 +92,23 @@ private[graft] final class FusedAcc(val parts: Array[PartAcc], offsets: Array[In
   }
 
   def sawNullTime: Boolean = parts.exists(_.sawNullTime)
+}
+
+/** What one pass over a table folds: one [[FusedAcc]] per plan (the
+  * second plan, then the millisecond plan when the table has one), the
+  * top-k ingest wheels and each top-k wheel's skipped-NULL-key count.
+  * Every partition folds into one; [[merge]] is associative, and the
+  * NULL-key counts travel in the result, so a retried task cannot count
+  * twice. */
+private[graft] final class FusedFold(val accs: Array[FusedAcc],
+    val topK: Array[TypedWheelBuild.TopKRw], val topKNulls: Array[Long]) extends Serializable {
+  def merge(o: FusedFold): FusedFold = {
+    var i = 0
+    while (i < accs.length) { accs(i).merge(o.accs(i)); i += 1 }
+    i = 0
+    while (i < topK.length) { topK(i).merge(o.topK(i)); topKNulls(i) += o.topKNulls(i); i += 1 }
+    this
+  }
 }
 
 /** A numeric wheel ([[IndexedWheel]]) over a measure (None = row count):
@@ -193,10 +210,10 @@ private[graft] object NumericPart {
     * build. Catalyst cannot unify them itself (each sat under a
     * part-specific `when(keep, …)` guard, so the subtrees differ); with
     * the shared projection the per-row cost is one cast set total, and
-    * each part's aggregate columns reduce to cheap conditional folds the
-    * hash aggregate codegens. The `keep` gates are evaluated inside the
-    * aggregate exprs (they are per-part by nature and cheap: a residual
-    * equality + optional range test). */
+    * each part's aggregate children reduce to cheap conditional
+    * projections. The `keep` gates are evaluated inside the children (they
+    * are per-part by nature and cheap: a residual equality + optional
+    * range test). */
   def projection(df: DataFrame, parts: Seq[NumericPart], prefix: String)
       : (Seq[Column], (String, Int) => String => Column) = {
     val valKeys = parts.flatMap(p => p.valueColumn.map(c => (c, p.scale))).distinct
@@ -258,7 +275,8 @@ private[graft] object NumericPart {
 }
 
 /** A sketch wheel whose slot partial is one byte array, computed by the
-  * partial-returning form of a native aggregate in the same scan. An empty
+  * buffer of a native aggregate's partial-returning form, folded per slot
+  * in the same pass ([[SlotAgg.Sketch]]). An empty
   * partial means the slot saw no non-null (post-filter) values and is
   * skipped, so the slot set is identical to the value-filtered typed
   * build's. */
@@ -487,7 +505,8 @@ private[index] final case class CoMomentPart(columnX: String, columnY: String,
 private[index] object BuildPart {
 
   /** The part that rebuilds registered wheel `w` of `family`. Top-k wheels
-    * have none: their exact-until-freeze summaries take their own pass. */
+    * have none: they ride the same pass as top-k columns
+    * ([[TypedWheelBuild.TopKFold]]). */
   def of(family: WheelFamily[_ <: FamilyWheel], w: FamilyWheel): BuildPart = w match {
     case w: IndexedWheel =>
       NumericPart(family.asInstanceOf[WheelFamily[IndexedWheel]], w.valueColumn,

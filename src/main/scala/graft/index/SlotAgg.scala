@@ -3,25 +3,22 @@ package graft.index
 import scala.collection.mutable
 
 import org.apache.spark.sql.{Column, Row}
-import org.apache.spark.sql.{functions => F}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression}
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression, GenericRow}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types.DataType
 
 /** One aggregate column of the fused wheel build: a per-row `child`
-  * expression and the aggregate over it. The distributed build groups rows
-  * by slot and runs [[column]] in Spark; a small refresh delta collects the
-  * children instead and folds them per slot on the driver through
-  * [[init]]/[[update]]/[[result]], which reproduce the Spark aggregate's
-  * value for the slot. Either way the slot's row reaches the same
-  * [[FusedAcc.add]], so both paths build the same wheels. */
-private[index] sealed abstract class SlotAgg {
+  * expression and its per-slot fold. A build projects the children and
+  * folds them per slot through [[init]]/[[update]]/[[result]] — on the
+  * executors per partition, or on the driver over a small refresh delta
+  * ([[SlotAgg.Folder]]) — and hands each slot's row to [[FusedAcc.add]].
+  * The results are those of the Spark aggregate each case names. The
+  * children are planned on the driver only, so they do not travel with
+  * the fold. */
+private[index] sealed abstract class SlotAgg extends Serializable {
   def name: String
   def child: Column
-  /** The aggregate the distributed build runs, named [[name]]. */
-  def column: Column
   def init: Any
   def update(state: Any, v: Any): Any
   def result(state: Any): Any
@@ -31,16 +28,14 @@ private[index] object SlotAgg {
 
   /** `sum(CASE WHEN child THEN 1 ELSE 0 END)`: rows whose condition is TRUE
     * (NULL counts as false). */
-  final case class CountIf(name: String, child: Column) extends SlotAgg {
-    def column: Column = F.sum(F.when(child, F.lit(1L)).otherwise(F.lit(0L))).as(name)
+  final case class CountIf(name: String, @transient child: Column) extends SlotAgg {
     def init: Any = 0L
     def update(s: Any, v: Any): Any = if (v == true) s.asInstanceOf[Long] + 1L else s
     def result(s: Any): Any = s
   }
 
   /** `count(child)`: non-NULL values. */
-  final case class Count(name: String, child: Column) extends SlotAgg {
-    def column: Column = F.count(child).as(name)
+  final case class Count(name: String, @transient child: Column) extends SlotAgg {
     def init: Any = 0L
     def update(s: Any, v: Any): Any = if (v != null) s.asInstanceOf[Long] + 1L else s
     def result(s: Any): Any = s
@@ -49,8 +44,7 @@ private[index] object SlotAgg {
   /** `sum(child)` over a DECIMAL(38, s) child (NULL when no value); the
     * exact sum, refused past 38 digits as an ANSI decimal sum refuses it.
     * A NULL-typed child (a count-only spec's) sums to NULL either way. */
-  final case class Sum(name: String, child: Column) extends SlotAgg {
-    def column: Column = F.sum(child).as(name)
+  final case class Sum(name: String, @transient child: Column) extends SlotAgg {
     def init: Any = null
     def update(s: Any, v: Any): Any =
       if (v == null) s
@@ -66,16 +60,14 @@ private[index] object SlotAgg {
   /** `min(child)` / `max(child)` over a DOUBLE child in Spark's order:
     * NaN above every value, -0.0 equal to 0.0, the first of equal values
     * kept. */
-  final case class Min(name: String, child: Column) extends SlotAgg {
-    def column: Column = F.min(child).as(name)
+  final case class Min(name: String, @transient child: Column) extends SlotAgg {
     def init: Any = null
     def update(s: Any, v: Any): Any =
       if (v == null) s else if (s == null || cmp(v, s) < 0) v else s
     def result(s: Any): Any = s
   }
 
-  final case class Max(name: String, child: Column) extends SlotAgg {
-    def column: Column = F.max(child).as(name)
+  final case class Max(name: String, @transient child: Column) extends SlotAgg {
     def init: Any = null
     def update(s: Any, v: Any): Any =
       if (v == null) s else if (s == null || cmp(v, s) > 0) v else s
@@ -88,46 +80,63 @@ private[index] object SlotAgg {
   }
 
   /** A sketch aggregate (`HllDistinctAgg`, `HdrQuantileAgg`, `CmsFreqAgg`
-    * in their partial-returning forms) built by `make` over the child. The
-    * driver fold runs the same aggregate object, bound to the collected
-    * value, through its own buffer update and eval. */
-  final case class Sketch(name: String, child: Column, childType: DataType,
+    * in their partial-returning forms) built by `make`, run through its
+    * own buffer update and eval over a bound child value. */
+  final case class Sketch(name: String, @transient child: Column, childType: DataType,
       make: Expression => TypedImperativeAggregate[_]) extends SlotAgg {
-    def column: Column =
-      ColumnBridge.column(make(ColumnBridge.expression(child)).toAggregateExpression()).as(name)
-    private lazy val bound =
+    @transient private lazy val bound =
       make(BoundReference(0, childType, nullable = true)).asInstanceOf[TypedImperativeAggregate[Any]]
     def init: Any = bound.createAggregationBuffer()
     def update(s: Any, v: Any): Any = bound.update(s, InternalRow(v))
     def result(s: Any): Any = bound.eval(s)
   }
 
-  /** Folds collected rows into a build accumulator: `rows(i)(slotOrd)` is
-    * the row's slot (NULL for a NULL time) and the `aggs.length` columns
-    * after it are the aggregates' children, in order. Each slot's
-    * aggregate row goes through `acc.add`, as a row of the distributed
-    * aggregate does. */
-  def fold(rows: Array[Row], slotOrd: Int, aggs: IndexedSeq[SlotAgg], acc: FusedAcc): FusedAcc = {
-    val n = aggs.length
-    val bySlot = mutable.LongMap.empty[Array[Any]]
-    var nullSlot: Array[Any] = null
-    def fresh(): Array[Any] = Array.tabulate[Any](n)(k => aggs(k).init)
-    rows.foreach { r =>
+  /** The per-slot fold of one plan's columns: `r(slotOrd)` is a row's slot
+    * (NULL for a NULL time) and the `aggs.length` columns after it are the
+    * aggregates' children, in order. Rows are folded as they come; only
+    * one state per slot is held. */
+  final class Folder(slotOrd: Int, aggs: IndexedSeq[SlotAgg]) {
+    private val n = aggs.length
+    private val bySlot = mutable.LongMap.empty[Array[Any]]
+    private var nullSlot: Array[Any] = null
+
+    private def fresh(): Array[Any] = {
+      val st = new Array[Any](n)
+      var k = 0
+      while (k < n) { st(k) = aggs(k).init; k += 1 }
+      st
+    }
+
+    def add(r: Row): Unit = {
       val st =
         if (r.isNullAt(slotOrd)) {
           if (nullSlot == null) nullSlot = fresh()
           nullSlot
-        } else bySlot.getOrElseUpdate(r.getLong(slotOrd), fresh())
+        } else {
+          val s = r.getLong(slotOrd)
+          val got = bySlot.getOrNull(s)
+          if (got != null) got else { val st = fresh(); bySlot.update(s, st); st }
+        }
       var k = 0
       while (k < n) {
         st(k) = aggs(k).update(st(k), r.get(slotOrd + 1 + k))
         k += 1
       }
     }
-    def emit(slot: Any, st: Array[Any]): Unit =
-      acc.add(Row.fromSeq(slot +: Array.tabulate[Any](n)(k => aggs(k).result(st(k))).toSeq))
-    bySlot.foreach { case (s, st) => emit(s, st) }
-    if (nullSlot != null) emit(null, nullSlot)
-    acc
+
+    /** Hands every slot's row — the slot, then each aggregate's result —
+      * to `acc`. */
+    def emitInto(acc: FusedAcc): FusedAcc = {
+      def emit(slot: Any, st: Array[Any]): Unit = {
+        val row = new Array[Any](n + 1)
+        row(0) = slot
+        var k = 0
+        while (k < n) { row(k + 1) = aggs(k).result(st(k)); k += 1 }
+        acc.add(new GenericRow(row))
+      }
+      bySlot.foreach { case (s, st) => emit(s, st) }
+      if (nullSlot != null) emit(null, nullSlot)
+      acc
+    }
   }
 }

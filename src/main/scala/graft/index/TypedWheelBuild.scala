@@ -5,21 +5,25 @@ import scala.reflect.ClassTag
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions.col
 
-import graft.wheel.{TypedHawWheel, TypedRwWheel, WheelAggregator}
+import graft.wheel.{TypedHawWheel, TypedRwWheel, WheelAggregator, WheelAggregators}
 
-/** Distributed build of a TYPED wheel over a DataFrame — the same
-  * no-driver-collect shape as the fused index build
-  * ([[graft.index.FusedAcc]]): executors fold their partitions into
-  * per-partition [[TypedRwWheel]]s, which merge in a depth-2 tree so the
-  * driver receives ONE wheel whose payload is bounded by
-  * (active slots) × (partial size), never by row count.
+/** Typed-wheel builds outside the fused index pass, and the top-k share
+  * of that pass.
   *
-  * This is what makes sketch aggregators usable at corpus scale: an
-  * [[graft.wheel.WheelAggregators.HllDistinct]] partial is a fixed 2^p
-  * bytes, so "distinct users over any time range" over 100 TB of events
-  * merges down to active-seconds × 2 KiB regardless of cardinality —
-  * the aggregate no exact wheel can carry (reference aggregator surface:
-  * `/root/reference/datafusion-uwheel/src/aggregator/mod.rs:8-34`).
+  *  - [[build]]/[[buildRw]]/[[buildRwCounted]] build ONE typed wheel over a
+  *    DataFrame (a stream's micro-batch, an example's table): executors
+  *    fold their partitions into [[TypedRwWheel]]s, which merge in a
+  *    depth-2 tree, so the driver receives one wheel bounded by (active
+  *    slots) × (partial size), never by row count. An
+  *    [[graft.wheel.WheelAggregators.HllDistinct]] partial is a fixed 2^p
+  *    bytes, so distinct users over any range merges down to active
+  *    seconds × 2 KiB regardless of cardinality (the reference's
+  *    aggregator surface, `datafusion-uwheel/src/aggregator/mod.rs:8-34`).
+  *  - Heavy-hitter wheels ride the index build's one pass
+  *    ([[UWheelIndex.scanFused]]): [[topKColumns]] adds their keys and
+  *    filters to its projection and [[TopKFold]] folds them row by row
+  *    beside the slot aggregates. Their per-second summaries stay exact
+  *    until freeze, so the partition split cannot change the frozen wheel.
   *
   * The time column takes every type the fused build takes (TIMESTAMP,
   * TIMESTAMP_NTZ, DATE, raw-nanos LONG) via the same zone-free conversion.
@@ -43,7 +47,8 @@ object TypedWheelBuild {
   /** [[buildRw]] plus the skipped-NULL-value count — same single pass, for
     * callers that keep merging (the streaming top-talkers publisher folds
     * one of these per micro-batch and accumulates the NULL-key gate,
-    * instead of paying a second count() action over the batch). */
+    * instead of paying a second count() action over the batch). The count
+    * travels in the reduced result, so a retried task cannot add twice. */
   def buildRwCounted[In, P: ClassTag, Out](
       df: DataFrame,
       timeColumn: String,
@@ -53,102 +58,59 @@ object TypedWheelBuild {
     val sec = UWheelIndex.secExprOf(df, timeColumn)
     val rows = df.select(sec.as("__sec"), valueCol.as("__v"))
       .where(col("__sec").isNotNull)
-    val nullValues = df.sparkSession.sparkContext.longAccumulator("graft.nullAggValues")
     val rdd = rows.rdd
     if (rdd.getNumPartitions == 0) return (new TypedRwWheel(agg), 0L)
-    val w = rdd
+    rdd
       .mapPartitions { it =>
         val w = new TypedRwWheel(agg)
+        var nulls = 0L
         it.foreach { r =>
-          if (r.isNullAt(1)) nullValues.add(1L)
+          if (r.isNullAt(1)) nulls += 1L
           else w.mergeLift(r.getLong(0), readIn(r))
         }
-        Iterator.single(w)
+        Iterator.single((w, nulls))
       }
-      .treeReduce((a, b) => a.merge(b), depth = 2)
-    (w, nullValues.value)
+      .treeReduce((a, b) => (a._1.merge(b._1), a._2 + b._2), depth = 2)
   }
 
-  /** ONE distributed pass building a whole heavy-hitter FAMILY SET —
-    * the unfiltered wheel plus every keyed (residual-filtered) variant —
-    * instead of one scan per wheel: each spec is (key column, optional
-    * filter, aggregator), the projection carries one (key, filterBool)
-    * pair per spec, and every partition folds all wheels side by side.
-    * At 100 TB each avoided pass is a full table scan, so family count
-    * must not multiply I/O (the fused SQL build already holds that
-    * discipline for every other family). Returns, per spec, the frozen
-    * wheel and its skipped-NULL-key count (accumulator semantics as in
-    * [[buildRwCounted]]: retries can only OVERcount — the consumer declines,
-    * never mis-serves). Filter NULLs behave like WHERE: the row is
-    * excluded from that spec. */
-  def buildTopKSet[In, P: ClassTag, Out](
-      df: DataFrame,
-      timeColumn: String,
-      specs: Seq[(Column, Option[Column], WheelAggregator[In, P, Out])],
-      readKey: (Row, Int) => In): Seq[(TypedHawWheel[P, Out], Long)] = {
-    if (specs.isEmpty) return Nil
-    val rows = df.select(topKColumns(df, timeColumn, specs): _*).where(col("__sec").isNotNull)
-    val sc = df.sparkSession.sparkContext
-    val nulls = specs.indices.map(i => sc.longAccumulator(s"graft.nullKeys$i"))
-    val aggs = specs.map(_._3)
-    val n = specs.length
-    val rdd = rows.rdd
-    if (rdd.getNumPartitions == 0)
-      return aggs.map(a => (new TypedRwWheel(a).freeze(), 0L))
-    val merged = rdd
-      .mapPartitions { it =>
-        val (ws, nullKeys) = foldTopK(it, 0, aggs, readKey)
-        var i = 0
-        while (i < n) { nulls(i).add(nullKeys(i)); i += 1 }
-        Iterator.single(ws)
-      }
-      .treeReduce((a, b) => {
-        var i = 0
-        while (i < n) { a(i).merge(b(i)); i += 1 }
-        a
-      }, depth = 2)
-    specs.indices.map(i => (merged(i).freeze(), nulls(i).value))
-  }
+  /** A top-k wheel of a fused pass: its key column, its residual filter
+    * (None keeps every row) and its aggregator. */
+  type TopKSpec = (Column, Option[Column], WheelAggregators.TopTalkers)
 
-  /** [[buildTopKSet]]'s projection: the second, then one (key, filter)
+  type TopKRw = TypedRwWheel[Long, WheelAggregators.TopKSummary, WheelAggregators.TopKSummary]
+
+  /** The top-k columns of a fused pass: the second, then one (key, filter)
     * pair per spec — a spec without a filter keeps every row. */
-  private[index] def topKColumns(df: DataFrame, timeColumn: String,
-      specs: Seq[(Column, Option[Column], _)]): Seq[Column] =
-    UWheelIndex.secExprOf(df, timeColumn).as("__sec") +: specs.zipWithIndex.flatMap {
+  private[index] def topKColumns(df: DataFrame, timeColumn: String, specs: Seq[TopKSpec]): Seq[Column] =
+    if (specs.isEmpty) Nil
+    else UWheelIndex.secExprOf(df, timeColumn).as("__sec") +: specs.zipWithIndex.flatMap {
       case ((k, f, _), i) =>
         Seq(k.as(s"__k$i"), f.getOrElse(org.apache.spark.sql.functions.lit(true)).as(s"__f$i"))
     }
 
-  /** [[buildTopKSet]]'s per-partition fold, over rows holding
-    * [[topKColumns]] from ordinal `secOrd` on: one ingest wheel per
-    * aggregator and one skipped-NULL-key count per spec. Rows with a NULL
-    * second are skipped. A refresh that collects a small delta folds it
-    * on the driver through the same body. */
-  private[index] def foldTopK[In, P, Out](
-      rows: Iterator[Row],
-      secOrd: Int,
-      aggs: Seq[WheelAggregator[In, P, Out]],
-      readKey: (Row, Int) => In): (Array[TypedRwWheel[In, P, Out]], Array[Long]) = {
-    val n = aggs.length
-    val ws = aggs.map(a => new TypedRwWheel(a)).toArray
+  /** The top-k share of a fused pass, over rows holding [[topKColumns]]
+    * from ordinal `secOrd` on: one ingest wheel per aggregator and one
+    * skipped-NULL-key count per spec, folded row by row. Rows with a NULL
+    * second are skipped; a NULL filter excludes the row, as WHERE does. */
+  private[index] final class TopKFold(secOrd: Int, aggs: Seq[WheelAggregators.TopTalkers]) {
+    private val n = aggs.length
+    val wheels: Array[TopKRw] = aggs.map(a => new TopKRw(a)).toArray
     val nullKeys = new Array[Long](n)
-    rows.foreach { r =>
-      if (!r.isNullAt(secOrd)) {
+
+    def add(r: Row): Unit =
+      if (n > 0 && !r.isNullAt(secOrd)) {
         val s = r.getLong(secOrd)
         var i = 0
         while (i < n) {
           val kOrd = secOrd + 1 + 2 * i
-          val fOrd = secOrd + 2 + 2 * i
-          // NULL filter ≡ false (WHERE semantics)
+          val fOrd = kOrd + 1
           if (!r.isNullAt(fOrd) && r.getBoolean(fOrd)) {
             if (r.isNullAt(kOrd)) nullKeys(i) += 1L
-            else ws(i).mergeLift(s, readKey(r, kOrd))
+            else wheels(i).mergeLift(s, r.getLong(kOrd))
           }
           i += 1
         }
       }
-    }
-    (ws, nullKeys)
   }
 
   /** The pre-freeze ingest wheel — for callers that keep merging (the

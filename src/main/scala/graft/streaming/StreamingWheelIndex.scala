@@ -190,7 +190,8 @@ final class StreamingWheelIndex(
       .queryName(queryName)
       .outputMode("update")
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        val acc = UWheelIndex.scanFused(batch, UWheelIndex.planFused(batch, timeColumn, resolved), None)
+        val acc = UWheelIndex.scanFused(batch, timeColumn,
+          Seq(UWheelIndex.planFused(batch, timeColumn, resolved))).accs(0)
         val newest = acc.parts(0).asInstanceOf[NumericPart#Acc].newestSlotSec
         ingest {
           merge(acc.parts)

@@ -25,10 +25,10 @@ package graft.wheel
   * accumulation.
   *
   * Scale story (100 TB design point): the wheel is built from *per-second
-  * partial aggregates* computed by a distributed `groupBy(second)`, folded
-  * into per-partition `RwWheel`s and tree-merged executor-side — every stage
-  * (shuffle, merge tree, the one object the driver receives) is bounded by
-  * the number of distinct active seconds, independent of table row count.
+  * partial aggregates* that each partition folds from its rows into an
+  * `RwWheel`, tree-merged executor-side — the merge tree and the one
+  * object the driver receives are bounded by the number of distinct
+  * active seconds, independent of table row count.
   */
 object HawWheel {
   final val SECOND = 1L

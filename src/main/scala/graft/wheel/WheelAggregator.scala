@@ -1323,7 +1323,8 @@ final class TypedRwWheel[In, P, Out] private ()
   def advanceTo(tsMs: Long): Unit = if (tsMs > watermarkMs) watermarkMs = tsMs
 
   /** Merges one pre-combined partial into a slot (the fused-build fast
-    * path: a SQL aggregate already combined the slot's rows into `p`).
+    * path: the build's per-slot fold already combined the slot's rows
+    * into `p`).
     * Adopts `p` by reference — the caller must not mutate it afterwards. */
   def mergePartial(sec: Long, p: P): Unit =
     slots.updateWith(sec) {

@@ -90,6 +90,40 @@ class TopKWheelSpec extends AnyFunSuite {
     assert(got == Some(groundTruth(p, base, base + 3000L, 4)))
   }
 
+  test("keyNullCount is exact for unfiltered and keyed wheels, cold and rebuilt") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-topk-nulls").toString
+    val p = s"$dir/t.parquet"
+    val base = 1704067200L
+    // NULL keys, NULL times and a filter that is NULL on some rows, over
+    // several input partitions
+    def write(n: Int, shift: Int): Unit =
+      spark.range(n)
+        .select(
+          when(col("id") % 19 =!= 0, timestamp_seconds(col("id") % 900 + base)).as("ts"),
+          when(col("id") % 7 =!= shift, col("id") % 23).as("uid"),
+          when(col("id") % 5 =!= 1, when(col("id") % 2 === 0, lit("a")).otherwise(lit("b"))).as("k"))
+        .repartition(5)
+        .write.mode("overwrite").parquet(p)
+    def check(): Unit = {
+      val t = WheelRegistry.lookup(p).get
+      val df = spark.read.parquet(p).where(col("ts").isNotNull && col("uid").isNull)
+      assert(t.allTopKWheels.size === 3)
+      for (tw <- t.allTopKWheels) {
+        val want = tw.filterSql.fold(df)(df.where).count()
+        assert(want > 0L)
+        assert(tw.keyNullCount === want, s"${tw.column} ${tw.filterSql}")
+      }
+    }
+    val conf = UWheelBuilder("ts").withTopKWheel("uid")
+      .withKeyedTopKWheel("uid", "k = 'a'").withKeyedTopKWheel("uid", "k = 'b'")
+    write(6000, 0)
+    conf.build(spark, p)
+    check()
+    write(4000, 3)
+    assert(UWheelIndex.refresh(spark, p) === UWheelIndex.RefreshOutcome.Rebuilt)
+    check()
+  }
+
   test("contract corpus certifies: uw_topk_users serves from the index") {
     graft.queries.Q.ctx(spark, "/root/testdata/sf0.001")
     val tw = WheelRegistry.lookup("/root/testdata/sf0.001/events.parquet")

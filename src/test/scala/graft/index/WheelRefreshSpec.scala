@@ -336,16 +336,17 @@ class WheelRefreshSpec extends AnyFunSuite {
     assert(partialsOf(after) === partialsOf(fresh))
   }
 
-  /** (job group, stage count) of every job `body` starts, read between two
+  /** (job group, call site) of every job `body` starts, read between two
     * marker jobs so that all of `body`'s job events have been delivered. */
-  private def jobsOf(body: => Unit): Seq[(String, Int)] = {
+  private def jobsOf(body: => Unit): Seq[(String, String)] = {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val sc = spark.sparkContext
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, Int)]()
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
     val listener = new SparkListener {
+      // a job's call site names its result stage, e.g. "collect at …"
       override def onJobStart(e: SparkListenerJobStart): Unit =
         seen.add((Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-          .getOrElse(""), e.stageInfos.size))
+          .getOrElse(""), e.stageInfos.maxBy(_.stageId).name))
     }
     def marker(id: String): Unit = {
       sc.setJobGroup(id, id)
@@ -357,15 +358,17 @@ class WheelRefreshSpec extends AnyFunSuite {
       body
       marker("jobs-end")
       val deadline = System.nanoTime() + 30L * 1000000000L
-      while (!seen.toArray.exists(_ == (("jobs-end", 1))) && System.nanoTime() < deadline)
-        Thread.sleep(10)
       import scala.jdk.CollectionConverters._
+      while (!seen.asScala.exists(_._1 == "jobs-end") && System.nanoTime() < deadline)
+        Thread.sleep(10)
       seen.asScala.toSeq.dropWhile(_._1 != "jobs-start").drop(1).takeWhile(_._1 != "jobs-end")
     } finally sc.removeSparkListener(listener)
   }
 
-  /** A shuffle (a job of more than one stage) marks the distributed scan. */
-  private def distributed(jobs: Seq[(String, Int)]): Boolean = jobs.exists(_._2 > 1)
+  /** A `treeReduce` job marks the per-partition fold; the driver fold
+    * collects its rows instead. */
+  private def distributed(jobs: Seq[(String, String)]): Boolean =
+    jobs.exists(_._2.startsWith("treeReduce at "))
 
   private val allFamilies = builder.withDistinctWheel("uid").withQuantileWheel("value")
     .withMomentWheel("value").withFreqWheel("uid").withTopKWheel("uid")
