@@ -1,30 +1,13 @@
 package graft.index
 
+import scala.reflect.ClassTag
+
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.{functions => F}
-import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
 
 import graft.wheel.{RwWheel, TypedHawWheel, TypedRwWheel, WheelAggregator, WheelAggregators}
 import graft.wheel.WheelAggregators.{CoMoments, Moments}
-
-/** A wheel's residual filter: its SQL (None = unfiltered), its canonical
-  * key ("" = unfiltered) and its `column = literal` form, when it has one. */
-private[graft] final case class PartFilter(
-    sql: Option[String] = None,
-    key: String = "",
-    keyEq: Option[(String, Literal)] = None) {
-  def column: Option[Column] = sql.map(F.expr)
-}
-
-private[graft] object PartFilter {
-  /** The filter `sql`, keyed and matched against `df`. */
-  def of(df: DataFrame, sql: String): PartFilter = {
-    val c = F.expr(sql)
-    PartFilter(Some(sql), graft.expr.Canon.canonFilterKey(df.filter(c)), UWheelIndex.keyEqOf(df, c))
-  }
-  def of(df: DataFrame, sql: Option[String]): PartFilter = sql.fold(PartFilter())(of(df, _))
-}
 
 /** What a part's aggregate columns read: the source, its second
   * expression, and `measure(column, scale)(kind)`, the shared numeric
@@ -43,7 +26,7 @@ private[graft] sealed abstract class BuildPart extends Serializable {
   def family: WheelFamily[_ <: FamilyWheel]
   def filter: PartFilter
   /** The part's columns of the slot row; `j` numbers the part among the
-    * plan's parts of its kind and names the columns. */
+    * plan's parts of its family and names the columns. */
   def aggs(j: Int, in: PartInputs): Seq[SlotAgg]
   def newAcc(): PartAcc
 }
@@ -111,25 +94,19 @@ private[graft] final class FusedFold(val accs: Array[FusedAcc],
   }
 }
 
-/** A numeric wheel ([[IndexedWheel]]) over a measure (None = row count):
-  * seven columns per slot — rowCount, valueCount, sum(DECIMAL(38,scale)),
-  * min, max, nonRepresentableCount, nanCount. Serves the
-  * [[WheelFamily.Millis]] wheels too, under the millisecond slot
+/** A numeric wheel ([[IndexedWheel]]) over `scope`'s measure (none = row
+  * count): seven columns per slot — rowCount, valueCount,
+  * sum(DECIMAL(38,scale)), min, max, nonRepresentableCount, nanCount. Serves
+  * the [[WheelFamily.Millis]] wheels too, under the millisecond slot
   * expression. */
-private[graft] final case class NumericPart(
-    family: WheelFamily[IndexedWheel],
-    valueColumn: Option[String],
-    filter: PartFilter,
-    coverage: Option[(Long, Long)],
-    scale: Int,
-    /** For derived-EXPRESSION measures: the raw SQL to project (the
-      * `valueColumn` is then the expression's canonical key, not a schema
-      * column — see [[IndexedWheel.exprSql]]). */
-    exprSql: Option[String] = None) extends BuildPart {
+private[graft] final case class NumericPart(family: NumericFamily, scope: WheelScope, scale: Int)
+    extends BuildPart {
+  def filter: PartFilter = scope.filter
+  def valueColumn: Option[String] = scope.columns.headOption
 
   def aggs(j: Int, in: PartInputs): Seq[SlotAgg] = {
     import SlotAgg._
-    val inRange = coverage
+    val inRange = scope.coverage
       .map { case (s, e) => in.sec >= s && in.sec < e }
       .getOrElse(F.lit(true))
     val keep = filter.column.map(_ && inRange).getOrElse(inRange)
@@ -185,11 +162,10 @@ private[graft] final case class NumericPart(
 
     def freeze(slotSpan: Long, packLevels: Boolean): IndexedWheel = {
       val hasValues = valueColumn.isDefined
-      IndexedWheel(wheel.freeze(slotSpan, packLevels), valueColumn, filter.key,
-        valueAllNonNull = !hasValues || allNonNull,
-        valuesExactAtScale = !hasValues || badRep == 0L,
-        valuesNaNFree = !hasValues || nanCount == 0L,
-        coverage, filter.sql, filter.keyEq, exprSql)
+      IndexedWheel(scope.copy(slotSpan = slotSpan), wheel.freeze(slotSpan, packLevels),
+        NumericFacts(valueAllNonNull = !hasValues || allNonNull,
+          valuesExactAtScale = !hasValues || badRep == 0L,
+          valuesNaNFree = !hasValues || nanCount == 0L))
     }
 
     override def sawNullTime: Boolean = filter.sql.isEmpty && sawNullTs
@@ -220,10 +196,8 @@ private[graft] object NumericPart {
     val valIdx = valKeys.zipWithIndex.toMap
     // Derived-expression measures: the part's valueColumn is a canonical
     // key, not a schema column — the per-row source is the re-projected SQL.
-    val exprSrc: Map[(String, Int), String] = parts.collect {
-      case p if p.valueColumn.isDefined && p.exprSql.isDefined =>
-        (p.valueColumn.get, p.scale) -> p.exprSql.get
-    }.toMap
+    val exprSrc: Map[(String, Int), String] = parts.flatMap(p =>
+      p.valueColumn.zip(p.scope.exprSql.headOption.flatten).map { case (c, sql) => (c, p.scale) -> sql }).toMap
     val projCols = valKeys.zipWithIndex.flatMap { case ((c, scale), k) =>
       val srcCol = exprSrc.get((c, scale)).map(F.expr).getOrElse(F.col(c))
       val srcType = exprSrc.get((c, scale)) match {
@@ -274,264 +248,198 @@ private[graft] object NumericPart {
   }
 }
 
-/** A sketch wheel whose slot partial is one byte array, computed by the
-  * buffer of a native aggregate's partial-returning form, folded per slot
-  * in the same pass ([[SlotAgg.Sketch]]). An empty
-  * partial means the slot saw no non-null (post-filter) values and is
-  * skipped, so the slot set is identical to the value-filtered typed
-  * build's. */
-private[index] sealed abstract class SketchPart[In, Out] extends BuildPart {
-  def column: String
-  def exprSql: Option[String]
-  def agg: WheelAggregator[In, Array[Byte], Out]
-  protected def nonEmpty(p: Array[Byte]): Boolean = p.length > 0
-  protected def wheelOf(w: TypedHawWheel[Array[Byte], Out], slotSpan: Long): FamilyWheel
+/** How a [[SketchFamily]]'s wheel lays out and reads its columns of the
+  * slot row. */
+private[index] sealed abstract class SketchLayout[P, A] extends Serializable {
+  /** The columns of a part with aggregator `agg` over `scope`; `j` numbers
+    * the part among the plan's parts of its family and names the columns. */
+  def aggs(j: Int, in: PartInputs, scope: WheelScope, agg: A): Seq[SlotAgg]
+  /** The slot's partial, from its columns at ordinal `o`; None when the
+    * slot saw no (post-filter) value, so the slot set is the one a
+    * value-filtered typed build would have. */
+  def partial(r: Row, o: Int, agg: A): Option[P]
+  /** The facts of a wheel that saw no row. */
+  def noFacts: SketchFacts = SketchFacts()
+  /** The facts one slot's columns record. */
+  def facts(r: Row, o: Int): SketchFacts = noFacts
 
-  /** The aggregate's child: the measure (a column, or a derived
-    * expression re-projected from its SQL) where the filter holds. A keyed
-    * part folds its residual filter into the child: rows not matching
-    * become NULL and are skipped, exactly like the SQL aggregate over the
-    * filtered query would skip them. */
-  protected def keptSource: Column = {
-    val src = exprSql.map(F.expr).getOrElse(F.col(column))
-    filter.column match {
-      case Some(f) => F.when(f, src)
-      case None    => src
-    }
+  /** The measure (a column, or a derived expression re-projected from its
+    * SQL) where the filter holds: rows not matching become NULL and are
+    * skipped, exactly like the SQL aggregate over the filtered query would
+    * skip them. */
+  protected def kept(scope: WheelScope): Column = {
+    val src = scope.source(0)
+    scope.filter.column.fold(src)(F.when(_, src))
   }
+
+  protected def bytes(r: Row, o: Int): Option[Array[Byte]] =
+    Option(r.getAs[Array[Byte]](o)).filter(_.length > 0)
+}
+
+private[index] object SketchLayout {
+  import SlotAgg._
+
+  /** Per-slot register partials from the registers form of the native
+    * aggregate — bit-identical fold semantics to the SQL `hll_distinct` and
+    * the wheel's own aggregator (they are the same code). Partials arrive
+    * in the aggregator's canonical sparse/dense form. */
+  object Hll extends SketchLayout[Array[Byte], WheelAggregators.HllDistinct] {
+    def aggs(j: Int, in: PartInputs, scope: WheelScope, agg: WheelAggregators.HllDistinct) = {
+      val p = agg.p
+      Seq(Sketch(s"h$j", kept(scope).cast("long"), LongType,
+        graft.functions.HllDistinctAgg(_, p, returnRegisters = true)))
+    }
+    def partial(r: Row, o: Int, agg: WheelAggregators.HllDistinct) = bytes(r, o).filter(agg.nonEmpty)
+  }
+
+  /** Per-slot bin partials from the bins form of the native quantile
+    * aggregate — identical content semantics to the wheel aggregator (they
+    * share bucketing and canonical encoding). The double cast is the image
+    * the numeric wheels project, so buckets agree with what the SQL
+    * aggregate over the raw column computes. */
+  object Hdr extends SketchLayout[Array[Byte], WheelAggregators.HdrQuantile] {
+    def aggs(j: Int, in: PartInputs, scope: WheelScope, agg: WheelAggregators.HdrQuantile) = {
+      val s = agg.s
+      Seq(Sketch(s"qt$j", kept(scope).cast("double"), DoubleType,
+        graft.functions.HdrQuantileAgg(_, q = 0.0, s = s, returnBins = true)))
+    }
+    def partial(r: Row, o: Int, agg: WheelAggregators.HdrQuantile) = bytes(r, o)
+  }
+
+  /** Per-slot counter partials from the sketch form of the native
+    * `cms_freq` aggregate — identical hash and content semantics to the
+    * wheel aggregator (they are the same code). */
+  object Cms extends SketchLayout[Array[Byte], WheelAggregators.CmsFreq] {
+    def aggs(j: Int, in: PartInputs, scope: WheelScope, agg: WheelAggregators.CmsFreq) = {
+      val (logW, d) = (agg.logW, agg.d)
+      Seq(Sketch(s"fq$j", kept(scope).cast("long"), LongType,
+        graft.functions.CmsFreqAgg(_, target = 0L, logW = logW, d = d, returnSketch = true)))
+    }
+    def partial(r: Row, o: Int, agg: WheelAggregators.CmsFreq) = bytes(r, o)
+  }
+
+  /** The exact fixed-point image of column `i` of `scope` at `scale`: the
+    * source, its probe image `f` — rows that don't survive (NaN/Infinity/
+    * overflow) are NULL there and COUNTED, and any nonzero count makes the
+    * wheel decline every rewrite — and the unscaled integer u = f·10^s,
+    * exact in a BIGINT (|u| < 10^18). All native codegen'd arithmetic. */
+  private def probe(in: PartInputs, scope: WheelScope, i: Int, scale: Int) = {
+    val src = scope.source(i)
+    val f = BuildPart.fastDecIfDouble(in.df, src, 18, scale)
+    val u = (f * F.lit(math.pow(10, scale).toLong).cast("decimal(10,0)")).cast("long")
+    (src.isNotNull && f.isNull, u, F.abs(src.cast("double")))
+  }
+
+  private def big(r: Row, i: Int): BigInt = BigInt(r.getDecimal(i).toBigIntegerExact)
+
+  private def absMax(r: Row, i: Int): Double = if (r.isNullAt(i)) 0.0 else r.getDouble(i)
+
+  /** Exact moments, five columns per slot — n, Σu, Σu², the probe-failure
+    * count and max |value|. Σu and Σu² accumulate in DECIMAL(38,0): u² <
+    * 10^36 always fits a tight (19,0)×(19,0) product, so no precision is
+    * lost anywhere. */
+  object Moment extends SketchLayout[Moments, WheelAggregators.MomentStats] {
+    def aggs(j: Int, in: PartInputs, scope: WheelScope, agg: WheelAggregators.MomentStats) = {
+      val (fail, u, abs) = probe(in, scope, 0, agg.scale)
+      val u19 = u.cast("decimal(19,0)")
+      val keep = scope.filter.column.getOrElse(F.lit(true))
+      Seq(
+        Count(s"mc$j", F.when(keep, u)),
+        Sum(s"ms$j", F.when(keep, u.cast("decimal(38,0)"))),
+        Sum(s"mq$j", F.when(keep, u19 * u19)),
+        CountIf(s"mf$j", keep && fail),
+        Max(s"ma$j", F.when(keep, abs)))
+    }
+    def partial(r: Row, o: Int, agg: WheelAggregators.MomentStats) = {
+      val n = r.getLong(o)
+      if (n > 0L) Some(Moments(n, big(r, o + 1), big(r, o + 2))) else None
+    }
+    override def noFacts: SketchFacts = SketchFacts(0L, List(0.0))
+    override def facts(r: Row, o: Int): SketchFacts = SketchFacts(r.getLong(o + 3), List(absMax(r, o + 4)))
+  }
+
+  /** Exact co-moments over a column pair, nine columns per slot — n, Σx,
+    * Σy, Σx², Σy², Σxy, the probe-failure count and max |x| and |y|. A row
+    * contributes only when BOTH values are non-NULL (SQL binary-aggregate
+    * discipline), and a probe failure in EITHER column (which would make the
+    * scan's explicit cast throw under ANSI) is counted to decline. */
+  object CoMoment extends SketchLayout[CoMoments, WheelAggregators.CoMomentStats] {
+    def aggs(j: Int, in: PartInputs, scope: WheelScope, agg: WheelAggregators.CoMomentStats) = {
+      val (failX, ux, absX) = probe(in, scope, 0, agg.scaleX)
+      val (failY, uy, absY) = probe(in, scope, 1, agg.scaleY)
+      val keep = scope.filter.column.getOrElse(F.lit(true))
+      val both = keep && ux.isNotNull && uy.isNotNull
+      val ux19 = ux.cast("decimal(19,0)")
+      val uy19 = uy.cast("decimal(19,0)")
+      Seq(
+        CountIf(s"cn$j", both),
+        Sum(s"cx$j", F.when(both, ux.cast("decimal(38,0)"))),
+        Sum(s"cy$j", F.when(both, uy.cast("decimal(38,0)"))),
+        Sum(s"cxx$j", F.when(both, ux19 * ux19)),
+        Sum(s"cyy$j", F.when(both, uy19 * uy19)),
+        Sum(s"cxy$j", F.when(both, ux19 * uy19)),
+        CountIf(s"cf$j", keep && (failX || failY)),
+        Max(s"cax$j", F.when(keep, absX)),
+        Max(s"cay$j", F.when(keep, absY)))
+    }
+    def partial(r: Row, o: Int, agg: WheelAggregators.CoMomentStats) = {
+      val n = r.getLong(o)
+      if (n > 0L) Some(CoMoments(n, big(r, o + 1), big(r, o + 2), big(r, o + 3), big(r, o + 4), big(r, o + 5)))
+      else None
+    }
+    override def noFacts: SketchFacts = SketchFacts(0L, List(0.0, 0.0))
+    override def facts(r: Row, o: Int): SketchFacts =
+      SketchFacts(r.getLong(o + 6), List(absMax(r, o + 7), absMax(r, o + 8)))
+  }
+}
+
+/** A [[SketchWheel]] of `family` over `scope`, with aggregator `agg`: its
+  * columns of the slot row are the family's [[SketchLayout]], folded into
+  * a typed wheel and the family's facts. */
+private[index] final case class SketchPart[P, Out, A <: WheelAggregator[_, P, Out]](
+    family: SketchFamily[P, Out, A], scope: WheelScope, agg: A) extends BuildPart {
+  def filter: PartFilter = scope.filter
+  def aggs(j: Int, in: PartInputs): Seq[SlotAgg] = family.layout.aggs(j, in, scope, agg)
 
   def newAcc(): PartAcc = new Acc
 
   final class Acc extends PartAcc {
-    private val wheel = new TypedRwWheel[In, Array[Byte], Out](agg)
-    def add(r: Row, o: Int, nullSec: Boolean, sec: Long): Unit =
-      if (!nullSec) {
-        val p = r.getAs[Array[Byte]](o)
-        if (p != null && nonEmpty(p)) wheel.mergePartial(sec, p)
-      }
-    def merge(other: PartAcc): Unit = wheel.merge(other.asInstanceOf[Acc].wheel)
-    def freeze(slotSpan: Long, packLevels: Boolean): FamilyWheel = wheelOf(wheel.freeze(), slotSpan)
-  }
-}
-
-/** An HLL distinct-sketch wheel ([[DistinctIndexedWheel]]). */
-private[index] final case class HllPart(column: String, p: Int, filter: PartFilter,
-    exprSql: Option[String] = None) extends SketchPart[Long, Long] {
-  def family: WheelFamily[DistinctIndexedWheel] = WheelFamily.Hll
-  val agg = new WheelAggregators.HllDistinct(p)
-  // partials arrive in the aggregator's canonical sparse/dense form
-  override protected def nonEmpty(regs: Array[Byte]): Boolean = agg.nonEmpty(regs)
-  // per-second register partials from the registers form of the native
-  // aggregate — bit-identical fold semantics to the SQL hll_distinct
-  // and the wheel's own aggregator (they are the same code).
-  def aggs(j: Int, in: PartInputs): Seq[SlotAgg] =
-    Seq(SlotAgg.Sketch(s"h$j", keptSource.cast("long"), LongType,
-      graft.functions.HllDistinctAgg(_, p, returnRegisters = true)))
-  protected def wheelOf(w: TypedHawWheel[Array[Byte], Long], slotSpan: Long): FamilyWheel =
-    DistinctIndexedWheel(w, column, agg, filter.key, filter.sql, slotSpan, filter.keyEq, exprSql)
-}
-
-/** An HDR quantile-sketch wheel ([[QuantileIndexedWheel]]). */
-private[index] final case class HdrPart(column: String, s: Int, filter: PartFilter,
-    exprSql: Option[String] = None) extends SketchPart[Double, Array[Byte]] {
-  def family: WheelFamily[QuantileIndexedWheel] = WheelFamily.Hdr
-  val agg = new WheelAggregators.HdrQuantile(s)
-  // per-second bin partials from the bins form of the native quantile
-  // aggregate — identical content semantics to the wheel aggregator
-  // (they share bucketing and canonical encoding). The double cast is
-  // the same image the numeric wheels project, so buckets agree with
-  // what the SQL aggregate over the raw column computes.
-  def aggs(j: Int, in: PartInputs): Seq[SlotAgg] =
-    Seq(SlotAgg.Sketch(s"qt$j", keptSource.cast("double"), DoubleType,
-      graft.functions.HdrQuantileAgg(_, q = 0.0, s = s, returnBins = true)))
-  protected def wheelOf(w: TypedHawWheel[Array[Byte], Array[Byte]], slotSpan: Long): FamilyWheel =
-    QuantileIndexedWheel(w, column, agg, filter.key, filter.sql, slotSpan, filter.keyEq, exprSql)
-}
-
-/** A Count-Min frequency-sketch wheel ([[FreqIndexedWheel]]). */
-private[index] final case class CmsPart(column: String, logW: Int, d: Int, filter: PartFilter,
-    exprSql: Option[String] = None) extends SketchPart[Long, Array[Byte]] {
-  def family: WheelFamily[FreqIndexedWheel] = WheelFamily.Cms
-  val agg = new WheelAggregators.CmsFreq(d, logW)
-  // per-second counter partials from the sketch form of the native
-  // cms_freq aggregate — identical hash/content semantics to the wheel
-  // aggregator (they are the same code).
-  def aggs(j: Int, in: PartInputs): Seq[SlotAgg] =
-    Seq(SlotAgg.Sketch(s"fq$j", keptSource.cast("long"), LongType,
-      graft.functions.CmsFreqAgg(_, target = 0L, logW = logW, d = d, returnSketch = true)))
-  protected def wheelOf(w: TypedHawWheel[Array[Byte], Array[Byte]], slotSpan: Long): FamilyWheel =
-    FreqIndexedWheel(w, column, agg, filter.key, filter.sql, slotSpan, filter.keyEq, exprSql)
-}
-
-/** An exact-moment wheel ([[MomentIndexedWheel]]): five columns per slot —
-  * n, Σu, Σu², the probe-failure count and max |value|. */
-private[index] final case class MomentPart(column: String, scale: Int, filter: PartFilter,
-    exprSql: Option[String] = None) extends BuildPart {
-  def family: WheelFamily[MomentIndexedWheel] = WheelFamily.Moment
-
-  def aggs(j: Int, in: PartInputs): Seq[SlotAgg] = {
-    import SlotAgg._
-    // Exact moments, all in native codegen'd arithmetic: the value is
-    // probed through an exact DECIMAL(18, scale) fixed-point image `f`
-    // (rows that don't survive — NaN/Infinity/overflow — are COUNTED,
-    // and any nonzero count makes the wheel decline every rewrite), the
-    // unscaled integer u = f·10^s is exact in a BIGINT (|u| < 10^18),
-    // and Σu / Σu² accumulate in DECIMAL(38,0) — u² < 10^36 always fits
-    // a tight (19,0)×(19,0) product, so no precision loss anywhere.
-    val s = scale
-    val src = exprSql.map(F.expr).getOrElse(F.col(column))
-    val vd = src.cast("double")
-    val f = BuildPart.fastDecIfDouble(in.df, src, 18, s)
-    val fail = src.isNotNull && f.isNull
-    val u = (f * F.lit(math.pow(10, s).toLong).cast("decimal(10,0)")).cast("long")
-    val u19 = u.cast("decimal(19,0)")
-    val keepM = filter.column.getOrElse(F.lit(true))
-    Seq(
-      Count(s"mc$j", F.when(keepM, u)),
-      Sum(s"ms$j", F.when(keepM, u.cast("decimal(38,0)"))),
-      Sum(s"mq$j", F.when(keepM, u19 * u19)),
-      CountIf(s"mf$j", keepM && fail),
-      Max(s"ma$j", F.when(keepM, F.abs(vd))))
-  }
-
-  def newAcc(): PartAcc = new Acc
-
-  final class Acc extends PartAcc {
-    private val wheel = new TypedRwWheel[Long, Moments, Moments](new WheelAggregators.MomentStats(scale))
-    private var castFail = 0L
-    private var absMax = 0.0
+    private val layout = family.layout
+    private val wheel = new TypedRwWheel[Any, P, Out](agg.asInstanceOf[WheelAggregator[Any, P, Out]])
+    private var facts = layout.noFacts
 
     def add(r: Row, o: Int, nullSec: Boolean, sec: Long): Unit =
       if (!nullSec) {
-        val n = r.getLong(o)
-        if (n > 0L) {
-          val sx = BigInt(r.getDecimal(o + 1).toBigIntegerExact)
-          val sxx = BigInt(r.getDecimal(o + 2).toBigIntegerExact)
-          wheel.mergePartial(sec, Moments(n, sx, sxx))
-        }
-        castFail += r.getLong(o + 3)
-        if (!r.isNullAt(o + 4)) absMax = math.max(absMax, r.getDouble(o + 4))
-      }
-
-    def merge(other: PartAcc): Unit = {
-      val o = other.asInstanceOf[Acc]
-      wheel.merge(o.wheel)
-      castFail += o.castFail
-      absMax = math.max(absMax, o.absMax)
-    }
-
-    def freeze(slotSpan: Long, packLevels: Boolean): MomentIndexedWheel =
-      MomentIndexedWheel(wheel.freeze(), column,
-        wheel.agg.asInstanceOf[WheelAggregators.MomentStats], castFail, absMax,
-        filter.key, filter.sql, slotSpan, filter.keyEq, exprSql)
-  }
-}
-
-/** An exact co-moment wheel over a column pair ([[CoMomentIndexedWheel]]):
-  * nine columns per slot — n, Σx, Σy, Σx², Σy², Σxy, the probe-failure
-  * count and max |x| and |y|. */
-private[index] final case class CoMomentPart(columnX: String, columnY: String,
-    scaleX: Int, scaleY: Int, filter: PartFilter,
-    exprSqlX: Option[String] = None, exprSqlY: Option[String] = None) extends BuildPart {
-  def family: WheelFamily[CoMomentIndexedWheel] = WheelFamily.CoMoment
-
-  def aggs(j: Int, in: PartInputs): Seq[SlotAgg] = {
-    import SlotAgg._
-    // Exact co-moments: both columns go through the same fixed-point
-    // probe as the unary moments; a row contributes only when BOTH
-    // values are non-NULL (SQL binary-aggregate discipline), and a probe
-    // failure in EITHER column (NaN/Infinity/overflow — which would make
-    // the scan's explicit cast throw under ANSI) is counted to decline.
-    def probe(src: Column, s: Int) = {
-      val f = BuildPart.fastDecIfDouble(in.df, src, 18, s)
-      val u = (f * F.lit(math.pow(10, s).toLong).cast("decimal(10,0)")).cast("long")
-      (src, f, u, src.cast("double"))
-    }
-    val (sx0, fx, ux, xd) = probe(exprSqlX.map(F.expr).getOrElse(F.col(columnX)), scaleX)
-    val (sy0, fy, uy, yd) = probe(exprSqlY.map(F.expr).getOrElse(F.col(columnY)), scaleY)
-    val fail = (sx0.isNotNull && fx.isNull) || (sy0.isNotNull && fy.isNull)
-    val keepC = filter.column.getOrElse(F.lit(true))
-    val both = keepC && ux.isNotNull && uy.isNotNull
-    val ux19 = ux.cast("decimal(19,0)")
-    val uy19 = uy.cast("decimal(19,0)")
-    Seq(
-      CountIf(s"cn$j", both),
-      Sum(s"cx$j", F.when(both, ux.cast("decimal(38,0)"))),
-      Sum(s"cy$j", F.when(both, uy.cast("decimal(38,0)"))),
-      Sum(s"cxx$j", F.when(both, ux19 * ux19)),
-      Sum(s"cyy$j", F.when(both, uy19 * uy19)),
-      Sum(s"cxy$j", F.when(both, ux19 * uy19)),
-      CountIf(s"cf$j", keepC && fail),
-      Max(s"cax$j", F.when(keepC, F.abs(xd))),
-      Max(s"cay$j", F.when(keepC, F.abs(yd))))
-  }
-
-  def newAcc(): PartAcc = new Acc
-
-  final class Acc extends PartAcc {
-    private val wheel = new TypedRwWheel[(Long, Long), CoMoments, CoMoments](
-      new WheelAggregators.CoMomentStats(scaleX, scaleY))
-    private var castFail = 0L
-    private var absMaxX = 0.0
-    private var absMaxY = 0.0
-
-    def add(r: Row, o: Int, nullSec: Boolean, sec: Long): Unit =
-      if (!nullSec) {
-        val n = r.getLong(o)
-        if (n > 0L) {
-          def big(i: Int) = BigInt(r.getDecimal(o + i).toBigIntegerExact)
-          wheel.mergePartial(sec, CoMoments(n, big(1), big(2), big(3), big(4), big(5)))
-        }
-        castFail += r.getLong(o + 6)
-        if (!r.isNullAt(o + 7)) absMaxX = math.max(absMaxX, r.getDouble(o + 7))
-        if (!r.isNullAt(o + 8)) absMaxY = math.max(absMaxY, r.getDouble(o + 8))
+        layout.partial(r, o, agg).foreach(wheel.mergePartial(sec, _))
+        facts = facts ++ layout.facts(r, o)
       }
 
     def merge(other: PartAcc): Unit = {
       val o = other.asInstanceOf[Acc]
       wheel.merge(o.wheel)
-      castFail += o.castFail
-      absMaxX = math.max(absMaxX, o.absMaxX)
-      absMaxY = math.max(absMaxY, o.absMaxY)
+      facts = facts ++ o.facts
     }
 
-    def freeze(slotSpan: Long, packLevels: Boolean): CoMomentIndexedWheel =
-      CoMomentIndexedWheel(wheel.freeze(), columnX, columnY,
-        wheel.agg.asInstanceOf[WheelAggregators.CoMomentStats], castFail, absMaxX, absMaxY,
-        filter.key, filter.sql, slotSpan, filter.keyEq, exprSqlX, exprSqlY)
+    def freeze(slotSpan: Long, packLevels: Boolean): FamilyWheel =
+      SketchWheel(scope.copy(slotSpan = slotSpan), wheel.freeze()(family.classTag), agg, facts)
   }
 }
 
 private[index] object BuildPart {
 
-  /** The part that rebuilds registered wheel `w` of `family`. Top-k wheels
-    * have none: they ride the same pass as top-k columns
-    * ([[TypedWheelBuild.TopKFold]]). */
-  def of(family: WheelFamily[_ <: FamilyWheel], w: FamilyWheel): BuildPart = w match {
-    case w: IndexedWheel =>
-      NumericPart(family.asInstanceOf[WheelFamily[IndexedWheel]], w.valueColumn,
-        PartFilter(w.filterSql, w.filterKey, w.keyEq), w.coverage, w.wheel.scale, w.exprSql)
-    case w: DistinctIndexedWheel =>
-      HllPart(w.column, w.p, PartFilter(w.filterSql, w.filterKey, w.keyEq), w.exprSql)
-    case w: QuantileIndexedWheel =>
-      HdrPart(w.column, w.s, PartFilter(w.filterSql, w.filterKey, w.keyEq), w.exprSql)
-    case w: FreqIndexedWheel =>
-      CmsPart(w.column, w.logW, w.d, PartFilter(w.filterSql, w.filterKey, w.keyEq), w.exprSql)
-    case w: MomentIndexedWheel =>
-      MomentPart(w.column, w.scale, PartFilter(w.filterSql, w.filterKey, w.keyEq), w.exprSql)
-    case w: CoMomentIndexedWheel =>
-      CoMomentPart(w.columnX, w.columnY, w.scaleX, w.scaleY,
-        PartFilter(w.filterSql, w.filterKey, w.keyEq), w.exprSqlX, w.exprSqlY)
-    case w: TopKIndexedWheel =>
-      throw new IllegalArgumentException(s"top-k wheel ${w.column} has no fused build part")
-  }
+  /** The part that rebuilds registered wheel `w` of `family` — each
+    * family's own ([[WheelFamily.part]]). Top-k wheels have none: they ride
+    * the same pass as top-k columns ([[TypedWheelBuild.TopKFold]]). */
+  def of(family: WheelFamily[_ <: FamilyWheel], w: FamilyWheel): BuildPart =
+    family.asInstanceOf[WheelFamily[FamilyWheel]].part(w)
 
-  /** Wheel `old` extended by `delta`, a wheel built from the same part over
-    * appended rows only, at slot span `span`. Every wheel appends its
-    * delta's slots — by array concatenation when the delta starts at or
-    * after its last slot, by the slot-wise merge otherwise — and the build
-    * facts accumulate: the numeric exactness flags AND, the moment decline
-    * gates (castFail, absMax) and the top-k NULL-key count add up.
+  /** Wheel `old` of `family` extended by `delta`, a wheel built from the
+    * same part over appended rows only, at slot span `span`
+    * ([[WheelFamily.append]]). Every wheel appends its delta's slots — by
+    * array concatenation when the delta starts at or after its last slot,
+    * by the slot-wise merge otherwise — and the build facts accumulate: the
+    * numeric exactness flags AND, the moment decline gates (castFail,
+    * absMax) and the top-k NULL-key count add up.
     *
     * Counts and scaled sums add and min/max combine; HLL registers max
     * (idempotent); HDR bins, Count-Min counters and moments add — so the
@@ -545,41 +453,17 @@ private[index] object BuildPart {
     * rebuild compacts the union once; the merge compacts twice); certified
     * top-k answers are unaffected, as certification requires slack 0,
     * where compaction never engaged. Packedness survives. */
-  def append(old: FamilyWheel, delta: FamilyWheel, span: Long, packLevels: Boolean): FamilyWheel =
-    (old, delta) match {
-      case (o: IndexedWheel, d: IndexedWheel) =>
-        o.copy(
-          wheel = o.wheel.appended(d.wheel, span, packLevels).getOrElse(
-            graft.wheel.HawWheel.fromSecondPartials(o.wheel.slotPartials ++ d.wheel.slotPartials,
-              o.wheel.scale, o.wheel.hasValues, span, packLevels)),
-          valueAllNonNull = o.valueAllNonNull && d.valueAllNonNull,
-          valuesExactAtScale = o.valuesExactAtScale && d.valuesExactAtScale,
-          valuesNaNFree = o.valuesNaNFree && d.valuesNaNFree)
-      case (o: DistinctIndexedWheel, d: DistinctIndexedWheel) =>
-        o.copy(wheel = appendTyped(o.wheel, d.wheel, o.agg), slotSpan = math.max(o.slotSpan, span))
-      case (o: QuantileIndexedWheel, d: QuantileIndexedWheel) =>
-        o.copy(wheel = appendTyped(o.wheel, d.wheel, o.agg), slotSpan = math.max(o.slotSpan, span))
-      case (o: FreqIndexedWheel, d: FreqIndexedWheel) =>
-        o.copy(wheel = appendTyped(o.wheel, d.wheel, o.agg), slotSpan = math.max(o.slotSpan, span))
-      case (o: MomentIndexedWheel, d: MomentIndexedWheel) =>
-        o.copy(wheel = appendTyped(o.wheel, d.wheel, o.agg), castFail = o.castFail + d.castFail,
-          absMax = math.max(o.absMax, d.absMax), slotSpan = math.max(o.slotSpan, span))
-      case (o: CoMomentIndexedWheel, d: CoMomentIndexedWheel) =>
-        o.copy(wheel = appendTyped(o.wheel, d.wheel, o.agg), castFail = o.castFail + d.castFail,
-          absMaxX = math.max(o.absMaxX, d.absMaxX), absMaxY = math.max(o.absMaxY, d.absMaxY),
-          slotSpan = math.max(o.slotSpan, span))
-      case (o: TopKIndexedWheel, d: TopKIndexedWheel) =>
-        o.copy(wheel = appendTyped(o.wheel, d.wheel, o.agg),
-          keyNullCount = o.keyNullCount + d.keyNullCount)
-      case _ =>
-        throw new IllegalArgumentException(
-          s"cannot append a ${delta.getClass.getSimpleName} to a ${old.getClass.getSimpleName}")
-    }
+  def append(family: WheelFamily[_ <: FamilyWheel], old: FamilyWheel, delta: FamilyWheel,
+      span: Long, packLevels: Boolean): FamilyWheel =
+    family.asInstanceOf[WheelFamily[FamilyWheel]].append(old, delta, span, packLevels)
 
-  private def appendTyped[In, P: scala.reflect.ClassTag, Out](old: TypedHawWheel[P, Out],
-      delta: TypedHawWheel[P, Out], agg: WheelAggregator[In, P, Out]): TypedHawWheel[P, Out] =
-    old.appended(delta, agg).getOrElse(
-      TypedHawWheel.fromSecondPartials(old.slotPartials ++ delta.slotPartials, agg))
+  /** Typed wheel `old` extended by `delta`: concatenated, or merged slot by
+    * slot when `delta` starts before `old`'s last slot. */
+  def appendTyped[P: ClassTag, Out](old: TypedHawWheel[P, Out], delta: TypedHawWheel[P, Out],
+      agg: WheelAggregator[_, P, Out]): TypedHawWheel[P, Out] = {
+    val a = agg.asInstanceOf[WheelAggregator[Any, P, Out]]
+    old.appended(delta, a).getOrElse(TypedHawWheel.fromSecondPartials(old.slotPartials ++ delta.slotPartials, a))
+  }
 
   /** `try_cast(v AS decimal(p, s))` of a DOUBLE column via the scaled-long
     * fast path ([[graft.functions.FastDecimalImage]] — identical result,

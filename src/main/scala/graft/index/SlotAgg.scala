@@ -74,10 +74,8 @@ private[index] object SlotAgg {
     def result(s: Any): Any = s
   }
 
-  private def cmp(a: Any, b: Any): Int = {
-    val x = a.asInstanceOf[Double]; val y = b.asInstanceOf[Double]
-    if (x == y) 0 else java.lang.Double.compare(x, y)
-  }
+  private def cmp(a: Any, b: Any): Int =
+    graft.wheel.RwWheel.sparkCompare(a.asInstanceOf[Double], b.asInstanceOf[Double])
 
   /** A sketch aggregate (`HllDistinctAgg`, `HdrQuantileAgg`, `CmsFreqAgg`
     * in their partial-returning forms) built by `make`, run through its

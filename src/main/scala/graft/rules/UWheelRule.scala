@@ -13,8 +13,8 @@ import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.expr.{Canon, Extract}
-import graft.index.{CoMomentIndexedWheel, DistinctIndexedWheel, FreqIndexedWheel, IndexedWheel, MomentIndexedWheel, QuantileIndexedWheel, TableIndex, WheelRegistry}
-import graft.wheel.{HawWheel, RangeAgg}
+import graft.index.{FamilyWheel, IndexedWheel, SketchFacts, SketchFamily, SketchWheel, TableIndex, WheelFamily, WheelRegistry}
+import graft.wheel.{HawWheel, RangeAgg, WheelAggregator}
 
 /** Plan-time rewrite of temporal aggregation queries against wheel-indexed
   * tables — the Spark-native re-expression of the reference's
@@ -225,25 +225,15 @@ object UWheelRule extends Rule[LogicalPlan] {
 
   // ----------------------------------------------------- aggregate rewrite
 
-  /** Which wheel answers one Need: a fused numeric wheel, or an HLL
-    * distinct-sketch wheel (whose answer doesn't come from a [[RangeAgg]]). */
+  /** Which wheel answers one Need: a fused numeric wheel, or a typed
+    * wheel (whose answer doesn't come from a [[RangeAgg]]). */
   private sealed trait Src { def numeric: Option[IndexedWheel] }
   private final case class NumSrc(w: IndexedWheel) extends Src {
     def numeric: Option[IndexedWheel] = Some(w)
   }
-  private final case class QuantileSrc(d: QuantileIndexedWheel) extends Src {
-    def numeric: Option[IndexedWheel] = None
-  }
-  private final case class MomentSrc(d: MomentIndexedWheel) extends Src {
-    def numeric: Option[IndexedWheel] = None
-  }
-  private final case class CoMomentSrc(d: CoMomentIndexedWheel) extends Src {
-    def numeric: Option[IndexedWheel] = None
-  }
-  private final case class FreqSrc(d: FreqIndexedWheel) extends Src {
-    def numeric: Option[IndexedWheel] = None
-  }
-  private final case class HllSrc(d: DistinctIndexedWheel) extends Src {
+  /** A [[SketchWheel]] of slot span `span`: `over` answers the need over a
+    * set of disjoint ranges ([[SketchKind]]). */
+  private final case class SketchSrc(span: Long, over: Seq[(Long, Long)] => Any) extends Src {
     def numeric: Option[IndexedWheel] = None
   }
   /** Exact COUNT(DISTINCT key): answered from the COMPLETE per-value keyed
@@ -309,6 +299,8 @@ object UWheelRule extends Rule[LogicalPlan] {
                                   * (`hllP` doubles as its logW). */
                                 cmsTarget: Long = 0L,
                                 cmsD: Int = 0) {
+    /** The column(s) the need measures: x then y for a co-moment pair. */
+    def columns: List[String] = column.toList ++ column2
     def value(ra: RangeAgg): Any = kind match {
       case "count" | "countcol" => ra.count
       case "sum"    => ra.sum.map(Double.box).orNull
@@ -622,6 +614,68 @@ object UWheelRule extends Rule[LogicalPlan] {
     }
   }
 
+  /** How a need reads a [[SketchWheel]] of one family, keyed by
+    * [[Need.kind]]: which wheels can serve it — the query's aggregate
+    * parameters must equal the wheel's (different parameters mean different
+    * partials, so a different answer than running the query would give),
+    * and the family's decline gates must hold — and how the merged partial
+    * lowers to the answer, with the arithmetic the SQL aggregate uses. A
+    * range set reads each range's partial and combines them once: the
+    * ranges are disjoint, so register max, bin, counter and moment
+    * addition are exact. Zero ranges lower the identity (0 distinct, 0
+    * occurrences, NULL for a quantile or a moment statistic), matching the
+    * SQL aggregate over empty input. */
+  private final class SketchKind[P, Out, A <: WheelAggregator[_, P, Out]](
+      family: SketchFamily[P, Out, A])(
+      accepts: (Need, SketchWheel[P, Out, A]) => Boolean)(
+      lower: (Need, A, P) => Any) {
+    private def src(n: Need, w: Option[SketchWheel[P, Out, A]], spanOk: Long => Boolean): Option[Src] =
+      w.filter(w => spanOk(w.scope.slotSpan)).map { w =>
+        SketchSrc(w.scope.slotSpan, bs => {
+          val parts = bs.map { case (s, e) => w.wheel.combineRange(s, e) }
+          lower(n, w.agg, if (parts.isEmpty) w.agg.identity else parts.reduce(w.agg.combine))
+        })
+      }
+    /** The wheel over the need's columns under residual key `key`. */
+    def lookup(t: TableIndex, n: Need, key: String, spanOk: Long => Boolean): Option[Src] =
+      src(n, t.wheel(family, n.columns, key).filter(accepts(n, _)), spanOk)
+    /** The per-value wheel over the need's columns keyed `col = v`. */
+    def forValue(t: TableIndex, n: Need, col: String, v: Literal, spanOk: Long => Boolean): Option[Src] =
+      src(n, t.all(family).find(w => w.columns == n.columns && accepts(n, w) &&
+        w.scope.filter.keyEq.exists(ke => ke._1 == col && ke._2 == v)), spanOk)
+  }
+
+  private val sketchKinds: Map[String, SketchKind[_, _, _]] = {
+    import WheelFamily._
+    def boxed(d: Option[Double]): Any = d.map(Double.box).orNull
+    Map(
+      "hll" -> new SketchKind(Hll)((n, w) => w.agg.p == n.hllP)((_, a, p) => Long.box(a.lower(p))),
+      "hdrq" -> new SketchKind(Hdr)((n, w) => w.agg.s == n.hllP)(
+        (n, a, p) => boxed(a.quantileOf(p, n.qArg))),
+      "cms" -> new SketchKind(Cms)((n, w) => w.agg.logW == n.hllP && w.agg.d == n.cmsD)(
+        (n, a, p) => Long.box(a.freqOf(p, n.cmsTarget))),
+      "moment" -> new SketchKind(Moment)((n, w) => momentsOk(n, List(w.agg.scale), w.facts))(
+        (n, a, p) => boxed(a.statOf(p, n.stat))),
+      "comoment" -> new SketchKind(CoMoment)(
+        (n, w) => momentsOk(n, List(w.agg.scaleX, w.agg.scaleY), w.facts))(
+        (n, a, p) => boxed(a.statOf(p, n.stat))))
+  }
+
+  /** Moment-family serving gates: the wheel must cover every row the scan
+    * would aggregate with the exact value the aggregate would see —
+    * castFail ≠ 0 means rows escaped the fixed-point probe (or would make
+    * the scan throw under ANSI); each column's scale must equal the
+    * query's; an explicit Cast(… AS DECIMAL(p, s)) additionally needs the
+    * absMax proof that the cast can never overflow (margin 1.0 absorbs the
+    * double image's ulp; p − s ≥ 19 digits always hold |v| < 10^18, the
+    * castFail probe). */
+  private def momentsOk(n: Need, scales: List[Int], f: SketchFacts): Boolean =
+    f.castFail == 0L &&
+      List(n.decScale, n.decScale2).take(scales.length) == scales.map(Some(_)) &&
+      List(n.castP, n.castP2).zip(scales.zip(f.absMax)).forall { case (cp, (s, m)) =>
+        cp.forall(p => p - s >= 19 || m < math.pow(10d, p - s) - 1.0)
+      }
+
   private def isTime(e: Expression, timeCol: String): Boolean =
     Extract.isTime(e, timeCol)
 
@@ -637,8 +691,8 @@ object UWheelRule extends Rule[LogicalPlan] {
     * exactly this set. */
   private def keyedWheelSet(table: TableIndex, col: String)
       : (Seq[IndexedWheel], Seq[Literal]) = {
-    val keyed = table.allWheels.filter(_.keyEq.exists(_._1 == col))
-    (keyed, keyed.flatMap(_.keyEq).map(_._2).distinct)
+    val keyed = table.allWheels.filter(_.scope.filter.keyEq.exists(_._1 == col))
+    (keyed, keyed.flatMap(_.scope.filter.keyEq).map(_._2).distinct)
   }
 
   /** Plan-time dim-join folding (round-7 verdict task 5): a group-less
@@ -774,7 +828,7 @@ object UWheelRule extends Rule[LogicalPlan] {
     val bounds: Seq[(Long, Long)] = ranges.map(r =>
       (r.startSec.getOrElse(LoSentinel), r.endSec.getOrElse(HiSentinel)))
 
-    def coverageOk(w: IndexedWheel): Boolean = w.coverage match {
+    def coverageOk(w: IndexedWheel): Boolean = w.scope.coverage match {
       case None => true
       case Some((cs, ce)) =>
         ranges.forall(r => r.startSec.exists(_ >= cs) && r.endSec.exists(_ <= ce))
@@ -784,17 +838,16 @@ object UWheelRule extends Rule[LogicalPlan] {
     // exactly; unbounded sides are clamped to the (aligned) wheel extent.
     // Alignment goes through HawWheel.alignDown so the rule can never
     // disagree with the wheel's own slotting convention.
-    /** Span-alignment gate, ONE definition for every wheel kind: numeric
-      * wheels (via [[spanOk]]) and the typed families (sketches, moments,
-      * counters — srcFor arms + the per-value helpers of both grouped
-      * arms). A span-coarsened build produced span-aligned slots, so a
-      * bound that is not slot-aligned would silently include/exclude whole
-      * slots of content — decline instead. */
-    def sketchSpanOk(span: Long): Boolean =
+    /** Span-alignment gate, ONE definition for every wheel family, read
+      * from the wheel's [[graft.index.WheelScope]]. A span-coarsened build
+      * produced span-aligned slots, so a bound that is not slot-aligned
+      * would silently include/exclude whole slots of content — decline
+      * instead. */
+    def spanAligned(span: Long): Boolean =
       span == 1L || ranges.forall(r =>
         r.startSec.forall(s => HawWheel.alignDown(s, span) == s) &&
         r.endSec.forall(e => HawWheel.alignDown(e, span) == e))
-    def spanOk(w: IndexedWheel): Boolean = sketchSpanOk(w.wheel.slotSpan)
+    def spanOk(w: FamilyWheel): Boolean = spanAligned(w.scope.slotSpan)
 
     /** Merged aggregate over the (disjoint) range set on one wheel. */
     def rangeAggOf(hw: HawWheel): RangeAgg =
@@ -819,46 +872,37 @@ object UWheelRule extends Rule[LogicalPlan] {
       (n.column match {
       case None => if (msMode) msBase(None) else table.anyForFilter(key)
       case Some(c) =>
-        (if (msMode) msBase(Some(c)) else table.get(Some(c), key))
-          .filter(_.valueAllNonNull)
-          .filter(w => n.decScale.forall(_ == w.wheel.scale))
-          // Plain SUM/AVG over doubles are only exact when every value is
-          // representable at the wheel's decimal scale (ADVICE: the scaled
-          // sum would otherwise be a rounded answer); the explicit
-          // sum-over-decimal-cast form — and SUM over a decimal column,
-          // whose wheel summed the decimal itself — matches the wheel's
-          // arithmetic by construction and needs no gate. Decimal MIN/MAX
-          // ("mindec"/"maxdec") flip the gate's direction: for a
-          // decimal-built wheel, valuesExactAtScale records that every
-          // value's DOUBLE image round-trips back to the original decimal
-          // exactly — required because the wheel stores extrema as doubles.
-          .filter(w => n.kind == "sumdec" || n.kind == "avgdec" || n.kind == "min" ||
-                       n.kind == "max" || n.kind == "countcol" || w.valuesExactAtScale)
-          // MIN/MAX are NaN-blind in the wheel (Java ordering) but Spark
-          // orders NaN above everything — only rewrite from NaN-free wheels.
-          .filter(w => (n.kind != "min" && n.kind != "max") || w.valuesNaNFree)
+        (if (msMode) msBase(Some(c)) else table.get(Some(c), key)).filter(qualityOk(n, _))
       }).filter(coverageOk).filter(spanOk)
     }
 
+    /** Whether numeric wheel `w` answers column-bearing need `n` exactly.
+      * Plain SUM/AVG over doubles are only exact when every value is
+      * representable at the wheel's decimal scale (the scaled sum would
+      * otherwise be a rounded answer); the explicit sum-over-decimal-cast
+      * form — and SUM over a decimal column, whose wheel summed the decimal
+      * itself — matches the wheel's arithmetic by construction and needs no
+      * gate. Decimal MIN/MAX ("mindec"/"maxdec") flip the gate's direction:
+      * for a decimal-built wheel, valuesExactAtScale records that every
+      * value's DOUBLE image round-trips back to the original decimal
+      * exactly — required because the wheel stores extrema as doubles.
+      * MIN/MAX read only NaN-free wheels: the wheel's range reads do not
+      * order NaN above everything as Spark does. */
+    def qualityOk(n: Need, w: IndexedWheel): Boolean =
+      w.facts.valueAllNonNull &&
+        n.decScale.forall(_ == w.wheel.scale) &&
+        (n.kind == "sumdec" || n.kind == "avgdec" || n.kind == "min" ||
+          n.kind == "max" || n.kind == "countcol" || w.facts.valuesExactAtScale) &&
+        ((n.kind != "min" && n.kind != "max") || w.facts.valuesNaNFree)
+
     def srcFor(n: Need): Option[Src] = n.kind match {
-      // HLL wheels are full-table in time and per-second by construction
-      // (DistinctIndexedWheel doc), so no coverage/span gate applies. A
-      // residual predicate routes to the KEYED distinct wheel built with
-      // the same canonical filter key (registers that saw only matching
-      // rows); the query's precision must equal the wheel's (different p ⇒
-      // different registers ⇒ a different estimate than running the query
-      // would give).
-      case "hll" =>
-        // ms domain has no register wheels — second-domain registers read
-        // with ms bounds would be garbage, so the gate is structural
-        if (msMode) return None
-        n.column.flatMap(c => table.distinctWheel(c, keyFor(n)))
-          .filter(_.p == n.hllP)
-          // span-coarsened builds produce span-aligned register slots: an
-          // unaligned bound would silently include/exclude whole slots of
-          // users, so gate exactly like the numeric wheels
-          .filter(d => sketchSpanOk(d.slotSpan))
-          .map(HllSrc)
+      // The typed families: a residual predicate routes to the KEYED wheel
+      // built with the same canonical filter key (partials that saw only
+      // matching rows), gated on span alignment like the numeric wheels.
+      // The ms domain has no typed wheels — second-domain partials read
+      // with ms bounds would be garbage, so the gate is structural.
+      case k if sketchKinds.contains(k) =>
+        if (msMode) None else sketchKinds(k).lookup(table, n, keyFor(n), spanAligned)
       // exact COUNT(DISTINCT k): the complete per-value `k = v` wheel set.
       // A residual filter declines — per-value wheels are keyed on the
       // value equality alone, so a residual would need per-(value ×
@@ -867,51 +911,13 @@ object UWheelRule extends Rule[LogicalPlan] {
       // per-value counts don't sum to the unfiltered count, which is
       // exactly the condition under which a NULL key or an uncovered value
       // would make the enumeration-based count wrong.
-      // hdr_quantile: the quantile-sketch wheel twin of the hll path —
-      // same residual routing (keyed variants by canonical filter key),
-      // same span-alignment gate, same ms-domain refusal
-      case "hdrq" =>
-        if (msMode) return None
-        table.quantileWheel(n.column.getOrElse(return None), keyFor(n))
-          .filter(_.s == n.hllP)
-          .filter(d => sketchSpanOk(d.slotSpan))
-          .map(QuantileSrc)
-      // cms_freq: the frequency-sketch wheel twin of the hll/hdrq paths —
-      // same residual routing (keyed variants by canonical filter key),
-      // same span-alignment gate, same ms-domain refusal. The counter
-      // matrix must match (different (logW, d) ⇒ different slots ⇒ a
-      // different estimate than running the query would give).
-      case "cms" =>
-        if (msMode) return None
-        table.freqWheel(n.column.getOrElse(return None), keyFor(n))
-          .filter(d => d.logW == n.hllP && d.d == n.cmsD)
-          .filter(d => sketchSpanOk(d.slotSpan))
-          .map(FreqSrc)
-      // wheel_var/stddev: the exact-moment wheel at the query's fixed-point
-      // scale — same residual routing and span gate as the other typed
-      // families, plus the moment-specific exactness gates ([[momentOk]])
-      case "moment" =>
-        if (msMode) return None
-        table.momentWheel(n.column.getOrElse(return None), keyFor(n))
-          .filter(momentOk(n, _))
-          .filter(d => sketchSpanOk(d.slotSpan))
-          .map(MomentSrc)
-      case "comoment" =>
-        if (msMode) return None
-        table.coMomentWheel(n.column.getOrElse(return None),
-            n.column2.getOrElse(return None), keyFor(n))
-          .filter(coMomentOk(n, _))
-          .filter(d => sketchSpanOk(d.slotSpan))
-          .map(CoMomentSrc)
       case "cntdist" =>
         if (filterKey.nonEmpty || msMode) None // per-value wheels are second-domain
         else for {
           c <- n.column
           (keyed, values) = keyedWheelSet(table, c)
           if values.nonEmpty
-          pv = values.flatMap(v =>
-            keyed.filter(_.keyEq.exists(_._2 == v))
-              .filter(coverageOk).filter(spanOk).headOption)
+          pv = values.flatMap(v => numericForValue(Need(None, "count", None), keyed, v))
           if pv.length == values.length
           base <- table.anyForFilter("").filter(coverageOk).filter(spanOk)
         } yield DistinctSetSrc(base, pv)
@@ -960,7 +966,7 @@ object UWheelRule extends Rule[LogicalPlan] {
         else {
           val (keyed, _) = keyedWheelSet(table, col)
           val ws = dedup.flatMap { case (dt, v) =>
-            keyed.find(_.keyEq.exists { case (c, kl) =>
+            keyed.find(_.scope.filter.keyEq.exists { case (c, kl) =>
               c == col && kl.dataType == dt && kl.value == v
             })
           }
@@ -969,12 +975,7 @@ object UWheelRule extends Rule[LogicalPlan] {
             val ok = ws.forall { w =>
               (n.column match {
                 case None => true // any per-value wheel's count is the rows with key = v
-                case Some(c) =>
-                  w.valueColumn.contains(c) && w.valueAllNonNull &&
-                    n.decScale.forall(_ == w.wheel.scale) &&
-                    (n.kind == "sumdec" || n.kind == "avgdec" || n.kind == "min" ||
-                      n.kind == "max" || n.kind == "countcol" || w.valuesExactAtScale) &&
-                    ((n.kind != "min" && n.kind != "max") || w.valuesNaNFree)
+                case Some(c) => w.valueColumn.contains(c) && qualityOk(n, w)
               }) && coverageOk(w) && spanOk(w)
             }
             if (ok) Some(ws) else None
@@ -982,74 +983,27 @@ object UWheelRule extends Rule[LogicalPlan] {
         }
       }
 
-    /** `hll_distinct` over a union of disjoint clipped ranges: combine the
-      * per-range register partials (register max — exact for any union) and
-      * lower once. Zero ranges/rows lower the identity to 0, matching the
-      * SQL aggregate over empty input. */
-    def hllOver(d: DistinctIndexedWheel, bs: Seq[(Long, Long)]): Any = {
-      val parts = bs.map { case (s, e) => d.wheel.combineRange(s, e) }
-      val merged = if (parts.isEmpty) d.agg.identity else parts.reduce(d.agg.combine)
-      Long.box(d.agg.lower(merged))
+    /** The wheel serving need `n` over the rows whose key column equals `v`,
+      * from that column's per-value equality wheel set `keyed` — one lookup
+      * for both per-value GROUP BY arms, whose counting proofs certify the
+      * per-value partition is complete. A numeric need reads a `key = v`
+      * wheel of its measure (any one for COUNT(*)); a typed family's need
+      * reads its per-value KEYED wheel, whose partials saw only that
+      * group's rows ("distinct purchasers per event type", "p99 per event
+      * type"). */
+    def numericForValue(n: Need, keyed: Seq[IndexedWheel], v: Literal): Option[IndexedWheel] = {
+      val cands = keyed.filter(_.scope.filter.keyEq.exists(_._2 == v))
+        .filter(coverageOk).filter(spanOk)
+      n.column match {
+        case None    => cands.headOption
+        case Some(c) => cands.filter(_.valueColumn.contains(c)).find(qualityOk(n, _))
+      }
     }
-
-    /** `hdr_quantile` over a union of disjoint clipped ranges: bin counts
-      * merge additively across the ranges (disjoint ⇒ exact) and lower
-      * once via the aggregate's own arithmetic. Zero rows lower to null,
-      * matching the SQL aggregate over empty input. */
-    def quantileOver(d: QuantileIndexedWheel, bs: Seq[(Long, Long)], q: Double): Any = {
-      val parts = bs.map { case (s, e) => d.wheel.combineRange(s, e) }
-      val merged = if (parts.isEmpty) d.agg.identity else parts.reduce(d.agg.combine)
-      d.agg.quantileOf(merged, q).map(Double.box).orNull
-    }
-
-    /** Point-frequency estimate over the (disjoint) range set: additive
-      * counter merges, then min over the target's d slots — the same
-      * arithmetic the SQL aggregate's flat fold lowers with. */
-    def cmsOver(d: FreqIndexedWheel, bs: Seq[(Long, Long)], target: Long): Any = {
-      val parts = bs.map { case (s, e) => d.wheel.combineRange(s, e) }
-      val merged = if (parts.isEmpty) d.agg.identity else parts.reduce(d.agg.combine)
-      Long.box(d.agg.freqOf(merged, target))
-    }
-
-    /** Moment-wheel serving gates: the wheel must cover every row the scan
-      * would aggregate with the exact value the aggregate would see —
-      * castFail ≠ 0 means rows escaped the fixed-point probe (or would
-      * make the scan throw under ANSI); the scale must equal the query's;
-      * an explicit Cast(… AS DECIMAL(p, s)) additionally needs the absMax
-      * proof that the cast can never overflow (margin 1.0 absorbs the
-      * double image's ulp). */
-    def momentOk(n: Need, d: MomentIndexedWheel): Boolean =
-      d.castFail == 0L &&
-        n.decScale.contains(d.scale) &&
-        n.castP.forall(p =>
-          // p − s ≥ 19 digits always hold |v| < 10^18 (the castFail probe)
-          p - d.scale >= 19 || d.absMax < math.pow(10d, p - d.scale) - 1.0)
-
-    /** wheel_var/stddev over a union of disjoint clipped ranges: moments
-      * merge additively (disjoint ⇒ exact) and lower once via the
-      * aggregator's shared statOf. Zero rows lower to null, matching the
-      * SQL aggregate over empty input. */
-    def momentOver(d: MomentIndexedWheel, bs: Seq[(Long, Long)], stat: String): Any = {
-      val parts = bs.map { case (s, e) => d.wheel.combineRange(s, e) }
-      val merged = if (parts.isEmpty) d.agg.identity else parts.reduce(d.agg.combine)
-      d.agg.statOf(merged, stat).map(Double.box).orNull
-    }
-
-    /** Co-moment serving gates: [[momentOk]]'s contract, per column. */
-    def coMomentOk(n: Need, d: CoMomentIndexedWheel): Boolean = {
-      def castOk(p: Int, scale: Int, absMax: Double): Boolean =
-        p - scale >= 19 || absMax < math.pow(10d, p - scale) - 1.0
-      d.castFail == 0L &&
-        n.decScale.contains(d.scaleX) && n.decScale2.contains(d.scaleY) &&
-        n.castP.forall(castOk(_, d.scaleX, d.absMaxX)) &&
-        n.castP2.forall(castOk(_, d.scaleY, d.absMaxY))
-    }
-
-    def coMomentOver(d: CoMomentIndexedWheel, bs: Seq[(Long, Long)], stat: String): Any = {
-      val parts = bs.map { case (s, e) => d.wheel.combineRange(s, e) }
-      val merged = if (parts.isEmpty) d.agg.identity else parts.reduce(d.agg.combine)
-      d.agg.statOf(merged, stat).map(Double.box).orNull
-    }
+    def srcForValue(n: Need, key: String, keyed: Seq[IndexedWheel], v: Literal): Option[Src] =
+      sketchKinds.get(n.kind) match {
+        case Some(k) => k.forValue(table, n, key, v, spanAligned)
+        case None    => numericForValue(n, keyed, v).map(NumSrc)
+      }
 
     // Collect and classify every aggregate sub-expression in the output.
     val resolvedOutputs: Seq[Expression] = agg.aggregateExpressions.map {
@@ -1202,58 +1156,12 @@ object UWheelRule extends Rule[LogicalPlan] {
           found
       }
       if (values.isEmpty) return None
-      def qualityOk(n: Need, w: IndexedWheel): Boolean =
-        w.valueAllNonNull &&
-          n.decScale.forall(_ == w.wheel.scale) &&
-          (n.kind == "sumdec" || n.kind == "avgdec" || n.kind == "min" ||
-            n.kind == "max" || n.kind == "countcol" || w.valuesExactAtScale) &&
-          ((n.kind != "min" && n.kind != "max") || w.valuesNaNFree)
-      def wheelForValue(n: Need, v: Literal): Option[IndexedWheel] = {
-        val cands = keyed.filter(_.keyEq.exists(_._2 == v))
-          .filter(coverageOk).filter(spanOk)
-        n.column match {
-          case None    => cands.headOption
-          case Some(c) => cands.filter(_.valueColumn.contains(c)).find(qualityOk(n, _))
-        }
-      }
-      def distinctForValue(n: Need): Literal => Option[DistinctIndexedWheel] = v =>
-        n.column.flatMap(c => table.allDistinctWheels.find(d =>
-          d.column == c && d.p == n.hllP &&
-            d.keyEq.exists(ke => ke._1 == keyAttr.name && ke._2 == v)))
-          .filter(d => sketchSpanOk(d.slotSpan))
-      def quantileForValue(n: Need): Literal => Option[QuantileIndexedWheel] = v =>
-        n.column.flatMap(c => table.allQuantileWheels.find(d =>
-          d.column == c && d.s == n.hllP &&
-            d.keyEq.exists(ke => ke._1 == keyAttr.name && ke._2 == v)))
-          .filter(d => sketchSpanOk(d.slotSpan))
-      def momentForValue(n: Need): Literal => Option[MomentIndexedWheel] = v =>
-        n.column.flatMap(c => table.allMomentWheels.find(d =>
-          d.column == c && momentOk(n, d) &&
-            d.keyEq.exists(ke => ke._1 == keyAttr.name && ke._2 == v)))
-          .filter(d => sketchSpanOk(d.slotSpan))
-      def freqForValue(n: Need): Literal => Option[FreqIndexedWheel] = v =>
-        n.column.flatMap(c => table.allFreqWheels.find(d =>
-          d.column == c && d.logW == n.hllP && d.d == n.cmsD &&
-            d.keyEq.exists(ke => ke._1 == keyAttr.name && ke._2 == v)))
-          .filter(d => sketchSpanOk(d.slotSpan))
-      def coMomentForValue(n: Need): Literal => Option[CoMomentIndexedWheel] = v =>
-        (for { cx <- n.column; cy <- n.column2 } yield
-          table.allCoMomentWheels.find(d =>
-            d.columnX == cx && d.columnY == cy && coMomentOk(n, d) &&
-              d.keyEq.exists(ke => ke._1 == keyAttr.name && ke._2 == v))).flatten
-          .filter(d => sketchSpanOk(d.slotSpan))
       val perValue: Map[(Expression, Literal), Src] =
-        (for { (k, n) <- needList.toSeq; v <- values } yield (k, v) -> (n.kind match {
-          case "hll"  => distinctForValue(n)(v).map(HllSrc).getOrElse(return None)
-          case "hdrq" => quantileForValue(n)(v).map(QuantileSrc).getOrElse(return None)
-          case "cms"  => freqForValue(n)(v).map(FreqSrc).getOrElse(return None)
-          case "moment" => momentForValue(n)(v).map(MomentSrc).getOrElse(return None)
-          case "comoment" => coMomentForValue(n)(v).map(CoMomentSrc).getOrElse(return None)
-          case _      => wheelForValue(n, v).map(NumSrc).getOrElse(return None)
-        })).toMap
+        (for { (k, n) <- needList.toSeq; v <- values } yield
+          (k, v) -> srcForValue(n, keyAttr.name, keyed, v).getOrElse(return None)).toMap
       val countNeed = Need(None, "count", None)
       val perValueCount: Map[Literal, Long] = values.map(v =>
-        v -> rangeAggOf(wheelForValue(countNeed, v).getOrElse(return None).wheel).count).toMap
+        v -> rangeAggOf(numericForValue(countNeed, keyed, v).getOrElse(return None).wheel).count).toMap
       // counting proof over the whole range set, anchored on the
       // unfiltered wheel: the per-value partition must be complete.
       // IN-restricted groupings skip it — the residual itself proves the
@@ -1268,13 +1176,9 @@ object UWheelRule extends Rule[LogicalPlan] {
         else {
           val aggValues = needList.map { case (k, n) =>
             val value = perValue((k, v)) match {
-              case NumSrc(w) => n.value(rangeAggOf(w.wheel))
-              case HllSrc(d) => hllOver(d, bounds)
-              case QuantileSrc(d) => quantileOver(d, bounds, n.qArg)
-              case FreqSrc(d) => cmsOver(d, bounds, n.cmsTarget)
-              case MomentSrc(d) => momentOver(d, bounds, n.stat)
-              case CoMomentSrc(d) => coMomentOver(d, bounds, n.stat)
-              case _         => return None
+              case NumSrc(w)          => n.value(rangeAggOf(w.wheel))
+              case SketchSrc(_, over) => over(bounds)
+              case _                  => return None
             }
             k -> (value, dataTypeOf(k))
           }.toMap
@@ -1292,11 +1196,7 @@ object UWheelRule extends Rule[LogicalPlan] {
             case NumSrc(w) => n.value(rangeAggOf(w.wheel))
             // disjoint per-value row sets: additive merge is exact
             case UnionSrc(ws) => n.value(ws.map(w => rangeAggOf(w.wheel)).reduce(_.merge(_)))
-            case HllSrc(d) => hllOver(d, bounds)
-            case QuantileSrc(d) => quantileOver(d, bounds, n.qArg)
-            case FreqSrc(d) => cmsOver(d, bounds, n.cmsTarget)
-            case MomentSrc(d) => momentOver(d, bounds, n.stat)
-            case CoMomentSrc(d) => coMomentOver(d, bounds, n.stat)
+            case SketchSrc(_, over) => over(bounds)
             case DistinctSetSrc(base, pv) =>
               // counting proof over the whole range set, then the exact
               // distinct count is the number of values present in it
@@ -1418,8 +1318,8 @@ object UWheelRule extends Rule[LogicalPlan] {
           if (!nds.values.forall(s =>
             s._2.isInstanceOf[NumSrc] || s._2.isInstanceOf[UnionSrc])) return None
           val uSpans = nds.values.flatMap {
-            case (_, NumSrc(w))    => Seq(w.wheel.slotSpan)
-            case (_, UnionSrc(ws)) => ws.map(_.wheel.slotSpan)
+            case (_, NumSrc(w))    => Seq(w.scope.slotSpan)
+            case (_, UnionSrc(ws)) => ws.map(_.scope.slotSpan)
             case _                 => Nil
           }.toSet
           if (uSpans.exists(sp => bucketSpan % sp != 0)) return None
@@ -1448,7 +1348,7 @@ object UWheelRule extends Rule[LogicalPlan] {
               case (_, n, _: NumSrc, m) if n.ownParts.isEmpty => m
             }.orElse(table.anyForFilter(filterKey)
               .filter(coverageOk).filter(spanOk)
-              .filter(w => bucketSpan % w.wheel.slotSpan == 0)
+              .filter(w => bucketSpan % w.scope.slotSpan == 0)
               .map(w => groupsOf(w.wheel)))
             .orElse(needMaps.collectFirst { case (_, _, _: UnionSrc, m) => m })
             .getOrElse(return None)
@@ -1481,10 +1381,7 @@ object UWheelRule extends Rule[LogicalPlan] {
         // either a single wheel-domain end (hllEndOf) or the piecewise
         // arms' per-key interval enumeration (hllReads); with neither,
         // decline
-        val needHll = nds.values.exists(s =>
-          s._2.isInstanceOf[HllSrc] || s._2.isInstanceOf[QuantileSrc] ||
-            s._2.isInstanceOf[FreqSrc] ||
-            s._2.isInstanceOf[MomentSrc] || s._2.isInstanceOf[CoMomentSrc])
+        val needHll = nds.values.exists(_._2.isInstanceOf[SketchSrc])
         if (needHll && arm.hllEndOf.isEmpty && arm.hllReads.isEmpty)
           return None
         val bucketEndOf = arm.hllEndOf.getOrElse((gs: Long) => gs)
@@ -1502,15 +1399,11 @@ object UWheelRule extends Rule[LogicalPlan] {
         // (incl. coarsened HLL wheels — bucket boundaries must be
         // span-aligned for their register slots too)
         val slotSpans = nds.values.flatMap {
-          case (_, NumSrc(w)) => Seq(w.wheel.slotSpan)
-          case (_, HllSrc(d)) => Seq(d.slotSpan)
-          case (_, QuantileSrc(d)) => Seq(d.slotSpan)
-          case (_, FreqSrc(d)) => Seq(d.slotSpan)
-          case (_, MomentSrc(d)) => Seq(d.slotSpan)
-          case (_, CoMomentSrc(d)) => Seq(d.slotSpan)
-          case (_, DistinctSetSrc(b, pv)) =>
-            b.wheel.slotSpan +: pv.map(_.wheel.slotSpan)
-        }.toSet + enumWheel.wheel.slotSpan
+          case (_, NumSrc(w)) => Seq(w.scope.slotSpan)
+          case (_, SketchSrc(span, _)) => Seq(span)
+          case (_, DistinctSetSrc(b, pv)) => (b +: pv).map(_.scope.slotSpan)
+          case (_, UnionSrc(_)) => return None // served by unionGrouped above
+        }.toSet + enumWheel.scope.slotSpan
         if (slotSpans.exists(sp => bucketSpan % sp != 0)) return None
         // Per-wheel group maps, enumWheel included once (it may also back a
         // need — one enumeration, not two). All wheels must cover the
@@ -1589,42 +1482,17 @@ object UWheelRule extends Rule[LogicalPlan] {
                   // identical-keyset proof above makes m(gs) total; a miss
                   // would throw NoSuchElement → caught by the loop's guard
                   (gs, _, _) => n.value(m(gs))
-              // per-bucket distinct: the bucket clipped against every range
-              // of the union — disjoint clips, so register-max merging is
-              // exactly the distinct over the bucket's qualifying rows
-              case HllSrc(d) =>
+              // per-bucket typed read: the bucket clipped against every
+              // range of the union — disjoint clips, so the partials' merge
+              // is exactly the aggregate over the bucket's qualifying rows
+              case SketchSrc(_, over) =>
                 if (arm.hllEndOf.isDefined)
-                  (gs, gEnd, _) => hllOver(d, bounds.map { case (s, e) =>
-                    (math.max(s, gs), math.min(e, gEnd))
-                  })
-                else (gs, _, _) => hllOver(d, hllReadMap.getOrElse(gs, Nil))
-              case QuantileSrc(d) =>
-                if (arm.hllEndOf.isDefined)
-                  (gs, gEnd, _) => quantileOver(d, bounds.map { case (s, e) =>
-                    (math.max(s, gs), math.min(e, gEnd))
-                  }, n.qArg)
-                else (gs, _, _) => quantileOver(d, hllReadMap.getOrElse(gs, Nil), n.qArg)
-              case FreqSrc(d) =>
-                if (arm.hllEndOf.isDefined)
-                  (gs, gEnd, _) => cmsOver(d, bounds.map { case (s, e) =>
-                    (math.max(s, gs), math.min(e, gEnd))
-                  }, n.cmsTarget)
-                else (gs, _, _) => cmsOver(d, hllReadMap.getOrElse(gs, Nil), n.cmsTarget)
-              case MomentSrc(d) =>
-                if (arm.hllEndOf.isDefined)
-                  (gs, gEnd, _) => momentOver(d, bounds.map { case (s, e) =>
-                    (math.max(s, gs), math.min(e, gEnd))
-                  }, n.stat)
-                else (gs, _, _) => momentOver(d, hllReadMap.getOrElse(gs, Nil), n.stat)
-              case CoMomentSrc(d) =>
-                if (arm.hllEndOf.isDefined)
-                  (gs, gEnd, _) => coMomentOver(d, bounds.map { case (s, e) =>
-                    (math.max(s, gs), math.min(e, gEnd))
-                  }, n.stat)
-                else (gs, _, _) => coMomentOver(d, hllReadMap.getOrElse(gs, Nil), n.stat)
+                  (gs, gEnd, _) => over(bounds.map { case (s, e) => (math.max(s, gs), math.min(e, gEnd)) })
+                else (gs, _, _) => over(hllReadMap.getOrElse(gs, Nil))
               case DistinctSetSrc(_, _) =>
                 val pvCounts = distinctCounts(k)
                 (gs, _, _) => Long.box(pvCounts.count(_.getOrElse(gs, 0L) > 0L))
+              case UnionSrc(_) => return None // served by unionGrouped above
             }
             (k, rd, dataTypeOf(k))
           }
@@ -1672,9 +1540,7 @@ object UWheelRule extends Rule[LogicalPlan] {
           orient(g1, g2).orElse(orient(g2, g1)).getOrElse(return None)
         val (groupFn, keyLit, bucketSpan) = (arm.groupFn, arm.keyLit, arm.fineSpan)
         // sketch needs clip per bucket via hllEndOf or hllReads (1-column arm)
-        val needHll2 = needList.values.exists(n =>
-          n.kind == "hll" || n.kind == "hdrq" || n.kind == "cms" ||
-            n.kind == "moment" || n.kind == "comoment")
+        val needHll2 = needList.values.exists(n => sketchKinds.contains(n.kind))
         if (needHll2 && arm.hllEndOf.isEmpty && arm.hllReads.isEmpty)
           return None
         val bucketEndOf = arm.hllEndOf.getOrElse((gs: Long) => gs)
@@ -1682,78 +1548,18 @@ object UWheelRule extends Rule[LogicalPlan] {
         val values: Seq[Literal] = allValues.filter(_.dataType == keyAttr.dataType)
         if (values.isEmpty) return None
 
-        def qualityOk(n: Need, w: IndexedWheel): Boolean =
-          w.valueAllNonNull &&
-            n.decScale.forall(_ == w.wheel.scale) &&
-            (n.kind == "sumdec" || n.kind == "avgdec" || n.kind == "min" ||
-              n.kind == "max" || n.kind == "countcol" || w.valuesExactAtScale) &&
-            ((n.kind != "min" && n.kind != "max") || w.valuesNaNFree)
-        def wheelForValue(n: Need, v: Literal): Option[IndexedWheel] = {
-          val cands = keyed.filter(_.keyEq.exists(_._2 == v))
-            .filter(coverageOk).filter(spanOk)
-          n.column match {
-            case None    => cands.headOption // COUNT(*): any wheel of this value
-            case Some(c) => cands.filter(_.valueColumn.contains(c)).find(qualityOk(n, _))
-          }
-        }
-        // hll_distinct routes to the per-value KEYED distinct wheel (its
-        // registers saw only rows with keyAttr = v); the counting proof
-        // below certifies the per-value partition is complete, so the
-        // per-(bucket, value) register merge is exactly the aggregate over
-        // that group's rows
-        def distinctForValue(n: Need, v: Literal): Option[DistinctIndexedWheel] =
-          n.column.flatMap(c => table.allDistinctWheels.find(d =>
-            d.column == c && d.p == n.hllP &&
-              d.keyEq.exists(ke => ke._1 == keyAttr.name && ke._2 == v)))
-            .filter(d => sketchSpanOk(d.slotSpan))
-        // per-value KEYED quantile wheel, routed by keyEq like the distinct
-        // wheels ("p99 per event type")
-        def quantileForValue(n: Need, v: Literal): Option[QuantileIndexedWheel] =
-          n.column.flatMap(c => table.allQuantileWheels.find(d =>
-            d.column == c && d.s == n.hllP &&
-              d.keyEq.exists(ke => ke._1 == keyAttr.name && ke._2 == v)))
-            .filter(d => sketchSpanOk(d.slotSpan))
-        // per-value KEYED moment wheel, routed by keyEq like the other
-        // typed families ("value variance per event type")
-        def momentForValue(n: Need, v: Literal): Option[MomentIndexedWheel] =
-          n.column.flatMap(c => table.allMomentWheels.find(d =>
-            d.column == c && momentOk(n, d) &&
-              d.keyEq.exists(ke => ke._1 == keyAttr.name && ke._2 == v)))
-            .filter(d => sketchSpanOk(d.slotSpan))
-        def coMomentForValue(n: Need, v: Literal): Option[CoMomentIndexedWheel] =
-          (for { cx <- n.column; cy <- n.column2 } yield
-            table.allCoMomentWheels.find(d =>
-              d.columnX == cx && d.columnY == cy && coMomentOk(n, d) &&
-                d.keyEq.exists(ke => ke._1 == keyAttr.name && ke._2 == v))).flatten
-            .filter(d => sketchSpanOk(d.slotSpan))
-        // per-value KEYED frequency wheel ("user 42's clicks per day")
-        def freqForValue(n: Need, v: Literal): Option[FreqIndexedWheel] =
-          n.column.flatMap(c => table.allFreqWheels.find(d =>
-            d.column == c && d.logW == n.hllP && d.d == n.cmsD &&
-              d.keyEq.exists(ke => ke._1 == keyAttr.name && ke._2 == v)))
-            .filter(d => sketchSpanOk(d.slotSpan))
         val perValue: Map[(Expression, Literal), Src] =
-          (for { (k, n) <- needList.toSeq; v <- values } yield (k, v) -> (n.kind match {
-            case "hll"  => distinctForValue(n, v).map(HllSrc).getOrElse(return None)
-            case "hdrq" => quantileForValue(n, v).map(QuantileSrc).getOrElse(return None)
-            case "cms"  => freqForValue(n, v).map(FreqSrc).getOrElse(return None)
-            case "moment" => momentForValue(n, v).map(MomentSrc).getOrElse(return None)
-            case "comoment" => coMomentForValue(n, v).map(CoMomentSrc).getOrElse(return None)
-            case _      => wheelForValue(n, v).map(NumSrc).getOrElse(return None)
-          })).toMap
+          (for { (k, n) <- needList.toSeq; v <- values } yield
+            (k, v) -> srcForValue(n, keyAttr.name, keyed, v).getOrElse(return None)).toMap
 
         // unfiltered wheel: enumerates ALL buckets and anchors the proof
         val baseW = table.anyForFilter("").filter(coverageOk).filter(spanOk)
           .getOrElse(return None)
         val spans2 = perValue.values.map {
-          case NumSrc(w) => w.wheel.slotSpan
-          case HllSrc(d) => d.slotSpan
-          case QuantileSrc(d) => d.slotSpan
-          case FreqSrc(d) => d.slotSpan
-          case MomentSrc(d) => d.slotSpan
-          case CoMomentSrc(d) => d.slotSpan
+          case NumSrc(w) => w.scope.slotSpan
+          case SketchSrc(span, _) => span
           case _: DistinctSetSrc | _: UnionSrc => return None // declined above
-        }.toSet + baseW.wheel.slotSpan
+        }.toSet + baseW.scope.slotSpan
         if (spans2.exists(sp => bucketSpan % sp != 0)) return None
         def groupsOf2(hw: HawWheel): Map[Long, RangeAgg] = {
           // decline BEFORE any row: this arm's output is bucket × value
@@ -1770,7 +1576,7 @@ object UWheelRule extends Rule[LogicalPlan] {
         val allBuckets = groupsCached(baseW.wheel)
         val valueCount: Map[Literal, Map[Long, RangeAgg]] = values.map { v =>
           v -> groupsCached(
-            wheelForValue(Need(None, "count", None), v).getOrElse(return None).wheel)
+            numericForValue(Need(None, "count", None), keyed, v).getOrElse(return None).wheel)
         }.toMap
         // the counting proof, both directions: per-value buckets are a
         // subset of the enumeration, and every bucket's count decomposes
@@ -1798,36 +1604,10 @@ object UWheelRule extends Rule[LogicalPlan] {
                 val value = perValue((k, v)) match {
                   case NumSrc(w) =>
                     n.value(groupsCached(w.wheel).getOrElse(b, return None))
-                  case HllSrc(d) =>
+                  case SketchSrc(_, over) =>
                     if (arm.hllEndOf.isDefined)
-                      hllOver(d, bounds.map { case (s, e) =>
-                        (math.max(s, b), math.min(e, bEnd))
-                      })
-                    else hllOver(d, hllReadMap2.getOrElse(b, Nil))
-                  case QuantileSrc(d) =>
-                    if (arm.hllEndOf.isDefined)
-                      quantileOver(d, bounds.map { case (s, e) =>
-                        (math.max(s, b), math.min(e, bEnd))
-                      }, n.qArg)
-                    else quantileOver(d, hllReadMap2.getOrElse(b, Nil), n.qArg)
-                  case FreqSrc(d) =>
-                    if (arm.hllEndOf.isDefined)
-                      cmsOver(d, bounds.map { case (s, e) =>
-                        (math.max(s, b), math.min(e, bEnd))
-                      }, n.cmsTarget)
-                    else cmsOver(d, hllReadMap2.getOrElse(b, Nil), n.cmsTarget)
-                  case MomentSrc(d) =>
-                    if (arm.hllEndOf.isDefined)
-                      momentOver(d, bounds.map { case (s, e) =>
-                        (math.max(s, b), math.min(e, bEnd))
-                      }, n.stat)
-                    else momentOver(d, hllReadMap2.getOrElse(b, Nil), n.stat)
-                  case CoMomentSrc(d) =>
-                    if (arm.hllEndOf.isDefined)
-                      coMomentOver(d, bounds.map { case (s, e) =>
-                        (math.max(s, b), math.min(e, bEnd))
-                      }, n.stat)
-                    else coMomentOver(d, hllReadMap2.getOrElse(b, Nil), n.stat)
+                      over(bounds.map { case (s, e) => (math.max(s, b), math.min(e, bEnd)) })
+                    else over(hllReadMap2.getOrElse(b, Nil))
                   case _ => return None // declined above
                 }
                 k -> (value, dataTypeOf(k))
@@ -2877,7 +2657,7 @@ object UWheelRule extends Rule[LogicalPlan] {
     // no wheel consulted
     if (ranges.isEmpty) return Some(LocalRelation(f.output, Nil))
     if (!ranges.exists(_.isBounded)) return None
-    val cw = table.countWheel.filter(_.coverage.isEmpty).getOrElse(return None)
+    val cw = table.countWheel.filter(_.scope.coverage.isEmpty).getOrElse(return None)
     // Coarsened wheels: widen to slot boundaries — a superset range, so
     // count==0 / min-max contradictions remain sound proofs of emptiness.
     def alignedBounds(r: graft.expr.SecRange, span: Long): (Long, Long) = {
@@ -2900,10 +2680,11 @@ object UWheelRule extends Rule[LogicalPlan] {
     // the count already proves empty contributes no rows and passes)
     val provenEmpty = Extract.minMaxPreds(residual).exists { p =>
       table.minMaxWheel(p.column)
-        .filter(_.coverage.isEmpty)
+        .filter(_.scope.coverage.isEmpty)
         // a NaN row satisfies `col > k` under Spark's ordering but is
-        // invisible to the wheel's min/max — never prune NaN-bearing wheels
-        .filter(_.valuesNaNFree)
+        // invisible to the wheel's range min/max — never prune NaN-bearing
+        // wheels
+        .filter(_.facts.valuesNaNFree)
         .exists { w =>
           ranges.forall { r =>
             val (ws, we) = alignedBounds(r, w.wheel.slotSpan)

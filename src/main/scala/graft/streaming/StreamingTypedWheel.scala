@@ -7,7 +7,7 @@ import scala.reflect.ClassTag
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.index.{DistinctIndexedWheel, FamilyWheel, FreqIndexedWheel, MomentIndexedWheel, QuantileIndexedWheel, TableIndex, TopKIndexedWheel, TypedWheelBuild, WheelFamily, WheelKey, WheelRegistry}
+import graft.index.{FamilyWheel, SketchFacts, SketchWheel, TableIndex, TopKIndexedWheel, TypedWheelBuild, WheelFamily, WheelKey, WheelRegistry, WheelScope}
 import graft.wheel.{TypedHawWheel, TypedRwWheel, WheelAggregator, WheelAggregators}
 
 /** Continuously-maintained TYPED wheel over a Structured Streaming source —
@@ -48,8 +48,7 @@ final class StreamingTypedWheel[In, P: ClassTag, Out](
   /** The column this wheel registers under. */
   private var column: String = _
   // moment publish gates
-  private var momCastFail: Long = 0L
-  private var momAbsMax: Double = 0.0
+  private var facts: SketchFacts = momProbe.fold(SketchFacts())(_ => SketchFacts(0L, List(0.0)))
   // heavy-hitter publish gate: rows with a live time but a NULL key,
   // skipped by the wheel — the optimizer's topK arm serves only when 0
   // (a GROUP BY key query has a NULL group the summary cannot see)
@@ -91,29 +90,17 @@ final class StreamingTypedWheel[In, P: ClassTag, Out](
     _ == own
   }
 
-  /** Adds THIS publisher's sketch family. P/Out are fixed by the agg the
-    * wheel was constructed with, so these casts are sound by construction. */
+  /** Adds THIS publisher's entry, over its column and unfiltered. P/Out are
+    * fixed by the agg the wheel was constructed with, so the casts are
+    * sound by construction. */
   protected def ownFamiliesInto(t: TableIndex): Unit = {
-    val snap = snapshot()
-    agg match {
-      case h: WheelAggregators.HllDistinct =>
-        t.put(WheelFamily.Hll, DistinctIndexedWheel(
-          snap.asInstanceOf[TypedHawWheel[Array[Byte], Long]], column, h))
-      case m: WheelAggregators.MomentStats =>
-        t.put(WheelFamily.Moment, MomentIndexedWheel(
-          snap.asInstanceOf[TypedHawWheel[WheelAggregators.Moments, WheelAggregators.Moments]],
-          column, m, momCastFail, momAbsMax))
-      case c: WheelAggregators.CmsFreq =>
-        t.put(WheelFamily.Cms, FreqIndexedWheel(
-          snap.asInstanceOf[TypedHawWheel[Array[Byte], Array[Byte]]], column, c))
-      case k: WheelAggregators.TopTalkers =>
-        t.put(WheelFamily.TopK, TopKIndexedWheel(
-          snap.asInstanceOf[TypedHawWheel[WheelAggregators.TopKSummary, WheelAggregators.TopKSummary]],
-          column, k, keyNullCount = topkNullKeys))
-      case q: WheelAggregators.HdrQuantile =>
-        t.put(WheelFamily.Hdr, QuantileIndexedWheel(
-          snap.asInstanceOf[TypedHawWheel[Array[Byte], Array[Byte]]], column, q))
-    }
+    val scope = WheelScope(List(column))
+    t.put(family.asInstanceOf[WheelFamily[FamilyWheel]], agg match {
+      case k: WheelAggregators.TopTalkers => TopKIndexedWheel(scope,
+        snapshot().asInstanceOf[TypedHawWheel[WheelAggregators.TopKSummary, WheelAggregators.TopKSummary]],
+        k, topkNullKeys)
+      case _ => SketchWheel(scope, snapshot(), agg, facts)
+    })
   }
 
   /** The aggregator kind (and its parameters: a different HLL precision
@@ -137,7 +124,7 @@ final class StreamingTypedWheel[In, P: ClassTag, Out](
     * gate (top-k wheels). */
   protected def writeState(o: ObjectOutputStream): Unit = {
     o.writeObject(live)
-    if (momProbe.isDefined) { o.writeLong(momCastFail); o.writeDouble(momAbsMax) }
+    if (momProbe.isDefined) { o.writeLong(facts.castFail); o.writeDouble(facts.absMax.head) }
     if (agg.isInstanceOf[WheelAggregators.TopTalkers]) o.writeLong(topkNullKeys)
   }
 
@@ -146,10 +133,7 @@ final class StreamingTypedWheel[In, P: ClassTag, Out](
     * the fresh-instance guard still holds for non-idempotent aggregators. */
   protected def readState(in: ObjectInputStream): Long = {
     live.merge(in.readObject().asInstanceOf[TypedRwWheel[In, P, Out]])
-    if (momProbe.isDefined) {
-      momCastFail += in.readLong()
-      momAbsMax = math.max(momAbsMax, in.readDouble())
-    }
+    if (momProbe.isDefined) facts = facts ++ SketchFacts(in.readLong(), List(in.readDouble()))
     if (agg.isInstanceOf[WheelAggregators.TopTalkers]) topkNullKeys += in.readLong()
     live.watermark
   }
@@ -179,10 +163,7 @@ final class StreamingTypedWheel[In, P: ClassTag, Out](
             if (r.isNullAt(1)) 0.0 else r.getDouble(1))
         }
         ingest {
-          probe.foreach { case (fails, am) =>
-            momCastFail += fails
-            momAbsMax = math.max(momAbsMax, am)
-          }
+          probe.foreach { case (fails, am) => facts = facts ++ SketchFacts(fails, List(am)) }
           topkNullKeys += nullKeys
           live.merge(bw)
         }

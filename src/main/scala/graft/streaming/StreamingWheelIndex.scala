@@ -5,7 +5,7 @@ import java.io.{ObjectInputStream, ObjectOutputStream}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.index.{IndexedWheel, NumericPart, PartAcc, PartFilter, TableIndex, UWheelIndex, WheelKey, WheelRegistry}
+import graft.index.{IndexedWheel, NumericPart, PartAcc, PartFilter, TableIndex, UWheelIndex, WheelKey, WheelRegistry, WheelScope}
 import graft.index.WheelFamily.Numeric
 import graft.wheel.HawWheel
 
@@ -59,9 +59,10 @@ final class StreamingWheelIndex(
   // raw names and the keyed parts have no filter key, so only part 0
   // publishes.
   private var parts: IndexedSeq[NumericPart] =
-    NumericPart(Numeric, valueColumn, PartFilter(), None, scale) +:
-      keyedWheels.map { case (m, sql) => NumericPart(Numeric, Some(m), PartFilter(Some(sql)), None, scale) }
-        .toIndexedSeq
+    NumericPart(Numeric, WheelScope(valueColumn.toList), scale) +:
+      keyedWheels.map { case (m, sql) =>
+        NumericPart(Numeric, WheelScope(List(m), PartFilter(Some(sql))), scale)
+      }.toIndexedSeq
   private var attached = false
   // all guarded by the ingest lock
   private var live: IndexedSeq[NumericPart#Acc] = parts.map(_.newAcc())
@@ -116,8 +117,7 @@ final class StreamingWheelIndex(
   protected def ownFamiliesInto(t: TableIndex): Unit = published.foreach { i =>
     val w = frozenPart(i)
     t.put(Numeric, w)
-    if (i == 0 && w.valueColumn.isDefined)
-      t.put(Numeric, IndexedWheel(w.wheel, None, "", valueAllNonNull = true))
+    if (i == 0 && w.valueColumn.isDefined) t.put(Numeric, UWheelIndex.countSharing(w, None))
   }
 
   /** Exclusively ours: the keyed wheels and the measure wheel, under its
@@ -129,7 +129,7 @@ final class StreamingWheelIndex(
     * count left beside sketch families alone. */
   protected def withdraws(cur: TableIndex): WheelKey => Boolean = {
     val excl: Set[WheelKey] =
-      (published.tail.map(i => WheelKey(Numeric, parts(i).valueColumn.toList, parts(i).filter.key)) ++
+      (published.tail.map(i => WheelKey(Numeric, parts(i).scope.columns, parts(i).filter.key)) ++
         (parts.head.valueColumn ++ valueColumn).map(k => WheelKey(Numeric, List(k), ""))).toSet
     val count = WheelKey(Numeric, Nil, "")
     val othersNumeric = cur.allWheels.map(Numeric.keyOf).exists(k => !excl(k) && k != count)
@@ -137,7 +137,7 @@ final class StreamingWheelIndex(
   }
 
   protected def configSig: String =
-    s"swi-v2|$timeColumn|${valueColumn.getOrElse("")}|$scale|$slotSpanSec|" +
+    s"swi-v3|$timeColumn|${valueColumn.getOrElse("")}|$scale|$slotSpanSec|" +
       keyedWheels.map { case (c, f) => s"$c=$f" }.mkString(";")
 
   /** The parts' accumulators (slots and value-quality flags) and the
@@ -171,11 +171,9 @@ final class StreamingWheelIndex(
     * their canonical form against the stream's schema, which matches the
     * batch table's. */
   def attach(stream: DataFrame, queryName: String): StreamingQuery = {
-    def part(m: Option[String], filter: PartFilter): NumericPart = m match {
-      case Some(s) =>
-        val (mk, ex) = UWheelIndex.colOrExprKeyOf(stream, s)
-        NumericPart(Numeric, Some(mk), filter, None, scale, ex)
-      case None => NumericPart(Numeric, None, filter, None, scale)
+    def part(m: Option[String], filter: PartFilter): NumericPart = {
+      val keyed = m.map(UWheelIndex.colOrExprKeyOf(stream, _)).toList
+      NumericPart(Numeric, WheelScope(keyed.map(_._1), filter, keyed.map(_._2)), scale)
     }
     val resolved = part(valueColumn, PartFilter()) +:
       keyedWheels.map { case (m, sql) => part(Some(m), PartFilter.of(stream, sql)) }.toIndexedSeq

@@ -168,8 +168,8 @@ final class RwWheel private ()
     slot.count += 1
     if (hasValues) {
       slot.sumScaled = Math.addExact(slot.sumScaled, math.rint(value * scaleFactor).toLong)
-      if (value < slot.min) slot.min = value
-      if (value > slot.max) slot.max = value
+      if (RwWheel.sparkCompare(value, slot.min) < 0) slot.min = value
+      if (RwWheel.sparkCompare(value, slot.max) > 0) slot.max = value
     }
   }
 
@@ -188,8 +188,8 @@ final class RwWheel private ()
     slot.count = Math.addExact(slot.count, count)
     if (hasValues) {
       slot.sumScaled = Math.addExact(slot.sumScaled, sumScaled)
-      if (min < slot.min) slot.min = min
-      if (max > slot.max) slot.max = max
+      if (RwWheel.sparkCompare(min, slot.min) < 0) slot.min = min
+      if (RwWheel.sparkCompare(max, slot.max) > 0) slot.max = max
     }
   }
 
@@ -220,8 +220,8 @@ final class RwWheel private ()
       val slot = slots.getOrElseUpdate(sec, new Slot)
       slot.count = Math.addExact(slot.count, o.count)
       slot.sumScaled = Math.addExact(slot.sumScaled, o.sumScaled)
-      if (o.min < slot.min) slot.min = o.min
-      if (o.max > slot.max) slot.max = o.max
+      if (RwWheel.sparkCompare(o.min, slot.min) < 0) slot.min = o.min
+      if (RwWheel.sparkCompare(o.max, slot.max) > 0) slot.max = o.max
     }
     if (other.watermarkMs > watermarkMs) watermarkMs = other.watermarkMs
     if (other.newestSec > newestSec) newestSec = other.newestSec
@@ -263,6 +263,13 @@ final class RwWheel private ()
 }
 
 object RwWheel {
+  /** Spark's order on doubles, in which every slot min/max combines: NaN
+    * above every value, -0.0 equal to 0.0. A slot then keeps the same
+    * extrema however its rows fall into partitions or batches — a NaN
+    * max survives a merge as it survives Spark's per-slot aggregate. */
+  private[graft] def sparkCompare(x: Double, y: Double): Int =
+    if (x == y) 0 else java.lang.Double.compare(x, y)
+
   /** Write-ahead horizon in seconds — the reference's ring capacity
     * (`lib.rs:978-982`). */
   final val DefaultWriteAheadSlots: Long = 65536L

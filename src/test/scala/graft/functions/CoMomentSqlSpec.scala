@@ -138,6 +138,39 @@ class CoMomentSqlSpec extends AnyFunSuite {
     assert(const.isNullAt(0))
   }
 
+  test("GROUP BY bucket × key and key-only route to per-value keyed co-moment wheels") {
+    setup
+    val p = java.nio.file.Files.createTempDirectory("graft-comoment-keyed").toString + "/li3.parquet"
+    spark.read.parquet(s"$dir/lineitem.parquet")
+      .selectExpr("l_shipdate",
+        "CAST(l_quantity AS DECIMAL(12,2)) AS qty",
+        "CAST(l_extendedprice AS DECIMAL(18,2)) AS price",
+        "l_returnflag AS rf")
+      .write.parquet(p)
+    spark.read.parquet(p).createOrReplaceTempView("li3")
+    val flags = spark.read.parquet(p).select("rf").distinct().collect().map(_.getString(0)).sorted
+    assert(flags.length > 1)
+    flags.foldLeft(UWheelBuilder("l_shipdate", Seq("qty"))) { (b, f) =>
+      b.withKeyedWheel(graft.index.IndexBuilder("qty", Some(s"rf = '$f'")))
+        .withKeyedCoMomentWheel("qty", "price", s"rf = '$f'")
+    }.build(spark, p)
+    val bucketed =
+      s"""SELECT date_trunc('month', l_shipdate) AS m, rf, wheel_corr(qty, price) AS r,
+         |       wheel_covar_samp(qty, price) AS cs, count(*) AS cnt
+         |FROM li3 WHERE $range GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
+    assertRewritten(spark.sql(bucketed))
+    val (on, off) = onOff(bucketed)
+    assert(on.toSeq === off.toSeq)
+    assert(on.nonEmpty)
+    val keyOnly =
+      s"""SELECT rf, wheel_covar_pop(qty, price) AS cp, count(*) AS cnt
+         |FROM li3 WHERE $range GROUP BY 1 ORDER BY 1""".stripMargin
+    assertRewritten(spark.sql(keyOnly))
+    val (on2, off2) = onOff(keyOnly)
+    assert(on2.toSeq === off2.toSeq)
+    assert(on2.length === flags.length)
+  }
+
   test("NULL pair discipline: a row counts only when BOTH values are non-null") {
     setup
     Graft.rewritesEnabled = false

@@ -59,7 +59,7 @@ class DecimalWheelSpec extends AnyFunSuite {
     val t = UWheelBuilder("ts", Seq("amount")).build(spark, p)
     // wheel scale is the column's own, not the config default
     assert(t.minMaxWheel("amount").get.wheel.scale === 2)
-    assert(t.minMaxWheel("amount").get.valuesExactAtScale,
+    assert(t.minMaxWheel("amount").get.facts.valuesExactAtScale,
       "cents-scale decimals round-trip through double exactly")
 
     val q = spark.read.parquet(p)
@@ -131,7 +131,7 @@ class DecimalWheelSpec extends AnyFunSuite {
 
     val t = UWheelBuilder("ts", Seq("amount")).build(spark, p)
     assert(t.minMaxWheel("amount").get.wheel.scale === 7)
-    assert(!t.minMaxWheel("amount").get.valuesExactAtScale,
+    assert(!t.minMaxWheel("amount").get.facts.valuesExactAtScale,
       "18-digit decimals must be flagged double-inexact")
 
     def base_(cols: org.apache.spark.sql.Column*): DataFrame = spark.read.parquet(p)

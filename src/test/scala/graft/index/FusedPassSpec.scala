@@ -79,11 +79,11 @@ class FusedPassSpec extends AnyFunSuite {
     val t = WheelRegistry.lookup(path).get
     val df = spark.read.parquet(path)
     val parts = t.allWheels.filter(_.valueColumn.isDefined).map(BuildPart.of(WheelFamily.Numeric, _)) ++
-      t.allDistinctWheels.map(BuildPart.of(WheelFamily.Hll, _))
+      t.all(WheelFamily.Hll).map(BuildPart.of(WheelFamily.Hll, _))
     val plans = Seq(UWheelIndex.planFused(df, "ts", parts),
-      UWheelIndex.planFused(df, "ts", Seq(NumericPart(WheelFamily.Millis, Some("value"), PartFilter(), None, 2)),
+      UWheelIndex.planFused(df, "ts", Seq(NumericPart(WheelFamily.Millis, WheelScope(List("value")), 2)),
         slotExprOverride = Some(UWheelIndex.msExprOf(df, "ts")), prefix = "_m"))
-    val topK = t.allTopKWheels.map(w => (F.col(w.column).cast("long"), w.filterSql.map(F.expr), w.agg))
+    val topK = t.allTopKWheels.map(w => (F.col(w.column).cast("long"), w.scope.filter.sql.map(F.expr), w.agg))
     for (spread <- Seq(true, false)) {
       // the physical plan before adaptive execution wraps it
       val plan = UWheelIndex.projectFused(df, "ts", plans, topK, spread).queryExecution.sparkPlan

@@ -109,9 +109,9 @@ class TopKWheelSpec extends AnyFunSuite {
       val df = spark.read.parquet(p).where(col("ts").isNotNull && col("uid").isNull)
       assert(t.allTopKWheels.size === 3)
       for (tw <- t.allTopKWheels) {
-        val want = tw.filterSql.fold(df)(df.where).count()
+        val want = tw.scope.filter.sql.fold(df)(df.where).count()
         assert(want > 0L)
-        assert(tw.keyNullCount === want, s"${tw.column} ${tw.filterSql}")
+        assert(tw.keyNullCount === want, s"${tw.column} ${tw.scope.filter.sql}")
       }
     }
     val conf = UWheelBuilder("ts").withTopKWheel("uid")

@@ -88,9 +88,10 @@ class WheelAppendSpec extends AnyFunSuite {
       val span = o.wheel.slotSpan
       same(g.wheel, HawWheel.fromSecondPartials(o.wheel.slotPartials ++ d.wheel.slotPartials,
         o.wheel.scale, o.wheel.hasValues, span, got.packLevels), s"$f ${o.columns} ${o.filterKey}")
-      assert((g.valueAllNonNull, g.valuesExactAtScale, g.valuesNaNFree) ===
-        ((o.valueAllNonNull && d.valueAllNonNull, o.valuesExactAtScale && d.valuesExactAtScale,
-          o.valuesNaNFree && d.valuesNaNFree)))
+      assert((g.facts.valueAllNonNull, g.facts.valuesExactAtScale, g.facts.valuesNaNFree) ===
+        ((o.facts.valueAllNonNull && d.facts.valueAllNonNull,
+          o.facts.valuesExactAtScale && d.facts.valuesExactAtScale,
+          o.facts.valuesNaNFree && d.facts.valuesNaNFree)))
     }
     assert(got.tsAllNonNull === (old.tsAllNonNull && delta.tsAllNonNull))
     def typed[W <: TypedFamilyWheel](f: WheelFamily[W])(merge: (W, W) => AnyRef): Unit =
@@ -104,17 +105,18 @@ class WheelAppendSpec extends AnyFunSuite {
     typed(TopK)((o, d) => TypedHawWheel.fromSecondPartials(o.wheel.slotPartials ++ d.wheel.slotPartials, o.agg))
     typed(Moment)((o, d) => TypedHawWheel.fromSecondPartials(o.wheel.slotPartials ++ d.wheel.slotPartials, o.agg))
     typed(CoMoment)((o, d) => TypedHawWheel.fromSecondPartials(o.wheel.slotPartials ++ d.wheel.slotPartials, o.agg))
-    for (o <- old.allMomentWheels) {
-      val g = got.momentWheel(o.column, o.filterKey).get
-      val d = delta.momentWheel(o.column, o.filterKey).get
+    for (o <- old.all(Moment)) {
+      val g = got.momentWheel(o.columns.head, o.filterKey).get
+      val d = delta.momentWheel(o.columns.head, o.filterKey).get
       // absMax is NaN once a NaN was seen: compare bit patterns
-      assert((g.castFail, java.lang.Double.doubleToLongBits(g.absMax)) === ((o.castFail + d.castFail,
-        java.lang.Double.doubleToLongBits(math.max(o.absMax, d.absMax)))))
+      assert((g.facts.castFail, java.lang.Double.doubleToLongBits(g.facts.absMax.head)) ===
+        ((o.facts.castFail + d.facts.castFail,
+          java.lang.Double.doubleToLongBits(math.max(o.facts.absMax.head, d.facts.absMax.head)))))
     }
-    for (o <- old.allCoMomentWheels) {
-      val g = got.coMomentWheel(o.columnX, o.columnY, o.filterKey).get
-      val d = delta.coMomentWheel(o.columnX, o.columnY, o.filterKey).get
-      assert(g.castFail === o.castFail + d.castFail)
+    for (o <- old.all(CoMoment)) {
+      val g = got.coMomentWheel(o.columns(0), o.columns(1), o.filterKey).get
+      val d = delta.coMomentWheel(o.columns(0), o.columns(1), o.filterKey).get
+      assert(g.facts.castFail === o.facts.castFail + d.facts.castFail)
     }
     for (o <- old.allTopKWheels)
       assert(got.topKWheel(o.column, o.filterKey).get.keyNullCount ===

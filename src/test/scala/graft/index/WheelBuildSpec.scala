@@ -71,9 +71,9 @@ class WheelBuildSpec extends AnyFunSuite {
         ((t: TableIndex) => t.get(Some("value"), "").get, "value"))) {
       val a = get(t7); val b = get(t1)
       assert(profile(a.wheel) === profile(b.wheel), label)
-      assert(a.valueAllNonNull === b.valueAllNonNull, label)
-      assert(a.valuesExactAtScale === b.valuesExactAtScale, label)
-      assert(a.valuesNaNFree === b.valuesNaNFree, label)
+      assert(a.facts.valueAllNonNull === b.facts.valueAllNonNull, label)
+      assert(a.facts.valuesExactAtScale === b.facts.valuesExactAtScale, label)
+      assert(a.facts.valuesNaNFree === b.facts.valuesNaNFree, label)
     }
     assert(t7.tsAllNonNull === t1.tsAllNonNull)
     assert(t7.tsAllNonNull === false) // the NULL-ts row was seen on some partition
@@ -124,9 +124,9 @@ class WheelBuildSpec extends AnyFunSuite {
     val p = writeRows(rows.toDF("ts", "value"), 3)
     val t = UWheelBuilder("ts", Seq("value")).build(spark, p)
     val w = t.minMaxWheel("value").get
-    assert(!w.valuesNaNFree)
-    assert(!w.valuesExactAtScale)
-    assert(w.valueAllNonNull)
+    assert(!w.facts.valuesNaNFree)
+    assert(!w.facts.valuesExactAtScale)
+    assert(w.facts.valueAllNonNull)
     assert(t.countWheel.get.wheel.landmark.count === 3L)
   }
 }

@@ -246,6 +246,22 @@ class WheelIndexIOSpec extends AnyFunSuite {
     assert(WheelRegistry.isEmpty)
   }
 
+  test("a file saved before the one-scope entries fails load as stale") {
+    // saved by the build before TableIndex's SerialVersionUID moved to 3:
+    // every family, among them a keyed numeric wheel, a keyed HLL wheel
+    // and an expression wheel, in the per-family entry classes
+    val res = getClass.getResource("/graft/index/typed-wheels-v2.wheelidx")
+    assert(res != null, "fixture missing")
+    WheelRegistry.clear()
+    val e = intercept[java.io.InvalidObjectException] {
+      WheelIndexIO.load(spark, java.nio.file.Paths.get(res.toURI).toString)
+    }
+    assert(e.getMessage.contains("stale index format"), e.getMessage)
+    assert(e.getMessage.contains("rebuild"), e.getMessage)
+    assert(e.getMessage.contains("graft.index.TableIndex"), e.getMessage)
+    assert(WheelRegistry.isEmpty)
+  }
+
   test("indexes built from relative and file:/// roots serve queries and refresh by appending") {
     spark.sparkContext.setLogLevel("WARN")
     graft.Graft.enable(spark)

@@ -112,14 +112,41 @@ class WheelRebuildSpec extends AnyFunSuite {
     for (f <- Seq[WheelFamily[_ <: FamilyWheel]](Numeric, Hll, Hdr, Cms, Moment, CoMoment, TopK))
       assert(cold.all(f).exists(_.filterKey.nonEmpty), f)
     assert(cold.allMsWheels.nonEmpty)
-    assert(cold.allWheels.exists(_.exprSql.isDefined) && cold.allDistinctWheels.exists(_.exprSql.isDefined) &&
-      cold.allQuantileWheels.exists(_.exprSql.isDefined) && cold.allFreqWheels.exists(_.exprSql.isDefined) &&
-      cold.allMomentWheels.exists(_.exprSql.isDefined) && cold.allCoMomentWheels.exists(_.exprSqlX.isDefined) &&
-      cold.allCoMomentWheels.exists(_.exprSqlY.isDefined))
-    assert(cold.allWheels.exists(_.coverage.isDefined))
-    assert(cold.allWheels.exists(w => !w.valueAllNonNull) && cold.allWheels.exists(w => !w.valuesNaNFree) &&
-      cold.allWheels.exists(w => !w.valuesExactAtScale))
-    assert(cold.allMomentWheels.exists(_.castFail > 0) && cold.allCoMomentWheels.exists(_.castFail > 0))
+    assert(cold.allWheels.exists(_.scope.exprSql.exists(_.isDefined)) &&
+      cold.all(Hll).exists(_.scope.exprSql.exists(_.isDefined)) &&
+      cold.all(Hdr).exists(_.scope.exprSql.exists(_.isDefined)) &&
+      cold.all(Cms).exists(_.scope.exprSql.exists(_.isDefined)) &&
+      cold.all(Moment).exists(_.scope.exprSql.exists(_.isDefined)) &&
+      cold.all(CoMoment).exists(_.scope.exprSql(0).isDefined) &&
+      cold.all(CoMoment).exists(_.scope.exprSql(1).isDefined))
+    assert(cold.allWheels.exists(_.scope.coverage.isDefined))
+    assert(cold.allWheels.exists(w => !w.facts.valueAllNonNull) && cold.allWheels.exists(w => !w.facts.valuesNaNFree) &&
+      cold.allWheels.exists(w => !w.facts.valuesExactAtScale))
+    assert(cold.all(Moment).exists(_.facts.castFail > 0) && cold.all(CoMoment).exists(_.facts.castFail > 0))
     assert(cold.allTopKWheels.forall(_.keyNullCount > 0))
+  }
+
+  test("a slot holding a NaN freezes the same over one file and over seven") {
+    // three rows a second, every 11th value a NaN: NaN seconds also hold
+    // ordinary values. One small file folds each second whole (the build
+    // spreads it by slot); seven files split a second's rows across
+    // partitions, whose extrema then merge.
+    val df = rows(0, 1500).filter(F.col("ts").isNotNull).select("ts", "value")
+    val one = tmpTable()
+    df.coalesce(1).write.parquet(one)
+    val seven = tmpTable()
+    df.coalesce(1).write.parquet(seven)
+    val conf = UWheelBuilder("ts", Seq("value"))
+    def partials(t: TableIndex) = t.minMaxWheel("value").get.wheel.slotPartials.map {
+      case (s, c, sum, mn, mx) =>
+        (s, c, sum, java.lang.Double.doubleToLongBits(mn), java.lang.Double.doubleToLongBits(mx))
+    }.toList
+    val whole = partials(conf.build(spark, one))
+    conf.build(spark, seven)
+    spark.read.parquet(one).repartition(7).write.mode("overwrite").parquet(seven)
+    assert(spark.read.parquet(seven).rdd.getNumPartitions > 1)
+    assert(UWheelIndex.refresh(spark, seven) === RefreshOutcome.Rebuilt)
+    assert(partials(WheelRegistry.lookup(seven).get) === whole)
+    assert(whole.exists(p => java.lang.Double.isNaN(java.lang.Double.longBitsToDouble(p._5))))
   }
 }

@@ -65,10 +65,10 @@ class WheelRefreshSpec extends AnyFunSuite {
     val rebuilt = builder.build(spark, path2)
     assert(partialsOf(merged) === partialsOf(rebuilt))
     assert(merged.tsAllNonNull === rebuilt.tsAllNonNull)
-    assert(merged.allWheels.map(w => (w.valueColumn, w.filterKey, w.valueAllNonNull,
-      w.valuesExactAtScale, w.valuesNaNFree)).toSet ===
-      rebuilt.allWheels.map(w => (w.valueColumn, w.filterKey, w.valueAllNonNull,
-        w.valuesExactAtScale, w.valuesNaNFree)).toSet)
+    assert(merged.allWheels.map(w => (w.valueColumn, w.filterKey, w.facts.valueAllNonNull,
+      w.facts.valuesExactAtScale, w.facts.valuesNaNFree)).toSet ===
+      rebuilt.allWheels.map(w => (w.valueColumn, w.filterKey, w.facts.valueAllNonNull,
+        w.facts.valuesExactAtScale, w.facts.valuesNaNFree)).toSet)
     // count wheel still shares the column wheel's HawWheel (memory dedup)
     assert(merged.countWheel.get.wheel eq merged.minMaxWheel("value").get.wheel)
   }
@@ -142,7 +142,7 @@ class WheelRefreshSpec extends AnyFunSuite {
       .withDistinctWheel("uid")
       .withKeyedDistinctWheel("uid", "k = 'a'")
     b.build(spark, path)
-    val keyedFk = WheelRegistry.lookup(path).get.allDistinctWheels
+    val keyedFk = WheelRegistry.lookup(path).get.all(WheelFamily.Hll)
       .find(_.filterKey.nonEmpty).get.filterKey
     df(2000, 1000).write.mode("append").parquet(path)
     assert(UWheelIndex.refresh(spark, path).isInstanceOf[RefreshOutcome.Appended])
@@ -153,10 +153,10 @@ class WheelRefreshSpec extends AnyFunSuite {
     spark.read.parquet(path).write.parquet(path2)
     val t2 = b.build(spark, path2)
     val rebuilt = t2.distinctWheel("uid").get
-    def regs(d: DistinctIndexedWheel) =
+    def regs(d: SketchWheel[Array[Byte], Long, graft.wheel.WheelAggregators.HllDistinct]) =
       d.wheel.slotPartials.map { case (s, p) => (s, p.toSeq) }.toSeq
     assert(regs(merged) === regs(rebuilt))
-    assert(merged.p === rebuilt.p)
+    assert(merged.agg.p === rebuilt.agg.p)
     // the KEYED distinct wheel re-applies its filter on the delta scan
     assert(regs(mergedKeyed) === regs(t2.distinctWheel("uid", keyedFk).get))
     assert(regs(mergedKeyed) !== regs(merged)) // and is genuinely filtered
@@ -212,7 +212,7 @@ class WheelRefreshSpec extends AnyFunSuite {
     assert(t.countWheel.get.wheel.landmark.count === 3000)
     // the restricted v2 wheel kept its own coverage and only its rows
     val v2 = t.get(Some("v2"), "").get
-    assert(v2.coverage === Some((covLo, covLo + 600 * 60)))
+    assert(v2.scope.coverage === Some((covLo, covLo + 600 * 60)))
     assert(v2.wheel.landmark.count === 600)
   }
 
@@ -386,8 +386,8 @@ class WheelRefreshSpec extends AnyFunSuite {
       val fresh = allFamilies.build(spark, path2)
       val got = WheelRegistry.lookup(path).get
       assert(partialsOf(got) === partialsOf(fresh))
-      assert(got.allDistinctWheels.map(_.wheel.slotPartials.map(p => (p._1, p._2.toSeq)).toList) ===
-        fresh.allDistinctWheels.map(_.wheel.slotPartials.map(p => (p._1, p._2.toSeq)).toList))
+      assert(got.all(WheelFamily.Hll).map(_.wheel.slotPartials.map(p => (p._1, p._2.toSeq)).toList) ===
+        fresh.all(WheelFamily.Hll).map(_.wheel.slotPartials.map(p => (p._1, p._2.toSeq)).toList))
       assert(got.allTopKWheels.map(_.wheel.slotPartials.toList) ===
         fresh.allTopKWheels.map(_.wheel.slotPartials.toList))
     }

@@ -1645,7 +1645,7 @@ class StreamingWheelSpec extends AnyFunSuite {
       idx.register(path)
       input.addData(rows: _*)
       q.processAllAvailable()
-      assert(!graft.index.WheelRegistry.lookup(path).get.minMaxWheel("value").get.valuesExactAtScale)
+      assert(!graft.index.WheelRegistry.lookup(path).get.minMaxWheel("value").get.facts.valuesExactAtScale)
       val range =
         """WHERE ts >= TIMESTAMP '2024-03-01 00:00:00'
           |  AND ts < TIMESTAMP '2024-03-01 00:02:00'""".stripMargin
